@@ -39,9 +39,10 @@ def get_spark(app_name: str = "tesla-ci-etl-spark", shuffle_partitions: int | No
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # testdata events.ts is parquet TIMESTAMP(NANOS): Spark <= 4.0 reads
-        # it as long ns under this legacy conf; 4.1+ ignores the conf and
-        # surfaces TIMESTAMP_NTZ. sources.io.normalize_event_ts handles both.
+        # testdata events.ts is parquet TIMESTAMP(MICROS), read as
+        # TIMESTAMP_NTZ. A TIMESTAMP(NANOS) source is read as long ns under
+        # this legacy conf by Spark <= 4.0; 4.1+ ignores the conf and
+        # surfaces TIMESTAMP_NTZ. sources.io.normalize_event_ts handles all.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

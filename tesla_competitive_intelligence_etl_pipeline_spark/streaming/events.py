@@ -25,36 +25,29 @@ from pyspark.sql import functions as F
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import merge as merge_mod
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as merge_fs
 
-# per-path schema probe results (a static test fixture's schema never
-# changes mid-session; saves one footer read per stream construction)
-_EVENTS_SCHEMA_CACHE: dict = {}
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the events parquet, ``ts`` normalized to
     TIMESTAMP — same read path as sources.io.load_events.
 
-    readStream needs an explicit schema; the parquet TIMESTAMP(NANOS) column
-    surfaces as long-ns or TIMESTAMP_NTZ depending on the Spark version, so
-    take the schema from a one-footer batch probe (driver-side, no data scan)
-    instead of hardcoding either representation."""
+    readStream needs an explicit schema; the events ``ts`` column surfaces
+    as long-ns or TIMESTAMP_NTZ depending on its parquet unit and the Spark
+    version, so take the schema from the batch read instead of hardcoding
+    either representation. That read goes through
+    ``sources.io.read_parquet``: one footer job per file identity per
+    session, so a rewritten events file streams with its new schema."""
     import os
 
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src_io
 
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _EVENTS_SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_CACHE[path] = schema
+    schema = src_io.read_parquet(spark, path).schema
     # layout probe through Spark's own Hadoop FS, not os.path (r11 — the
     # bpe_load lesson from ADVICE r10: on s3://|hdfs:// a local isdir is
     # always False, and the else-branch's pathGlobFilter would silently
     # stream NOTHING from a directory layout — the exact r10 sf1 bug, but
     # remote)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    hfs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if hfs.getFileStatus(hpath).isDirectory():
+    if src_io.file_status(spark, path).isDirectory():
         # the production layout: events.parquet IS a directory of part
         # files — stream it directly. (The pathGlobFilter trick below
         # would match only leaf files literally NAMED events.parquet and

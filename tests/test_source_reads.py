@@ -1,0 +1,125 @@
+"""The source read contract (sources.io.read_parquet): one parquet footer
+job per file identity per session, none on later reads of the same file; a
+rewritten file or a changed type-inference conf re-infers; a directory of
+part files keeps the plain inferred read."""
+
+from __future__ import annotations
+
+import contextlib
+import io
+import os
+import uuid
+from datetime import datetime
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from perfbench.workloads import ANALYTICS
+from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a job group of its own; return its result and the
+    number of Spark jobs it launched, read from the status tracker."""
+    sc = spark.sparkContext
+    group = "source-reads-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols) -> None:
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_warm_load_table_launches_no_job(spark, tmp_path):
+    _write(tmp_path / "t.parquet", k=list(range(20)), v=[f"v{i}" for i in range(20)])
+    _, cold = _jobs(spark, lambda: src.load_table(spark, str(tmp_path), "t"))
+    df, warm = _jobs(spark, lambda: src.load_table(spark, str(tmp_path), "t"))
+    assert cold >= 1  # the footer job a plain read pays every time
+    assert warm == 0
+    assert df.count() == 20
+
+
+def test_rewritten_file_reads_its_new_schema(spark, tmp_path):
+    _write(tmp_path / "t.parquet", a=[1, 2], b=["x", "y"])
+    assert src.load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    _write(tmp_path / "t.parquet", a=[1, 2, 3], c=[1.5, 2.5, 3.5], d=[True, False, True])
+    df = src.load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "c", "d"]
+    assert sorted(r.c for r in df.collect()) == [1.5, 2.5, 3.5]
+
+
+def test_inference_conf_change_re_resolves(spark, tmp_path):
+    _write(tmp_path / "t.parquet", b=pa.array([b"ab", b"cd"], pa.binary()))
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert src.load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        assert src.load_table(spark, str(tmp_path), "t").dtypes == [("b", "string")]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_warm_read_keeps_pushdown_and_schema(spark, sf_dir):
+    cold = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    src.load_table(spark, sf_dir, "orders")
+    warm = src.load_table(spark, sf_dir, "orders")
+    assert warm.schema == cold.schema
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        warm.filter(F.col("o_orderstatus") == "F").explain("formatted")
+    plan = buf.getvalue()
+    assert "Scan parquet" in plan
+    assert "PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)]" in plan
+
+
+@pytest.mark.parametrize("name", ANALYTICS)
+def test_analytics_builder_launches_no_job_on_a_warm_session(spark, sf_dir, name):
+    """The benchmark's 12 ``analytics`` builders, ``tpch_suite`` among them,
+    build their plans without a Spark job once the tables are resolved."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.plans import load_registry
+
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet"):
+            src.load_table(spark, sf_dir, f[: -len(".parquet")])
+    build = load_registry()[name][0]
+    _, warm = _jobs(spark, lambda: build(spark, sf_dir))
+    assert warm == 0
+
+
+def test_directory_layout_table_reads_correctly(spark, sf_dir, tmp_path):
+    want = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    want.repartition(3).write.parquet(str(tmp_path / "nation.parquet"))
+    rows = sorted(want.collect())
+    for _ in range(2):
+        got, n = _jobs(spark, lambda: src.load_table(spark, str(tmp_path), "nation"))
+        assert n >= 1  # a directory re-infers on every read
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == rows
+
+
+def test_stream_events_follows_a_rewritten_events_file(spark, tmp_path):
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
+
+    base = dict(
+        event_id=[1, 2],
+        ts=pa.array([datetime(2024, 1, 1), datetime(2024, 1, 2)], pa.timestamp("us")),
+        user_id=[7, 8],
+        event_type=["view", "buy"],
+        value=[1.0, 2.0],
+    )
+    _write(tmp_path / "events.parquet", **base)
+    assert "props" not in strm.stream_events(spark, str(tmp_path)).columns
+    _write(tmp_path / "events.parquet", **base, props=["{}", '{"a":1}'])
+    ev = strm.stream_events(spark, str(tmp_path))
+    assert ev.isStreaming
+    assert "props" in ev.columns and ev.schema["ts"].dataType.typeName() == "timestamp"
