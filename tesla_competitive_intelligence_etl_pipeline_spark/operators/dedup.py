@@ -3,13 +3,16 @@
 Scale design (the point of these at 100 TB):
 - exact dedup: one hash-aggregate on a 128-bit content key — no full-text
   shuffle (the key is computed map-side; only (key, doc_id) pairs move).
-- MinHash LSH: signatures are computed map-side as JVM expressions (xxhash64,
-  no Python); the only shuffle is the band-bucket groupBy whose keys are
+- MinHash LSH: signatures are computed map-side as JVM expressions (no
+  Python); the only shuffle is the band-bucket groupBy whose keys are
   (band_id, band_hash). Candidate pairs are verified with exact Jaccard
   before reporting — LSH chooses *which* pairs get verified, never the
   verdict itself.
-- SimHash: 64-bit signature map-side; near-dup = hamming distance <= k via
+- SimHash: signature map-side; near-dup = hamming distance <= k via
   bit_count(xor) on a band-bucketed self-join.
+
+Every LSH/SimHash operator takes ``family="xxhash64" | "md5"`` (see "Hash
+families" below).
 """
 
 from __future__ import annotations
@@ -77,6 +80,66 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
         .drop("fp")
     )
+
+
+# ---------------------------------------------------------------------------
+# Hash families. The LSH/SimHash operators and the signature table take
+# ``family="xxhash64" | "md5"`` — the string the table's _params sidecar
+# stores. The family picks three primitives and nothing else: the shingle
+# hash, the band bucket, and the SimHash token hash with its width.
+# - "xxhash64" (default): shingles combine per-token xxhash64 values without
+#   building n-gram strings, a bucket is xxhash64 of the band's signature
+#   slice, SimHash is 64-bit. Faster map-side. DuckDB has no xxhash64, so
+#   these registry entries are oracle-checked through engine-hash fixtures
+#   (plans/fixtures.py, since r10): the engine persists its hash outputs and
+#   the oracle re-derives everything downstream of them.
+# - "md5": every hash is the 60-bit md5 prefix (_md5_long60) over n-gram
+#   strings, '|'-joined signature slices and tokens — reproducible in
+#   DuckDB, so the oracle re-derives the whole pipeline (plans/oracle_vec.py,
+#   the *_portable_sql builders). SimHash is 60-bit, which keeps every mask,
+#   signature and band chunk positive in signed 64-bit. Trigram shingles
+#   only, as the oracle builds them.
+# Bands of the two families never share a bucket, so a signature table
+# records its family and queries against it check the match.
+# ---------------------------------------------------------------------------
+
+_FAMILIES = ("xxhash64", "md5")
+_SIMHASH_BITS = {"xxhash64": 64, "md5": 60}
+
+
+def _check_family(family: str, shingle_n: int = 3) -> None:
+    """ValueError — not an assert, which python -O strips — on an unknown
+    family, or on md5 with any shingle size but 3."""
+    if family not in _FAMILIES:
+        raise ValueError(
+            f"unknown hash family {family!r}; expected one of {_FAMILIES}"
+        )
+    if family == "md5" and shingle_n != 3:
+        raise ValueError(
+            f"the md5 hash family is trigram-only; got shingle_n={shingle_n}"
+        )
+
+
+def _md5_long60(col: Column) -> Column:
+    """First 15 hex digits of md5 as a 60-bit non-negative long — fits
+    signed 64-bit in every engine (16 digits could overflow the cast)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _token_hash(col: Column, family: str) -> Column:
+    return _md5_long60(col) if family == "md5" else F.xxhash64(col)
+
+
+def _shingle_hashes(text_col: Column, n: int, family: str) -> Column:
+    if family == "md5":
+        return F.transform(shingles(text_col, n), _md5_long60)
+    return hashed_shingles(text_col, n)
+
+
+def _band_bucket(sig_slice: list[Column], family: str) -> Column:
+    if family == "md5":
+        return _md5_long60(F.concat_ws("|", *[c.cast("string") for c in sig_slice]))
+    return F.xxhash64(*sig_slice)
 
 
 # ---------------------------------------------------------------------------
@@ -152,7 +215,13 @@ def hashed_shingles(text_col: Column, n: int = 3) -> Column:
 
 
 def _with_shingles_and_sig(
-    docs: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_n: int
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    *,
+    family: str = "xxhash64",
 ) -> DataFrame:
     # Signature computation is CPU-bound per row; small single-file inputs
     # arrive as one partition, so spread across cores first. r13: the former
@@ -167,10 +236,36 @@ def _with_shingles_and_sig(
         spread(docs, id_col)
         .select(
             F.col(id_col).alias("doc_id"),
-            hashed_shingles(F.col(text_col), shingle_n).alias("sh"),
+            _shingle_hashes(F.col(text_col), shingle_n, family).alias("sh"),
         )
         .withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes))
     )
+
+
+def _band_explode(
+    sigs: DataFrame, num_hashes: int, bands: int, *keep: str, family: str = "xxhash64"
+) -> DataFrame:
+    """(…keep, doc_id, band, bucket) rows: one per (doc, band), bucket =
+    the family's hash of the band's signature slice."""
+    rows_per_band = num_hashes // bands
+    return sigs.select(
+        *keep,
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        _band_bucket(
+                            [F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)],
+                            family,
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(*keep, "doc_id", "bb.band", "bb.bucket")
 
 
 def exact_jaccard(a: Column, b: Column) -> Column:
@@ -181,10 +276,10 @@ def exact_jaccard(a: Column, b: Column) -> Column:
 
 # Largest cap the in-row pair expansion accepts: a surviving bucket expands
 # to ~cap^2/2 pair structs inside ONE row, so cap=4096 is ~8.4e6 structs
-# (~hundreds of MB peak) — the edge of safe; beyond it the capped path falls
-# back to the distributed self-join, which spreads the same pairs across
-# tasks (ADVICE r13: a caller-supplied 50k cap would otherwise OOM one
-# executor on ~1.2e9 in-row structs).
+# (~hundreds of MB peak) — the edge of safe; beyond it the capped paths fall
+# back to the distributed self-join (cross-corpus: new x old join), which
+# spreads the same pairs across tasks (ADVICE r13: a caller-supplied 50k cap
+# would otherwise OOM one executor on ~1.2e9 in-row structs).
 _IN_ROW_CAP_MAX = 4096
 
 
@@ -231,7 +326,7 @@ def _capped_bucket_rows_shared(banded: DataFrame, max_bucket_size: int) -> DataF
     (never shuffles them) but pays its second pass + stages even when no
     degenerate bucket exists; this form ships the (rare, 24-byte-row)
     degenerate bucket to one task's disk and pays ~nothing otherwise. The
-    census form stays in use for the large-cap self-join fallback, where a
+    census form stays in use for the large-cap join fallbacks, where a
     windowed frame on a self-join side defeats exchange reuse (the
     measured-30x r12 lesson). COUNT(*) judges the cap — NULL-id rows
     count, the pre-r13 census and DuckDB-oracle semantics (ADVICE r13)."""
@@ -254,9 +349,12 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs: LSH banding proposes candidates, exact Jaccard
     on shingle sets confirms. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
+    The two hash ``family`` values differ only in WHICH candidates they
+    propose; both verify with exact Jaccard, so neither reports a false pair.
 
     Shuffle profile: one groupBy on (band, band_hash) whose values are just
     (band_key, doc_id); the self-join to fetch shingles back is by doc_id.
@@ -283,57 +381,30 @@ def minhash_lsh_pairs(
     Storage contract: the signature table is persisted because the RETURNED
     lazy plan reads it from multiple branches (banding + both verification
     sides) — it cannot be released here without forfeiting the sharing.
-    (r13: the band table is no longer persisted — both capped consumers,
-    the census guard and the pair groupBy, re-derive it with one cheap
-    explode over the persisted signatures.)
     The caller owns the cleanup once done with the result
     (``spark.catalog.clearCache()`` or unpersisting, as bench.py does after
     every query); long-lived sessions that skip it accumulate storage.
     """
-    rows_per_band = num_hashes // bands
+    _check_family(family, shingle_n)
     # Persist the signature table: it feeds the band explode AND the
     # verification join, and Spark would otherwise recompute the (expensive)
     # shingling twice. In a production pipeline this is the materialized
     # signatures table written next to the corpus.
-    sigs = _with_shingles_and_sig(docs, text_col, id_col, num_hashes, shingle_n).persist()
-
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    sigs = _with_shingles_and_sig(
+        docs, text_col, id_col, num_hashes, shingle_n, family=family
+    ).persist()
+    banded = _band_explode(sigs, num_hashes, bands, family=family)
 
     if max_bucket_size is not None and max_bucket_size <= _IN_ROW_CAP_MAX:
-        # CAPPED path (r13 — guide §2.4 "remove shuffles outright"): the cap
-        # bounds every bucket's membership list, so candidate pairs can be
-        # expanded IN-ROW from one groupBy instead of the pre-r13
-        # [bucket-size census + broadcast anti-join + banded self-join +
-        # distinct]. r14 (VERDICT r13 "What's wrong #1" — guide §5 memory):
-        # an over-cap GUARD returns ahead of the collect, because the r13
-        # shape collected every bucket's full membership into one
-        # aggregation buffer BEFORE the size filter — at 100 TB a degenerate
-        # boilerplate bucket (10^7+ identical docs in one (band,bucket))
-        # would materialize an unbounded array in a single
-        # ObjectHashAggregate buffer. The guard is the shared-exchange
-        # COUNT(*) window (_capped_bucket_rows_shared — the cheapest of
-        # three measured formulations; see its docstring), so the
-        # collect_list buffer is provably <= cap entries and the cap is
-        # judged on COUNT(*) — NULL-id rows count, which is both the
-        # pre-r13 semantics and what the DuckDB oracle's
-        # HAVING COUNT(*) <= cap computes (ADVICE r13). What stays removed
-        # from the pre-r13 plan: the banded persist, the self-join, and the
-        # join-side distinct — pairs still expand in-row from one groupBy.
+        # CAPPED: the cap bounds every bucket's membership list, so pairs
+        # expand IN-ROW from one groupBy — no banded self-join, no
+        # join-side distinct. The over-cap guard (the shared-exchange
+        # COUNT(*) window, _capped_bucket_rows_shared) runs ahead of the
+        # collect, so no aggregation buffer can hold a degenerate
+        # boilerplate bucket (10^7+ identical docs at 100 TB) and the
+        # collect_list buffer is provably <= cap entries. COUNT(*) judges
+        # the cap — NULL-id rows count, as in the DuckDB oracle's
+        # HAVING COUNT(*) <= cap (ADVICE r13).
         grouped = (
             _capped_bucket_rows_shared(banded, max_bucket_size)
             .groupBy("band", "bucket")
@@ -365,29 +436,16 @@ def minhash_lsh_pairs(
             .filter(F.col("doc_a") < F.col("doc_b"))
             .distinct()
         )
-    elif max_bucket_size is not None:
-        # cap too large for safe in-row expansion (ADVICE r13: a 50k cap
-        # would materialize ~1.2e9 structs in one row) — keep the capped
-        # DISTRIBUTED self-join: census guard on one side only (a pair
-        # needs both endpoints, so emptying the left side of an over-cap
-        # bucket kills every pair from it — identical candidate set)
-        candidates = (
-            _capped_bucket_rows(banded, max_bucket_size).alias("l")
-            .join(
-                banded.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-            .distinct()
-        )
     else:
-        # UNCAPPED: quadratic buckets are possible by contract, so pairs
-        # come from the distributed self-join (oversized buckets fan out
-        # across tasks instead of materializing in one row)
+        # UNCAPPED, or a cap too large for safe in-row expansion (ADVICE
+        # r13: a 50k cap would materialize ~1.2e9 structs in one row): the
+        # distributed self-join spreads oversized buckets across tasks. A
+        # cap guards ONE side with the census (a pair needs both endpoints,
+        # so emptying the left side of an over-cap bucket kills every pair
+        # from it — identical candidate set).
+        left = banded if max_bucket_size is None else _capped_bucket_rows(banded, max_bucket_size)
         candidates = (
-            banded.alias("l")
+            left.alias("l")
             .join(
                 banded.alias("r"),
                 (F.col("l.band") == F.col("r.band"))
@@ -427,26 +485,10 @@ def lsh_oversized_buckets(
 
     Same banding plan as minhash_lsh_pairs; the aggregate is
     partial-aggregable, so only (band, bucket, count) rows shuffle."""
-    rows_per_band = num_hashes // bands
     sigs = _with_shingles_and_sig(docs, text_col, id_col, num_hashes, shingle_n)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
     return (
-        banded.groupBy("band", "bucket")
+        _band_explode(sigs, num_hashes, bands)
+        .groupBy("band", "bucket")
         .agg(F.count("*").alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket_size)
     )
@@ -630,6 +672,7 @@ def near_dup_clusters(
     max_iters: int = 20,
     max_bucket_size: int | None = None,
     reliable: bool = False,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Transitive near-dup clustering: connected components over the
     MinHash-LSH pair graph. Returns (doc_id, cluster_id); cluster_id is the
@@ -638,7 +681,7 @@ def near_dup_clusters(
     cluster even when A~C is below threshold."""
     pairs = minhash_lsh_pairs(
         docs, text_col=text_col, id_col=id_col, threshold=threshold,
-        max_bucket_size=max_bucket_size,
+        max_bucket_size=max_bucket_size, family=family,
     )
     verts = docs.select(F.col(id_col).alias("id"))
     comp = connected_components(
@@ -675,6 +718,7 @@ def near_dedup_canonical(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate REMOVAL: drop every document that has a near-dup
     partner with a smaller id (the standard single-pass policy used by
@@ -683,7 +727,7 @@ def near_dedup_canonical(
     higher-id near-dup."""
     pairs = minhash_lsh_pairs(
         docs, text_col=text_col, id_col=id_col, threshold=threshold,
-        max_bucket_size=max_bucket_size,
+        max_bucket_size=max_bucket_size, family=family,
     )
     losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     return docs.join(losers, on=id_col, how="left_anti")
@@ -837,17 +881,22 @@ def _signed64(v: int) -> int:
 _BIT_MASKS = [_signed64(1 << i) for i in range(64)]
 
 
-def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash: per token hash, sum signs per bit position, sign ->
-    bit. ONE pass over the token hashes with an array-of-64 sign-count
-    accumulator (a 64-fold expression per bit would traverse the array 64x)."""
+def simhash(text_col: Column, family: str = "xxhash64") -> Column:
+    """SimHash: per token hash, sum signs per bit position, sign -> bit.
+    64-bit over xxhash64 token hashes; 60-bit over md5 ones, so with md5
+    every mask and signature is positive in signed 64-bit and
+    shifts/AND/bit_count behave identically in every engine. ONE pass over
+    the token hashes with an array-of-bits sign-count accumulator (a fold
+    per bit would traverse the array once per bit)."""
+    _check_family(family)
+    bits = _SIMHASH_BITS[family]
     toks = F.array_distinct(tokens(normalized_text(text_col)))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    masks = F.lit(_BIT_MASKS).cast("array<long>")
+    hashes = F.transform(toks, lambda t: _token_hash(t, family))
+    masks = F.lit(_BIT_MASKS[:bits]).cast("array<long>")
 
     counts = F.aggregate(
         hashes,
-        F.array_repeat(F.lit(0), 64),
+        F.array_repeat(F.lit(0), bits),
         lambda acc, h: F.zip_with(
             acc,
             F.transform(masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)),
@@ -868,18 +917,21 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 8,
     bands: int = 4,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming. Banding on
-    16-bit chunks (pigeonhole: any pair within distance 3 shares a chunk for
-    4 bands; wider distances still mostly collide) prunes the self-join."""
+    signature chunks (16-bit for xxhash64, 15-bit for md5 at 4 bands;
+    pigeonhole: any pair within distance 3 shares a chunk for 4 bands;
+    wider distances still mostly collide) prunes the self-join."""
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
 
+    _check_family(family)
     sigs = (
         spread(docs, id_col)
-        .select(F.col(id_col).alias("doc_id"), simhash64(F.col(text_col)).alias("sig"))
+        .select(F.col(id_col).alias("doc_id"), simhash(F.col(text_col), family).alias("sig"))
         .persist()  # feeds both sides of the band self-join
     )
-    chunk_bits = 64 // bands
+    chunk_bits = _SIMHASH_BITS[family] // bands
     mask = (1 << chunk_bits) - 1
     banded = sigs.select(
         "doc_id",
@@ -923,6 +975,7 @@ def write_signature_table(
     num_hashes: int = 32,
     shingle_n: int = 3,
     corpus: str | None = None,
+    family: str = "xxhash64",
 ) -> None:
     """Materialize the MinHash signature table next to the corpus — the
     LSH twin of build_ivf_index / pq_build_index: shingling + signatures are
@@ -937,9 +990,12 @@ def write_signature_table(
     num_hashes/shingle_n than it was built with silently degrades recall
     (mismatched banding) or compares wrong-granularity Jaccard, so
     cross_corpus_neardup_indexed asserts equality on read (VERDICT r4).
-    The sidecar also records the hash ``family`` ('xxhash64' here): banding
-    a table of one family with the other family's buckets finds NOTHING
-    in common, the worst silent-recall failure, so queries assert it.
+    The sidecar also records the hash ``family``: banding a table of one
+    family with the other family's buckets finds NOTHING in common, the
+    worst silent-recall failure, so queries assert it. An md5 table makes
+    the whole incremental crawl-dedup path hash-checkable in DuckDB:
+    stored signatures, increment signatures, band buckets, cross-side
+    candidates, exact-Jaccard verdicts.
     The overwrite holds the table's writer lease (r6; scoped to a SIBLING
     ``<path>.lock`` dir — the table path itself is the parquet dir and
     mode('overwrite') would delete an in-dir lease mid-build) so
@@ -951,58 +1007,14 @@ def write_signature_table(
     takedown_verify cover it without a manual registration step."""
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
+    _check_family(family, shingle_n)
     lock_scope = path.rstrip("/") + ".lock"
     token = mfs.acquire_writer_lease(mfs.LOCAL_FS, lock_scope)
     try:
-        _with_shingles_and_sig(docs, text_col, id_col, num_hashes, shingle_n).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _write_sig_params(docs.sparkSession, path, num_hashes, shingle_n, "xxhash64")
-    finally:
-        mfs.release_writer_lease(mfs.LOCAL_FS, lock_scope, token)
-    if corpus is not None:
-        from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown
-
-        takedown.register_store(corpus, path, "signature")
-
-
-def write_signature_table_portable(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    corpus: str | None = None,
-) -> None:
-    """Materialize the ENGINE-PORTABLE signature table (md5-derived shingle
-    hashes, same affine min-hash family) — the indexed twin of
-    minhash_lsh_pairs_portable. Because the stored (doc_id, sh, sig) rows
-    are reproducible in DuckDB, the WHOLE incremental crawl-dedup path
-    (cross_corpus_neardup_indexed_portable) becomes hash-checkable
-    end-to-end: stored signatures, increment signatures, band buckets,
-    cross-side candidates, exact-Jaccard verdicts. Production corpora keep
-    write_signature_table (xxhash64 is faster map-side). Same
-    sibling-scoped writer lease as write_signature_table."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    if shingle_n != 3:
-        # ValueError, not assert (ADVICE r7): under python -O an assert is
-        # stripped and the md5 family would silently write trigram
-        # signatures for a different claimed granularity.
-        raise ValueError(
-            f"portable (md5) shingles are trigram-only; got shingle_n={shingle_n}"
-        )
-    lock_scope = path.rstrip("/") + ".lock"
-    token = mfs.acquire_writer_lease(mfs.LOCAL_FS, lock_scope)
-    try:
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            portable_hashed_shingles(F.col(text_col)).alias("sh"),
-        ).withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes)).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _write_sig_params(docs.sparkSession, path, num_hashes, shingle_n, "md5")
+        _with_shingles_and_sig(
+            docs, text_col, id_col, num_hashes, shingle_n, family=family
+        ).write.mode("overwrite").parquet(path)
+        _write_sig_params(docs.sparkSession, path, num_hashes, shingle_n, family)
     finally:
         mfs.release_writer_lease(mfs.LOCAL_FS, lock_scope, token)
     if corpus is not None:
@@ -1065,57 +1077,28 @@ def _check_signature_params(
         raise ValueError(
             f"signature table at {sig_path} was built with the "
             f"'{stored_family}' hash family but the query uses '{family}'; "
-            "cross-family band buckets never collide (zero recall) — use "
-            f"the matching operator or rebuild the table"
+            "cross-family band buckets never collide (zero recall) — pass "
+            f"family='{stored_family}' or rebuild the table"
         )
-
-
-def _band_explode(sigs: DataFrame, num_hashes: int, bands: int, *keep: str) -> DataFrame:
-    """(…keep, doc_id, band, bucket) rows: one per (doc, band), bucket =
-    xxhash64 of the band's signature slice."""
-    rows_per_band = num_hashes // bands
-    return sigs.select(
-        *keep,
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(*keep, "doc_id", "bb.band", "bb.bucket")
 
 
 def _cross_band_pairs_capped(
     both: DataFrame, max_bucket_size: int
 ) -> DataFrame:
     """Cross-side candidate pairs from capped LSH buckets, expanded IN-ROW
-    from one groupBy (r13 — guide §2.4 "remove shuffles outright", same
-    move as minhash_lsh_pairs' capped path). ``both`` carries one row per
-    (band, bucket) membership: (band, bucket, __side, __id) with __side=1
-    for the new/query corpus and __side=0 for the existing corpus.
+    from one groupBy (the same move as minhash_lsh_pairs' capped path).
+    ``both`` carries one row per (band, bucket) membership:
+    (band, bucket, __side, __id) with __side=1 for the new/query corpus and
+    __side=0 for the existing corpus.
 
-    The cap is judged on the COMBINED bucket population — exactly the
-    buckets the pre-r13 plan dropped via [census aggregate + broadcast
-    build + two anti-joins] before its cross-side band join — and a
-    surviving bucket holds at most cap members, so the new x old expansion
-    is bounded at (cap/2)^2 structs per row. One shuffle of
-    (band, bucket, side, id) replaces the cross-side join's shuffle of
-    both band tables and one of the two anti-joins. r14 (VERDICT r13
-    "What's wrong #1" — guide §5 memory): an over-cap guard returns ahead
-    of the groupBy, because judging the cap only AFTER collect_list
-    buffered the whole bucket meant a degenerate 10^7-doc boilerplate
-    bucket would materialize an unbounded array in a single aggregation
-    buffer at 100 TB scale; the shared-exchange COUNT(*) window
-    (_capped_bucket_rows_shared) filters over-cap rows out first, so
-    every aggregation buffer is provably <= cap entries.
+    The cap is judged on the COMBINED bucket population, and a surviving
+    bucket holds at most cap members, so the new x old expansion is bounded
+    at (cap/2)^2 structs per row. One shuffle of (band, bucket, side, id)
+    replaces a cross-side join's shuffle of both band tables. The
+    shared-exchange COUNT(*) window (_capped_bucket_rows_shared) filters
+    over-cap rows out ahead of the groupBy, so every aggregation buffer is
+    provably <= cap entries — a degenerate 10^7-doc boilerplate bucket never
+    materializes in one buffer.
     Safe ONLY capped: an uncapped boilerplate bucket would still collect
     an unbounded array — uncapped callers keep the join form.
     collect_list skips the NULLs the other side's ``when`` produces, and
@@ -1155,6 +1138,48 @@ def _cross_band_pairs_capped(
     )
 
 
+def _cross_candidates(both: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """(doc_id, match_id) candidates from tagged band rows ``both`` (see
+    _cross_band_pairs_capped), kept only ACROSS sides so the quadratic
+    within-side pair sets never materialize. Caps up to _IN_ROW_CAP_MAX
+    expand in-row. Larger caps (ADVICE r14: a 50k cap would build ~6e8
+    structs in one row) and no cap take the distributed new x old join; a
+    cap guards the new side with the census over the COMBINED population
+    (a pair needs a new endpoint, so emptying the new side of an over-cap
+    bucket kills every pair from it — the in-row form's candidate set)."""
+    if max_bucket_size is not None and max_bucket_size <= _IN_ROW_CAP_MAX:
+        return _cross_band_pairs_capped(both, max_bucket_size)
+    new = both if max_bucket_size is None else _capped_bucket_rows(both, max_bucket_size)
+
+    def side(rows: DataFrame, tag: int, id_name: str) -> DataFrame:
+        return rows.filter(F.col("__side") == tag).select(
+            F.col("__id").alias(id_name), "band", "bucket"
+        )
+
+    return (
+        side(new, 1, "doc_id")
+        .join(side(both, 0, "match_id"), ["band", "bucket"])
+        .select("doc_id", "match_id")
+        .distinct()
+    )
+
+
+def _cross_verified(
+    candidates: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verdicts for cross-side candidates: (doc_id, match_id,
+    jaccard) at or above ``threshold``; both sig frames carry (doc_id, sh)."""
+    sh_new = new_sigs.select("doc_id", F.col("sh").alias("sh_a"))
+    sh_old = old_sigs.select(F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b"))
+    return (
+        candidates.join(sh_new, "doc_id")
+        .join(sh_old, "match_id")
+        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_id", "match_id", "jaccard")
+    )
+
+
 def cross_corpus_neardup_indexed(
     new_docs: DataFrame,
     spark,
@@ -1167,6 +1192,7 @@ def cross_corpus_neardup_indexed(
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
     reliable: bool = False,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Incremental crawl dedup against a MATERIALIZED signature table
     (write_signature_table): only the NEW side is shingled; the existing
@@ -1178,119 +1204,35 @@ def cross_corpus_neardup_indexed(
 
     This is the steady-state 100 TB ingestion shape: per increment, cost =
     shingle the increment + one band join against the stored table. Raises
-    when num_hashes/shingle_n differ from the table's build parameters (the
-    _params sidecar written by write_signature_table — VERDICT r4)."""
-    _check_signature_params(spark, sig_path, num_hashes, shingle_n)
-    # eager lineage truncation (not persist — VERDICT r4 storage-leak
+    when num_hashes/shingle_n/``family`` differ from the table's build
+    parameters (the _params sidecar written by write_signature_table —
+    VERDICT r4)."""
+    _check_family(family, shingle_n)
+    _check_signature_params(spark, sig_path, num_hashes, shingle_n, family)
+    # lazy lineage truncation (not persist — VERDICT r4 storage-leak
     # class): materializes the increment's signatures ONCE for the two
     # consumers below (band join + exact-Jaccard verify), and the blocks
     # are released by the ContextCleaner when the returned plan is dropped
     # — no caller-must-unpersist contract
     new_sigs = _truncate_lineage(
-        _with_shingles_and_sig(new_docs, text_col, id_col, num_hashes, shingle_n),
+        _with_shingles_and_sig(
+            new_docs, text_col, id_col, num_hashes, shingle_n, family=family
+        ),
         reliable,
     )
     # tombstone-aware read (r9): taken-down docs' stored signatures are
     # anti-joined out before banding, so erased content never matches
     old_sigs = _stored_sigs_minus_tombstones(spark, sig_path)
 
-    new_band = _band_explode(new_sigs, num_hashes, bands)
-    old_band = _band_explode(old_sigs, num_hashes, bands).withColumnRenamed(
-        "doc_id", "match_id"
-    )
-    if max_bucket_size is not None:
-        # cap judged on the COMBINED bucket population (mirrors the tagged-
-        # union operator); r13: candidates expand in-row from one groupBy
-        # over the tagged union — see _cross_band_pairs_capped
-        both = new_band.select(
-            "band", "bucket", F.lit(1).alias("__side"), F.col("doc_id").alias("__id")
-        ).unionAll(
-            old_band.select(
-                "band", "bucket", F.lit(0).alias("__side"),
-                F.col("match_id").alias("__id"),
-            )
+    def tagged(sigs: DataFrame, tag: int) -> DataFrame:
+        return _band_explode(sigs, num_hashes, bands, family=family).select(
+            "band", "bucket", F.lit(tag).alias("__side"), F.col("doc_id").alias("__id")
         )
-        candidates = _cross_band_pairs_capped(both, max_bucket_size)
-    else:
-        candidates = (
-            new_band.join(old_band, ["band", "bucket"])  # cross-side ONLY
-            .select("doc_id", "match_id")
-            .distinct()
-        )
-    sh_new = new_sigs.select("doc_id", F.col("sh").alias("sh_a"))
-    sh_old = old_sigs.select(F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(sh_new, "doc_id")
-        .join(sh_old, "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
-    )
 
-
-def cross_corpus_neardup_indexed_portable(
-    new_docs: DataFrame,
-    spark,
-    sig_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket_size: int | None = None,
-    reliable: bool = False,
-) -> DataFrame:
-    """Incremental crawl dedup against a write_signature_table_portable
-    table — the SAME plan shape as cross_corpus_neardup_indexed (only the
-    increment is shingled, cross-side-only banding, exact-Jaccard verify,
-    combined-population bucket cap) over the md5 hash family, so DuckDB can
-    re-derive BOTH sides' signatures and the whole pair list: the
-    steady-state 100 TB ingestion path, hash-checked end-to-end
-    (plans/oracle_vec.cross_corpus_indexed_portable_sql). Raises on any
-    parameter or hash-family mismatch with the stored table."""
-    _check_signature_params(spark, sig_path, num_hashes, shingle_n, family="md5")
-    new_sigs = _truncate_lineage(
-        new_docs.select(
-            F.col(id_col).alias("doc_id"),
-            portable_hashed_shingles(F.col(text_col), shingle_n).alias("sh"),
-        ).withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes)),
-        reliable,
+    candidates = _cross_candidates(
+        tagged(new_sigs, 1).unionAll(tagged(old_sigs, 0)), max_bucket_size
     )
-    # tombstone-aware read (r9), same as cross_corpus_neardup_indexed
-    old_sigs = _stored_sigs_minus_tombstones(spark, sig_path)
-
-    new_band = _band_explode_portable(new_sigs, num_hashes, bands)
-    old_band = _band_explode_portable(old_sigs, num_hashes, bands).withColumnRenamed(
-        "doc_id", "match_id"
-    )
-    if max_bucket_size is not None:
-        # r13: in-row expansion from one groupBy over the tagged union —
-        # see _cross_band_pairs_capped (identical candidate set)
-        both = new_band.select(
-            "band", "bucket", F.lit(1).alias("__side"), F.col("doc_id").alias("__id")
-        ).unionAll(
-            old_band.select(
-                "band", "bucket", F.lit(0).alias("__side"),
-                F.col("match_id").alias("__id"),
-            )
-        )
-        candidates = _cross_band_pairs_capped(both, max_bucket_size)
-    else:
-        candidates = (
-            new_band.join(old_band, ["band", "bucket"])  # cross-side ONLY
-            .select("doc_id", "match_id")
-            .distinct()
-        )
-    sh_new = new_sigs.select("doc_id", F.col("sh").alias("sh_a"))
-    sh_old = old_sigs.select(F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(sh_new, "doc_id")
-        .join(sh_old, "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
-    )
+    return _cross_verified(candidates, new_sigs, old_sigs, threshold)
 
 
 def cross_corpus_neardup(
@@ -1303,6 +1245,7 @@ def cross_corpus_neardup(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Cross-corpus near-dedup: which NEW documents are near-duplicates of
     anything in the EXISTING corpus (continual-pretraining ingestion: dedup
@@ -1311,14 +1254,18 @@ def cross_corpus_neardup(
 
     Same MinHash-LSH plan as minhash_lsh_pairs over the tagged union, but
     pairs are kept only ACROSS sides — the quadratic within-side pair sets
-    are never materialized (the band join filters side_a < side_b before the
-    distinct). Returns (doc_id, match_id, jaccard): one row per new doc x
-    matched existing doc above threshold; dedup the new corpus with an
-    anti-join on distinct doc_id.
+    are never materialized (_cross_candidates). Returns (doc_id, match_id,
+    jaccard): one row per new doc x matched existing doc above threshold;
+    dedup the new corpus with an anti-join on distinct doc_id.
 
     ids must be unique WITHIN each side; across sides they may collide (the
-    side tag disambiguates).
+    side tag disambiguates). Storage contract as minhash_lsh_pairs: the
+    signature table is persisted for the returned plan; the caller clears
+    it.
     """
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
+
+    _check_family(family, shingle_n)
     tagged = new_docs.select(
         F.lit(1).alias("__side"), F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).unionByName(
@@ -1326,69 +1273,26 @@ def cross_corpus_neardup(
             F.lit(0).alias("__side"), F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
     )
-    rows_per_band = num_hashes // bands
-    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
-
     sigs = (
         spread(tagged, "doc_id")
         .select(
             "__side",
             "doc_id",
-            hashed_shingles(F.col("text"), shingle_n).alias("sh"),
+            _shingle_hashes(F.col("text"), shingle_n, family).alias("sh"),
         )
         .withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes))
         .persist()
     )
-    banded = sigs.select(
-        "__side",
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("__side", "doc_id", "bb.band", "bb.bucket")
-    if max_bucket_size is not None:
-        # r13: banded already carries the side tag, so the capped
-        # candidates expand in-row from ONE groupBy consuming banded once
-        # — no persist, no census aggregate, no broadcast anti-join, no
-        # cross-side join (see _cross_band_pairs_capped; identical set)
-        candidates = _cross_band_pairs_capped(
-            banded.select(
-                "band", "bucket", "__side", F.col("doc_id").alias("__id")
-            ),
-            max_bucket_size,
-        )
-    else:
-        new_side = banded.filter(F.col("__side") == 1).select(
-            F.col("doc_id").alias("doc_id"), "band", "bucket"
-        )
-        old_side = banded.filter(F.col("__side") == 0).select(
-            F.col("doc_id").alias("match_id"), "band", "bucket"
-        )
-        candidates = (
-            new_side.join(old_side, ["band", "bucket"])  # cross-side ONLY
-            .select("doc_id", "match_id")
-            .distinct()
-        )
-    sh_new = sigs.filter(F.col("__side") == 1).select("doc_id", F.col("sh").alias("sh_a"))
-    sh_old = sigs.filter(F.col("__side") == 0).select(
-        F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b")
+    banded = _band_explode(sigs, num_hashes, bands, "__side", family=family)
+    candidates = _cross_candidates(
+        banded.select("band", "bucket", "__side", F.col("doc_id").alias("__id")),
+        max_bucket_size,
     )
-    return (
-        candidates.join(sh_new, "doc_id")
-        .join(sh_old, "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
+    return _cross_verified(
+        candidates,
+        sigs.filter(F.col("__side") == 1),
+        sigs.filter(F.col("__side") == 0),
+        threshold,
     )
 
 
@@ -1544,323 +1448,6 @@ def semantic_oversized_clusters(
     )
 
 
-# ---------------------------------------------------------------------------
-# Engine-portable MinHash-LSH (md5 hash family): the oracle-checkable twin
-# of minhash_lsh_pairs. xxhash64 exists only in Spark, which is why the
-# production LSH entries are rows-only in the correctness gate; this variant
-# derives shingle hashes, the affine min-hash family, AND band buckets from
-# md5 + signed-64-bit wrap arithmetic — both reproducible in DuckDB — so the
-# ENTIRE pipeline (signatures, banding, candidate set, exact-Jaccard
-# verification) is hash-checked end-to-end (plans/oracle_vec.py
-# minhash_lsh_portable_sql).
-# ---------------------------------------------------------------------------
-
-
-def _md5_long60(col: Column) -> Column:
-    """First 15 hex digits of md5 as a 60-bit non-negative long — fits
-    signed 64-bit in every engine (16 digits could overflow the cast)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def portable_hashed_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word-n-gram shingles as md5-derived 60-bit hashes. Slower
-    than hashed_shingles (builds the n-gram STRINGS, one md5 each, vs the
-    xxhash64 token-combine) — the price of engine portability; production
-    corpora keep the xxhash64 path."""
-    return F.transform(shingles(text_col, n), _md5_long60)
-
-
-def _band_explode_portable(
-    sigs: DataFrame, num_hashes: int, bands: int, *keep: str
-) -> DataFrame:
-    """(…keep, doc_id, band, bucket) rows with the ENGINE-PORTABLE bucket:
-    md5 of the band's decimal-joined signature slice (the md5 twin of
-    _band_explode's xxhash64 bucket) — reproducible in DuckDB, so every
-    consumer's candidate set is oracle-derivable."""
-    rows_per_band = num_hashes // bands
-    return sigs.select(
-        *keep,
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _md5_long60(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col("sig")[b * rows_per_band + r].cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(*keep, "doc_id", "bb.band", "bb.bucket")
-
-
-def minhash_lsh_pairs_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    reliable: bool = False,
-) -> DataFrame:
-    """Near-duplicate pairs with the SAME plan shape, banding scheme, and
-    exact-Jaccard verification as minhash_lsh_pairs, but over the portable
-    md5 hash family (portable_hashed_shingles; band bucket = md5 of the
-    decimal-joined signature slice). Returns (doc_a, doc_b, jaccard),
-    doc_a < doc_b. The two variants differ only in WHICH candidates the
-    random family proposes — both verify candidates with exact Jaccard, so
-    neither reports a false pair; this one's candidates are reproducible in
-    DuckDB, making the registry entry hash-checked rather than rows-only."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
-
-    # lazy lineage truncation (not persist): the signature table feeds the
-    # band explode AND both sides of the verification join; blocks are
-    # released when the returned plan is GC'd — no caller-must-unpersist
-    # contract (same trade-offs as cross_corpus_neardup_indexed)
-    sigs = _truncate_lineage(
-        spread(docs, id_col)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            portable_hashed_shingles(F.col(text_col)).alias("sh"),
-        )
-        .withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes)),
-        reliable,
-    )
-    banded = _band_explode_portable(sigs, num_hashes, bands)
-    candidates = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def cross_corpus_neardup_portable(
-    new_docs: DataFrame,
-    existing_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    reliable: bool = False,
-) -> DataFrame:
-    """Unindexed cross-corpus near-dedup over the PORTABLE md5 hash family —
-    the md5 twin of cross_corpus_neardup (VERDICT r6 item 7), same plan
-    shape: tagged union, per-side portable signatures, band join kept to
-    CROSS-side pairs only (the within-side quadratic pair sets are never
-    materialized), exact-Jaccard verify on candidates. Returns
-    (doc_id, match_id, jaccard) — one row per new doc x matched existing doc
-    above threshold. Because every hash is DuckDB-reproducible the whole
-    path is hash-checkable end-to-end; production corpora keep the xxhash64
-    twin. Both twins verify candidates with exact Jaccard, so neither
-    reports a false pair — they differ only in which candidates the random
-    family proposes."""
-    tagged = new_docs.select(
-        F.lit(1).alias("__side"),
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-    ).unionByName(
-        existing_docs.select(
-            F.lit(0).alias("__side"),
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-    )
-    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
-
-    sigs = _truncate_lineage(
-        spread(tagged, "doc_id")
-        .select(
-            "__side",
-            "doc_id",
-            portable_hashed_shingles(F.col("text")).alias("sh"),
-        )
-        .withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes)),
-        reliable,
-    )
-    banded = _band_explode_portable(sigs, num_hashes, bands, "__side")
-    new_side = banded.filter(F.col("__side") == 1).select("doc_id", "band", "bucket")
-    old_side = banded.filter(F.col("__side") == 0).select(
-        F.col("doc_id").alias("match_id"), "band", "bucket"
-    )
-    candidates = (
-        new_side.join(old_side, ["band", "bucket"])  # cross-side ONLY
-        .select("doc_id", "match_id")
-        .distinct()
-    )
-    sh_new = sigs.filter(F.col("__side") == 1).select(
-        "doc_id", F.col("sh").alias("sh_a")
-    )
-    sh_old = sigs.filter(F.col("__side") == 0).select(
-        F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b")
-    )
-    return (
-        candidates.join(sh_new, "doc_id")
-        .join(sh_old, "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
-    )
-
-
-def simhash60_portable(text_col: Column) -> Column:
-    """60-bit SimHash over md5-derived token hashes — the engine-portable
-    twin of simhash64 (same one-pass sign-count accumulator). 60 bits keep
-    every mask, signature, and band chunk POSITIVE in signed 64-bit, so
-    shifts/AND/bit_count behave identically in every engine — no
-    sign-bit-in-top-band subtlety like the 64-bit variant."""
-    toks = F.array_distinct(tokens(normalized_text(text_col)))
-    hashes = F.transform(toks, _md5_long60)
-    masks = F.lit([1 << i for i in range(60)]).cast("array<long>")
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 60),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)),
-            lambda a, b: a + b,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(masks, counts, lambda m, c: F.when(c > 0, m).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, m: acc.bitwiseOR(m),
-    )
-
-
-def simhash_pairs_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    bands: int = 4,
-    reliable: bool = False,
-) -> DataFrame:
-    """SimHash near-dup pairs with the portable 60-bit signature (15-bit
-    band chunks): every stage — token hashes, bit votes, banding, hamming —
-    is reproducible in DuckDB, so the registry entry is hash-checked
-    end-to-end (plans/oracle_vec.simhash_portable_sql), unlike the
-    xxhash64-based simhash_pairs. Pigeonhole: any pair within distance 3
-    shares a chunk across 4 bands; wider distances still mostly collide."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
-
-    sigs = _truncate_lineage(
-        spread(docs, id_col).select(
-            F.col(id_col).alias("doc_id"),
-            simhash60_portable(F.col(text_col)).alias("sig"),
-        ),
-        # feeds both sides of the band self-join; blocks released when the
-        # returned plan is GC'd
-        reliable,
-    )
-    chunk_bits = 60 // bands
-    mask = (1 << chunk_bits) - 1
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sig", b * chunk_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", "bb.band", "bb.chunk")
-    return (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(F.col("l.sig").bitwiseXOR(F.col("r.sig"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def near_dup_clusters_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_iters: int = 20,
-    reliable: bool = False,
-) -> DataFrame:
-    """Transitive near-dup clustering over the PORTABLE pair set — the same
-    connected-components min-label propagation as near_dup_clusters, fed by
-    minhash_lsh_pairs_portable. Because the pair graph is reproducible in
-    DuckDB, the WHOLE transitive-clustering result is hash-checkable there
-    via a recursive reachability CTE (oracle_vec.minhash_cluster_portable_sql
-    — VERDICT r5 item 3, upgrading the cluster-dedup class from rows-only).
-    Returns (doc_id, cluster_id), cluster_id = smallest reachable id."""
-    pairs = minhash_lsh_pairs_portable(
-        docs, text_col=text_col, id_col=id_col, threshold=threshold,
-        reliable=reliable,
-    )
-    verts = docs.select(F.col(id_col).alias("id"))
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        verts,
-        max_iters,
-        reliable=reliable,
-    )
-    return comp.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_id"))
-
-
-def near_dedup_canonical_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """near_dedup_canonical's drop-smaller-id-partner policy over the
-    engine-portable pair set (minhash_lsh_pairs_portable), so the REMOVAL
-    operator — not just the pair list — is oracle-checked end-to-end
-    (plans/oracle_vec.minhash_canonical_portable_sql). Survivors = docs
-    that are nobody's higher-id near-dup."""
-    pairs = minhash_lsh_pairs_portable(
-        docs, text_col=text_col, id_col=id_col, threshold=threshold
-    )
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(losers, on=id_col, how="left_anti")
-
-
 def append_signature_table(
     new_docs: DataFrame,
     path: str,
@@ -1880,9 +1467,10 @@ def append_signature_table(
 
     Parameters (num_hashes, shingle_n, hash family) are read FROM the
     table's ``_params`` sidecar — an append cannot be mis-parameterized the
-    way a query can, it simply computes whatever the table stores; both
-    the xxhash64 production family and the md5-portable family are
-    supported. A table without a sidecar refuses (an append cannot guess).
+    way a query can, it simply computes whatever the table stores. An
+    unknown family, or md5 with a shingle_n other than 3, raises
+    ValueError; a table without a sidecar refuses (an append cannot
+    guess).
 
     Crash-safe like ivf_index_append: the batch stages in a dot-prefixed
     dir and commits through the atomic-marker protocol
@@ -1914,32 +1502,10 @@ def append_signature_table(
             num_hashes = int(stored["num_hashes"])
             shingle_n = int(stored["shingle_n"])
             family = stored.asDict().get("family")
-            if family == "md5":
-                if shingle_n != 3:
-                    # ValueError, not assert (ADVICE r7): stripped under
-                    # python -O, which would let an append to a table whose
-                    # _params record a different shingle_n silently compute
-                    # trigram signatures — wrong granularity, silent recall
-                    # loss.
-                    raise ValueError(
-                        f"signature table at {path} records shingle_n="
-                        f"{shingle_n}, but the portable (md5) family is "
-                        "trigram-only — the table's params are inconsistent"
-                    )
-                sigs = new_docs.select(
-                    F.col(id_col).alias("doc_id"),
-                    portable_hashed_shingles(F.col(text_col)).alias("sh"),
-                ).withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes))
-            elif family == "xxhash64":
-                sigs = _with_shingles_and_sig(
-                    new_docs, text_col, id_col, num_hashes, shingle_n
-                )
-            else:
-                raise ValueError(
-                    f"signature table at {path} has family={family!r}; "
-                    "appending needs a known hash family ('xxhash64' or "
-                    "'md5') — rebuild the table to stamp one"
-                )
+            _check_family(family, shingle_n)
+            sigs = _with_shingles_and_sig(
+                new_docs, text_col, id_col, num_hashes, shingle_n, family=family
+            )
             obs = Observation()
             # repartition, NOT coalesce (code review r7): coalesce would
             # cap the parallelism of the whole shingling/minhash plan at
@@ -2228,7 +1794,7 @@ def delete_signature_entries(
     """Takedown for a materialized signature table: land the distinct doc
     ids under ``<table>/_tombstones/`` through the same atomic-marker
     commit as the data appends (operators/index_commit); the indexed crawl
-    queries (cross_corpus_neardup_indexed[_portable]) anti-join stored
+    query (cross_corpus_neardup_indexed) anti-joins stored
     signatures against the tombstones before banding, so an erased
     document can never again propose (or win) a match. O(batch),
     idempotent, ids absent from the table are harmless — the EXACT
@@ -2285,8 +1851,8 @@ def load_signature_tombstones(spark, path: str, fs=None) -> DataFrame | None:
 
 def _stored_sigs_minus_tombstones(spark, sig_path: str) -> DataFrame:
     """Stored (doc_id, sh, sig) rows with tombstoned docs removed — the
-    read-side half of delete_signature_entries, shared by both indexed
-    crawl operators. The anti-join side is the tiny tombstone table
+    read-side half of delete_signature_entries, used by
+    cross_corpus_neardup_indexed. The anti-join side is the tiny tombstone table
     (bounded by takedown volume, not corpus size), so Spark broadcasts it;
     when no tombstone was ever committed the plan is the bare scan."""
     old_sigs = spark.read.parquet(sig_path)

@@ -1,5 +1,5 @@
 """Engine-hash fixture tables (r10 — VERDICT r9 item 4): oracle-check the
-xxhash64 production family, not just its md5-portable twins.
+xxhash64 hash family, not just the md5 one (dedup's ``family="md5"``).
 
 Six registry entries were rows-only because their candidate generation
 hashes with xxhash64, which DuckDB cannot evaluate. But the hash calls are
@@ -40,9 +40,9 @@ Mechanics and their honest limits:
   in, r11). FIXTURE_ROOT carries a layout VERSION segment — when an
   operator's hashing layout changes, bump it along with the matching
   ensure_* so stale on-disk fixtures can never satisfy the skip.
-- The fixture derivation mirrors the operators' expressions
-  (dedup._with_shingles_and_sig / _band_explode / simhash64 + the 16-bit
-  chunk split); values are deterministic, so fixture and query agree
+- The fixture derivation mirrors the operators' expressions at their
+  default ``family="xxhash64"`` (dedup._with_shingles_and_sig /
+  _band_explode / simhash + the 16-bit chunk split); values are deterministic, so fixture and query agree
   without sharing a computation. If an operator's hashing layout changes,
   change the matching ensure_* here — the hash gate is what catches a
   silent drift.
@@ -342,7 +342,7 @@ def ensure_simhash_fixture(spark: SparkSession, sf_dir: str) -> None:
 
     docs = src.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sigs = docs.select(
-        F.col("doc_id"), dd.simhash64(F.col("text")).alias("sig")
+        F.col("doc_id"), dd.simhash(F.col("text")).alias("sig")
     ).persist()
     chunk_bits, bands = 16, 4
     mask = (1 << chunk_bits) - 1

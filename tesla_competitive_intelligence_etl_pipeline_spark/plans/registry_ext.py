@@ -108,7 +108,7 @@ def x2_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep x2_minhash_lsh (xxhash64 is faster map-side); candidates differ
     between the two random families but both verify with exact Jaccard."""
     docs = src.load_table(spark, sf_dir, "documents")
-    return dd.minhash_lsh_pairs_portable(docs, threshold=0.5)
+    return dd.minhash_lsh_pairs(docs, threshold=0.5, family="md5")
 
 
 @register(
@@ -120,7 +120,7 @@ def x2_near_dedup_canonical_portable(spark: SparkSession, sf_dir: str) -> DataFr
     dedup over the PORTABLE pair set, so the removal operator itself — not
     just the pair list — is oracle-verified. Returns surviving doc_ids."""
     docs = src.load_table(spark, sf_dir, "documents")
-    return dd.near_dedup_canonical_portable(docs, threshold=0.5).select("doc_id")
+    return dd.near_dedup_canonical(docs, threshold=0.5, family="md5").select("doc_id")
 
 
 @register(
@@ -135,7 +135,7 @@ def x2_cluster_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering class from rows-only to full rows+schema+hash verification;
     production corpora keep the xxhash64 variant."""
     docs = src.load_table(spark, sf_dir, "documents")
-    return dd.near_dup_clusters_portable(docs, threshold=0.5)
+    return dd.near_dup_clusters(docs, threshold=0.5, family="md5")
 
 
 @register(
@@ -150,7 +150,7 @@ def x2_cluster_dedup_star_portable(spark: SparkSession, sf_dir: str) -> DataFram
     min-label fixpoint, so the trickier star rewiring is hash-verified
     end-to-end, not just unit-tested on toy paths."""
     docs = src.load_table(spark, sf_dir, "documents")
-    pairs = dd.minhash_lsh_pairs_portable(docs, threshold=0.5)
+    pairs = dd.minhash_lsh_pairs(docs, threshold=0.5, family="md5")
     comp = dd.connected_components_star(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         docs.select(F.col("doc_id").alias("id")),
@@ -325,7 +325,7 @@ def _ensure_sig_table_portable(spark: SparkSession, sf_dir: str) -> str:
             .select("doc_id", "text")
             .filter(F.col("doc_id") < 100)
         )
-        dd.write_signature_table_portable(old, path)
+        dd.write_signature_table(old, path, family="md5")
         _SIG_TABLE_PORTABLE[sf_dir] = path
     return _SIG_TABLE_PORTABLE[sf_dir]
 
@@ -350,8 +350,8 @@ def x2_cross_corpus_indexed_portable(spark: SparkSession, sf_dir: str) -> DataFr
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, sig_path, threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
@@ -404,8 +404,8 @@ def x2_sig_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, sig_path, threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
@@ -452,8 +452,8 @@ def x2_sig_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, sig_path, threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
@@ -530,8 +530,8 @@ def x_takedown_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, work + "/signatures", threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
 
 
@@ -570,13 +570,13 @@ def x_takedown_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, work + "/signatures", threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
 
 
 # Build-time auto-registration (r13 — VERDICT r12 item 3): the pristine pair
-# is built with write_signature_table_portable(corpus=...) — the BUILDER
+# is built with write_signature_table(corpus=..., family="md5") — the BUILDER
 # registers the store; nobody calls register_store. Warmed once per session.
 _AUTOREG_PRISTINE: dict[str, str] = {}
 
@@ -596,8 +596,8 @@ def _ensure_autoreg_pristine(spark: SparkSession, sf_dir: str) -> str:
         strm.merge_table(
             docs, root + "/corpus", keys=["doc_id"], order_cols=["doc_id"]
         )
-        dd.write_signature_table_portable(
-            docs, root + "/signatures", corpus=root + "/corpus"
+        dd.write_signature_table(
+            docs, root + "/signatures", corpus=root + "/corpus", family="md5"
         )
         _AUTOREG_PRISTINE[sf_dir] = root
     return _AUTOREG_PRISTINE[sf_dir]
@@ -612,7 +612,7 @@ def _ensure_autoreg_pristine(spark: SparkSession, sf_dir: str) -> str:
 def x_store_autoregister(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X-2/X-9 IMPLICIT-registration erasure (r13 — VERDICT r12 item 3):
     the signature table is registered by its own BUILDER
-    (write_signature_table_portable(corpus=...)); no register_store call
+    (write_signature_table(corpus=..., family="md5")); no register_store call
     appears anywhere in this entry. The corpus+store pair is then CLONED
     to a new directory (the clone-before-takedown pattern) before the
     no-args takedown — because co-located stores are recorded
@@ -641,8 +641,8 @@ def x_store_autoregister(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_indexed_portable(
-        new, spark, work + "/signatures", threshold=0.5
+    return dd.cross_corpus_neardup_indexed(
+        new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
 
 
@@ -687,7 +687,7 @@ def x2_cross_corpus_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    return dd.cross_corpus_neardup_portable(new, old, threshold=0.5)
+    return dd.cross_corpus_neardup(new, old, threshold=0.5, family="md5")
 
 
 @register("x2_simhash", oracle_vec.simhash_fixture_sql(max_hamming=8))
@@ -713,7 +713,7 @@ def x2_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/oracle_vec.py) instead of rows-only. Production keeps
     x2_simhash's xxhash64 path for speed."""
     docs = src.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return dd.simhash_pairs_portable(docs, max_hamming=8)
+    return dd.simhash_pairs(docs, max_hamming=8, family="md5")
 
 
 # ===========================================================================

@@ -3,6 +3,8 @@ ground truth (the checks the DuckDB oracle can't express — SURVEY §7.3)."""
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,7 +56,7 @@ def test_simhash_signature_property(near_dup_docs):
     sigs = {
         r.doc_id: r.sig
         for r in near_dup_docs.select(
-            "doc_id", dd.simhash64(F.col("text")).alias("sig")
+            "doc_id", dd.simhash(F.col("text")).alias("sig")
         ).collect()
     }
     for i in range(5):
@@ -531,16 +533,16 @@ def test_signature_table_parameter_mismatch_raises(spark, tmp_path):
     # matching params: constructs fine
     dd.cross_corpus_neardup_indexed(docs, spark, sig_path)
 
-    # HASH-FAMILY mismatch (r6): an xxhash64 table queried by the portable
-    # operator (or vice versa) shares ZERO band buckets — must raise, never
+    # HASH-FAMILY mismatch (r6): an xxhash64 table queried with
+    # family="md5" (or vice versa) shares ZERO band buckets — must raise, never
     # return an empty-but-plausible pair list
     with pt.raises(ValueError, match="hash family"):
-        dd.cross_corpus_neardup_indexed_portable(docs, spark, sig_path)
+        dd.cross_corpus_neardup_indexed(docs, spark, sig_path, family="md5")
     portable_path = str(tmp_path / "sigs_md5")
-    dd.write_signature_table_portable(docs, portable_path)
+    dd.write_signature_table(docs, portable_path, family="md5")
     with pt.raises(ValueError, match="hash family"):
         dd.cross_corpus_neardup_indexed(docs, spark, portable_path)
-    dd.cross_corpus_neardup_indexed_portable(docs, spark, portable_path)  # ok
+    dd.cross_corpus_neardup_indexed(docs, spark, portable_path, family="md5")  # ok
 
     # legacy table (no sidecar): warn, don't raise
     shutil.rmtree(str(tmp_path / "sigs" / "_params"))
@@ -551,7 +553,7 @@ def test_signature_table_parameter_mismatch_raises(spark, tmp_path):
 
 
 def test_portable_indexed_crawl_dedup_finds_planted_dups(spark, tmp_path):
-    """cross_corpus_neardup_indexed_portable: planted near-dups of stored
+    """cross_corpus_neardup_indexed(family="md5"): planted near-dups of stored
     docs are found by the portable indexed path (and nothing below the
     exact-Jaccard threshold is reported) — the recall anchor behind the
     hash-checked registry entry."""
@@ -565,9 +567,9 @@ def test_portable_indexed_crawl_dedup_finds_planted_dups(spark, tmp_path):
         "doc_id long, text string",
     )
     sig_path = str(tmp_path / "sigs_md5")
-    dd.write_signature_table_portable(existing, sig_path)
-    rows = dd.cross_corpus_neardup_indexed_portable(
-        new, spark, sig_path, threshold=0.5
+    dd.write_signature_table(existing, sig_path, family="md5")
+    rows = dd.cross_corpus_neardup_indexed(
+        new, spark, sig_path, threshold=0.5, family="md5"
     ).collect()
     assert {(r.doc_id, r.match_id) for r in rows} == {(1, 100)}
     assert all(r.jaccard >= 0.5 for r in rows)
@@ -1411,7 +1413,7 @@ def test_minhash_lsh_portable_finds_planted_near_dups(near_dup_docs):
     xxhash64 one on planted near-dups: full recall at 0.5 on the planted
     pairs, and exact-Jaccard verification keeps every reported pair above
     threshold."""
-    pairs = dd.minhash_lsh_pairs_portable(near_dup_docs, threshold=0.5)
+    pairs = dd.minhash_lsh_pairs(near_dup_docs, threshold=0.5, family="md5")
     rows = pairs.collect()
     found = {(r.doc_a, r.doc_b) for r in rows}
     assert {(2 * i, 2 * i + 1) for i in range(5)} <= found
@@ -1421,14 +1423,14 @@ def test_minhash_lsh_portable_finds_planted_near_dups(near_dup_docs):
 def test_simhash_portable_on_planted_dups(near_dup_docs):
     """Portable 60-bit SimHash: planted near-dup pairs are found within the
     banded hamming search, like the xxhash64 variant."""
-    pairs = dd.simhash_pairs_portable(near_dup_docs, max_hamming=16)
+    pairs = dd.simhash_pairs(near_dup_docs, max_hamming=16, family="md5")
     found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     planted = {(2 * i, 2 * i + 1) for i in range(5)}
     assert len(planted & found) >= 4  # banding guarantees <= bands-1 exactly
     sigs = {
         r.doc_id: r.sig
         for r in near_dup_docs.select(
-            "doc_id", dd.simhash60_portable(F.col("text")).alias("sig")
+            "doc_id", dd.simhash(F.col("text"), family="md5").alias("sig")
         ).collect()
     }
     assert all(0 <= s < (1 << 60) for s in sigs.values())  # 60-bit, positive
@@ -1443,7 +1445,9 @@ def test_near_dedup_canonical_portable_drops_higher_id_partner(near_dup_docs):
     unrelated docs kept."""
     survivors = {
         r.doc_id
-        for r in dd.near_dedup_canonical_portable(near_dup_docs, threshold=0.5).collect()
+        for r in dd.near_dedup_canonical(
+            near_dup_docs, threshold=0.5, family="md5"
+        ).collect()
     }
     for i in range(5):
         assert 2 * i in survivors and 2 * i + 1 not in survivors
@@ -1535,12 +1539,9 @@ def test_append_signature_table_closes_the_crawl_loop(spark, tmp_path):
             (r.doc_id, tuple(r.sh), tuple(r.sig)) for r in df.collect()
         )
 
-    cases = [
-        (dd.write_signature_table, dd.cross_corpus_neardup_indexed, "xxhash64"),
-        (dd.write_signature_table_portable,
-         dd.cross_corpus_neardup_indexed_portable, "md5"),
-    ]
-    for writer, query, fam in cases:
+    for fam in ("xxhash64", "md5"):
+        writer = functools.partial(dd.write_signature_table, family=fam)
+        query = functools.partial(dd.cross_corpus_neardup_indexed, family=fam)
         sig_path = str(tmp_path / f"sigs_{fam}")
         writer(existing, sig_path)
         # A is genuinely new vs the base...
@@ -1574,8 +1575,9 @@ def test_append_signature_table_closes_the_crawl_loop(spark, tmp_path):
 
 def test_portable_signature_shingle_n_guard_is_not_an_assert(spark, tmp_path):
     """ADVICE r7: the md5 family's trigram-only constraint must survive
-    python -O — both the writer and the appender raise ValueError (never a
-    strippable assert) on a non-trigram shingle_n."""
+    python -O — the writer, the pair operator and the appender raise
+    ValueError (never a strippable assert) on a non-trigram shingle_n, and
+    every family-taking operator raises ValueError on an unknown family."""
     import pytest
 
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
@@ -1584,13 +1586,21 @@ def test_portable_signature_shingle_n_guard_is_not_an_assert(spark, tmp_path):
         [(1, "one two three four five")], "doc_id long, text string"
     )
     with pytest.raises(ValueError, match="trigram"):
-        dd.write_signature_table_portable(docs, str(tmp_path / "sigs"), shingle_n=4)
+        dd.write_signature_table(
+            docs, str(tmp_path / "sigs"), shingle_n=4, family="md5"
+        )
+    with pytest.raises(ValueError, match="trigram"):
+        dd.minhash_lsh_pairs(docs, shingle_n=4, family="md5")
+    with pytest.raises(ValueError, match="unknown hash family"):
+        dd.minhash_lsh_pairs(docs, family="md5_60")
+    with pytest.raises(ValueError, match="unknown hash family"):
+        dd.write_signature_table(docs, str(tmp_path / "sigs"), family="sha1")
 
     # an append against a table whose _params record an impossible
     # (md5, shingle_n=4) combination refuses instead of silently
     # computing trigram signatures at the wrong claimed granularity
     sig_path = str(tmp_path / "sigs_bad")
-    dd.write_signature_table_portable(docs, sig_path)
+    dd.write_signature_table(docs, sig_path, family="md5")
     dd._write_sig_params(spark, sig_path, num_hashes=32, shingle_n=4, family="md5")
     with pytest.raises(ValueError, match="trigram"):
         dd.append_signature_table(
@@ -1970,16 +1980,16 @@ def test_signature_table_takedown(spark, sf_dir, tmp_path):
             F.col("id").alias("doc_id")))
     assert crawl(takedown) == want
 
-    # portable family shares the read path
+    # the md5 family shares the read path
     takedown_p = str(tmp_path / "takedown_p")
-    dd.write_signature_table_portable(stored, takedown_p)
+    dd.write_signature_table(stored, takedown_p, family="md5")
     dd.delete_signature_entries(spark, takedown_p, doomed)
     clean_p = str(tmp_path / "clean_p")
-    dd.write_signature_table_portable(survivors, clean_p)
-    got_p = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed_portable(
-        increment, spark, takedown_p, threshold=0.5).collect())
-    want_p = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed_portable(
-        increment, spark, clean_p, threshold=0.5).collect())
+    dd.write_signature_table(survivors, clean_p, family="md5")
+    got_p = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
+        increment, spark, takedown_p, threshold=0.5, family="md5").collect())
+    want_p = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
+        increment, spark, clean_p, threshold=0.5, family="md5").collect())
     assert got_p == want_p and len(got_p) > 0
 
     # corpus-side composition: merge-table DELETE -> commit-log delete

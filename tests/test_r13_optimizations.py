@@ -182,10 +182,10 @@ def test_cross_corpus_capped_inrow_expansion(spark, tmp_path):
     ) == [(10, 110)]
 
     psig_path = str(tmp_path / "psigs")
-    dd.write_signature_table_portable(old, psig_path)
+    dd.write_signature_table(old, psig_path, family="md5")
     assert pairs(
-        dd.cross_corpus_neardup_indexed_portable(
-            new, spark, psig_path, threshold=0.5, max_bucket_size=4
+        dd.cross_corpus_neardup_indexed(
+            new, spark, psig_path, threshold=0.5, max_bucket_size=4, family="md5"
         )
     ) == [(10, 110)]
 

@@ -5,8 +5,8 @@ the three ADVICE r13 findings): over-cap buckets are dropped BEFORE any
 collect_list can buffer them, the cap is judged on COUNT(*) (NULL-id rows
 count — the pre-r13 census and DuckDB-oracle semantics), duplicate doc_id
 rows can no longer produce (id, id) self-pairs, and caller caps above
-``_IN_ROW_CAP_MAX`` fall back to the distributed self-join with identical
-results.
+``_IN_ROW_CAP_MAX`` fall back to the distributed self-join (cross-corpus:
+new x old join) with identical results.
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ def test_capped_lsh_no_self_pairs_on_duplicate_ids(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2)}
 
 
-def test_capped_lsh_large_cap_falls_back_to_join_form(spark):
+def test_capped_lsh_large_cap_falls_back_to_join_form(spark, tmp_path):
     # a mixed corpus: one near-dup pair + unrelated docs
     docs = _docs(
         spark,
@@ -93,6 +93,35 @@ def test_capped_lsh_large_cap_falls_back_to_join_form(spark):
     # no bucket here exceeds either cap, so the pair sets are identical
     key = lambda r: (r["doc_a"], r["doc_b"], r["jaccard"])  # noqa: E731
     assert sorted(map(key, inrow.collect())) == sorted(map(key, big.collect()))
+
+    # the cross-corpus operators take the same fallback: a new x old join
+    # behind the census guard, with the in-row form's pair set
+    new = _docs(
+        spark,
+        [
+            (11, "the quick brown fox jumps over the lazy dog tonight again"),
+            (12, "fresh words that no stored document has ever contained"),
+        ],
+    )
+    sig_path = str(tmp_path / "sigs")
+    dd.write_signature_table(docs, sig_path)
+    cross_ops = [
+        lambda cap: dd.cross_corpus_neardup(
+            new, docs, threshold=0.3, max_bucket_size=cap
+        ),
+        lambda cap: dd.cross_corpus_neardup_indexed(
+            new, spark, sig_path, threshold=0.3, max_bucket_size=cap
+        ),
+    ]
+    ckey = lambda r: (r["doc_id"], r["match_id"], r["jaccard"])  # noqa: E731
+    for op in cross_ops:
+        inrow, big = op(256), op(dd._IN_ROW_CAP_MAX + 1)
+        assert "collect_list" in _plan(inrow)
+        assert "collect_list" not in _plan(big)
+        assert "LeftAnti" in _plan(big)
+        pairs = sorted(map(ckey, big.collect()))
+        assert pairs == sorted(map(ckey, inrow.collect()))
+        assert {(p[0], p[1]) for p in pairs} >= {(11, 1)}
 
 
 def test_ivfpq_batch_refine_vectors_scan_is_cell_pruned(spark, sf_dir, tmp_path):

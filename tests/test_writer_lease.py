@@ -217,7 +217,7 @@ def test_offline_builders_take_the_lease(spark, sf_dir, tmp_path):
     with pytest.raises(mfs.ConcurrentWriterError):
         dd.write_signature_table(docs, sig)
     with pytest.raises(mfs.ConcurrentWriterError):
-        dd.write_signature_table_portable(docs, sig)
+        dd.write_signature_table(docs, sig, family="md5")
     mfs.break_writer_lease(mfs.LOCAL_FS, sig + ".lock")
     dd.write_signature_table(docs, sig)  # ok once free; lease released after
     assert not os.path.exists(os.path.join(sig + ".lock", mfs.LEASE_NAME))
