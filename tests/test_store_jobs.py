@@ -1,0 +1,183 @@
+"""Merge-table commits compute each thing once: the touched buckets come
+from the batch keys, the column stats and the change capture from one
+known-schema read of the staged files, per-file stats and commit deltas
+are read with the schema they were written with, and a delete's count is
+observed on its delta write. Job budgets are counted per operation in a
+job group of its own, on the session fixture's small in-memory tables."""
+
+from __future__ import annotations
+
+import datetime as dt
+import json
+import os
+import shutil
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import erasure
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
+
+_SCHEMA = "user_id long, name string, value double, ts timestamp"
+_KW = dict(keys=["user_id"], order_cols=["ts"], n_buckets=4,
+           stats_cols=["value", "name", "ts"])
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a job group of its own; return its result and the
+    number of Spark jobs it launched, read from the status tracker."""
+    sc = spark.sparkContext
+    group = "store-jobs-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _batch(spark, lo, hi, v):
+    """Rows ``lo..hi-1``; every 7th name and every 11th value is null."""
+    return spark.createDataFrame(
+        [(i, None if i % 7 == 0 else f"n{i % 5}",
+          None if i % 11 == 0 else float(i * v),
+          dt.datetime(2024, 1, 1) + dt.timedelta(hours=i * v))
+         for i in range(lo, hi)],
+        _SCHEMA,
+    )
+
+
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory):
+    """A merge table with a 's0' snapshot after its first commit and three
+    commits on top, each updating some keys and inserting others."""
+    target = str(tmp_path_factory.mktemp("store_jobs") / "gold")
+    strm.merge_table(_batch(spark, 0, 40, 1), target, **_KW)
+    strm.snapshot_merge_table(target, "s0")
+    for c in range(1, 4):
+        strm.merge_table(_batch(spark, 30 * c, 30 * c + 25, c + 1), target, **_KW)
+    return target
+
+
+@pytest.fixture
+def table(base, tmp_path):
+    """A private copy of ``base`` (manifests name relative paths)."""
+    return shutil.copytree(base, str(tmp_path / "gold"))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.drop("_commit_ts").collect())
+
+
+def test_merge_with_stats_and_capture_stays_in_its_job_budget(spark, table):
+    # re-running the merge for the stats, the dedup window for the touched
+    # buckets or a footer job on the staged files would exceed 10
+    _, n = _jobs(spark, lambda: strm.merge_table(
+        _batch(spark, 50, 65, 5), table, **_KW))
+    assert n <= 10
+    live = {r.user_id: r.value for r in strm.read_merged(spark, table).collect()}
+    assert len(live) == 55 + 5 + 25 + 25  # 0..54, 55..59 new, 60..84, 90..114
+    assert live[52] == 260.0 and live[59] == 295.0 and live[64] == 320.0
+
+
+def test_optimize_stays_in_its_job_budget(spark, table):
+    # a footer job on the restaged files would exceed 5
+    man, n = _jobs(spark, lambda: strm.optimize_merge_table(
+        spark, table, cluster_by="value", cluster_files=2))
+    assert n <= 5
+    assert set(man["filestats"]) == set(man["buckets"])
+
+
+def test_keys_delete_counts_rows_from_its_delta_write(spark, table):
+    # counting the touched buckets before or after the commit would
+    # exceed 10
+    keys = spark.createDataFrame([(3,), (33,), (999,)], "user_id long")
+    removed, n = _jobs(
+        spark, lambda: strm.delete_from_merge_table(spark, table, keys=keys))
+    assert removed == 2 and n <= 10
+    assert strm.read_merged(spark, table).count() == 105 - 2
+
+
+def test_predicate_delete_counts_rows_from_its_delta_write(spark, table):
+    # counting the touched buckets before or after would exceed 4.
+    # Values 180..252 sit at keys 60..84 (77 is null): 67..84 less 77 match
+    removed, n = _jobs(spark, lambda: strm.delete_from_merge_table(
+        spark, table, predicate="value BETWEEN 200 AND 300"))
+    assert removed == 17 and n <= 4
+    assert strm.read_merged(spark, table).count() == 105 - 17
+
+
+def test_read_commit_changes_builds_without_a_job(spark, base):
+    # an inferred read would launch one footer job per delta in the range
+    df, n = _jobs(spark, lambda: strm.read_commit_changes(spark, base, since="s0"))
+    assert n == 0
+    assert df.agg(F.max("_commit_seq")).first()[0] == 3
+
+
+def test_manifest_stats_equal_a_recomputed_aggregate(spark, base):
+    man = strm._load_manifest(base)
+    cols = _KW["stats_cols"]
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"),
+                 F.sum(F.col(c).isNull().cast("long")).alias(f"nu_{c}"),
+                 F.approx_count_distinct(c).alias(f"nd_{c}")]
+    got = strm.read_merged(spark, base).groupBy("__bucket").agg(*aggs).collect()
+    assert {str(r["__bucket"]) for r in got} == set(man["stats"]) == set(man["buckets"])
+    for r in got:
+        b = str(r["__bucket"])
+        ns = man["nullstats"][b]
+        assert ns["rows"] == r["rows"]
+        for c in cols:
+            assert ns["nulls"][c] == r[f"nu_{c}"]
+            assert ns["ndv"][c] == r[f"nd_{c}"]
+            assert man["stats"][b][c] == strm._enc_bounds(r[f"mn_{c}"], r[f"mx_{c}"])
+
+
+def _record(target, cid):
+    with open(os.path.join(target, "changes", cid, "_commit.json")) as f:
+        return json.load(f)
+
+
+def _strip_schemas(target):
+    """Drop the ``schema`` key from every commit record, as records
+    written before schemas were recorded look."""
+    for cid in os.listdir(os.path.join(target, "changes")):
+        rec = _record(target, cid)
+        rec.pop("schema", None)
+        with open(os.path.join(target, "changes", cid, "_commit.json"), "w") as f:
+            json.dump(rec, f)
+
+
+def test_commit_records_without_schema_read_the_same_rows(spark, table):
+    recorded = strm.read_commit_changes(spark, table, since="s0")
+    want = _rows(recorded)
+    _strip_schemas(table)
+    inferred, n = _jobs(spark, lambda: strm.read_commit_changes(spark, table, since="s0"))
+    assert n >= 1  # the inferred read pays its footer jobs
+    assert inferred.schema == recorded.schema
+    assert want
+    assert _rows(inferred) == want
+
+
+def test_scrubbed_delta_reads_through_its_recorded_schema(spark, table):
+    # the first commit after s0 updated keys 30..39 and inserted 40..54
+    cid = strm._load_manifest(table)["commit"]["id"]
+    for _ in range(2):
+        cid = _record(table, cid)["parent"]
+    doomed = spark.createDataFrame([(31,), (35,)], "user_id long")
+    assert erasure._scrub_delta(spark, table, cid, doomed, ["user_id"], mfs.LOCAL_FS)
+    recorded, n = _jobs(spark, lambda: strm.read_commit_changes(spark, table, since="s0"))
+    assert n == 0
+    got = _rows(recorded)
+    mine = [r for r in got if r[0] in (31, 35)]
+    # updated keys keep key-only preimage evidence, their content is gone
+    assert mine and all(r[1] is None and r[2] is None and r[3] is None
+                        and r[4] == "update_preimage" for r in mine)
+    _strip_schemas(table)
+    inferred = strm.read_commit_changes(spark, table, since="s0")
+    assert inferred.schema == recorded.schema
+    assert _rows(inferred) == got
