@@ -41,7 +41,9 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators.sampling import stable_bucket
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
 
 def assign_clusters(
@@ -557,39 +559,29 @@ def pq_build_index(
     write ``path``/codes (id, pq_code — m small ints per vector, the
     dim*4/m-compressed searchable table) plus ``path``/codebooks (one row,
     m x k x sub_dim doubles). Online search then never touches the float
-    vectors or retrains anything. The overwrite holds the index writer
-    lease (r6) so a rebuild cannot interleave with a live append; training
-    runs BEFORE the lease (no table state is read or written), so the held
-    window is only the two writes — and a background heartbeat (r6 item 6)
-    re-stamps the lease during the O(corpus) encode write, the one step
-    that can outlive a conservative TTL at 100 TB. Returns the codebooks.
+    vectors or retrains anything. Training reads no table state and runs
+    before the index's leased section (operators/index_commit), which
+    holds only the two writes. Returns the codebooks.
 
-    ``corpus`` (r13 — VERDICT r12 item 3): when given, auto-registers the
-    searchable ``codes`` table in the corpus' derived-store registry as
-    kind ``'table'`` — a pure PQ index has no tombstone fan-out in
-    takedown (no pq_index_delete), so it registers on the AUDIT surface:
+    ``corpus``: when given, auto-registers the searchable ``codes`` table
+    in the corpus' derived-store registry as kind ``'table'``. A pure PQ
+    index has no tombstones, so it registers on the audit surface:
     takedown names it under ``manual_tables`` and takedown_verify scans it
     for residual ids. The codebooks sidecar holds no per-id content and is
     not registered."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
     fs = fs or mfs.LOCAL_FS
     books = pq_train(
         df, vec_col=vec_col, id_col=id_col, m=m, k=k,
         max_iters=max_iters, train_fraction=train_fraction,
         round_decimals=round_decimals,
     )
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, path, token):
-            pq_encode(df, books, vec_col=vec_col).select(
-                F.col(id_col), "pq_code"
-            ).write.mode("overwrite").parquet(path + "/codes")
-            df.sparkSession.createDataFrame(
-                [(books,)], "codebooks array<array<array<double>>>"
-            ).write.mode("overwrite").parquet(path + "/codebooks")
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    with ic.leased(fs, path, lease_owner):
+        pq_encode(df, books, vec_col=vec_col).select(
+            F.col(id_col), "pq_code"
+        ).write.mode("overwrite").parquet(path + "/codes")
+        df.sparkSession.createDataFrame(
+            [(books,)], "codebooks array<array<array<double>>>"
+        ).write.mode("overwrite").parquet(path + "/codebooks")
     if corpus is not None:
         from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown
 
@@ -620,51 +612,29 @@ def pq_index_append(
     to the codes table. Cost is a map-side encode of the batch plus the
     append write — O(batch), never a re-encode of the corpus.
 
-    Crash-safe (VERDICT r5 item 1): staged in a dot-prefixed dir inside
-    codes/ and committed through operators/index_commit's atomic-marker
-    protocol — a crash leaves the codes table either exactly pre-append or
-    (after the marker) rolled fully forward by recover_pq_index; readers
-    never see a torn batch. Returns the number of rows appended, observed
-    on the SAME evaluation as the write (no second scan of the batch, and
-    the count cannot disagree with what landed)."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
+    A staged append under the index lease (operators/index_commit):
+    readers never see a torn batch, and recover_pq_index heals a crash.
+    The stored codebooks are read inside the leased section, so a re-train
+    landing meanwhile cannot leave codes that searches with the new
+    codebooks misread; a caller-passed ``codebooks`` skips that read and
+    that protection. Returns the number of rows appended, observed on the
+    write's own evaluation."""
     fs = fs or mfs.LOCAL_FS
-    obs = Observation()
-    # single-writer contract enforced on the index root (r5 item 7). The
-    # stored codebooks are read INSIDE the leased section (ADVICE r6, same
-    # race as ivf_index_append): a re-train completing between an unleased
-    # read and the write would encode the batch against the old quantizer —
-    # codes unreadable by searches using the new codebooks. A caller-passed
-    # `codebooks` skips the read and with it this protection (caller owns
-    # the generation pin in that case).
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, path, token):
-            if codebooks is None:
-                codebooks = pq_load_codebooks(spark, path)
-            tag, staging = index_commit.new_staging(path + "/codes")
-            pq_encode(new_vectors, codebooks, vec_col=vec_col).select(
-                F.col(id_col), "pq_code"
-            ).observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(staging)
-            index_commit.commit_staged_append(fs, path + "/codes", tag)
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    st = ic.store("pq", path)
+    with ic.leased(fs, st.lease, lease_owner):
+        if codebooks is None:
+            codebooks = pq_load_codebooks(spark, path)
+        codes, obs = ic.counted(
+            pq_encode(new_vectors, codebooks, vec_col=vec_col).select(F.col(id_col), "pq_code")
+        )
+        ic.staged_append(fs, st, ["codes"], codes.write.parquet)
     return int(obs.get["n"])
 
 
 def recover_pq_index(path: str, fs=None) -> dict[str, list[str]]:
-    """Heal a PQ codes table after a crashed pq_index_append: appends whose
-    marker committed are rolled forward; marker-less staging is dropped as
-    pre-commit debris (the PQ twin of similarity.recover_ivf_index).
-    Idempotent — safe to run any time."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    return index_commit.recover_appends(fs or mfs.LOCAL_FS, path + "/codes")
+    """Heal a PQ codes table after a crashed pq_index_append
+    (index_commit.recover). Idempotent and leaseless."""
+    return ic.recover(ic.store("pq", path), fs)
 
 
 def pq_topk_indexed(
@@ -771,19 +741,17 @@ def build_ivfpq_index(
     neighbor). Order of knobs: m to the corpus's separation, n_probe for
     recall vs scan cost, refine last (cheap — k*refine row fetches).
 
-    Holds the index writer lease with a background heartbeat for the
-    duration of the writes (training runs before the lease — it reads no
-    table state), like build_ivf_index / pq_build_index.
+    The writes run in the index's leased section (operators/index_commit);
+    training reads no table state and runs before it, like build_ivf_index
+    and pq_build_index.
 
-    ``corpus`` (r13 — VERDICT r12 item 3): when given, the build
-    auto-registers the index in the corpus' derived-store registry
+    ``corpus``: when given, the build auto-registers the index in the corpus' derived-store registry
     (takedown.register_store, kind 'ivfpq') after the writes commit, so
     no-args takedown / takedown_verify cover it with no manual
     registration step. Omit only for corpus-less scratch indexes."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
         _cell_centroids,
     )
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
     fs = fs or mfs.LOCAL_FS
     books = pq_train(
@@ -791,23 +759,19 @@ def build_ivfpq_index(
         max_iters=max_iters, train_fraction=train_fraction,
         round_decimals=round_decimals,
     )
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner, ttl_sec=lease_ttl_sec)
-    try:
-        with mfs.lease_heartbeat(fs, path, token, ttl_sec=lease_ttl_sec):
-            df.write.mode("overwrite").partitionBy(cell_col).parquet(
-                path + "/vectors"
-            )
-            pq_encode(df, books, vec_col=vec_col).select(
-                F.col(id_col), F.col(cell_col), "pq_code"
-            ).write.mode("overwrite").partitionBy(cell_col).parquet(path + "/codes")
-            _cell_centroids(df, vec_col, cell_col).write.mode(
-                "overwrite"
-            ).parquet(path + "/centroids")
-            df.sparkSession.createDataFrame(
-                [(books,)], "codebooks array<array<array<double>>>"
-            ).write.mode("overwrite").parquet(path + "/codebooks")
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    with ic.leased(fs, path, lease_owner, lease_ttl_sec):
+        df.write.mode("overwrite").partitionBy(cell_col).parquet(
+            path + "/vectors"
+        )
+        pq_encode(df, books, vec_col=vec_col).select(
+            F.col(id_col), F.col(cell_col), "pq_code"
+        ).write.mode("overwrite").partitionBy(cell_col).parquet(path + "/codes")
+        _cell_centroids(df, vec_col, cell_col).write.mode(
+            "overwrite"
+        ).parquet(path + "/centroids")
+        df.sparkSession.createDataFrame(
+            [(books,)], "codebooks array<array<array<double>>>"
+        ).write.mode("overwrite").parquet(path + "/codebooks")
     if corpus is not None:
         from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown
 
@@ -853,7 +817,7 @@ def _ivfpq_search(
     cells = [r[cell_col] for r in probed_rows]
     cand = codes.filter(F.col(cell_col).isin(cells))
     if tombstones is not None:
-        # takedown (r8): ONE anti-join ahead of the ADC scan removes
+        # takedown: ONE anti-join ahead of the ADC scan removes
         # tombstoned ids from candidacy entirely — the shortlist (and
         # therefore the refine join) then provably excludes them, and
         # with frozen quantizers the results equal an index that never
@@ -977,66 +941,34 @@ def ivfpq_index_append(
     ONE transaction. Cost is O(batch): a map-side assign + encode and two
     staged writes, never a read of the corpus.
 
-    Crash-safe across BOTH tables: the batch stages in dot-prefixed dirs
-    inside each table and commits through a SINGLE atomic marker at the
-    index root (index_commit.commit_staged_append_multi) — a crash leaves
-    the whole index either exactly pre-append or, after the marker, rolled
-    fully forward by recover_ivfpq_index; readers can never see codes
-    whose vectors are missing (vectors land first) or a torn batch in
-    either table.
-
-    The codes staging is derived by READING BACK the staged vectors — one
-    source of truth, so the codes can never disagree with the vectors that
-    actually landed (a second evaluation of a non-deterministic batch plan
-    could). Centroids and codebooks are read INSIDE the leased section
-    (same generation-pin as ivf_index_append/pq_index_append). Returns the
-    number of rows appended, observed on the vectors write itself."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
+    One staged append into BOTH tables with a single root marker
+    (operators/index_commit), vectors landing before codes: readers never
+    see codes whose vectors are missing or a torn batch in either table,
+    and recover_ivfpq_index heals a crash. The codes are encoded by
+    reading back the staged vectors, so they cannot disagree with the
+    vectors that land (a second evaluation of a non-deterministic batch
+    could). Centroids and codebooks are read inside the leased section,
+    pinning one index generation. Returns the number of rows appended,
+    observed on the vectors write itself."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
-        cosine,
+        _assign_cells,
     )
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
     fs = fs or mfs.LOCAL_FS
-    obs = Observation()
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, path, token):
-            codebooks = pq_load_codebooks(spark, path)
-            cents_rows = (
-                spark.read.parquet(path + "/centroids").orderBy(cell_col).collect()
-            )
-            cells = [r[cell_col] for r in cents_rows]
-            cents = [[float(v) for v in r["centroid"]] for r in cents_rows]
-            vec = F.col(vec_col).cast("array<double>")
-            pairs = F.transform(
-                F.lit(cents),
-                lambda c, j: F.struct(
-                    F.round(cosine(vec, c), 9).alias("s"), j.alias("j")
-                ),
-            )
-            assigned = new_vectors.select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.get(F.lit(cells), F.array_max(pairs).getField("j")).alias(
-                    cell_col
-                ),
-            ).observe(obs, F.count(F.lit(1)).alias("n"))
-            tag, vec_staging = index_commit.new_staging(path + "/vectors")
+    st = ic.store("ivfpq", path)
+    with ic.leased(fs, st.lease, lease_owner):
+        codebooks = pq_load_codebooks(spark, path)
+        assigned, obs = ic.counted(
+            _assign_cells(spark, path, new_vectors, id_col, vec_col, cell_col)
+        )
+
+        def write(vec_staging: str, codes_staging: str) -> None:
             assigned.write.partitionBy(cell_col).parquet(vec_staging)
-            staged = spark.read.parquet(vec_staging)
-            pq_encode(staged, codebooks, vec_col=vec_col).select(
+            pq_encode(spark.read.parquet(vec_staging), codebooks, vec_col=vec_col).select(
                 F.col(id_col), F.col(cell_col), "pq_code"
-            ).write.partitionBy(cell_col).parquet(
-                index_commit.staging_path(path + "/codes", tag)
-            )
-            index_commit.commit_staged_append_multi(
-                fs, path, tag, ["vectors", "codes"]
-            )
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+            ).write.partitionBy(cell_col).parquet(codes_staging)
+
+        ic.staged_append(fs, st, ["vectors", "codes"], write)
     return int(obs.get["n"])
 
 
@@ -1048,64 +980,30 @@ def ivfpq_index_delete(
     fs=None,
     lease_owner: str | None = None,
 ) -> int:
-    """TAKEDOWN for the IVF-PQ index (r8): tombstone the given ids so
-    every subsequent search behaves exactly as if the index never
-    contained them — the propagation target for a corpus
-    delete_from_merge_table (feed read_commit_changes' delete records
-    here; composition pinned in tests). Physically the vectors/codes rows
-    stay (their cells' files are immutable); one tiny append lands the
-    distinct ids in ``tombstones/`` through the same atomic-marker commit
-    as the data appends, and both search paths anti-join it ahead of the
-    ADC scan. O(batch); ids absent from the index are harmless;
-    re-deleting is idempotent (anti-join semantics). Physical purge is
-    the scheduled re-index (build_ivfpq_index on the surviving corpus),
-    the same cadence that refreshes drifted quantizers — tombstones are
-    the cheap interim, exactly FAISS's remove-vs-rebuild trade. Returns
-    the number of tombstone ids appended. (Shared primitive:
-    similarity.tombstone_ids — the plain IVF index has the same takedown
-    via similarity.ivf_index_delete.)"""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
-        tombstone_ids,
-    )
-
-    return tombstone_ids(spark, path, keys, id_col=id_col, fs=fs,
-                         lease_owner=lease_owner)
+    """Takedown for the IVF-PQ index: tombstone the given ids so every
+    later search behaves exactly as if the index never contained them. It
+    is the propagation target of a corpus delete_from_merge_table (feed it
+    read_commit_changes' delete records; takedown.takedown does). The
+    vectors/codes rows stay in their immutable cell files; one small append
+    lands the distinct ids in ``tombstones/`` (index_commit), and both
+    search paths anti-join it ahead of the ADC scan. O(batch); absent ids
+    are harmless and re-deleting is idempotent. Physical erasure is
+    compact_ivfpq_index(purge_tombstones=True). Returns the number of
+    tombstone ids appended."""
+    return ic.write_tombstones(ic.store("ivfpq", path), keys, id_col, fs, lease_owner)
 
 
 def load_tombstones(spark: SparkSession, path: str, fs=None) -> DataFrame | None:
     """The index's committed tombstone ids, or None when nothing was ever
-    deleted (alias of similarity.load_tombstones)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity
-
-    return similarity.load_tombstones(spark, path, fs=fs)
+    deleted."""
+    return ic.read_tombstones(spark, ic.store("ivfpq", path), fs)
 
 
 def recover_ivfpq_index(path: str, fs=None) -> dict[str, list[str]]:
     """Heal a combined IVF-PQ index after a crashed ivfpq_index_append,
-    ivfpq_index_delete, or compact_ivfpq_index: root-marker appends roll
-    forward across BOTH data tables (vectors first); tombstone appends
-    roll forward from their own in-table markers; crashed compaction
-    swaps in either table are redone-or-cleared from their per-cell
-    markers; marker-less staging is dropped as pre-commit debris.
-    Idempotent — safe to run any time."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
-        _recover_swaps,
-    )
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    out = index_commit.recover_multi_appends(fs, path, ["vectors", "codes"])
-    out.setdefault("restored", [])
-    for table in ("vectors", "codes"):
-        swaps = _recover_swaps(fs, path + "/" + table)
-        out["restored"].extend(swaps["restored"])
-        out["removed"].extend(swaps["removed"])
-    if fs.isdir(path + "/tombstones"):
-        t = index_commit.recover_appends(fs, path + "/tombstones")
-        out["restored"].extend(t.get("completed", []))
-        out["removed"].extend(t.get("removed", []))
-    return out
+    ivfpq_index_delete or compact_ivfpq_index (index_commit.recover).
+    Idempotent and leaseless."""
+    return ic.recover(ic.store("ivfpq", path), fs)
 
 
 def compact_ivfpq_index(
@@ -1119,125 +1017,47 @@ def compact_ivfpq_index(
     id_col: str = "vec_id",
 ) -> dict:
     """Small-file compaction for a continuously-appended IVF-PQ index:
-    every ivfpq_index_append leaves one-plus files per touched cell in
-    BOTH tables, and the codes table — the one every search ADC-scans —
-    feels the file-open cost first. Rewrites over-threshold cells of
-    vectors/ AND codes/ through the same per-cell atomic-swap protocol as
-    compact_ivf_index (shared `_compact_table_cells`; crash healing via
-    recover_ivfpq_index, run first). Without purging, content never
-    changes, so no cross-table transaction is needed — each cell swap is
-    independently atomic and search results are identical throughout.
-    Returns {"vectors": {cell: files}, "codes": {cell: files}} for
-    rewritten cells.
+    every ivfpq_index_append leaves one or more files per touched cell in
+    BOTH tables, and the codes table, which every search ADC-scans, feels
+    the file-open cost first. Rewrites the over-threshold cells of
+    vectors/ and codes/ like compact_ivf_index (index_commit.compact).
+    Without purging, content never changes, so each cell swap stands
+    alone and search results are identical throughout. Returns
+    {"vectors": {cell: files}, "codes": {cell: files}} for rewritten cells.
 
-    ``purge_tombstones=True`` (r9 — VERDICT r8 item 2): physically drop
-    tombstoned rows from BOTH tables while rewriting exactly the cells
-    that hold them — O(touched cells) erasure instead of the full
-    re-index that was previously the only purge path
-    (ivfpq_index_delete's documented trade) — then atomically clear the
-    satisfied tombstones. Order is crash-safe without a cross-table
-    transaction BECAUSE the tombstones are cleared strictly last: until
-    then, every search still anti-joins them (a half-purged index answers
-    identically), and a re-run converges; recover_ivfpq_index heals any
-    crashed cell swap. Tombstone appends take the same writer lease, so
-    the tombstone set is frozen for the duration. Adds ``purged_rows``
-    (across both tables) and ``tombstones_cleared`` to the returned
-    dict."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
-        _compact_table_cells,
+    ``purge_tombstones=True`` drops tombstoned rows from BOTH tables while
+    rewriting exactly the cells that hold them, then clears the consumed
+    tombstones last: until then every search still anti-joins them, so a
+    half-purged index answers identically and a re-run converges. Adds
+    ``purged_rows`` (across both tables) and ``tombstones_cleared``."""
+    out = ic.compact(
+        spark, ic.store("ivfpq", path), fs, target_files_per_cell, max_files_per_cell,
+        purge=purge_tombstones, id_col=id_col, lease_owner=lease_owner,
     )
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        recover_ivfpq_index(path, fs)
-        purge_ids = None
-        if purge_tombstones:
-            tombs = load_tombstones(spark, path, fs)
-            if tombs is not None:
-                purge_ids = tombs.select(id_col).distinct()
-        out: dict = {}
-        purged = 0
-        for table in ("vectors", "codes"):
-            rewritten, dropped = _compact_table_cells(
-                spark, fs, path, path + "/" + table,
-                max_files_per_cell, target_files_per_cell, token,
-                purge_ids=purge_ids, id_col=id_col,
-            )
-            out[table] = rewritten
-            purged += dropped
-        if purge_tombstones:
-            cleared = False
-            if fs.isdir(path + "/tombstones"):
-                # strictly after BOTH tables were purged (see docstring)
-                fs.rmtree(path + "/tombstones")
-                cleared = True
-            out["purged_rows"] = purged
-            out["tombstones_cleared"] = cleared
-        return out
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    if not purge_tombstones:
+        return out["rewritten"]
+    return {
+        **out["rewritten"],
+        "purged_rows": out["purged_rows"],
+        "tombstones_cleared": out["tombstones_cleared"],
+    }
 
 
 def ivfpq_tombstoned_rows(
     spark: SparkSession, path: str, fs=None, id_col: str = "vec_id"
 ) -> int:
-    """Tombstoned rows still physically ON DISK across vectors/ and
-    codes/ — the purge-debt gauge (0 after
-    compact_ivfpq_index(purge_tombstones=True)). Reads the id column
-    only."""
-    tombs = load_tombstones(spark, path, fs=fs)
-    if tombs is None:
-        return 0
-    ids = F.broadcast(tombs.select(id_col).distinct())
-    return sum(
-        spark.read.parquet(path + "/" + t).join(ids, id_col, "semi").count()
-        for t in ("vectors", "codes")
-    )
+    """Tombstoned rows still physically on disk across vectors/ and codes/,
+    the purge-debt gauge: 0 after compact_ivfpq_index(purge_tombstones=True)."""
+    return ic.tombstoned_rows(spark, ic.store("ivfpq", path), fs, id_col)
 
 
 def ivfpq_index_stats(path: str, fs=None) -> dict:
-    """Operational stats for a combined IVF-PQ index — per-table committed
-    cell/file counts plus append/compaction debris and the lease state (the
-    IVF-PQ twin of similarity.ivf_index_stats). Rising
-    ``max_files_per_cell`` in either table is the compact_ivfpq_index
-    signal; non-zero debris is the recover_ivfpq_index signal."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import (
-        cell_file_counts,
-    )
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    out: dict = {"lease": mfs.lease_info(fs, path)}
-    root_entries = fs.listdir(path) if fs.isdir(path) else []
-    out["multi_append_markers"] = sum(
-        1 for e in root_entries if e.startswith(index_commit.MULTI_MARKER_PREFIX)
-    )
-    tdir = path + "/tombstones"
-    out["tombstone_files"] = (
-        sum(1 for e in fs.listdir(tdir) if e.endswith(".parquet"))
-        if fs.isdir(tdir)
-        else 0
-    )
-    for table in ("vectors", "codes"):
-        tdir = path + "/" + table
-        counts = cell_file_counts(tdir, fs) if fs.isdir(tdir) else {}
-        entries = fs.listdir(tdir) if fs.isdir(tdir) else []
-        out[table] = {
-            "cells": len(counts),
-            "data_files": sum(counts.values()),
-            "max_files_per_cell": max(counts.values(), default=0),
-            "append_staging_dirs": sum(
-                1 for e in entries if e.startswith(index_commit.STAGING_PREFIX)
-            ),
-            "compact_staging_dirs": sum(
-                1 for e in entries if e.startswith(".compact_")
-            ),
-            "swap_markers": sum(1 for e in entries if e.startswith(".swap_")),
-        }
-    return out
+    """Operational stats for a combined IVF-PQ index (index_commit.stats):
+    per-table committed cell/file counts and crash debris, root multi-table
+    append markers, tombstone files and the lease state. A rising
+    ``max_files_per_cell`` in either table calls for compact_ivfpq_index;
+    non-zero debris calls for recover_ivfpq_index."""
+    return ic.stats(ic.store("ivfpq", path), fs)
 
 
 def ivfpq_topk_batch(
@@ -1297,7 +1117,7 @@ def ivfpq_topk_batch(
     vectors = spark.read.parquet(path + "/vectors")
     tombstones = load_tombstones(spark, path)
     if tombstones is not None:
-        # takedown (r8): same single anti-join as the per-query path —
+        # takedown: same single anti-join as the per-query path —
         # tombstoned ids never reach the ADC stage of ANY query
         codes = codes.join(tombstones.select(id_col), id_col, "left_anti")
 

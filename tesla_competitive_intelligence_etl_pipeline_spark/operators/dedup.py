@@ -22,6 +22,9 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
+
 from tesla_competitive_intelligence_etl_pipeline_spark.operators.text import (
     _sliding_tuples,
     fingerprint_md5,
@@ -989,34 +992,28 @@ def write_signature_table(
     readers, like _SUCCESS): querying a signature table with different
     num_hashes/shingle_n than it was built with silently degrades recall
     (mismatched banding) or compares wrong-granularity Jaccard, so
-    cross_corpus_neardup_indexed asserts equality on read (VERDICT r4).
+    cross_corpus_neardup_indexed asserts equality on read.
     The sidecar also records the hash ``family``: banding a table of one
     family with the other family's buckets finds NOTHING in common, the
     worst silent-recall failure, so queries assert it. An md5 table makes
     the whole incremental crawl-dedup path hash-checkable in DuckDB:
     stored signatures, increment signatures, band buckets, cross-side
     candidates, exact-Jaccard verdicts.
-    The overwrite holds the table's writer lease (r6; scoped to a SIBLING
-    ``<path>.lock`` dir — the table path itself is the parquet dir and
-    mode('overwrite') would delete an in-dir lease mid-build) so
+    The overwrite runs in the table's leased section (operators/
+    index_commit; the lease sits in a sibling ``<path>.lock`` dir, because
+    mode('overwrite') would delete an in-dir lease mid-build), so
     concurrent rebuilds cannot interleave their files.
 
-    ``corpus`` (r13 — VERDICT r12 item 3): when given, the build
+    ``corpus``: when given, the build
     auto-registers the table in the corpus' derived-store registry
     (takedown.register_store, kind 'signature') so no-args takedown /
     takedown_verify cover it without a manual registration step."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
     _check_family(family, shingle_n)
-    lock_scope = path.rstrip("/") + ".lock"
-    token = mfs.acquire_writer_lease(mfs.LOCAL_FS, lock_scope)
-    try:
+    with ic.leased(mfs.LOCAL_FS, ic.store("signature", path).lease):
         _with_shingles_and_sig(
             docs, text_col, id_col, num_hashes, shingle_n, family=family
         ).write.mode("overwrite").parquet(path)
         _write_sig_params(docs.sparkSession, path, num_hashes, shingle_n, family)
-    finally:
-        mfs.release_writer_lease(mfs.LOCAL_FS, lock_scope, token)
     if corpus is not None:
         from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown
 
@@ -1472,174 +1469,43 @@ def append_signature_table(
     ValueError; a table without a sidecar refuses (an append cannot
     guess).
 
-    Crash-safe like ivf_index_append: the batch stages in a dot-prefixed
-    dir and commits through the atomic-marker protocol
-    (operators/index_commit) — a crash leaves the table exactly pre- or
-    post-append, healed by recover_signature_table on restart. Serialized
-    against rebuilds and other appenders on the sibling writer lease
-    (write_signature_table's lock scope). Returns rows appended, observed
-    on the same evaluation as the write.
+    A staged append under the table's lease (operators/index_commit):
+    readers never see a torn batch, and recover_signature_table heals a
+    crash. Returns rows appended, observed on the same evaluation as the
+    write.
 
-    Each append lands at most ``coalesce_files`` parquet files (code review
-    r7: the signature plan otherwise inherits the session's parallelism and
-    a tiny increment would land ~32 part files — the same small-file
-    accumulation the IVF compactors exist for); raise it for genuinely
-    large increments. The compaction path for a fragmented signature table
-    is a rebuild (write_signature_table over the full corpus — signatures
-    are deterministic, so a rebuild is value-identical)."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
+    Each append lands at most ``coalesce_files`` parquet files: the
+    signature plan otherwise inherits the session's parallelism, and a
+    tiny increment would land ~32 part files. Raise it for genuinely large
+    increments; compact_signature_table rewrites a fragmented table."""
     fs = fs or mfs.LOCAL_FS
     spark = new_docs.sparkSession
-    lock_scope = path.rstrip("/") + ".lock"
-    token = mfs.acquire_writer_lease(fs, lock_scope, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, lock_scope, token):
-            stored = spark.read.parquet(path + "/_params").first()
-            num_hashes = int(stored["num_hashes"])
-            shingle_n = int(stored["shingle_n"])
-            family = stored.asDict().get("family")
-            _check_family(family, shingle_n)
-            sigs = _with_shingles_and_sig(
-                new_docs, text_col, id_col, num_hashes, shingle_n, family=family
-            )
-            obs = Observation()
-            # repartition, NOT coalesce (code review r7): coalesce would
-            # cap the parallelism of the whole shingling/minhash plan at
-            # coalesce_files tasks; the shuffle moves only (doc_id, sh,
-            # sig) rows and keeps hashing fully parallel upstream
-            sigs = sigs.repartition(int(coalesce_files)).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            )
-            tag, staging = index_commit.new_staging(path)
-            sigs.write.parquet(staging)
-            index_commit.commit_staged_append(fs, path, tag)
-            return int(obs.get["n"])
-    finally:
-        mfs.release_writer_lease(fs, lock_scope, token)
+    st = ic.store("signature", path)
+    with ic.leased(fs, st.lease, lease_owner):
+        stored = spark.read.parquet(path + "/_params").first()
+        num_hashes = int(stored["num_hashes"])
+        shingle_n = int(stored["shingle_n"])
+        family = stored.asDict().get("family")
+        _check_family(family, shingle_n)
+        sigs = _with_shingles_and_sig(
+            new_docs, text_col, id_col, num_hashes, shingle_n, family=family
+        )
+        # repartition, not coalesce: coalesce would cap the parallelism of
+        # the whole shingling/minhash plan at coalesce_files tasks; the
+        # shuffle moves only (doc_id, sh, sig) rows
+        sigs, obs = ic.counted(sigs.repartition(int(coalesce_files)))
+        ic.staged_append(fs, st, [""], sigs.write.parquet)
+    return int(obs.get["n"])
 
 
 def recover_signature_table(path: str, fs=None) -> dict:
-    """Restart healing for append_signature_table,
-    delete_signature_entries AND compact_signature_table: roll every
-    marked append forward (data rows at the table root, tombstone ids
-    under ``_tombstones/``), roll every marked compaction swap forward
-    (the marker commits it — see compact_signature_table), and drop
-    marker-less staging as pre-commit debris. Idempotent; takes the same
-    sibling writer lease as the builders/appenders."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
+    """Restart healing for append_signature_table, delete_signature_entries
+    and compact_signature_table (index_commit.recover). Idempotent; takes
+    the table's ``.lock`` lease like the builders and appenders."""
     fs = fs or mfs.LOCAL_FS
-    lock_scope = path.rstrip("/") + ".lock"
-    token = mfs.acquire_writer_lease(fs, lock_scope)
-    try:
-        out = index_commit.recover_appends(fs, path)
-        # land crashed TOMBSTONE appends before replaying swaps (ADVICE
-        # r9): a swap marker records exactly which tombstone files its
-        # purge consumed and the replay deletes only those, so a tombstone
-        # landed here — committed after the crashed compaction's read —
-        # survives the replay instead of being wiped with the dir
-        tdir = path.rstrip("/") + "/_tombstones"
-        if fs.isdir(tdir):
-            tout = index_commit.recover_appends(fs, tdir)
-            out["completed"].extend(tout["completed"])
-            out["removed"].extend("_tombstones/" + s for s in tout["removed"])
-        swaps = _recover_sig_swaps(fs, path)
-        out["completed"].extend(swaps["completed"])
-        out["removed"].extend(swaps["removed"])
-        return out
-    finally:
-        mfs.release_writer_lease(fs, lock_scope, token)
-
-
-_SIG_SWAP_PREFIX = ".sigswap_"
-_SIG_COMPACT_PREFIX = ".sigcompact_"
-
-
-def _sig_data_files(fs, path: str) -> list[str]:
-    """The table's committed root data files (dot/underscore entries are
-    bookkeeping: _params, _tombstones, staging, markers, _SUCCESS)."""
-    return sorted(
-        f
-        for f in fs.listdir(path)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-
-
-def _roll_sig_swap_forward(fs, path: str, meta: dict) -> None:
-    """Complete a marked compaction swap from any intermediate state:
-    every listed old file is removed, every staged file lands under its
-    tag-prefixed name (the three per-file states of the module-standard
-    copy+delete crash model), staging and — for a purge — exactly the
-    tombstone files the compaction CONSUMED (``tomb_files``, recorded in
-    the marker) are dropped, then the marker. Deleting only the consumed
-    tombstones (ADVICE r9, high) is what makes the replay safe against a
-    tombstone committed AFTER the crashed compaction's read: rmtree'ing
-    the whole ``_tombstones/`` dir here would silently un-erase that doc.
-    Legacy markers without ``tomb_files`` predate the fix and keep the
-    dir-wide clear (they could only exist in a table compacted by the r9
-    code that crashed post-marker and was never healed)."""
-    import os
-
-    staging = os.path.join(path, meta["staging"])
-    for f in meta["old_files"]:
-        fs.rmtree(os.path.join(path, f))
-    for f in meta["files"]:
-        src = os.path.join(staging, f)
-        dst = os.path.join(path, f"{meta['tag']}-{f}")
-        if fs.exists(dst):
-            fs.rmtree(src)
-        elif fs.exists(src):
-            fs.rename(src, dst)
-    fs.rmtree(staging)
-    if meta.get("purge"):
-        if "tomb_files" in meta:
-            tdir = os.path.join(path, "_tombstones")
-            for f in meta["tomb_files"]:
-                p = os.path.join(tdir, f)
-                if fs.exists(p):
-                    fs.rmtree(p)
-            # drop the dir only when NOTHING remains (no later tombstone,
-            # no in-flight append staging or marker) — pure cleanup, so
-            # the common no-deletes-ever read stays a bare listdir miss
-            if fs.isdir(tdir) and not fs.listdir(tdir):
-                fs.rmtree(tdir)
-        else:  # legacy pre-fix marker
-            fs.rmtree(os.path.join(path, "_tombstones"))
-    fs.rmtree(os.path.join(path, f"{_SIG_SWAP_PREFIX}{meta['tag']}.json"))
-
-
-def _recover_sig_swaps(fs, path: str) -> dict:
-    """Heal crashed compact_signature_table runs: marked swaps roll
-    FORWARD (the atomic marker is the commit point and staging was
-    complete before it was put); marker-less ``.sigcompact_*`` staging is
-    pre-commit debris."""
-    import json
-    import os
-
-    out: dict = {"completed": [], "removed": []}
-    if not fs.isdir(path):
-        return out
-    entries = sorted(fs.listdir(path))
-    marked: set[str] = set()
-    for entry in entries:
-        if entry.startswith(_SIG_SWAP_PREFIX) and entry.endswith(".json"):
-            meta = json.loads(fs.read_bytes(os.path.join(path, entry)).decode())
-            marked.add(meta["tag"])
-            _roll_sig_swap_forward(fs, path, meta)
-            out["completed"].append(meta["tag"])
-    for entry in entries:
-        if (
-            entry.startswith(_SIG_COMPACT_PREFIX)
-            and entry[len(_SIG_COMPACT_PREFIX):] not in marked
-        ):
-            fs.rmtree(os.path.join(path, entry))
-            out["removed"].append(entry)
-    return out
+    st = ic.store("signature", path)
+    with ic.leased(fs, st.lease):
+        return ic.recover(st, fs)
 
 
 def compact_signature_table(
@@ -1651,135 +1517,38 @@ def compact_signature_table(
     lease_owner: str | None = None,
 ) -> dict:
     """Rewrite the signature table's data files down to
-    ``coalesce_files`` — the small-file compaction continuous
-    append_signature_table needs (each append lands its own files; a
-    year of hourly crawl increments is ~10^4 files and the band join
-    goes file-open-bound) — and, with ``purge_tombstones=True``, the
-    PHYSICAL-erasure half of delete_signature_entries: tombstoned docs'
-    rows are dropped during the rewrite and the satisfied tombstones
-    cleared, completing the GDPR story the ANN indexes got from
-    compact_ivfpq_index(purge_tombstones=True). Unlike a
-    write_signature_table rebuild, no text is re-read and nothing is
-    re-shingled — cost is one read+write of the stored (doc_id, sh, sig)
-    rows.
+    ``coalesce_files``: the small-file compaction continuous
+    append_signature_table needs (each append lands its own files; a year
+    of hourly crawl increments is ~10^4 files and the band join goes
+    file-open bound). With ``purge_tombstones=True`` it is the physical
+    half of delete_signature_entries: tombstoned docs' rows are dropped in
+    the rewrite and the consumed tombstones cleared. No text is re-read
+    and nothing is re-shingled; the cost is one read and write of the
+    stored (doc_id, sh, sig) rows.
 
-    Crash-safe via the module-standard atomic marker: the batch stages in
-    a dot-prefixed dir, ONE ``.sigswap_<tag>.json`` put (recording old
-    files, staged files, the purge flag, and — ADVICE r9 — the exact
-    tombstone files the purge consumed) is the commit point, then old
-    files drop, staged files land tag-prefixed, and — last — a purge
-    clears exactly the CONSUMED tombstone files. recover_signature_table
-    rolls a marked swap forward from any intermediate state; before the
-    marker the table is byte-identical. Tombstone semantics are monotone
-    through every crash point: crashed tombstone APPENDS are landed
-    before the tombstone read (so a committed-but-unlanded erasure is
-    purged, not wiped), rows are only ever dropped AFTER the marker that
-    also records the tombstone clear, and a tombstone committed after
-    this run's read survives any replay (the marker clears only the
-    files it lists) — so a query never sees an erased doc resurface and
-    no committed erasure is ever lost.
-    Like the ANN compactors, run it where a deployment runs OPTIMIZE —
-    readers concurrent with the file swap can see a torn file set (the
-    flat table has no manifest indirection). Serialized on the sibling
-    writer lease. Returns {"files_before", "files_after", "purged_rows",
+    One swap of the flat table (index_commit.compact) under the table's
+    lease: a crash leaves the table exactly before or after, a query never
+    sees an erased doc resurface, and a tombstone committed after this
+    run's read survives any replay. Run it where a deployment runs
+    OPTIMIZE. Returns {"files_before", "files_after", "purged_rows",
     "tombstones_cleared"}."""
-    import json
-    import os
-    import uuid as _uuid
-
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    lock_scope = path.rstrip("/") + ".lock"
-    token = mfs.acquire_writer_lease(fs, lock_scope, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, lock_scope, token):
-            # self-heal any crashed prior run first (idempotent). Order
-            # matters (ADVICE r9, high): crashed APPENDS — data rows at
-            # the root AND tombstone ids under _tombstones/ — must land
-            # BEFORE the swap replay and before this run reads either
-            # list, else a committed-but-unlanded tombstone is invisible
-            # to the purge (its staged file isn't a .parquet in the dir)
-            # and the old dir-wide tombstone clear then destroyed it —
-            # silently un-erasing the doc.
-            index_commit.recover_appends(fs, path)
-            tdir = path.rstrip("/") + "/_tombstones"
-            if fs.isdir(tdir):
-                index_commit.recover_appends(fs, tdir)
-            _recover_sig_swaps(fs, path)
-            olds = _sig_data_files(fs, path)
-            if not olds:
-                return {
-                    "files_before": 0,
-                    "files_after": 0,
-                    "purged_rows": 0,
-                    "tombstones_cleared": False,
-                }
-            # pin the exact tombstone FILES this purge consumes — the swap
-            # marker records them and roll-forward deletes only them, so a
-            # tombstone committed after this listing survives any replay
-            tomb_files: list[str] = []
-            tombs = None
-            if purge_tombstones and fs.isdir(tdir):
-                tomb_files = sorted(
-                    f for f in fs.listdir(tdir) if f.endswith(".parquet")
-                )
-                if tomb_files:
-                    tombs = spark.read.parquet(
-                        *[os.path.join(tdir, f) for f in tomb_files]
-                    )
-            df = spark.read.parquet(*[os.path.join(path, f) for f in olds])
-            obs = Observation()
-            n_before = df.count()  # parquet-footer count, no data scan
-            if tombs is not None:
-                df = df.join(
-                    F.broadcast(tombs.select("doc_id").distinct()),
-                    "doc_id",
-                    "left_anti",
-                )
-            df = df.repartition(int(coalesce_files)).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            )
-            tag = _uuid.uuid4().hex[:8]
-            staging_rel = _SIG_COMPACT_PREFIX + tag
-            staging = os.path.join(path, staging_rel)
-            df.write.parquet(staging)
-            staged = sorted(
-                f for f in fs.listdir(staging) if f.endswith(".parquet")
-            )
-            purged = n_before - int(obs.get["n"])
-            meta = {
-                "tag": tag,
-                "staging": staging_rel,
-                "files": staged,
-                "old_files": olds,
-                "purge": bool(purge_tombstones),
-                "tomb_files": tomb_files,
-            }
-            fs.put_atomic(
-                os.path.join(path, f"{_SIG_SWAP_PREFIX}{tag}.json"),
-                json.dumps(meta).encode(),
-            )  # commit point: from here the swap WILL complete
-            _roll_sig_swap_forward(fs, path, meta)
-            return {
-                "files_before": len(olds),
-                "files_after": len(_sig_data_files(fs, path)),
-                "purged_rows": int(purged),
-                "tombstones_cleared": bool(purge_tombstones and tombs is not None),
-            }
-    finally:
-        mfs.release_writer_lease(fs, lock_scope, token)
+    out = ic.compact(
+        spark, ic.store("signature", path), fs, int(coalesce_files),
+        shuffle=True, purge=purge_tombstones, lease_owner=lease_owner,
+    )
+    return {
+        "files_before": out["files_before"],
+        "files_after": sum(out["rewritten"][""].values()),
+        "purged_rows": out["purged_rows"],
+        "tombstones_cleared": out["tombstones_cleared"],
+    }
 
 
 # ---------------------------------------------------------------------------
-# Signature-table takedown (VERDICT r8 item 1): propagate corpus deletes to
-# the stored LSH signature table, the way similarity.tombstone_ids already
-# propagates them to the ANN indexes. Without this, a taken-down document's
-# signatures keep matching future crawl increments — wrong dedup verdicts
-# against erased content (GDPR/takedown obligations in the crawl loop).
+# Signature-table takedown: corpus deletes propagate to the stored LSH
+# signature table as they do to the ANN indexes. Without it, a taken-down
+# document's signatures keep matching future crawl increments: wrong dedup
+# verdicts against erased content.
 # ---------------------------------------------------------------------------
 
 
@@ -1792,61 +1561,29 @@ def delete_signature_entries(
     lease_owner: str | None = None,
 ) -> int:
     """Takedown for a materialized signature table: land the distinct doc
-    ids under ``<table>/_tombstones/`` through the same atomic-marker
-    commit as the data appends (operators/index_commit); the indexed crawl
-    query (cross_corpus_neardup_indexed) anti-joins stored
+    ids under ``<table>/_tombstones/`` (index_commit.write_tombstones); the
+    indexed crawl query (cross_corpus_neardup_indexed) anti-joins stored
     signatures against the tombstones before banding, so an erased
     document can never again propose (or win) a match. O(batch),
-    idempotent, ids absent from the table are harmless — the EXACT
-    semantics of similarity.tombstone_ids, with one storage twist: the
-    signature table's root IS its parquet dir, so tombstones live in an
-    underscore-prefixed subdir (invisible to ``spark.read.parquet(path)``,
-    like the ``_params`` sidecar).
+    idempotent, and ids absent from the table are harmless. The table's
+    root is its parquet dir, so tombstones live in an underscore-prefixed
+    subdir, invisible to ``spark.read.parquet(path)`` like ``_params``.
 
     Composes with the table-format DML: ``delete_from_merge_table`` on the
-    corpus → ``read_commit_changes`` delete records → this function — the
-    end-to-end wiring is the x2_sig_takedown registry entry and the
-    composition test in tests/test_ext.py. Physical purge is a rebuild
-    (write_signature_table over the survivors — signatures are
-    deterministic, so a rebuild is value-identical); a tombstoned id stays
-    suppressed even if re-appended, matching the ANN indexes. Returns the
-    number of tombstone ids appended; serialized on the table's sibling
-    writer lease."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    lock_scope = path.rstrip("/") + ".lock"
-    obs = Observation()
-    token = mfs.acquire_writer_lease(fs, lock_scope, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, lock_scope, token):
-            tdir = path.rstrip("/") + "/_tombstones"
-            tag, staging = index_commit.new_staging(tdir)
-            keys.select(F.col(id_col).alias("doc_id")).distinct().coalesce(
-                1
-            ).observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(staging)
-            index_commit.commit_staged_append(fs, tdir, tag)
-    finally:
-        mfs.release_writer_lease(fs, lock_scope, token)
-    return int(obs.get["n"])
+    corpus, then ``read_commit_changes`` delete records, then this function
+    (the x2_sig_takedown registry entry and the composition test in
+    tests/test_ext.py). A tombstoned id stays suppressed even if
+    re-appended, as in the ANN indexes, until
+    compact_signature_table(purge_tombstones=True) erases it. Returns the
+    number of tombstone ids appended."""
+    return ic.write_tombstones(ic.store("signature", path), keys, id_col, fs, lease_owner)
 
 
 def load_signature_tombstones(spark, path: str, fs=None) -> DataFrame | None:
     """The signature table's committed tombstone doc ids, or None when
-    nothing was ever deleted (the common case — crawl-query plans stay
+    nothing was ever deleted (the common case: crawl-query plans stay
     byte-identical)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    tdir = path.rstrip("/") + "/_tombstones"
-    if not fs.isdir(tdir) or not any(
-        f.endswith(".parquet") for f in fs.listdir(tdir)
-    ):
-        return None
-    return spark.read.parquet(tdir)
+    return ic.read_tombstones(spark, ic.store("signature", path), fs)
 
 
 def _stored_sigs_minus_tombstones(spark, sig_path: str) -> DataFrame:

@@ -1,215 +1,510 @@
-"""Crash-safe staged APPEND commit for materialized index tables (VERDICT r5
-item 1).
+"""The derived-store layer: one implementation of the writes, recovery,
+compaction, takedown and stats of the stores kept beside the corpus — the
+IVF index, the PQ index, the IVF-PQ index and the MinHash signature table.
 
-``ivf_index_append`` / ``pq_index_append`` previously wrote
-``mode("append")`` straight into the live table: a crash during Spark's job
-commit can leave a SUBSET of the batch's files visible to readers — a torn
-append — and on S3 the default file committer makes that window wide. That
-was inconsistent with the standard the repo set for itself: the streaming
-merge and ``compact_ivf_index`` both stage then commit atomically through a
-``MergeFS`` marker.
+A ``Store`` describes one store: its root, its writer-lease scope (the root
+itself, or a sibling ``<path>.lock`` for the signature table, whose root is
+the parquet dir that a rebuild's ``mode("overwrite")`` replaces), its data
+tables (cell-partitioned ``<cell_col>=<value>`` dirs, or one flat table at
+the root) and its tombstone dir. ``store(kind, path)`` builds the
+description of a registered kind; the kind modules keep only what differs
+per kind (centroid assignment, PQ encoding, the signature ``_params``
+check) and call the functions here.
 
-This module gives appends the same discipline, shared by both index kinds:
+Every mutation runs in a ``leased`` section: the store's writer lease is
+acquired (a second writer gets ``ConcurrentWriterError``), a heartbeat
+re-stamps it while the section runs, and it is released on exit. A crashed
+writer strands its lease; break it (``streaming.fs.break_writer_lease``)
+once the writer is known dead.
 
-1. Spark writes the batch to a dot-prefixed STAGING dir inside the table
-   (``.append_<tag>/``) — invisible to Spark's directory listing, so readers
-   never see it.
-2. ``commit_staged_append`` PUTs an atomic ``.appendcommit_<tag>.json``
-   marker recording every staged parquet file (and its partition subdir).
-   THE commit point: before the marker, nothing changed for readers and the
-   batch is debris; after it, the append WILL complete (or be rolled
-   forward by recovery).
-3. Each staged file is moved into the live table under the deterministic
-   name ``<tag>-<original>`` (tag-prefixed so a re-run lands on the same
-   target and a reader can never collide two appends), then staging and the
-   marker are dropped.
+Crash model. ``put_atomic`` is the only atomicity requirement (true of an
+S3 object PUT). A file move may be copy+delete, and a single-object copy is
+atomic, so after a crash each (source, destination) pair is in one of three
+states: source only (redo the move), both (copy done, delete pending: drop
+the source) or destination only (done). Every commit is one atomic marker
+PUT that records the exact files involved; before the marker nothing
+readers see has changed and staging is debris, after it ``recover`` rolls
+the commit forward from the recorded lists. Each roll-forward step is
+idempotent, so recovery converges from any crash point, including a crash
+inside recovery. Spark writes all staging into dot-prefixed dirs, which
+Spark's listing never reads.
 
-Crash model — identical to ``compact_ivf_index``'s swap: ``put_atomic`` is
-the only atomicity requirement (true of an S3 object PUT); per-file moves
-may be copy+delete and a single-object copy is atomic server-side (an S3
-COPY either materializes the destination object or doesn't), so after a
-crash each (staged file, live file) pair is in exactly one of three states:
-src only (redo the move), src+dst (copy done, delete pending — drop src),
-dst only (move complete). ``recover_appends`` rolls every marked append
-forward from that evidence and deletes marker-less staging dirs as
-pre-commit debris. Idempotent at every point; proven by the
-crash-at-every-op sweeps in tests/test_index_append_crash.py.
+- Append. The batch is staged in ``<table>/.append_<tag>/``. One marker
+  commits it: ``.appendcommit_<tag>.json`` in the table dir for a
+  single-table append, or ``.appendcommit_multi_<tag>.json`` at the store
+  root for a batch that must land in several tables at once (IVF-PQ
+  vectors and codes). Each staged file lands as ``<tag>-<file>`` in the
+  live table, tables in the listed order. Tombstone writes are appends to
+  the tombstone dir.
+- Compaction swap. One unit (a cell dir, or the flat table's root) is
+  rewritten into ``<table>/.sigcompact_<tag>/``; one
+  ``<table>/.sigswap_<tag>.json`` marker names the unit and records the
+  staged files, the files they replace and the tombstone files a purge
+  consumed. Roll-forward removes the replaced files, lands the staged ones
+  as ``<tag>-<file>``, then drops exactly the consumed tombstone files. A
+  purge records its tombstones only in its last swap, so they are cleared
+  after every tombstoned row is off disk, and a tombstone committed after
+  the purge listed them survives any replay.
+- ``recover`` lands committed appends (data tables and tombstones) before
+  it replays swaps, so a swap replay never runs against a committed but
+  unlanded tombstone; it drops marker-less staging. Per-cell ``.swap_``,
+  ``.compact_`` and ``.retired_`` entries left by an older per-directory
+  swap are healed by ``_heal_dir_swaps``.
 
-Single-writer contract: like compaction, concurrent appenders to the SAME
-table must be externally serialized (see streaming.fs writer-lease support).
+Readers concurrent with a compaction swap can see a torn file set (the
+tables have no manifest), so compaction runs where a deployment runs
+OPTIMIZE. Appends and tombstone writes are safe beside readers.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
 MARKER_PREFIX = ".appendcommit_"
 MULTI_MARKER_PREFIX = ".appendcommit_multi_"
 STAGING_PREFIX = ".append_"
+SWAP_PREFIX = ".sigswap_"
+COMPACT_PREFIX = ".sigcompact_"
+
+
+@dataclass(frozen=True)
+class Store:
+    root: str
+    lease: str
+    tables: tuple[str, ...]  # relative to root; "" is a flat table at the root
+    cells: bool  # data tables are partitioned into <cell_col>=<value> dirs
+    tombstones: str | None  # tombstone dir relative to root, None: no takedown
+    id_col: str | None = None  # fixed row-id column; None: the caller names it
+
+    def path(self, rel: str) -> str:
+        return os.path.join(self.root, rel) if rel else self.root
+
+
+# kind -> (data tables, cell-partitioned, tombstone dir, fixed id column,
+# lease-scope suffix); takedown fans out over the kinds with tombstones
+KINDS = {
+    "ivfpq": (("vectors", "codes"), True, "tombstones", None, ""),
+    "ivf": (("vectors",), True, "tombstones", None, ""),
+    "pq": (("codes",), False, None, None, ""),
+    "signature": (("",), False, "_tombstones", "doc_id", ".lock"),
+}
+
+
+TAKEDOWN_KINDS = tuple(kind for kind, spec in KINDS.items() if spec[2])
+
+
+def store(kind: str, path: str) -> Store:
+    tables, cells, tombstones, id_col, lease = KINDS[kind]
+    root = path.rstrip("/")
+    return Store(root, root + lease, tables, cells, tombstones, id_col)
+
+
+@contextlib.contextmanager
+def leased(fs, scope: str, owner: str | None = None, ttl_sec: float = 3600.0):
+    """The leased write section: acquire, heartbeat, release."""
+    token = mfs.acquire_writer_lease(fs, scope, owner=owner, ttl_sec=ttl_sec)
+    try:
+        with mfs.lease_heartbeat(fs, scope, token, ttl_sec=ttl_sec):
+            yield token
+    finally:
+        mfs.release_writer_lease(fs, scope, token)
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` observing its row count, read as ``int(obs.get["n"])`` after
+    the write: the count and the written rows come from one evaluation."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _data_files(fs, d: str) -> list[str]:
+    """Committed parquet files directly in ``d`` (dot- and underscore-
+    prefixed entries are bookkeeping); [] when ``d`` is missing."""
+    if not fs.isdir(d):
+        return []
+    return sorted(
+        f for f in fs.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def units(fs, table_dir: str, cells: bool) -> dict[str, list[str]]:
+    """{unit: data files} of one table: its cell dirs, or "" for a flat table."""
+    if not cells:
+        files = _data_files(fs, table_dir)
+        return {"": files} if files else {}
+    if not fs.isdir(table_dir):
+        return {}
+    return {
+        cell: _data_files(fs, os.path.join(table_dir, cell))
+        for cell in sorted(fs.listdir(table_dir))
+        if not cell.startswith((".", "_")) and "=" in cell
+        and fs.isdir(os.path.join(table_dir, cell))
+    }
 
 
 def new_staging(table_dir: str) -> tuple[str, str]:
-    """Pick a fresh append tag and its staging path inside ``table_dir``.
-    The caller has Spark write the batch THERE (dot-prefixed => readers of
-    the live table cannot see it), then calls commit_staged_append."""
+    """A fresh append tag and its staging path inside ``table_dir``."""
     tag = uuid.uuid4().hex[:8]
-    return tag, os.path.join(table_dir, STAGING_PREFIX + tag)
+    return tag, staging_path(table_dir, tag)
 
 
 def staging_path(table_dir: str, tag: str) -> str:
-    """Staging dir for an existing tag — used when one append stages into
-    SEVERAL tables under the same tag (commit_staged_append_multi)."""
     return os.path.join(table_dir, STAGING_PREFIX + tag)
 
 
 def _staged_files(fs, staging: str) -> list[list[str]]:
-    """[(partition_subdir or "", filename)] for every parquet file under the
-    staging dir — flat tables have one level, partitionBy output two (the
-    index tables never nest partitions deeper)."""
+    """[partition subdir or "", file] for every parquet file under the
+    staging dir: one level for flat tables, two for partitionBy output."""
     out: list[list[str]] = []
     for entry in sorted(fs.listdir(staging)):
         full = os.path.join(staging, entry)
         if fs.isdir(full):
-            if entry.startswith((".", "_")):
-                continue
-            for f in sorted(fs.listdir(full)):
-                if f.endswith(".parquet"):
-                    out.append([entry, f])
+            if not entry.startswith((".", "_")):
+                out.extend([entry, f] for f in _data_files(fs, full))
         elif entry.endswith(".parquet"):
             out.append(["", entry])
     return out
 
 
-def commit_staged_append(fs, table_dir: str, tag: str) -> int:
-    """Commit a staged batch: atomic marker PUT, then roll the files into
-    the live table. Returns the number of data files landed. A crash at any
-    point after the marker is healed by recover_appends (roll-forward); a
-    crash before it leaves the live table byte-identical."""
-    staging = os.path.join(table_dir, STAGING_PREFIX + tag)
-    files = _staged_files(fs, staging)
-    marker = os.path.join(table_dir, f"{MARKER_PREFIX}{tag}.json")
-    fs.put_atomic(
-        marker, json.dumps({"tag": tag, "files": files}).encode()
-    )  # commit point
-    _roll_forward(fs, table_dir, tag, files)
-    return len(files)
-
-
 def _land_files(fs, table_dir: str, tag: str, files: list[list[str]]) -> None:
-    """Land every marked file in the live table, tolerating any prior
-    partial progress (see module docstring for the three per-file states)."""
-    staging = os.path.join(table_dir, STAGING_PREFIX + tag)
+    staging = staging_path(table_dir, tag)
     for sub, f in files:
-        src = os.path.join(staging, sub, f) if sub else os.path.join(staging, f)
-        dst_dir = os.path.join(table_dir, sub) if sub else table_dir
-        dst = os.path.join(dst_dir, f"{tag}-{f}")
+        dst = os.path.join(table_dir, sub, f"{tag}-{f}")
         if fs.exists(dst):
-            fs.rmtree(src)  # copy finished earlier; delete may be pending
+            fs.rmtree(os.path.join(staging, sub, f))
         else:
-            fs.rename(src, dst)
+            fs.rename(os.path.join(staging, sub, f), dst)
     fs.rmtree(staging)
 
 
-def _roll_forward(fs, table_dir: str, tag: str, files: list[list[str]]) -> None:
-    _land_files(fs, table_dir, tag, files)
-    fs.rmtree(os.path.join(table_dir, f"{MARKER_PREFIX}{tag}.json"))
-
-
-def recover_appends(fs, table_dir: str) -> dict[str, list[str]]:
-    """Heal a table after a crashed append: roll FORWARD every append whose
-    marker committed; drop marker-less ``.append_*`` staging as pre-commit
-    debris. Safe to run any time (idempotent, no-op on a clean table).
-    Returns {"completed": [tags], "removed": [staging dirs]}."""
-    out: dict[str, list[str]] = {"completed": [], "removed": []}
-    if not fs.isdir(table_dir):
-        return out
-    entries = sorted(fs.listdir(table_dir))
-    marked: set[str] = set()
-    for entry in entries:
-        # multi markers share the prefix but belong to recover_multi_appends
-        if (
-            entry.startswith(MARKER_PREFIX)
-            and entry.endswith(".json")
-            and not entry.startswith(MULTI_MARKER_PREFIX)
-        ):
-            meta = json.loads(
-                fs.read_bytes(os.path.join(table_dir, entry)).decode()
-            )
-            marked.add(meta["tag"])
-            _roll_forward(fs, table_dir, meta["tag"], meta["files"])
-            out["completed"].append(meta["tag"])
-    for entry in entries:
-        if entry.startswith(STAGING_PREFIX) and entry[len(STAGING_PREFIX):] not in marked:
-            fs.rmtree(os.path.join(table_dir, entry))
-            out["removed"].append(entry)
-    return out
-
-
-def commit_staged_append_multi(
-    fs, root: str, tag: str, table_rels: list[str]
-) -> int:
-    """Commit one batch staged into SEVERAL tables under ``root`` (each at
-    ``<root>/<rel>/.append_<tag>/``) with a SINGLE atomic marker at the
-    index root — the combined-index (IVF-PQ) append, where vectors and
-    codes must land as one transaction. Before the marker, every table is
-    byte-identical for readers; after it, recovery rolls ALL of them
-    forward.
-
-    Tables land in the LIST ORDER given. Callers order so that tables other
-    stages JOIN AGAINST land first — for IVF-PQ, vectors before codes: a
-    reader between the two lands sees new vectors but only old codes, so
-    its ADC shortlist (and therefore its result) is exactly the pre-append
-    answer; the reverse order could shortlist ids whose vectors the refine
-    join can't find yet, silently wasting shortlist slots. Returns the
-    number of data files landed."""
-    tables = [
-        [rel, _staged_files(fs, staging_path(os.path.join(root, rel), tag))]
-        for rel in table_rels
-    ]
-    marker = os.path.join(root, f"{MULTI_MARKER_PREFIX}{tag}.json")
-    fs.put_atomic(
-        marker, json.dumps({"tag": tag, "tables": tables}).encode()
-    )  # commit point for ALL tables at once
+def staged_append(fs, st: Store, rels: list[str], write) -> int:
+    """Stage a batch into each table in ``rels`` (``write(*staging_paths)``
+    runs the Spark writes), then commit it with one marker: in the table
+    dir for one table, at the store root for several. Tables land in list
+    order, so list first the tables later stages join against (IVF-PQ:
+    vectors before codes, so a reader between the two never shortlists an
+    id whose vector is missing). Call inside ``leased``; returns the
+    number of files landed."""
+    tag = uuid.uuid4().hex[:8]
+    write(*[staging_path(st.path(rel), tag) for rel in rels])
+    tables = [[rel, _staged_files(fs, staging_path(st.path(rel), tag))] for rel in rels]
+    if len(rels) == 1:
+        marker = os.path.join(st.path(rels[0]), f"{MARKER_PREFIX}{tag}.json")
+        meta = {"tag": tag, "files": tables[0][1]}
+    else:
+        marker = os.path.join(st.root, f"{MULTI_MARKER_PREFIX}{tag}.json")
+        meta = {"tag": tag, "tables": tables}
+    fs.put_atomic(marker, json.dumps(meta).encode())  # commit point
     for rel, files in tables:
-        _land_files(fs, os.path.join(root, rel), tag, files)
+        _land_files(fs, st.path(rel), tag, files)
     fs.rmtree(marker)
     return sum(len(files) for _, files in tables)
 
 
-def recover_multi_appends(fs, root: str, table_rels: list[str]) -> dict[str, list[str]]:
-    """Heal a combined index after a crashed multi-table append: roll
-    FORWARD every append whose root marker committed (tables in the
-    marker's recorded order), then drop marker-less ``.append_*`` staging
-    inside each listed table as pre-commit debris. Staging whose tag is
-    owned by a SINGLE-table marker in that table dir is left for
-    recover_appends (the two protocols coexist without stealing each
-    other's work). Idempotent; safe any time."""
-    out: dict[str, list[str]] = {"completed": [], "removed": []}
-    if not fs.isdir(root):
-        return out
-    marked: set[str] = set()
-    for entry in sorted(fs.listdir(root)):
-        if entry.startswith(MULTI_MARKER_PREFIX) and entry.endswith(".json"):
-            meta = json.loads(fs.read_bytes(os.path.join(root, entry)).decode())
-            marked.add(meta["tag"])
-            for rel, files in meta["tables"]:
-                _land_files(fs, os.path.join(root, rel), meta["tag"], files)
-            fs.rmtree(os.path.join(root, entry))
-            out["completed"].append(meta["tag"])
-    for rel in table_rels:
-        tdir = os.path.join(root, rel)
-        if not fs.isdir(tdir):
+def write_tombstones(
+    st: Store, keys: DataFrame, id_col: str, fs=None, lease_owner: str | None = None
+) -> int:
+    """Append the distinct ids of ``keys`` to the store's tombstones;
+    searches anti-join them. Returns the number of ids appended."""
+    fs = fs or mfs.LOCAL_FS
+    ids, obs = counted(
+        keys.select(F.col(id_col).alias(st.id_col or id_col)).distinct().coalesce(1)
+    )
+    with leased(fs, st.lease, lease_owner):
+        staged_append(fs, st, [st.tombstones], ids.write.parquet)
+    return int(obs.get["n"])
+
+
+def read_tombstones(spark, st: Store, fs=None) -> DataFrame | None:
+    """The committed tombstone ids, or None when there are none (search
+    plans then stay those of a store that never deleted)."""
+    if not st.tombstones or not _data_files(fs or mfs.LOCAL_FS, st.path(st.tombstones)):
+        return None
+    return spark.read.parquet(st.path(st.tombstones))
+
+
+def _drop_tombstones(fs, st: Store, files: list[str]) -> None:
+    """Drop the consumed tombstone files, then the dir once it is empty."""
+    tdir = st.path(st.tombstones)
+    for f in files:
+        if fs.exists(os.path.join(tdir, f)):
+            fs.rmtree(os.path.join(tdir, f))
+    if fs.isdir(tdir) and not fs.listdir(tdir):
+        fs.rmtree(tdir)
+
+
+def _roll_swap_forward(fs, st: Store, table_dir: str, meta: dict) -> None:
+    unit_dir = os.path.join(table_dir, meta.get("unit", ""))
+    staging = os.path.join(table_dir, meta["staging"])
+    for f in meta["old_files"]:
+        fs.rmtree(os.path.join(unit_dir, f))
+        crc = os.path.join(unit_dir, f".{f}.crc")  # Hadoop local checksum
+        if fs.exists(crc):
+            fs.rmtree(crc)
+    for f in meta["files"]:
+        dst = os.path.join(unit_dir, f"{meta['tag']}-{f}")
+        if fs.exists(dst):
+            fs.rmtree(os.path.join(staging, f))
+        elif fs.exists(os.path.join(staging, f)):
+            fs.rename(os.path.join(staging, f), dst)
+    fs.rmtree(staging)
+    if "tomb_files" in meta:
+        _drop_tombstones(fs, st, meta["tomb_files"])
+    elif meta.get("purge"):  # markers written before the consumed list
+        fs.rmtree(st.path(st.tombstones))
+    fs.rmtree(os.path.join(table_dir, f"{SWAP_PREFIX}{meta['tag']}.json"))
+
+
+def _recover_appends(fs, st: Store, dirs: list[str], out: dict) -> None:
+    if fs.isdir(st.root):
+        for entry in sorted(fs.listdir(st.root)):
+            if entry.startswith(MULTI_MARKER_PREFIX) and entry.endswith(".json"):
+                marker = os.path.join(st.root, entry)
+                meta = json.loads(fs.read_bytes(marker).decode())
+                for rel, files in meta["tables"]:
+                    _land_files(fs, os.path.join(st.root, rel), meta["tag"], files)
+                fs.rmtree(marker)
+                out["completed"].append(meta["tag"])
+    for d in dirs:
+        if not fs.isdir(d):
             continue
-        for entry in sorted(fs.listdir(tdir)):
-            if not entry.startswith(STAGING_PREFIX):
-                continue
-            tag = entry[len(STAGING_PREFIX):]
-            if tag in marked:
-                continue
-            if fs.exists(os.path.join(tdir, f"{MARKER_PREFIX}{tag}.json")):
-                continue  # a single-table append owns this tag
-            fs.rmtree(os.path.join(tdir, entry))
-            out["removed"].append(f"{rel}/{entry}")
+        entries = sorted(fs.listdir(d))
+        marked = set()
+        for entry in entries:
+            if (
+                entry.startswith(MARKER_PREFIX)
+                and not entry.startswith(MULTI_MARKER_PREFIX)
+                and entry.endswith(".json")
+            ):
+                marker = os.path.join(d, entry)
+                meta = json.loads(fs.read_bytes(marker).decode())
+                _land_files(fs, d, meta["tag"], meta["files"])
+                fs.rmtree(marker)
+                marked.add(meta["tag"])
+                out["completed"].append(meta["tag"])
+        for entry in entries:
+            if entry.startswith(STAGING_PREFIX) and entry[len(STAGING_PREFIX):] not in marked:
+                fs.rmtree(os.path.join(d, entry))
+                out["removed"].append(os.path.join(d, entry))
+
+
+def _replay_swaps(fs, st: Store, table_dir: str, out: dict) -> None:
+    if not fs.isdir(table_dir):
+        return
+    entries = sorted(fs.listdir(table_dir))
+    marked = set()
+    for entry in entries:
+        if entry.startswith(SWAP_PREFIX) and entry.endswith(".json"):
+            meta = json.loads(fs.read_bytes(os.path.join(table_dir, entry)).decode())
+            _roll_swap_forward(fs, st, table_dir, meta)
+            marked.add(meta["tag"])
+            out["completed"].append(meta["tag"])
+    for entry in entries:
+        if entry.startswith(COMPACT_PREFIX) and entry[len(COMPACT_PREFIX):] not in marked:
+            fs.rmtree(os.path.join(table_dir, entry))
+            out["removed"].append(os.path.join(table_dir, entry))
+
+
+def _heal_dir_swaps(fs, table_dir: str, out: dict) -> None:
+    """Heal the per-cell directory swap of older code. A ``.swap_`` marker
+    records its ``.compact_`` staging dir and file list: complete staging
+    means the swap is redone (staging replaces the cell), partial staging
+    means the copy had finished and staging is a remnant. Unreferenced
+    ``.compact_`` dirs are pre-commit debris. A ``.retired_<tag>__<cell>``
+    dir restores a missing cell and is otherwise a superseded copy."""
+    if not fs.isdir(table_dir):
+        return
+    entries = sorted(fs.listdir(table_dir))
+    referenced = set()
+    for entry in entries:
+        if not (entry.startswith(".swap_") and entry.endswith(".json")):
+            continue
+        marker = os.path.join(table_dir, entry)
+        meta = json.loads(fs.read_bytes(marker).decode())
+        staging = os.path.join(table_dir, meta["staging"])
+        live = os.path.join(table_dir, meta["cell"])
+        referenced.add(meta["staging"])
+        if set(meta["files"]) <= set(fs.listdir(staging) if fs.isdir(staging) else []):
+            fs.rmtree(live)
+            fs.rename(staging, live)
+            fs.rmtree(os.path.join(live, "_SUCCESS"))
+            out["restored"].append(live)
+        else:
+            fs.rmtree(staging)
+            out["removed"].append(staging)
+        fs.rmtree(marker)
+    for entry in entries:
+        full = os.path.join(table_dir, entry)
+        if entry.startswith(".compact_") and entry not in referenced:
+            fs.rmtree(full)
+            out["removed"].append(full)
+        elif entry.startswith(".retired_") and "__" in entry:
+            live = os.path.join(table_dir, entry.split("__", 1)[1])
+            if fs.isdir(live):
+                fs.rmtree(full)
+                out["removed"].append(full)
+            else:
+                fs.rename(full, live)
+                out["restored"].append(live)
+
+
+def recover(st: Store, fs=None) -> dict[str, list[str]]:
+    """Heal the store after a crash at any point (module docstring): roll
+    committed appends and swaps forward, drop marker-less staging.
+    Idempotent. Returns {"completed": [tags], "removed": [paths]}, plus
+    "restored": [cell dirs] for cell-partitioned stores. Takes no lease."""
+    fs = fs or mfs.LOCAL_FS
+    out: dict[str, list[str]] = {"completed": [], "removed": []}
+    tables = [st.path(rel) for rel in st.tables]
+    tombs = [st.path(st.tombstones)] if st.tombstones else []
+    _recover_appends(fs, st, tables + tombs, out)
+    for table_dir in tables:
+        _replay_swaps(fs, st, table_dir, out)
+        if st.cells:
+            out.setdefault("restored", [])
+            _heal_dir_swaps(fs, table_dir, out)
     return out
+
+
+def compact(
+    spark,
+    st: Store,
+    fs=None,
+    target_files: int = 1,
+    max_files: int | None = None,
+    shuffle: bool = False,
+    purge: bool = False,
+    id_col: str = "vec_id",
+    lease_owner: str | None = None,
+) -> dict:
+    """Rewrite each unit holding more than ``max_files`` data files (every
+    unit when None) into ``target_files`` files, through one swap per unit.
+    ``shuffle`` repartitions instead of coalescing, keeping the read fully
+    parallel. ``purge`` drops tombstoned rows: units holding one are
+    rewritten whatever their file count, and the consumed tombstones are
+    cleared last. Recovers first, under the store's lease. Returns
+    {"rewritten": {table: {unit: files}}, "files_before", "purged_rows",
+    "tombstones_cleared"}."""
+    fs = fs or mfs.LOCAL_FS
+    id_col = st.id_col or id_col
+    with leased(fs, st.lease, lease_owner):
+        recover(st, fs)
+        tomb_files = _data_files(fs, st.path(st.tombstones)) if purge else []
+        ids = (
+            spark.read.parquet(st.path(st.tombstones)).select(id_col).distinct()
+            if tomb_files else None
+        )
+        plan = []  # (table, unit, its files, drops tombstoned rows)
+        for rel in st.tables:
+            table_dir = st.path(rel)
+            found = units(fs, table_dir, st.cells)
+            force = set(found) if ids is not None else set()
+            if force and st.cells:
+                # one id-and-cell-column scan finds the cells to purge
+                cell_col = next(iter(found)).split("=", 1)[0]
+                force = {
+                    f"{cell_col}={r[cell_col]}"
+                    for r in spark.read.parquet(table_dir)
+                    .join(F.broadcast(ids), id_col, "semi")
+                    .select(cell_col).distinct().collect()
+                }
+            plan += [
+                (rel, unit, files, unit in force) for unit, files in found.items()
+                if max_files is None or len(files) > max_files or unit in force
+            ]
+        out = {
+            "rewritten": {rel: {} for rel in st.tables},
+            "files_before": sum(len(p[2]) for p in plan),
+            "purged_rows": 0,
+            "tombstones_cleared": bool(tomb_files),
+        }
+        for i, (rel, unit, olds, purging) in enumerate(plan):
+            table_dir = st.path(rel)
+            # a cell dir's files hold the non-partition columns; the cell
+            # value comes back from the dir name on read
+            df = spark.read.parquet(os.path.join(table_dir, unit))
+            if purging:
+                n_before = df.count()  # parquet footers, no data scan
+                df = df.join(F.broadcast(ids), id_col, "left_anti")
+            df, obs = counted(df)
+            df = df.repartition(target_files) if shuffle else df.coalesce(target_files)
+            tag = uuid.uuid4().hex[:8]
+            staging = os.path.join(table_dir, COMPACT_PREFIX + tag)
+            df.write.parquet(staging)
+            if purging:
+                out["purged_rows"] += n_before - int(obs.get["n"])
+            meta = {
+                "tag": tag,
+                "unit": unit,
+                "staging": COMPACT_PREFIX + tag,
+                "files": _data_files(fs, staging),
+                "old_files": olds,
+                "tomb_files": tomb_files if i == len(plan) - 1 else [],
+            }
+            fs.put_atomic(
+                os.path.join(table_dir, f"{SWAP_PREFIX}{tag}.json"),
+                json.dumps(meta).encode(),
+            )  # commit point
+            _roll_swap_forward(fs, st, table_dir, meta)
+            out["rewritten"][rel][unit] = len(meta["files"])
+        if tomb_files and not plan:
+            _drop_tombstones(fs, st, tomb_files)
+        return out
+
+
+def stats(st: Store, fs=None) -> dict:
+    """Committed cell and file counts per table, the crash debris (staging,
+    unprocessed markers) that calls for ``recover``, tombstone files and
+    the lease state. Bookkeeping I/O only; no data file is read."""
+    fs = fs or mfs.LOCAL_FS
+
+    def n(entries, *prefixes):
+        return sum(1 for e in entries if e.startswith(prefixes))
+
+    out: dict = {
+        "lease": mfs.lease_info(fs, st.lease),
+        "multi_append_markers": n(
+            fs.listdir(st.root) if fs.isdir(st.root) else [], MULTI_MARKER_PREFIX
+        ),
+        "tombstone_files": (
+            len(_data_files(fs, st.path(st.tombstones))) if st.tombstones else 0
+        ),
+    }
+    for rel in st.tables:
+        table_dir = st.path(rel)
+        counts = [len(f) for f in units(fs, table_dir, st.cells).values()]
+        entries = fs.listdir(table_dir) if fs.isdir(table_dir) else []
+        out[rel] = {
+            "cells": len(counts),
+            "data_files": sum(counts),
+            "max_files_per_cell": max(counts, default=0),
+            "append_staging_dirs": n(entries, STAGING_PREFIX),
+            "append_markers": n(entries, MARKER_PREFIX),
+            "compact_staging_dirs": n(entries, COMPACT_PREFIX, ".compact_"),
+            "swap_markers": n(entries, SWAP_PREFIX, ".swap_"),
+        }
+    return out
+
+
+def tombstoned_rows(spark, st: Store, fs=None, id_col: str = "vec_id") -> int:
+    """Tombstoned rows still on disk across the data tables: the purge debt,
+    0 after ``compact(purge=True)``. Reads the id column only."""
+    tombs = read_tombstones(spark, st, fs)
+    if tombs is None:
+        return 0
+    id_col = st.id_col or id_col
+    ids = F.broadcast(tombs.select(id_col).distinct())
+    return sum(
+        spark.read.parquet(st.path(rel)).join(ids, id_col, "semi").count()
+        for rel in st.tables
+    )

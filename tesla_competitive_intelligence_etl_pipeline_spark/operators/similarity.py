@@ -28,10 +28,11 @@ bound.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
+from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
 
 def _dot_exact(a: Column, b: Column) -> Column:
@@ -214,35 +215,26 @@ def build_ivf_index(
     """Materialize the IVF index: vectors written PARTITIONED BY cell (so a
     probe reads only the probed cells' files — real partition pruning, not a
     post-scan filter) plus the tiny centroid table next to them. This is the
-    one-time index build a 100 TB ANN deployment amortizes. Holds the index
-    writer lease (r6): a build overwriting while an append/compaction runs
-    (or vice versa) would interleave two writers' files — now a loud
-    ConcurrentWriterError instead. A background heartbeat (r6 item 6)
-    re-stamps the lease while the corpus write runs, so a build longer than
-    ``lease_ttl_sec`` is not TTL-reclaimed mid-write — size the TTL to the
-    heartbeat interval (ttl/3), not to the whole build.
+    one-time index build a 100 TB ANN deployment amortizes. The writes run
+    in the index's leased section (operators/index_commit), so a build
+    cannot interleave its files with an append or compaction; the
+    heartbeat re-stamps the lease every ``lease_ttl_sec``/3, so size the
+    TTL to that interval, not to the whole build.
 
-    ``corpus`` (r13 — VERDICT r12 item 3): the corpus table these
-    embeddings derive from. When given, the build AUTO-REGISTERS the index
+    ``corpus``: the corpus table these embeddings derive from. When given, the build AUTO-REGISTERS the index
     in the corpus' derived-store registry (takedown.register_store, kind
     'ivf') after the write commits, so a bare no-args takedown /
     takedown_verify covers it without anyone remembering a manual
     register_store call — the builders register what they build. Omit only
     for genuinely corpus-less uses (ad-hoc scratch indexes)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
     fs = fs or mfs.LOCAL_FS
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner, ttl_sec=lease_ttl_sec)
-    try:
-        with mfs.lease_heartbeat(fs, path, token, ttl_sec=lease_ttl_sec):
-            embeddings.write.mode("overwrite").partitionBy(cell_col).parquet(
-                path + "/vectors"
-            )
-            _cell_centroids(
-                embeddings, vec_col, cell_col
-            ).write.mode("overwrite").parquet(path + "/centroids")
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    with ic.leased(fs, path, lease_owner, lease_ttl_sec):
+        embeddings.write.mode("overwrite").partitionBy(cell_col).parquet(
+            path + "/vectors"
+        )
+        _cell_centroids(
+            embeddings, vec_col, cell_col
+        ).write.mode("overwrite").parquet(path + "/centroids")
     if corpus is not None:
         from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown
 
@@ -268,7 +260,7 @@ def ivf_topk_indexed(
     vectors = spark.read.parquet(path + "/vectors")
     tombs = load_tombstones(spark, path)
     if tombs is not None:
-        # takedown (r8): tombstoned ids leave the index entirely — both
+        # tombstoned ids leave the index entirely — both
         # candidacy AND the query-by-id lookup (a deleted id used as a
         # query resolves to an empty result, exactly as on an index that
         # never held it; pinned in tests)
@@ -295,6 +287,32 @@ def ivf_topk_indexed(
     )
 
 
+def _assign_cells(
+    spark, path: str, new_vectors: DataFrame, id_col: str, vec_col: str, cell_col: str
+) -> DataFrame:
+    """(id, vector, cell) for each new vector, the cell being the stored
+    centroid of max cosine (the probe's metric), as an argmax over ONE 2-D
+    centroid literal (constant-size plan, the form of
+    clustering.assign_clusters' argmin). Shared by the IVF and IVF-PQ
+    appends; call it under the index lease, so that the assignment and the
+    write see one index generation (a rebuild landing between an unleased
+    centroid read and the write would put rows into cells absent from the
+    new centroid table, where no probe reaches them)."""
+    cents_rows = spark.read.parquet(path + "/centroids").orderBy(cell_col).collect()
+    cells = [r[cell_col] for r in cents_rows]
+    cents = [[float(v) for v in r["centroid"]] for r in cents_rows]
+    vec = F.col(vec_col).cast("array<double>")
+    pairs = F.transform(
+        F.lit(cents),
+        lambda c, j: F.struct(F.round(cosine(vec, c), 9).alias("s"), j.alias("j")),
+    )
+    return new_vectors.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.get(F.lit(cells), F.array_max(pairs).getField("j")).alias(cell_col),
+    )
+
+
 def ivf_index_append(
     spark,
     path: str,
@@ -305,109 +323,40 @@ def ivf_index_append(
     fs=None,
     lease_owner: str | None = None,
 ) -> int:
-    """Incremental index maintenance — the continual-ingest path: assign each
-    NEW vector to the nearest existing centroid (max cosine, the same metric
-    the probe uses) and append only those rows to the cell-partitioned
-    vectors table. The coarse quantizer stays frozen (classic IVF append):
-    no rebuild, no read of the existing corpus — cost is a map-side
-    assignment over the new batch plus the append write, so maintaining the
-    index at 100 TB costs O(batch), not O(corpus).
+    """Incremental index maintenance, the continual-ingest path: assign each
+    NEW vector to its nearest existing centroid and append only those rows
+    to the cell-partitioned vectors table. The coarse quantizer stays frozen
+    (classic IVF append): no rebuild and no read of the existing corpus, so
+    maintaining the index at 100 TB costs O(batch), not O(corpus).
+    Re-running build_ivf_index periodically re-trains cells if drift
+    accumulates (the standard re-index cadence trade-off).
 
-    Crash-safe (VERDICT r5 item 1): the batch is staged in a dot-prefixed
-    dir inside vectors/ and committed through the atomic-marker protocol of
-    operators/index_commit — the same standard compact_ivf_index set. A
-    crash before the marker leaves the live table byte-identical (staging is
-    invisible debris, reclaimed by recover_ivf_index); after it, recovery
-    rolls the whole batch forward. Readers never see a torn append.
-
-    Appended rows carry exactly (id_col, vec_col, cell_col) — the schema
-    build_ivf_index wrote. Returns the number of rows appended, observed on
-    the SAME evaluation as the write (code review r5: the earlier
-    count-after-write re-evaluated the batch plan and could disagree with
-    what landed for non-deterministic sources). Re-running build_ivf_index
-    periodically re-trains cells if drift accumulates (the standard
-    re-index cadence trade-off)."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
+    A staged append under the index lease (operators/index_commit):
+    readers never see a torn batch, and recover_ivf_index heals a crash.
+    Appended rows carry exactly (id_col, vec_col, cell_col), the schema
+    build_ivf_index wrote. Returns the number of rows appended, observed
+    on the write's own evaluation."""
     fs = fs or mfs.LOCAL_FS
-    # single-writer contract enforced: appends, compaction and recovery on
-    # this index serialize on the index root's writer lease (r5 item 7).
-    # The centroid read happens INSIDE the leased section (ADVICE r6): a
-    # rebuild completing between an unleased read and the write would have
-    # the append assign against stale centroids and land rows in cell
-    # partitions absent from the new centroid table — silently unreachable
-    # to probes. Under the lease, assignment and write see one index
-    # generation.
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        with contextlib.ExitStack() as stack:
-            # heartbeat (r6 item 6): the batch write can be long at scale
-            stack.enter_context(mfs.lease_heartbeat(fs, path, token))
-            cents_rows = (
-                spark.read.parquet(path + "/centroids")
-                .orderBy(cell_col)
-                .collect()
-            )
-            cells = [r[cell_col] for r in cents_rows]
-            cents = [[float(v) for v in r["centroid"]] for r in cents_rows]
-
-            # argmax cosine over ONE 2-D centroid literal (constant-size
-            # plan — same form as clustering.assign_clusters' argmin)
-            vec = F.col(vec_col).cast("array<double>")
-            pairs = F.transform(
-                F.lit(cents),
-                lambda c, j: F.struct(
-                    F.round(cosine(vec, c), 9).alias("s"), j.alias("j")
-                ),
-            )
-            obs = Observation()
-            assigned = new_vectors.select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.get(F.lit(cells), F.array_max(pairs).getField("j")).alias(
-                    cell_col
-                ),
-            ).observe(obs, F.count(F.lit(1)).alias("n"))
-            tag, staging = index_commit.new_staging(path + "/vectors")
-            assigned.write.partitionBy(cell_col).parquet(staging)
-            index_commit.commit_staged_append(fs, path + "/vectors", tag)
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    st = ic.store("ivf", path)
+    with ic.leased(fs, st.lease, lease_owner):
+        assigned, obs = ic.counted(
+            _assign_cells(spark, path, new_vectors, id_col, vec_col, cell_col)
+        )
+        ic.staged_append(fs, st, ["vectors"], assigned.write.partitionBy(cell_col).parquet)
     return int(obs.get["n"])
 
 
 def cell_file_counts(table_dir: str, fs=None) -> dict[str, int]:
     """Parquet data files per committed cell partition of ONE
-    cell-partitioned table dir — shared by the IVF vectors table and the
-    IVF-PQ vectors/codes tables."""
-    import os
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    counts: dict[str, int] = {}
-    for cell in fs.listdir(table_dir):
-        cdir = os.path.join(table_dir, cell)
-        # hidden/bookkeeping entries are dot- or underscore-prefixed
-        # (.compact_* staging, .swap_* markers, _SUCCESS); a bare prefix
-        # check — not '=' membership — keeps crash debris out of the counts
-        # (code review r5: a crashed swap's staging dir embeds the cell
-        # name, which contains '=')
-        if cell.startswith((".", "_")) or "=" not in cell or not fs.isdir(cdir):
-            continue
-        counts[cell] = sum(
-            1 for f in fs.listdir(cdir) if f.endswith(".parquet")
-        )
-    return counts
+    cell-partitioned table dir (the IVF vectors table, the IVF-PQ vectors
+    and codes tables); crash debris is not counted."""
+    units = ic.units(fs or mfs.LOCAL_FS, table_dir, cells=True)
+    return {cell: len(files) for cell, files in units.items()}
 
 
 def ivf_cell_file_counts(path: str, fs=None) -> dict[str, int]:
     """Parquet data files per committed cell partition of a materialized IVF
-    index — the observability twin of compact_ivf_index (watch this grow
-    under continuous ivf_index_append)."""
+    index: watch this grow under continuous ivf_index_append."""
     return cell_file_counts(path + "/vectors", fs)
 
 
@@ -419,45 +368,18 @@ def tombstone_ids(
     fs=None,
     lease_owner: str | None = None,
 ) -> int:
-    """Shared takedown primitive for the materialized indexes (r8): land
-    the distinct ids in ``<index>/tombstones/`` through the same
-    atomic-marker commit as the data appends; searches anti-join the
-    table ahead of candidate ranking. O(batch), idempotent, ids absent
-    from the index are harmless; physical purge is the scheduled
-    re-index. Used by ivf_index_delete and clustering.ivfpq_index_delete."""
-    from pyspark.sql import Observation
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    obs = Observation()
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        with mfs.lease_heartbeat(fs, path, token):
-            tdir = path + "/tombstones"
-            tag, staging = index_commit.new_staging(tdir)
-            keys.select(id_col).distinct().coalesce(1).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ).write.parquet(staging)
-            index_commit.commit_staged_append(fs, tdir, tag)
-    finally:
-        mfs.release_writer_lease(fs, path, token)
-    return int(obs.get["n"])
+    """Land the distinct ids in ``<index>/tombstones/`` (a staged append,
+    operators/index_commit); searches anti-join the table ahead of
+    candidate ranking. O(batch) and idempotent; ids absent from the index
+    are harmless; compaction with ``purge_tombstones=True`` erases the rows
+    physically. Returns the number of ids appended."""
+    return ic.write_tombstones(ic.store("ivf", path), keys, id_col, fs, lease_owner)
 
 
 def load_tombstones(spark, path: str, fs=None):
     """The index's committed tombstone ids, or None when nothing was ever
-    deleted (the common case — search plans stay byte-identical)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    tdir = path + "/tombstones"
-    if not fs.isdir(tdir) or not any(
-        f.endswith(".parquet") for f in fs.listdir(tdir)
-    ):
-        return None
-    return spark.read.parquet(tdir)
+    deleted (the common case: search plans stay byte-identical)."""
+    return ic.read_tombstones(spark, ic.store("ivf", path), fs)
 
 
 def ivf_index_delete(
@@ -468,148 +390,36 @@ def ivf_index_delete(
     fs=None,
     lease_owner: str | None = None,
 ) -> int:
-    """Takedown for the plain IVF index (r8) — the single-table twin of
-    clustering.ivfpq_index_delete: tombstone the ids so ivf_topk_indexed
-    never surfaces them, without touching the immutable cell files.
-    Returns the number of tombstone ids appended."""
+    """Takedown for the plain IVF index (tombstone_ids): ivf_topk_indexed
+    never surfaces the ids again, and the immutable cell files stay
+    untouched. Returns the number of tombstone ids appended."""
     return tombstone_ids(spark, path, keys, id_col=id_col, fs=fs,
                          lease_owner=lease_owner)
 
 
 def ivf_index_stats(path: str, fs=None) -> dict:
-    """Operational stats for a materialized IVF index — the index twin of
-    streaming.events.merge_table_stats: committed cell/file counts plus the
-    DEBRIS a crash left (append staging dirs, unprocessed commit markers,
-    compaction staging/swap markers) and the writer-lease state. Non-zero
-    debris counts are the signal to run recover_ivf_index (after breaking a
-    stranded lease); ``max_files_per_cell`` rising is the compaction
-    signal. Pure bookkeeping I/O — no data files are read."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    counts = ivf_cell_file_counts(path, fs)
-    vectors = path + "/vectors"
-    entries = fs.listdir(vectors) if fs.isdir(vectors) else []
-    lease = mfs.lease_info(fs, path)
+    """Operational stats for a materialized IVF index, the index twin of
+    streaming.events.merge_table_stats: committed cell/file counts, the
+    crash debris (append staging dirs, unprocessed append markers,
+    compaction staging dirs and swap markers), tombstone files and the
+    writer-lease state. Non-zero debris calls for recover_ivf_index (after
+    breaking a stranded lease); a rising ``max_files_per_cell`` calls for
+    compaction. No data file is read."""
+    out = ic.stats(ic.store("ivf", path), fs)
     return {
-        "cells": len(counts),
-        "data_files": sum(counts.values()),
-        "max_files_per_cell": max(counts.values(), default=0),
-        "append_staging_dirs": sum(
-            1 for e in entries if e.startswith(index_commit.STAGING_PREFIX)
-        ),
-        "append_markers": sum(
-            1 for e in entries if e.startswith(index_commit.MARKER_PREFIX)
-        ),
-        "compact_staging_dirs": sum(1 for e in entries if e.startswith(".compact_")),
-        "swap_markers": sum(1 for e in entries if e.startswith(".swap_")),
-        "tombstone_files": (
-            sum(1 for e in fs.listdir(path + "/tombstones") if e.endswith(".parquet"))
-            if fs.isdir(path + "/tombstones")
-            else 0
-        ),
-        "lease": lease,
+        **out["vectors"],
+        "tombstone_files": out["tombstone_files"],
+        "lease": out["lease"],
     }
 
 
 def recover_ivf_index(path: str, fs=None) -> dict[str, list[str]]:
-    """Heal a materialized IVF index after a crashed compaction. The swap
-    commits per cell through an ATOMIC marker (``.swap_<tag>.json``,
-    written with put_atomic) that records the staging dir and its exact
-    parquet file list — because under S3-style copy+delete renames neither
-    "live dir exists" nor "staging dir exists" proves anything (either can
-    be a partial copy; code review r5). Recovery decides from the marker:
-
-    - marker present and staging holds EVERY listed file -> the commit must
-      be redone: drop the (possibly partial) live dir, move staging in.
-    - marker present and staging is missing files -> the swap's copy phase
-      had finished (staging is only ever deleted AFTER the live copy is
-      complete), so the live dir is whole: drop the staging remnant.
-    - ``.compact_*`` staging without any marker -> pre-commit debris, drop.
-
-    Also heals crashed ivf_index_append runs (marker-rolled forward /
-    marker-less staging dropped) via index_commit.recover_appends.
-
-    Idempotent: re-running after a crash mid-recovery lands in the same
-    branch. Runs automatically at the start of compact_ivf_index; call
-    directly after a crash to restore search completeness. Returns
-    {"restored": [...], "removed": [...]}."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    vectors = path + "/vectors"
-    out: dict[str, list[str]] = {"restored": [], "removed": []}
-    if not fs.isdir(vectors):
-        return out
-    appends = index_commit.recover_appends(fs, vectors)
-    out["restored"].extend(appends["completed"])
-    out["removed"].extend(appends["removed"])
-    swaps = _recover_swaps(fs, vectors)
-    out["restored"].extend(swaps["restored"])
-    out["removed"].extend(swaps["removed"])
-    if fs.isdir(path + "/tombstones"):
-        t = index_commit.recover_appends(fs, path + "/tombstones")
-        out["restored"].extend(t["completed"])
-        out["removed"].extend(t["removed"])
-    return out
-
-
-def _recover_swaps(fs, table_dir: str) -> dict[str, list[str]]:
-    """Heal crashed compaction swaps in ONE cell-partitioned table dir —
-    the marker-decided logic documented in recover_ivf_index, shared with
-    the IVF-PQ tables (clustering.compact_ivfpq_index)."""
-    import json
-    import os
-
-    out: dict[str, list[str]] = {"restored": [], "removed": []}
-    if not fs.isdir(table_dir):
-        return out
-    entries = sorted(fs.listdir(table_dir))
-    referenced_staging: set[str] = set()
-    for entry in entries:
-        if not (entry.startswith(".swap_") and entry.endswith(".json")):
-            continue
-        marker = os.path.join(table_dir, entry)
-        meta = json.loads(fs.read_bytes(marker).decode())
-        staging = os.path.join(table_dir, meta["staging"])
-        live = os.path.join(table_dir, meta["cell"])
-        referenced_staging.add(meta["staging"])
-        staged_files = set(fs.listdir(staging)) if fs.isdir(staging) else set()
-        if set(meta["files"]) <= staged_files:
-            # staging complete -> redo the commit
-            fs.rmtree(live)
-            fs.rename(staging, live)
-            success = os.path.join(live, "_SUCCESS")
-            if fs.exists(success):
-                fs.rmtree(success)
-            out["restored"].append(live)
-        else:
-            # staging partial/gone -> live is whole; clear remnants
-            fs.rmtree(staging)
-            out["removed"].append(staging)
-        fs.rmtree(marker)
-    for entry in entries:
-        if entry.startswith(".compact_") and entry not in referenced_staging:
-            full = os.path.join(table_dir, entry)
-            fs.rmtree(full)
-            out["removed"].append(full)
-        elif entry.startswith(".retired_") and "__" in entry:
-            # legacy debris from the short-lived pre-marker rename-aside
-            # protocol (code review r5): restore if the live cell is gone,
-            # otherwise it is a superseded copy — best-effort, matching the
-            # old recovery semantics so an index crashed under that scheme
-            # is not silently left incomplete
-            full = os.path.join(table_dir, entry)
-            live = os.path.join(table_dir, entry.split("__", 1)[1])
-            if fs.isdir(live):
-                fs.rmtree(full)
-                out["removed"].append(full)
-            else:
-                fs.rename(full, live)
-                out["restored"].append(live)
-    return out
+    """Heal a materialized IVF index after a crashed append, tombstone
+    write or compaction (index_commit.recover). Idempotent and leaseless;
+    compact_ivf_index runs it first. Returns {"restored": [...],
+    "removed": [...]}."""
+    out = ic.recover(ic.store("ivf", path), fs)
+    return {"restored": out["completed"] + out["restored"], "removed": out["removed"]}
 
 
 def compact_ivf_index(
@@ -622,189 +432,36 @@ def compact_ivf_index(
     purge_tombstones: bool = False,
     id_col: str = "vec_id",
 ) -> dict:
-    """Small-file compaction for a continuously-appended IVF index (VERDICT
-    r4 item 4): every ivf_index_append leaves one-plus parquet files per
-    touched cell per batch — the classic small-file scale killer (a 100 TB
-    index appended hourly accrues ~10^4 files/cell/year; scan cost becomes
-    file-open bound). Rewrites every cell whose data-file count exceeds
-    ``max_files_per_cell`` down to ``target_files_per_cell`` coalesced
-    files; cells under the threshold keep their exact files (byte-for-byte,
-    like the merge table's untouched buckets). Indexed search results are
-    bit-identical before/after (pinned in tests) — compaction changes file
-    layout, never content; centroids are untouched.
+    """Small-file compaction for a continuously-appended IVF index: every
+    ivf_index_append leaves one or more parquet files per touched cell (a
+    100 TB index appended hourly accrues ~10^4 files/cell/year, and scans
+    become file-open bound). Rewrites every cell holding more than
+    ``max_files_per_cell`` files into ``target_files_per_cell`` files;
+    other cells keep their exact files. Search results are bit-identical
+    before and after; centroids are untouched. Each cell is one swap of
+    index_commit.compact under the index lease; run it where a deployment
+    runs OPTIMIZE. Returns {cell: new_file_count} for the rewritten cells.
 
-    Swap protocol (per cell, via the pluggable MergeFS; crash-safe under
-    S3-style copy+delete renames — code review r5 replaced the earlier
-    rename-aside scheme, whose recovery could not tell a partial copy from
-    a complete one): (1) write the coalesced cell to a dot-prefixed
-    staging dir (invisible to Spark's listing); (2) PUT an atomic
-    ``.swap_<tag>.json`` marker recording the staging dir and its exact
-    file list — THE commit point; (3) drop the live cell dir; (4) move
-    staging in; (5) drop the marker. A crash anywhere is healed by
-    ``recover_ivf_index`` (run automatically here first): before the
-    marker nothing changed; after it, the marker's file list decides
-    whether staging (complete) or live (complete once staging starts
-    disappearing) is authoritative. The single-writer contract (shared with
-    ivf_index_append) is ENFORCED via the index root's writer lease — an
-    overlapping append or second compaction raises ConcurrentWriterError
-    instead of corrupting (r5 item 7); run compaction where a deployment
-    runs OPTIMIZE, not concurrently with other maintenance. Returns
-    {cell: new_file_count} for the rewritten cells.
-
-    ``purge_tombstones=True`` (r9 — VERDICT r8 item 2) upgrades logical
-    takedown (tombstone_ids) to PHYSICAL erasure: cells holding
-    tombstoned rows are force-rewritten with those rows anti-joined out —
-    O(touched cells), not the full re-index that was previously the only
-    purge path — and, once every tombstoned row is off disk, the
-    satisfied tombstone table is cleared (search plans return to the
-    never-deleted shape). Crash-safe: cell rewrites ride the same swap
-    markers (healed by recover_ivf_index); the clear runs strictly LAST,
-    so a crash anywhere leaves remaining tombstones still anti-joined at
-    query time — searches never surface a deleted id mid-purge — and a
-    re-run converges. Tombstone appends hold the same writer lease, so no
-    new tombstone can land mid-purge. Returns {"rewritten": {cell:
-    files}, "purged_rows": n, "tombstones_cleared": bool} in this mode."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    fs = fs or mfs.LOCAL_FS
-    token = mfs.acquire_writer_lease(fs, path, owner=lease_owner)
-    try:
-        recover_ivf_index(path, fs)  # self-heal debris of any crashed prior run
-        purge_ids = None
-        if purge_tombstones:
-            tombs = load_tombstones(spark, path, fs)
-            if tombs is not None:
-                purge_ids = tombs.select(id_col).distinct()
-        rewritten, purged = _compact_table_cells(
-            spark, fs, path, path + "/vectors",
-            max_files_per_cell, target_files_per_cell, token,
-            purge_ids=purge_ids, id_col=id_col,
-        )
-        if not purge_tombstones:
-            return rewritten
-        cleared = False
-        if fs.isdir(path + "/tombstones"):
-            # strictly after every touched cell was rewritten: zero
-            # tombstoned rows remain on disk, so dropping the tombstones
-            # is safe (a crash mid-clear only leaves harmless extras)
-            fs.rmtree(path + "/tombstones")
-            cleared = True
-        return {
-            "rewritten": rewritten,
-            "purged_rows": purged,
-            "tombstones_cleared": cleared,
-        }
-    finally:
-        mfs.release_writer_lease(fs, path, token)
+    ``purge_tombstones=True`` turns logical takedown into physical erasure:
+    cells holding tombstoned rows are rewritten without them (O(touched
+    cells), not a re-index), and the consumed tombstones are cleared once
+    no tombstoned row is left on disk, so searches never surface a deleted
+    id mid-purge. Returns {"rewritten": {cell: files}, "purged_rows": n,
+    "tombstones_cleared": bool} in this mode."""
+    out = ic.compact(
+        spark, ic.store("ivf", path), fs, target_files_per_cell, max_files_per_cell,
+        purge=purge_tombstones, id_col=id_col, lease_owner=lease_owner,
+    )
+    if not purge_tombstones:
+        return out["rewritten"]["vectors"]
+    return {
+        "rewritten": out["rewritten"]["vectors"],
+        "purged_rows": out["purged_rows"],
+        "tombstones_cleared": out["tombstones_cleared"],
+    }
 
 
 def ivf_tombstoned_rows(spark, path: str, fs=None, id_col: str = "vec_id") -> int:
-    """Tombstoned rows still physically ON DISK in the vectors table — the
-    purge-debt gauge (0 after compact_ivf_index(purge_tombstones=True);
-    equals the logical takedown volume before it). Reads the id column
-    only (column pruning keeps it a sliver of the table)."""
-    tombs = load_tombstones(spark, path, fs)
-    if tombs is None:
-        return 0
-    return (
-        spark.read.parquet(path + "/vectors")
-        .join(F.broadcast(tombs.select(id_col).distinct()), id_col, "semi")
-        .count()
-    )
-
-
-def _compact_table_cells(
-    spark,
-    fs,
-    lease_root: str,
-    table_dir: str,
-    max_files_per_cell: int,
-    target_files_per_cell: int,
-    token: str,
-    purge_ids=None,
-    id_col: str = "vec_id",
-) -> tuple[dict[str, int], int]:
-    """Per-cell swap loop shared by compact_ivf_index (vectors) and
-    clustering.compact_ivfpq_index (vectors AND codes). The caller holds
-    the writer lease on ``lease_root`` and has already run recovery for
-    ``table_dir``; each rewritten cell re-stamps the lease (heartbeat).
-
-    ``purge_ids`` (r9 — VERDICT r8 item 2): a DataFrame of ids whose rows
-    must be PHYSICALLY dropped while rewriting. Cells holding any such id
-    are force-rewritten even under the file threshold (one id-and-
-    partition-column scan locates them — column pruning keeps that read a
-    sliver of the table; the rewrite itself stays O(touched cells)), and
-    every rewrite anti-joins the broadcast id set. Returns (rewritten
-    cell -> file count, rows dropped)."""
-    import json
-    import os
-    import uuid as _uuid
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    counts = cell_file_counts(table_dir, fs)
-    force: set[str] = set()
-    if purge_ids is not None and counts:
-        # partition column name from the dir layout ('label=3' -> 'label');
-        # values are primitive (int/string) as written by the builders
-        cell_col = next(iter(counts)).split("=", 1)[0]
-        touched = (
-            spark.read.parquet(table_dir)
-            .join(F.broadcast(purge_ids), id_col, "semi")
-            .select(cell_col)
-            .distinct()
-            .collect()
-        )
-        force = {f"{cell_col}={r[cell_col]}" for r in touched}
-    rewritten: dict[str, int] = {}
-    purged = 0
-    for cell, n_files in sorted(counts.items()):
-        if n_files <= max_files_per_cell and cell not in force:
-            continue
-        # heartbeat: a compaction spanning many cells can outlive its
-        # TTL, at which point another writer could legally reclaim the
-        # lease mid-run — re-stamp it per cell (a reentrant refresh is
-        # one read + one atomic put, trivial next to a cell rewrite)
-        mfs.acquire_writer_lease(fs, lease_root, owner=token)
-        cell_dir = os.path.join(table_dir, cell)
-        tag = _uuid.uuid4().hex[:8]
-        staging_rel = f".compact_{tag}"
-        staging = os.path.join(table_dir, staging_rel)
-        # the cell dir's files carry the non-partition columns only; the
-        # partition value is re-derived from the dir name on read, so the
-        # rewrite round-trips exactly
-        cell_df = spark.read.parquet(cell_dir)
-        if purge_ids is not None and cell in force:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            cell_df = cell_df.join(
-                F.broadcast(purge_ids), id_col, "left_anti"
-            ).observe(obs, F.count(F.lit(1)).alias("n"))
-        cell_df.coalesce(target_files_per_cell).write.parquet(staging)
-        if purge_ids is not None and cell in force:
-            # dropped = pre-rewrite rows (parquet-footer count, no data
-            # scan) minus survivors observed on the write's own evaluation
-            purged += spark.read.parquet(cell_dir).count() - int(obs.get["n"])
-        staged_files = sorted(
-            f for f in fs.listdir(staging) if f.endswith(".parquet")
-        )
-        marker = os.path.join(table_dir, f".swap_{tag}.json")
-        fs.put_atomic(
-            marker,
-            json.dumps(
-                {"cell": cell, "staging": staging_rel, "files": staged_files}
-            ).encode(),
-        )  # commit point: from here the swap WILL complete (or be redone)
-        fs.rmtree(cell_dir)
-        fs.rename(staging, cell_dir)
-        # drop Spark's _SUCCESS marker from the swapped-in dir (harmless,
-        # but keep the layout identical to partitionBy output)
-        success = os.path.join(cell_dir, "_SUCCESS")
-        if fs.exists(success):
-            fs.rmtree(success)
-        fs.rmtree(marker)
-        rewritten[cell] = sum(
-            1 for f in fs.listdir(cell_dir) if f.endswith(".parquet")
-        )
-    return rewritten, purged
+    """Tombstoned rows still physically on disk in the vectors table, the
+    purge-debt gauge: 0 after compact_ivf_index(purge_tombstones=True)."""
+    return ic.tombstoned_rows(spark, ic.store("ivf", path), fs, id_col)

@@ -334,40 +334,24 @@ def _propagate(
     spark: SparkSession,
     gone_rows: list,
     id_col: str,
-    ivf_indexes: tuple[str, ...],
-    ivfpq_indexes: tuple[str, ...],
-    signature_tables: tuple[str, ...],
+    stores: dict[str, tuple[str, ...]],
     fs,
     lease_owner: str | None,
 ) -> dict[str, int]:
-    """Tombstone the delete set in every listed store — idempotent (each
-    store's delete_* treats repeated / absent ids as harmless), so both
-    the happy path and crash recovery drive the same fan-out."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import (
-        clustering,
-        dedup,
-        similarity,
-    )
+    """Tombstone the delete set in every listed store of each kind that
+    keeps tombstones (index_commit.write_tombstones): idempotent, so both
+    the happy path and crash recovery drive the same fan-out. Returns
+    {store path: ids tombstoned}."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 
-    stores: dict[str, int] = {}
-    if gone_rows:
-        ids = spark.createDataFrame(gone_rows)
-        for path in ivfpq_indexes:
-            stores[path] = clustering.ivfpq_index_delete(
-                spark, path, ids, id_col=id_col, fs=fs, lease_owner=lease_owner
+    ids = spark.createDataFrame(gone_rows) if gone_rows else None
+    out: dict[str, int] = {}
+    for kind in ic.TAKEDOWN_KINDS:
+        for path in stores.get(kind, ()):
+            out[path] = 0 if ids is None else ic.write_tombstones(
+                ic.store(kind, path), ids, id_col, fs, lease_owner
             )
-        for path in ivf_indexes:
-            stores[path] = similarity.ivf_index_delete(
-                spark, path, ids, id_col=id_col, fs=fs, lease_owner=lease_owner
-            )
-        for path in signature_tables:
-            stores[path] = dedup.delete_signature_entries(
-                spark, path, ids, id_col=id_col, fs=fs, lease_owner=lease_owner
-            )
-    else:
-        for path in (*ivfpq_indexes, *ivf_indexes, *signature_tables):
-            stores[path] = 0
-    return stores
+    return out
 
 
 def sweep_takedown_pins(target: str, fs=None) -> list[str]:
@@ -490,9 +474,11 @@ def recover_takedowns(
             spark,
             gone_rows,
             id_col,
-            tuple(rec.get("ivf_indexes") or ()),
-            tuple(rec.get("ivfpq_indexes") or ()),
-            tuple(rec.get("signature_tables") or ()),
+            {
+                "ivf": tuple(rec.get("ivf_indexes") or ()),
+                "ivfpq": tuple(rec.get("ivfpq_indexes") or ()),
+                "signature": tuple(rec.get("signature_tables") or ()),
+            },
             fs,
             lease_owner,
         )
@@ -762,10 +748,7 @@ def takedown(
     # bounded by the request size — pin it once so each store's
     # tombstone append doesn't re-walk the log
     gone_rows = gone.collect()
-    stores = _propagate(
-        spark, gone_rows, id_col,
-        ivf_indexes, ivfpq_indexes, signature_tables, fs, lease_owner,
-    )
+    stores = _propagate(spark, gone_rows, id_col, resolved, fs, lease_owner)
     # obligation met: record first, THEN the pin (sweep_takedown_pins
     # treats a record-less pin as safely droppable debris)
     fs.rmtree(_request_path(corpus, request_id))

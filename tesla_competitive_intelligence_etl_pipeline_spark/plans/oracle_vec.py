@@ -75,9 +75,9 @@ def minhash_lsh_portable_sql(
     (signed-64 wrap arithmetic done in HUGEINT mod 2^64, bit-identical to
     Spark's long overflow), md5 band buckets, the band self-join candidate
     set, and exact-Jaccard verification. This is what upgrades the LSH
-    pair-finding class from rows-only: the dedup.minhash_lsh_pairs_portable
-    variant uses only engine-portable hashes, so DuckDB re-derives the
-    identical candidate set and pair list."""
+    pair-finding class from rows-only: dedup.minhash_lsh_pairs with
+    ``family="md5"`` uses only engine-portable hashes, so DuckDB re-derives
+    the identical candidate set and pair list."""
     rows_per_band = num_hashes // bands
     assert shingle_n == 3, "SQL builder is written for trigram shingles"
 
@@ -288,8 +288,8 @@ def _portable_side_ctes(pfx: str, src_sql: str, num_hashes: int, bands: int) -> 
     and ``{pfx}banded`` (doc_id, band, bucket) for ONE corpus side whose
     rows come from ``src_sql`` (must yield doc_id, text) — the per-side
     building block of the cross-corpus portable oracle, mirroring
-    dedup.portable_hashed_shingles + minhash_int_signature +
-    _band_explode_portable."""
+    dedup._shingle_hashes + minhash_int_signature + _band_explode, each
+    with ``family="md5"``."""
     rows_per_band = num_hashes // bands
     mins = []
     for j in range(num_hashes):
@@ -339,7 +339,7 @@ def cross_corpus_indexed_portable_sql(
 ) -> str:
     """Oracle for x2_cross_corpus_indexed_portable: the FULL incremental
     crawl-dedup path in SQL — DuckDB re-derives the STORED side's portable
-    signatures (what write_signature_table_portable materialized), the
+    signatures (what write_signature_table(family="md5") materialized), the
     increment's signatures, both band-bucket sets, the cross-side-only
     candidate join, and the exact-Jaccard verdicts. Sources mirror the
     registry entry: stored corpus = documents doc_id < 100; increment =
@@ -430,7 +430,7 @@ def simhash_portable_sql(
     """Oracle for x2_simhash_portable: the full 60-bit SimHash pipeline in
     SQL — md5-derived token hashes, per-bit sign votes, 15-bit band chunks,
     banded self-join, bit_count(xor) hamming filter — mirroring
-    dedup.simhash_pairs_portable. 60 bits keep everything positive in
+    dedup.simhash_pairs(family="md5"). 60 bits keep everything positive in
     signed 64-bit, so shifts and masks agree across engines."""
     chunk_bits = 60 // bands
     mask = (1 << chunk_bits) - 1

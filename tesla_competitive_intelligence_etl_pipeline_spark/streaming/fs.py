@@ -377,9 +377,10 @@ def acquire_writer_lease(
     CAS (local rename, plain S3 PUT) the refresh is a non-conditional
     put_atomic after a plain read and the window remains; the operational
     rule is then the one above, applied to the HEARTBEAT INTERVAL: a
-    heartbeating long job (compact_ivf_index re-stamps per cell) must use
-    a TTL comfortably above its longest between-heartbeat gap — one cell
-    rewrite — so the refresh always runs against a still-live lease,
+    heartbeating long job (every derived-store write runs under
+    operators/index_commit.leased, which re-stamps every TTL/3) must use
+    a TTL comfortably above its longest between-heartbeat gap, so the
+    refresh always runs against a still-live lease,
     where stomping is refreshing one's own record and the race is
     vacuous.
 
@@ -480,9 +481,9 @@ def lease_heartbeat(
     (VERDICT r6 item 6): a daemon thread re-stamps the lease record every
     ``interval_sec`` (default ttl/3) so a maintenance job whose single
     longest step — a full-corpus encode write, a big merge commit — outlives
-    a conservative TTL is not reclaimed mid-run. This covers the case the
-    per-step reentrant re-acquire (compact_ivf_index's per-cell stamp)
-    cannot: one long step with no between-step point to refresh from.
+    a conservative TTL is not reclaimed mid-run. This covers the case a
+    per-step reentrant re-acquire cannot: one long step with no
+    between-step point to refresh from.
 
     On a CAS store (fs.supports_cas) each re-stamp is a put_if_match on
     the record just read, so a reclaim racing the re-stamp fails the

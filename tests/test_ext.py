@@ -1335,23 +1335,58 @@ def test_leakage_safe_split_keeps_dup_groups_together(spark):
     assert {"train", "val", "test"} <= set(grp_split.values())
 
 
-def test_compact_crash_at_every_op_recovers_losslessly(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_compact_crash_at_every_op_recovers_losslessly(spark, sf_dir, tmp_path, kind):
     """Exhaustive crash sweep for the compaction swap under S3 semantics:
     inject a crash after EVERY mutating filesystem op (marker puts, each
     copied file, each delete) across the whole multi-cell compaction, run
     recovery with a fresh filesystem (simulating restart), and require the
     index rows bit-identical to the pristine index at every crash point —
-    the compaction twin of the merge's crash sweep."""
+    the compaction twin of the merge's crash sweep.
+
+    The IVF-PQ case compacts with ``purge_tombstones=True`` after one id
+    was tombstoned: at every crash point the healed index must answer
+    exactly like the pristine (tombstoned) index, and a clean re-run must
+    leave no tombstoned row on disk and every other row intact."""
     import shutil
 
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
     emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
     pristine = str(tmp_path / "pristine")
-    sim.build_ivf_index(emb.filter(F.col("vec_id") < 100), pristine)
+    if kind == "ivf":
+        sim.build_ivf_index(emb.filter(F.col("vec_id") < 100), pristine)
+        append, recover = sim.ivf_index_append, sim.recover_ivf_index
+        compact = functools.partial(sim.compact_ivf_index, max_files_per_cell=1)
+    else:
+        books = clustering.build_ivfpq_index(
+            emb.filter(F.col("vec_id") < 100), pristine,
+            m=4, k=8, max_iters=2, round_decimals=6,
+        )
+        append, recover = clustering.ivfpq_index_append, clustering.recover_ivfpq_index
+        # a threshold no cell reaches: the purge alone picks the cells
+        compact = functools.partial(
+            clustering.compact_ivfpq_index,
+            max_files_per_cell=10_000, purge_tombstones=True,
+        )
     for lo in (100, 120):
         batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20))
-        sim.ivf_index_append(spark, pristine, batch.select("vec_id", "embedding"))
+        append(spark, pristine, batch.select("vec_id", "embedding"))
+    if kind == "ivfpq":
+        query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+
+        def search(p):
+            return [tuple(r) for r in clustering.ivfpq_topk_indexed(
+                spark, p, query, k=10, n_probe=2, refine=4, codebooks=books
+            ).collect()]
+
+        doomed = next(r[0] for r in search(pristine) if r[0] != 0)
+        clustering.ivfpq_index_delete(
+            spark, pristine, spark.createDataFrame([(doomed,)], "vec_id long")
+        )
+        want = search(pristine)
+        assert doomed not in {r[0] for r in want}
     before = sorted(
         tuple(r) for r in spark.read.parquet(pristine + "/vectors").collect()
     )
@@ -1360,7 +1395,7 @@ def test_compact_crash_at_every_op_recovers_losslessly(spark, sf_dir, tmp_path):
     probe = str(tmp_path / "probe")
     shutil.copytree(pristine, probe)
     probe_fs = mfs.NonAtomicRenameFS()
-    assert sim.compact_ivf_index(spark, probe, max_files_per_cell=1, fs=probe_fs)
+    assert compact(spark, probe, fs=probe_fs)
     total_ops = probe_fs.ops
     assert total_ops >= 6  # several cells x (put + copies + deletes)
 
@@ -1369,14 +1404,23 @@ def test_compact_crash_at_every_op_recovers_losslessly(spark, sf_dir, tmp_path):
         shutil.copytree(pristine, path)
         fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
         try:
-            sim.compact_ivf_index(spark, path, max_files_per_cell=1, fs=fs)
+            compact(spark, path, fs=fs)
         except mfs.NonAtomicRenameFS.InjectedCrash:
-            pass
-        sim.recover_ivf_index(path)  # restart with a healthy filesystem
-        after = sorted(
-            tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
-        )
-        assert after == before, f"rows diverged after crash at op {crash_at}"
+            mfs.break_writer_lease(mfs.LOCAL_FS, path)
+        recover(path)  # restart with a healthy filesystem
+        if kind == "ivf":
+            after = sorted(
+                tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
+            )
+            assert after == before, f"rows diverged after crash at op {crash_at}"
+        else:
+            assert search(path) == want, f"search diverged at crash op {crash_at}"
+            compact(spark, path)  # a clean re-run completes the purge
+            assert clustering.ivfpq_tombstoned_rows(spark, path) == 0
+            after = sorted(
+                tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
+            )
+            assert after == [r for r in before if r[0] != doomed], crash_at
         shutil.rmtree(path)
 
 
