@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Generate a local sf1 scale point (VERDICT r9 item 5): ~10x sf0.1, same
 schemas, built as key-shifted disjoint copies of the driver's sf0.1 tables
-(the SCALING.md volume-scaling method — scripts/scaling_r5.py precedent).
+(the SCALING.md volume-scaling method).
 Output: /root/repo/.localdata/sf1/*.parquet (gitignored; ~200 MB).
 
 Semantics of the copies:

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""RECURRING sf0.1 -> sf1 scale point (r11 — VERDICT r10 item 5; the r10
-one-shot `scaling_r10_sf1.py` promoted to a per-round job): time the FROZEN
+"""RECURRING sf0.1 -> sf1 scale point (the one-shot sf1 probe, promoted to
+a per-round job): time the FROZEN
 headline 16 plus the big iterative entries at both scale points (sf1 cached
 at .localdata/sf1 by scripts/make_sf1.py — 10x volume, 10x distinct keys)
 and report the per-query scaling exponent  e = log10(t_sf1 / t_sf0.1)

@@ -560,7 +560,7 @@ def pq_build_index(
     dim*4/m-compressed searchable table) plus ``path``/codebooks (one row,
     m x k x sub_dim doubles). Online search then never touches the float
     vectors or retrains anything. Training reads no table state and runs
-    before the index's leased section (operators/index_commit), which
+    before the index's leased section (streaming.fs.leased), which
     holds only the two writes. Returns the codebooks.
 
     ``corpus``: when given, auto-registers the searchable ``codes`` table
@@ -575,7 +575,7 @@ def pq_build_index(
         max_iters=max_iters, train_fraction=train_fraction,
         round_decimals=round_decimals,
     )
-    with ic.leased(fs, path, lease_owner):
+    with mfs.leased(fs, path, lease_owner):
         pq_encode(df, books, vec_col=vec_col).select(
             F.col(id_col), "pq_code"
         ).write.mode("overwrite").parquet(path + "/codes")
@@ -621,7 +621,7 @@ def pq_index_append(
     write's own evaluation."""
     fs = fs or mfs.LOCAL_FS
     st = ic.store("pq", path)
-    with ic.leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         if codebooks is None:
             codebooks = pq_load_codebooks(spark, path)
         codes, obs = ic.counted(
@@ -741,7 +741,7 @@ def build_ivfpq_index(
     neighbor). Order of knobs: m to the corpus's separation, n_probe for
     recall vs scan cost, refine last (cheap — k*refine row fetches).
 
-    The writes run in the index's leased section (operators/index_commit);
+    The writes run in the index's leased section (streaming.fs.leased);
     training reads no table state and runs before it, like build_ivf_index
     and pq_build_index.
 
@@ -759,7 +759,7 @@ def build_ivfpq_index(
         max_iters=max_iters, train_fraction=train_fraction,
         round_decimals=round_decimals,
     )
-    with ic.leased(fs, path, lease_owner, lease_ttl_sec):
+    with mfs.leased(fs, path, lease_owner, lease_ttl_sec):
         df.write.mode("overwrite").partitionBy(cell_col).parquet(
             path + "/vectors"
         )
@@ -956,7 +956,7 @@ def ivfpq_index_append(
 
     fs = fs or mfs.LOCAL_FS
     st = ic.store("ivfpq", path)
-    with ic.leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         codebooks = pq_load_codebooks(spark, path)
         assigned, obs = ic.counted(
             _assign_cells(spark, path, new_vectors, id_col, vec_col, cell_col)

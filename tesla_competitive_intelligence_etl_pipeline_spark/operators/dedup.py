@@ -999,8 +999,8 @@ def write_signature_table(
     the whole incremental crawl-dedup path hash-checkable in DuckDB:
     stored signatures, increment signatures, band buckets, cross-side
     candidates, exact-Jaccard verdicts.
-    The overwrite runs in the table's leased section (operators/
-    index_commit; the lease sits in a sibling ``<path>.lock`` dir, because
+    The overwrite runs in the table's leased section (streaming.fs.leased;
+    the lease sits in a sibling ``<path>.lock`` dir, because
     mode('overwrite') would delete an in-dir lease mid-build), so
     concurrent rebuilds cannot interleave their files.
 
@@ -1009,7 +1009,7 @@ def write_signature_table(
     (takedown.register_store, kind 'signature') so no-args takedown /
     takedown_verify cover it without a manual registration step."""
     _check_family(family, shingle_n)
-    with ic.leased(mfs.LOCAL_FS, ic.store("signature", path).lease):
+    with mfs.leased(mfs.LOCAL_FS, ic.store("signature", path).lease):
         _with_shingles_and_sig(
             docs, text_col, id_col, num_hashes, shingle_n, family=family
         ).write.mode("overwrite").parquet(path)
@@ -1481,7 +1481,7 @@ def append_signature_table(
     fs = fs or mfs.LOCAL_FS
     spark = new_docs.sparkSession
     st = ic.store("signature", path)
-    with ic.leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         stored = spark.read.parquet(path + "/_params").first()
         num_hashes = int(stored["num_hashes"])
         shingle_n = int(stored["shingle_n"])
@@ -1504,7 +1504,7 @@ def recover_signature_table(path: str, fs=None) -> dict:
     the table's ``.lock`` lease like the builders and appenders."""
     fs = fs or mfs.LOCAL_FS
     st = ic.store("signature", path)
-    with ic.leased(fs, st.lease):
+    with mfs.leased(fs, st.lease):
         return ic.recover(st, fs)
 
 

@@ -11,11 +11,11 @@ description of a registered kind; the kind modules keep only what differs
 per kind (centroid assignment, PQ encoding, the signature ``_params``
 check) and call the functions here.
 
-Every mutation runs in a ``leased`` section: the store's writer lease is
-acquired (a second writer gets ``ConcurrentWriterError``), a heartbeat
-re-stamps it while the section runs, and it is released on exit. A crashed
-writer strands its lease; break it (``streaming.fs.break_writer_lease``)
-once the writer is known dead.
+Every mutation runs in a ``streaming.fs.leased`` section: the store's
+writer lease is acquired (a second writer gets ``ConcurrentWriterError``),
+a heartbeat re-stamps it while the section runs, and it is released on
+exit. A crashed writer strands its lease; break it
+(``streaming.fs.break_writer_lease``) once the writer is known dead.
 
 Crash model. ``put_atomic`` is the only atomicity requirement (true of an
 S3 object PUT). A file move may be copy+delete, and a single-object copy is
@@ -58,7 +58,6 @@ OPTIMIZE. Appends and tombstone writes are safe beside readers.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import uuid
@@ -106,17 +105,6 @@ def store(kind: str, path: str) -> Store:
     tables, cells, tombstones, id_col, lease = KINDS[kind]
     root = path.rstrip("/")
     return Store(root, root + lease, tables, cells, tombstones, id_col)
-
-
-@contextlib.contextmanager
-def leased(fs, scope: str, owner: str | None = None, ttl_sec: float = 3600.0):
-    """The leased write section: acquire, heartbeat, release."""
-    token = mfs.acquire_writer_lease(fs, scope, owner=owner, ttl_sec=ttl_sec)
-    try:
-        with mfs.lease_heartbeat(fs, scope, token, ttl_sec=ttl_sec):
-            yield token
-    finally:
-        mfs.release_writer_lease(fs, scope, token)
 
 
 def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -193,7 +181,7 @@ def staged_append(fs, st: Store, rels: list[str], write) -> int:
     dir for one table, at the store root for several. Tables land in list
     order, so list first the tables later stages join against (IVF-PQ:
     vectors before codes, so a reader between the two never shortlists an
-    id whose vector is missing). Call inside ``leased``; returns the
+    id whose vector is missing). Call inside ``mfs.leased``; returns the
     number of files landed."""
     tag = uuid.uuid4().hex[:8]
     write(*[staging_path(st.path(rel), tag) for rel in rels])
@@ -220,7 +208,7 @@ def write_tombstones(
     ids, obs = counted(
         keys.select(F.col(id_col).alias(st.id_col or id_col)).distinct().coalesce(1)
     )
-    with leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         staged_append(fs, st, [st.tombstones], ids.write.parquet)
     return int(obs.get["n"])
 
@@ -397,7 +385,7 @@ def compact(
     "tombstones_cleared"}."""
     fs = fs or mfs.LOCAL_FS
     id_col = st.id_col or id_col
-    with leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         recover(st, fs)
         tomb_files = _data_files(fs, st.path(st.tombstones)) if purge else []
         ids = (

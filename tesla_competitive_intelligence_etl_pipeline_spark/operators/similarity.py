@@ -216,7 +216,7 @@ def build_ivf_index(
     probe reads only the probed cells' files — real partition pruning, not a
     post-scan filter) plus the tiny centroid table next to them. This is the
     one-time index build a 100 TB ANN deployment amortizes. The writes run
-    in the index's leased section (operators/index_commit), so a build
+    in the index's leased section (streaming.fs.leased), so a build
     cannot interleave its files with an append or compaction; the
     heartbeat re-stamps the lease every ``lease_ttl_sec``/3, so size the
     TTL to that interval, not to the whole build.
@@ -228,7 +228,7 @@ def build_ivf_index(
     register_store call — the builders register what they build. Omit only
     for genuinely corpus-less uses (ad-hoc scratch indexes)."""
     fs = fs or mfs.LOCAL_FS
-    with ic.leased(fs, path, lease_owner, lease_ttl_sec):
+    with mfs.leased(fs, path, lease_owner, lease_ttl_sec):
         embeddings.write.mode("overwrite").partitionBy(cell_col).parquet(
             path + "/vectors"
         )
@@ -338,7 +338,7 @@ def ivf_index_append(
     on the write's own evaluation."""
     fs = fs or mfs.LOCAL_FS
     st = ic.store("ivf", path)
-    with ic.leased(fs, st.lease, lease_owner):
+    with mfs.leased(fs, st.lease, lease_owner):
         assigned, obs = ic.counted(
             _assign_cells(spark, path, new_vectors, id_col, vec_col, cell_col)
         )

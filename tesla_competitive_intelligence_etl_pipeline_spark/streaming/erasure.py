@@ -323,104 +323,93 @@ def erase_everywhere(
     key_cols, _ = _key_info(manifest, target)
     kdf = keys.select(*key_cols).distinct()
 
-    token = merge_fs.acquire_writer_lease(fs, target, owner=owner)
-    try:
-        with merge_fs.lease_heartbeat(fs, target, token):
-            # ---- snapshots ------------------------------------------------
-            # blocking detection consumes only live/version/snapshot —
-            # skipping the changes walk here halves the erasure's
-            # changelog I/O (the scrub loop below reads every delta
-            # anyway); the DEADLINE audit at the end stays all-kinds
-            audit = where_is(
-                spark, target, keys, fs,
-                kinds=("live", "version", "snapshot"),
+    with merge_fs.leased(fs, target, owner):
+        # ---- snapshots ------------------------------------------------
+        # blocking detection consumes only live/version/snapshot —
+        # skipping the changes walk here halves the erasure's
+        # changelog I/O (the scrub loop below reads every delta
+        # anyway); the DEADLINE audit at the end stays all-kinds
+        audit = where_is(
+            spark, target, keys, fs,
+            kinds=("live", "version", "snapshot"),
+        )
+        hit_rels = {
+            h["ref"] for h in audit if h["kind"] in ("live", "version")
+        }
+        blocking: dict[str, list[str]] = {}
+        for h in audit:
+            if h["kind"] != "snapshot":
+                continue
+            snap = strm._load_snapshot_if_exists(target, h["ref"], fs)
+            if snap is None:
+                continue
+            rels = [
+                os.path.normpath(rel)
+                for rel in snap["buckets"].values()
+                if os.path.normpath(rel) in hit_rels
+            ]
+            if rels:
+                blocking[h["ref"]] = rels
+        rewritten: dict[str, str] = {}
+        updated: list[str] = []
+        if blocking and mode == "refuse":
+            raise ValueError(
+                f"erasure at {target} is blocked by snapshot(s) still "
+                f"pinning the keys: {sorted(blocking)} — drop them "
+                "(drop_snapshot) or re-run with mode='rewrite' to "
+                "rewrite the pinned versions in place (breaks "
+                "bit-exact reproducibility of the runs that pinned "
+                "them)."
             )
-            hit_rels = {
-                h["ref"] for h in audit if h["kind"] in ("live", "version")
-            }
-            blocking: dict[str, list[str]] = {}
-            for h in audit:
-                if h["kind"] != "snapshot":
+        for tag, rels in sorted(blocking.items()):
+            snap = strm._load_snapshot_if_exists(target, tag, fs)
+            if snap is None:
+                continue
+            changed = False
+            for b, rel in list(snap["buckets"].items()):
+                nrel = os.path.normpath(rel)
+                if nrel not in set(rels):
                     continue
-                snap = strm._load_snapshot_if_exists(target, h["ref"], fs)
-                if snap is None:
-                    continue
-                rels = [
-                    os.path.normpath(rel)
-                    for rel in snap["buckets"].values()
-                    if os.path.normpath(rel) in hit_rels
-                ]
-                if rels:
-                    blocking[h["ref"]] = rels
-            rewritten: dict[str, str] = {}
-            updated: list[str] = []
-            if blocking and mode == "refuse":
-                raise ValueError(
-                    f"erasure at {target} is blocked by snapshot(s) still "
-                    f"pinning the keys: {sorted(blocking)} — drop them "
-                    "(drop_snapshot) or re-run with mode='rewrite' to "
-                    "rewrite the pinned versions in place (breaks "
-                    "bit-exact reproducibility of the runs that pinned "
-                    "them)."
-                )
-            for tag, rels in sorted(blocking.items()):
-                snap = strm._load_snapshot_if_exists(target, tag, fs)
-                if snap is None:
-                    continue
-                changed = False
-                for b, rel in list(snap["buckets"].items()):
-                    nrel = os.path.normpath(rel)
-                    if nrel not in set(rels):
-                        continue
-                    if nrel not in rewritten:  # shared versions: once
-                        rewritten[nrel] = _rewrite_pinned_version(
-                            spark, target, nrel, kdf, key_cols, fs
-                        )
-                    snap["buckets"][b] = rewritten[nrel]
-                    if "filestats" in snap:
-                        snap["filestats"].pop(b, None)
-                    changed = True
-                if changed:
-                    if not snap.get("filestats"):
-                        snap.pop("filestats", None)
-                    fs.put_atomic(  # one atomic re-point per snapshot
-                        strm._snapshot_path(target, tag),
-                        json.dumps(snap).encode(),
+                if nrel not in rewritten:  # shared versions: once
+                    rewritten[nrel] = _rewrite_pinned_version(
+                        spark, target, nrel, kdf, key_cols, fs
                     )
-                    updated.append(tag)
-            # ---- vacuum: superseded + rewritten-away versions -------------
-            # staged_grace_sec=0: the erasure DEADLINE wants the erased
-            # rows' superseded versions off disk NOW, and this vacuum runs
-            # under the table's writer lease (owner above) so no commit can
-            # be mid-flight to protect
-            strm.vacuum_merge_table(
-                target, fs=fs, lease_owner=owner, staged_grace_sec=0.0,
-                exclusive=True,  # lease held for the whole erasure: no
-                # writer can be staging, and the bump-anchored sparing
-                # would leave young id-holding versions as residual
-                _release_lease=False,  # review r11: vacuum's release
-                # matched OUR owner token and freed the lease mid-erasure
-                # — the scrub + final audit then ran unprotected
-            )
-            # ---- commit-log scrub -----------------------------------------
-            scrubbed: list[str] = []
-            if scrub_changes:
-                cdir = os.path.join(target, strm._CHANGES_DIR)
-                if fs.isdir(cdir):
-                    for cid in sorted(fs.listdir(cdir)):
-                        active = strm._delta_dir(target, cid, fs)
-                        if fs.isdir(active) and _scrub_delta(
-                            spark, target, cid, kdf, key_cols, fs,
-                            active=active,
-                        ):
-                            scrubbed.append(cid)
-            residual = where_is(spark, target, keys, fs)
-            return {
-                "deleted": deleted,
-                "rewritten_versions": sorted(rewritten),
-                "updated_snapshots": updated,
-                "scrubbed_commits": scrubbed,
-                "residual": residual,
-            }
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+                snap["buckets"][b] = rewritten[nrel]
+                if "filestats" in snap:
+                    snap["filestats"].pop(b, None)
+                changed = True
+            if changed:
+                if not snap.get("filestats"):
+                    snap.pop("filestats", None)
+                fs.put_atomic(  # one atomic re-point per snapshot
+                    strm._snapshot_path(target, tag),
+                    json.dumps(snap).encode(),
+                )
+                updated.append(tag)
+        # ---- vacuum: superseded + rewritten-away versions -------------
+        # the erasure DEADLINE wants the erased rows' superseded versions
+        # off disk NOW. This section holds the table's lease, so the
+        # lease-free vacuum body runs with no grace and without the
+        # bump-anchored sparing (no writer can be staging, and that
+        # sparing would leave young id-holding versions as residual)
+        strm._vacuum_locked(target, fs, staged_grace_sec=0.0, exclusive=True)
+        # ---- commit-log scrub -----------------------------------------
+        scrubbed: list[str] = []
+        if scrub_changes:
+            cdir = os.path.join(target, strm._CHANGES_DIR)
+            if fs.isdir(cdir):
+                for cid in sorted(fs.listdir(cdir)):
+                    active = strm._delta_dir(target, cid, fs)
+                    if fs.isdir(active) and _scrub_delta(
+                        spark, target, cid, kdf, key_cols, fs,
+                        active=active,
+                    ):
+                        scrubbed.append(cid)
+        residual = where_is(spark, target, keys, fs)
+        return {
+            "deleted": deleted,
+            "rewritten_versions": sorted(rewritten),
+            "updated_snapshots": updated,
+            "scrubbed_commits": scrubbed,
+            "residual": residual,
+        }

@@ -12,6 +12,53 @@ batch oracle. In production the same code tails a directory/Kafka source.
 
 Scale: state store holds one entry per open window/key; watermark bounds
 state; foreachBatch merge shuffles only the micro-batch keys.
+
+The merge table: a minimal manifest-committed table format in plain
+parquet — what Delta/Iceberg provide, reduced to what the bucketed MERGE
+needs. Layout under the table dir:
+
+  _MANIFEST.json            the commit point: {"buckets": {"<bucket>":
+                            "store/<bucket>/<version>"}, "params",
+                            "schema", "commit", and the per-bucket
+                            "stats", "nullstats" and "filestats"}
+  store/<bucket>/<version>/ one immutable parquet dir per bucket version
+                            (__bucket is a DATA column, so reads need no
+                            partition discovery)
+  .staging/<version>/       in-flight output, invisible to readers
+  changes/<commit>/         each commit's record and change rows
+  _snapshots/<tag>.json     pinned manifests (snapshot_merge_table)
+
+Readers go through read_merged (manifest -> union of committed bucket
+dirs); nothing under store/ is ever mutated in place. All bookkeeping I/O
+goes through a pluggable MergeFS (streaming/fs.py); row data is written
+and read by Spark through its own Hadoop FS.
+
+Commit protocol. Every manifest writer — merge_table,
+delete_from_merge_table, optimize_merge_table, rebucket_merge_table,
+rollback_merge_table and adopt_table_params — reads state, stages
+buckets and calls ``_commit``:
+
+1. Lease. The writer runs in ``streaming.fs.leased`` on the table dir, so
+   a second writer gets ConcurrentWriterError; a heartbeat keeps the
+   lease alive through long bodies.
+2. Read. ``_load_manifest_cas`` reads the manifest and, on a store with
+   the CAS capability, the generation (etag) it was read at.
+3. Stage. New bucket versions are written under ``.staging/`` and moved
+   to ``store/<bucket>/<version>`` (a move may be copy+delete). Nothing is
+   visible until a manifest names it.
+4. Commit. ``_commit`` writes the commit record and change rows under
+   ``changes/<commit>/``, applies the staged versions and their
+   stats/nullstats/filestats entries to the manifest, and makes ONE put
+   (``_put_manifest_conditional``): conditional on the generation read in
+   step 2 on a CAS store, an atomic overwrite elsewhere. That put is the
+   whole commit: a crash anywhere before it leaves every reader on the
+   previous state. A writer that loses the CAS race raises
+   ConcurrentWriterError having committed nothing — except merge, which
+   rebases when the winner touched none of its buckets and changed
+   neither params, schema nor gc_epoch.
+5. Clean up. Superseded versions that no snapshot pins are removed, then
+   the staging dir. Both are best-effort: vacuum_merge_table reclaims
+   whatever a crash leaves.
 """
 
 from __future__ import annotations
@@ -146,34 +193,6 @@ def run_to_table(
     return spark.table(name)
 
 
-# Layout of a merge gold table (a minimal manifest-committed table format in
-# plain parquet — what Delta/Iceberg provide, reduced to exactly what the
-# bucketed MERGE needs):
-#
-#   target/_MANIFEST.json            atomic commit point: {"buckets":
-#                                    {"<bucket>": "store/<bucket>/<version>"}}
-#   target/store/<bucket>/<version>/ one immutable parquet dir per committed
-#                                    bucket version (files carry __bucket as a
-#                                    DATA column, so reads need no partition
-#                                    discovery)
-#   target/.staging/<version>/       in-flight batch output, invisible to
-#                                    readers until the manifest swap
-#
-# Readers go through read_merged (manifest -> union of committed bucket
-# dirs); nothing under store/ is ever mutated in place, and the single
-# atomic manifest put is the WHOLE commit — a crash anywhere before it
-# leaves every reader on the previous batch's state (orphan staging/version
-# dirs are garbage, collected best-effort on later commits).
-#
-# All bookkeeping I/O (manifest read/swap, staged-bucket moves, vacuum) goes
-# through a pluggable MergeFS (streaming/fs.py — VERDICT r4 item 1): the
-# commit relies ONLY on put_atomic (atomic full-object write: os.replace
-# locally, a single object PUT on S3); bucket moves may be non-atomic
-# copy+delete (S3 semantics) because store/ content is invisible until the
-# manifest names it. Row data itself is written/read by Spark through its
-# own Hadoop FS. A table format (Delta/Iceberg) remains the full-strength
-# deployment answer; this layer is the minimal honest subset the merge needs.
-
 _MANIFEST = "_MANIFEST.json"
 
 # test hook (crash injection): called after each staged bucket dir is moved
@@ -208,13 +227,10 @@ def _load_manifest_cas(
     target: str, fs: merge_fs.MergeFS
 ) -> tuple[dict | None, str | None]:
     """_load_manifest plus the CAS generation it was read at: on a store
-    with the CAS capability returns (manifest, etag) so the caller's
-    commit can be CONDITIONAL on that generation; elsewhere (or when the
-    table does not exist yet) the etag is None and the caller falls back
-    to put_atomic / put_if_absent. Shared by every manifest WRITER (r10 —
-    ADVICE r9: merge was the only conditional committer; delete/rollback/
-    rebucket/adopt/vacuum put unconditionally and could lose a racing
-    commit on lease-free deployments)."""
+    with the CAS capability returns (manifest, etag), so the writer's
+    commit can be conditional on that generation; elsewhere (or when the
+    table does not exist yet) the etag is None. Step 2 of the commit
+    protocol (module docstring)."""
     import json
 
     if getattr(fs, "supports_cas", False):
@@ -232,36 +248,172 @@ def _load_manifest_cas(
 
 
 def _put_manifest_conditional(
-    target: str, fs: merge_fs.MergeFS, manifest: dict, etag: str | None, op: str
-) -> None:
-    """THE commit point for the non-merge manifest writers: one atomic
-    manifest put, CONDITIONAL on the generation the caller read
-    (_load_manifest_cas) where the store supports CAS. A failed
-    precondition means another writer raced past the lease and committed
-    since our read; unlike merge_table there is no rebase here — a
-    delete/rollback/rebucket/params-adopt computed against a superseded
-    state is simply re-run — so the loser raises having committed NOTHING
-    (its staged versions, if any, are invisible debris vacuum reclaims)."""
+    target: str, fs: merge_fs.MergeFS, manifest: dict, etag: str | None
+) -> bool:
+    """The one manifest put every commit (and vacuum's gc_epoch bump) makes.
+    On a CAS store it is conditional on the generation ``etag`` that
+    _load_manifest_cas returned (create-if-absent when None: a first
+    commit); elsewhere it is an atomic overwrite. Returns whether the put
+    landed — False means another writer committed since the read."""
     import json
 
     data = json.dumps(manifest).encode()
-    if getattr(fs, "supports_cas", False):
-        committed = (
-            fs.put_if_absent(_manifest_path(target), data)
-            if etag is None
-            else fs.put_if_match(_manifest_path(target), data, etag)
-        )
-        if not committed:
+    path = _manifest_path(target)
+    if not getattr(fs, "supports_cas", False):
+        fs.put_atomic(path, data)
+        return True
+    if etag is None:
+        return fs.put_if_absent(path, data)
+    return fs.put_if_match(path, data, etag)
+
+
+def _commit(
+    target: str,
+    fs: merge_fs.MergeFS,
+    op: str,
+    base: dict,
+    etag: str | None,
+    *,
+    read: dict | None = None,
+    staged: dict[str, str] | None = None,
+    staging: str | None = None,
+    dropped=(),
+    entries: dict[str, dict] | None = None,
+    fields: dict | None = None,
+    record: bool = True,
+    changes: DataFrame | None = None,
+    captured: bool = True,
+) -> dict:
+    """Steps 4 and 5 of the commit protocol (module docstring), shared by
+    every manifest writer. ``read`` is the manifest the writer read at
+    ``etag`` and ``base`` the one the commit applies to (the same unless
+    given: rollback applies to the snapshot it restores, rebucket to a
+    fresh bucket map). The committed manifest is ``base`` with:
+
+    - a new commit whose parent is ``read``'s, when ``record``; its record
+      and ``changes`` are written first (_write_commit_delta, kind ``op``);
+    - the ``dropped`` buckets removed, then the ``staged`` versions set;
+    - for every touched (dropped or staged) bucket and every kind in
+      ``entries`` (``stats``, ``nullstats``, ``filestats``), the bucket's
+      entry taken from ``entries[kind]`` or removed when it has none
+      there; other kinds keep their entries, except that a bucket leaving
+      the manifest loses all of them;
+    - ``fields`` set last.
+
+    A lost CAS race raises ConcurrentWriterError; only ``op == "merge"``
+    rebases first. After the put, the touched buckets' versions that
+    ``read`` named and the new manifest does not are removed unless a
+    snapshot pins them, then ``staging``. Returns the committed manifest."""
+    import json
+    import os
+
+    read = base if read is None else read
+    staged = staged or {}
+    dropped = [str(b) for b in dropped]
+    touched = list(dict.fromkeys([*dropped, *staged]))
+    cid = uuid.uuid4().hex[:12]
+    rec = _write_commit_delta(
+        target, cid, (read.get("commit") or {}).get("id"), changes, fs,
+        kind=op, captured=captured,
+    ) if record else None
+
+    def _apply(onto: dict, parent: str | None) -> dict:
+        m = dict(onto)
+        if record:
+            m["commit"] = {"id": cid, "parent": parent}
+        buckets = dict(onto["buckets"])
+        for b in dropped:
+            buckets.pop(b, None)
+        buckets.update(staged)
+        m["buckets"] = buckets
+        for kind in ("stats", "nullstats", "filestats"):
+            ent = dict(m.get(kind) or {})
+            upd = (entries or {}).get(kind)
+            for b in touched:
+                if upd is not None and b in upd and b in buckets:
+                    ent[b] = upd[b]
+                elif upd is not None or b not in buckets:
+                    ent.pop(b, None)
+            if ent:
+                m[kind] = ent
+            else:
+                m.pop(kind, None)
+        m.update(fields or {})
+        return m
+
+    manifest = _apply(base, (read.get("commit") or {}).get("id"))
+    committed = _put_manifest_conditional(target, fs, manifest, etag)
+    # Disjoint-bucket rebase, merge only: if the writer that won touched
+    # none of our buckets and kept params and schema, our staged versions
+    # and captured delta are as valid on its head as on ours, so re-parent
+    # the commit there and retry (concurrent writers to disjoint key
+    # ranges both land). Each retry is driver-side JSON I/O only.
+    rebases = 5 if op == "merge" and etag is not None else 0
+    while not committed and rebases:
+        rebases -= 1
+        theirs, etag = _load_manifest_cas(target, fs)
+        if theirs is None or (
+            theirs.get("params") != base.get("params")
+            or theirs.get("schema") != base.get("schema")
+            or any(theirs["buckets"].get(b) != base["buckets"].get(b) for b in staged)
+        ):
+            break
+        # a gc_epoch change means a vacuum ran since our read; its reclaim
+        # scan may already hold our staged versions as debris, so
+        # re-pointing at them could commit deleted files
+        if int(theirs.get("gc_epoch", 0)) != int(base.get("gc_epoch", 0)):
             raise merge_fs.ConcurrentWriterError(
-                f"manifest at {target} changed between this {op}'s read "
-                "and its commit — another writer raced past the lease "
-                "(expired TTL or lease-free deployment) and committed "
-                f"first. This {op} committed NOTHING (staged work, if "
-                "any, is invisible debris the next vacuum reclaims) — "
-                "re-run it against the new state."
+                f"a concurrent vacuum at {target} bumped the gc_epoch "
+                "between this merge's read and its commit — its reclaim "
+                "scan may already hold this merge's staged versions as "
+                "debris, so rebasing onto the bumped generation is unsafe. "
+                "The merge committed NOTHING; re-run it against the new "
+                "state."
             )
-    else:
-        fs.put_atomic(_manifest_path(target), data)
+        # manifests from before gc_epoch: a committed manifest must never
+        # name deleted files, so check the staged versions still exist
+        missing = [
+            rel for rel in staged.values()
+            if not fs.isdir(os.path.join(target, rel))
+        ]
+        if missing:
+            raise merge_fs.ConcurrentWriterError(
+                f"a concurrent vacuum at {target} reclaimed this merge's "
+                f"staged bucket versions ({missing}) before its commit "
+                "landed — the merge committed NOTHING; re-run it, and give "
+                "vacuum a nonzero staged_grace_sec when writers may be in "
+                "flight"
+            )
+        parent = (theirs.get("commit") or {}).get("id")
+        rec = {**rec, "parent": parent, "ts": _commit_now()}
+        fs.put_atomic(
+            os.path.join(target, _CHANGES_DIR, cid, "_commit.json"),
+            json.dumps(rec).encode(),
+        )
+        manifest = _apply(theirs, parent)
+        committed = _put_manifest_conditional(target, fs, manifest, etag)
+    if not committed:
+        raise merge_fs.ConcurrentWriterError(
+            f"manifest at {target} changed between this {op}'s read and "
+            "its commit — another writer raced past the lease (expired TTL "
+            "or lease-free deployment) and committed first"
+            + (" to one of its buckets, or changed params or schema"
+               if op == "merge" else "")
+            + f". This {op} committed NOTHING (staged work, if any, is "
+            "invisible debris the next vacuum reclaims) — re-run it "
+            "against the new state."
+        )
+    if staging is not None:
+        pinned = _pinned_rels(target, fs)
+        for b in touched:
+            rel = read["buckets"].get(b)
+            if (
+                rel and rel != manifest["buckets"].get(b)
+                and os.path.normpath(rel) not in pinned
+            ):
+                fs.rmtree(os.path.join(target, rel))
+        fs.rmtree(staging)
+    return manifest
 
 
 _SNAPSHOT_DIR = "_snapshots"
@@ -345,8 +497,7 @@ def snapshot_merge_table(
     whose content differs from the current manifest is ambiguous — it can
     be an at-least-once REPLAY (expected, must converge) or tag MISUSE
     (must fail loudly), and no structural comparison can tell a replayed
-    merge from a genuinely advanced state with the same bucket layout
-    (ADVICE r7):
+    merge from a genuinely advanced state with the same bucket layout:
 
     - ``if_exists='error'`` (default, for human/run tags): re-pinning a
       tag whose stored content EQUALS the current manifest is an
@@ -363,65 +514,59 @@ def snapshot_merge_table(
       differs STRUCTURALLY (bucket keyset / params / schema — a different
       table generation) still raises: no replay can change those.
 
-    A WRITER operation (code review r7): it pins versions against the
-    GC that merge/rebucket/vacuum run, so it takes the table's writer
-    lease — a lease-free snapshot could read the pre-commit manifest,
-    lose the race to a rebucket's whole-generation GC, and pin bucket
-    paths that no longer exist. (drop_snapshot stays lease-free: releasing
-    a pin mid-GC only makes the GC spare too much, never delete too much.)
-    Returns the pinned manifest."""
+    Runs in the table's leased section: it pins versions against the GC
+    that merge/rebucket/vacuum run, and a lease-free snapshot could read
+    the pre-commit manifest, lose the race to a rebucket's
+    whole-generation GC, and pin bucket paths that no longer exist.
+    (drop_snapshot stays lease-free: releasing a pin mid-GC only makes the
+    GC spare too much, never delete too much.) Returns the pinned
+    manifest."""
     import json
 
     if if_exists not in ("error", "return_existing"):
         raise ValueError(f"if_exists must be 'error' or 'return_existing', got {if_exists!r}")
-    token = merge_fs.acquire_writer_lease(fs, target, owner=lease_owner)
-    try:
+    with merge_fs.leased(fs, target, lease_owner):
         manifest = _load_manifest(target, fs)
         if manifest is None:
             raise ValueError(f"no committed state to snapshot at {target}")
-        if not fs.put_if_absent(
+        if fs.put_if_absent(
             _snapshot_path(target, tag), json.dumps(manifest).encode()
         ):
-            stored = _load_snapshot(target, tag, fs)
-            if stored == manifest:
-                return manifest  # idempotent pin-only replay
-            if if_exists == "return_existing":
-                if not _same_state_modulo_versions(stored, manifest):
-                    raise ValueError(
-                        f"snapshot {tag!r} at {target} pins a structurally "
-                        "different table generation (buckets/params/schema "
-                        "differ) — tag collision, not a replay re-pin"
-                    )
-                # lineage check (ADVICE r8): on a mature table whose bucket
-                # keyset has saturated, the structural comparison is nearly
-                # always true, so REQUIRE the stored pin's commit to be an
-                # ancestor of (or equal to) the current head — true for
-                # every genuine merge-then-pin replay (the replay's
-                # re-merge chains ON TOP of the original pin), false for
-                # accidental tag reuse against an unrelated lineage.
-                # Unknowable (legacy pre-commit-log states, or the chain
-                # records aged out under changes_keep) falls back to the
-                # structural verdict alone.
-                stored_cid = (stored.get("commit") or {}).get("id")
-                cur_cid = (manifest.get("commit") or {}).get("id")
-                if stored_cid and cur_cid:
-                    anc = _is_ancestor(target, fs, stored_cid, cur_cid)
-                    if anc is False:
-                        raise ValueError(
-                            f"snapshot {tag!r} at {target} pins commit "
-                            f"{stored_cid} which is NOT an ancestor of the "
-                            f"current head {cur_cid} — tag reuse against a "
-                            "divergent lineage, not a replay re-pin"
-                        )
-                # merge-then-pin replay: first pin is authoritative
-                return stored
+            return manifest
+        stored = _load_snapshot(target, tag, fs)
+        if stored == manifest:
+            return manifest  # idempotent pin-only replay
+        if if_exists == "error":
             raise ValueError(
                 f"snapshot {tag!r} already exists at {target} with "
                 "different content"
             )
-        return manifest
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+        if not _same_state_modulo_versions(stored, manifest):
+            raise ValueError(
+                f"snapshot {tag!r} at {target} pins a structurally "
+                "different table generation (buckets/params/schema "
+                "differ) — tag collision, not a replay re-pin"
+            )
+        # lineage check: on a mature table whose bucket keyset has
+        # saturated, the structural comparison is nearly always true, so
+        # REQUIRE the stored pin's commit to be an ancestor of (or equal
+        # to) the current head — true for every genuine merge-then-pin
+        # replay (the replay's re-merge chains ON TOP of the original
+        # pin), false for accidental tag reuse against an unrelated
+        # lineage. Unknowable (states from before the commit log, or the
+        # chain records aged out under changes_keep) falls back to the
+        # structural verdict alone.
+        stored_cid = (stored.get("commit") or {}).get("id")
+        cur_cid = (manifest.get("commit") or {}).get("id")
+        if stored_cid and cur_cid:
+            if _is_ancestor(target, fs, stored_cid, cur_cid) is False:
+                raise ValueError(
+                    f"snapshot {tag!r} at {target} pins commit "
+                    f"{stored_cid} which is NOT an ancestor of the "
+                    f"current head {cur_cid} — tag reuse against a "
+                    "divergent lineage, not a replay re-pin"
+                )
+        return stored  # merge-then-pin replay: first pin is authoritative
 
 
 def list_snapshots(
@@ -459,80 +604,61 @@ def rollback_merge_table(
 ) -> dict:
     """Atomically restore the table to a snapshot's state: ONE manifest
     put flips every reader to the pinned bucket versions (instant, no data
-    movement — the rollback twin of the commit itself). The superseded
-    versions become unreferenced and are reclaimed by the next vacuum
-    (unless another snapshot retains them). A writer operation: takes the
-    table's writer lease so a rollback cannot interleave with a live
-    merge/vacuum. Returns the restored manifest.
+    movement). The superseded versions become unreferenced and are
+    reclaimed by the next vacuum (unless another snapshot retains them).
+    A manifest writer (commit protocol: module docstring) with nothing to
+    stage. Returns the restored manifest.
 
-    Commit-log continuity (r9 — VERDICT r8 item 3): pass ``spark`` and
-    the rollback CAPTURES a synthetic delta — the state diff between the
-    rolled-back and restored states, the exact rows a CDC consumer must
-    see to converge on the restored state — committed as a
-    kind='rollback' entry whose parent is the rolled-back head. The
-    restored manifest then carries the NEW commit id, so the chain stays
-    walkable across the rollback and ``read_commit_changes`` keeps its
-    O(delta) contract precisely when an operator is recovering from a bad
-    write (previously it failed over to the O(table) state diff). The
-    diff read is O(changed buckets) — the buckets the rollback actually
-    rewinds. Without ``spark`` (legacy callers) the restored manifest
-    keeps the snapshot's own commit id: lineage rewinds and
-    read_commit_changes across the rollback fails loudly with the
-    documented read_changes fallback."""
-    import json
-    import uuid
-
-    token = merge_fs.acquire_writer_lease(fs, target, owner=lease_owner)
-    try:
+    Commit-log continuity: pass ``spark`` and the rollback CAPTURES a
+    synthetic delta — the state diff between the rolled-back and restored
+    states, the exact rows a CDC consumer must see to converge on the
+    restored state — committed as a kind='rollback' entry whose parent is
+    the rolled-back head. The restored manifest then carries the NEW
+    commit id, so the chain stays walkable across the rollback and
+    ``read_commit_changes`` keeps its O(delta) contract precisely when an
+    operator is recovering from a bad write. The diff read is O(changed
+    buckets) — the buckets the rollback actually rewinds. Without
+    ``spark`` the restored manifest keeps the snapshot's own commit id:
+    lineage rewinds and read_commit_changes across the rollback fails
+    loudly with the documented read_changes fallback. The put is
+    conditional on the head the diff was taken against: a commit landing
+    in between would make both the delta and the restored state stale."""
+    with merge_fs.leased(fs, target, lease_owner):
         snap = _load_snapshot(target, tag, fs)
-        manifest = dict(snap)
-        # CAS (r10 — ADVICE r9): the restore is conditional on the head it
-        # diffed against; a commit landing in between would make both the
-        # captured rollback delta and the restored state stale
-        current, manifest_etag = _load_manifest_cas(target, fs)
-        if spark is not None:
-            if current is not None and (current.get("commit") or {}).get("id"):
-                params = snap.get("params") or current.get("params")
-                keys = params["keys"] if params else ["user_id"]
-                changes = _manifest_diff(
-                    spark, target, current, snap, keys, fs, since=None
-                )
-                commit_id = uuid.uuid4().hex[:12]
-                parent = current["commit"]["id"]
-                _write_commit_delta(
-                    target, commit_id, parent, changes, fs, kind="rollback"
-                )
-                manifest["commit"] = {"id": commit_id, "parent": parent}
-        _put_manifest_conditional(target, fs, manifest, manifest_etag, "rollback")
-        return manifest
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+        current, etag = _load_manifest_cas(target, fs)
+        record = (
+            spark is not None and current is not None
+            and bool((current.get("commit") or {}).get("id"))
+        )
+        changes = None
+        if record:
+            params = snap.get("params") or current.get("params")
+            keys = params["keys"] if params else ["user_id"]
+            changes = _manifest_diff(
+                spark, target, current, snap, keys, fs, since=None
+            )
+        return _commit(
+            target, fs, "rollback", snap, etag, read=current,
+            record=record, changes=changes,
+        )
 
 
 def _retained_rels(target: str, fs: merge_fs.MergeFS) -> set[str]:
     """Every store version referenced by the CURRENT manifest OR any
     retained snapshot — the ONE definition of 'not debris', shared by
-    vacuum_merge_table and merge_table_stats. Concurrency: a snapshot
-    dropped between the listing and its read is skipped
-    (_load_snapshot_if_exists) — its pins were just released, so sparing
-    nothing for it is correct, and a lease-free drop_snapshot must not
-    crash a running vacuum or stats read (ADVICE r7)."""
+    vacuum_merge_table and merge_table_stats. A snapshot dropped between
+    the listing and its read is skipped: its pins were just released, so
+    sparing nothing for it is correct, and a lease-free drop_snapshot must
+    not crash a running vacuum or stats read."""
     manifest = _load_manifest(target, fs)
     refs = _referenced_rels(manifest) if manifest is not None else set()
-    for tag in list_snapshots(target, fs):
-        snap = _load_snapshot_if_exists(target, tag, fs)
-        if snap is not None:
-            refs |= _referenced_rels(snap)
-    return refs
+    return refs | _pinned_rels(target, fs)
 
 
 def _pinned_rels(target: str, fs: merge_fs.MergeFS) -> set[str]:
-    """Store versions pinned by any retained snapshot — what post-commit GC
-    must spare (shared by _merge_locked / rebucket_merge_table /
-    delete_from_merge_table). Tags dropped concurrently are skipped
-    (lease-free drop_snapshot, ADVICE r7)."""
-    import os
-
+    """Store versions pinned by any retained snapshot — what the
+    post-commit GC in _commit must spare. Tags dropped concurrently are
+    skipped (drop_snapshot is lease-free)."""
     pinned: set[str] = set()
     for tag in list_snapshots(target, fs):
         snap = _load_snapshot_if_exists(target, tag, fs)
@@ -1483,15 +1609,16 @@ def _write_commit_delta(
     parent: str | None,
     changes: DataFrame | None,
     fs: merge_fs.MergeFS,
-    kind: str = "merge",
+    kind: str,
     captured: bool = True,
 ) -> dict:
-    """Phase-1 write of a commit's change rows + chain record
-    (``changes/<commit_id>/{delta,_commit.json}``) — reader-invisible
-    until a manifest names ``commit_id``; a crash strands an orphan dir
-    that retention cleanup reclaims. ``changes=None`` with
-    ``captured=True`` records a content-no-op commit (rebucket) as an
-    empty delta; ``captured=False`` (ADVICE r8 capture opt-out) records
+    """Write a commit's change rows + chain record
+    (``changes/<commit_id>/{delta,_commit.json}``), the first thing
+    _commit does — reader-invisible until a manifest names ``commit_id``;
+    a crash strands an orphan dir that retention cleanup reclaims.
+    ``changes=None`` with ``captured=True`` records a content-no-op commit
+    (optimize, rebucket) as an empty delta; ``captured=False`` (merge's
+    capture opt-out) records
     a content-CHANGING commit whose delta was deliberately not captured —
     the chain stays walkable, but read_commit_changes over a range
     containing it fails loudly to the read_changes fallback.
@@ -1511,9 +1638,9 @@ def _write_commit_delta(
         "kind": kind,
         "empty": captured and changes is None,
         "captured": captured,
-        # wall-clock commit instant (r11 — VERDICT r10 item 2):
-        # lets read_commit_changes expose _commit_ts so SCD2-from-
-        # commit-log yields real valid_from/valid_to times. The
+        # wall-clock commit instant: lets read_commit_changes expose
+        # _commit_ts so SCD2-from-commit-log yields real
+        # valid_from/valid_to times. The
         # SEQUENCE stays the ordering truth — ts is the human
         # timeline (clock steps between writers are monotonized
         # by the consumer).
@@ -1681,202 +1808,183 @@ def vacuum_merge_table(
     lease_ttl_sec: float = 3600.0,
     changes_keep: int | None = None,
     staged_grace_sec: float = 3600.0,
-    exclusive: bool = False,
-    _release_lease: bool = True,
 ) -> list[str]:
     """Garbage-collect a merge gold table: remove everything neither the
     committed manifest NOR any retained snapshot references — leftover
     ``.staging`` trees and orphaned ``store`` versions (debris of batches
-    that crashed between phase 1 and the manifest swap; the crash-safety
+    that crashed between staging and the manifest put; the crash-safety
     contract is that such debris is invisible, and this reclaims its
     disk). Snapshot-pinned versions survive until their snapshot is
     dropped (snapshot_merge_table / drop_snapshot). No-op when the table
     has no committed manifest yet (a first batch may be mid-flight — note
     merge_table_stats DOES still report such pre-first-commit state, so the
-    operator can see it; vacuum just refuses to race it). The single-writer
-    contract is ENFORCED via the table's writer lease (VERDICT r5 item 7):
-    a vacuum overlapping a merge fails loudly with ConcurrentWriterError
-    instead of deleting the merge's in-flight staging. Returns the removed
-    paths.
+    operator can see it; vacuum just refuses to race it). Runs in the
+    table's leased section, so a vacuum overlapping a merge fails loudly
+    with ConcurrentWriterError instead of deleting the merge's in-flight
+    staging. Returns the removed paths.
 
-    ``changes_keep`` (r8): commit-log retention. The per-commit delta
-    files under ``changes/`` are NEVER touched by default (None) — they
-    are what read_commit_changes consumes. Passing N keeps the deltas of
-    the most recent N commits on the CURRENT chain and removes everything
-    else (older completed commits, crash-orphaned capture dirs, commits
+    ``changes_keep``: commit-log retention. The per-commit delta files
+    under ``changes/`` are NEVER touched by default (None) — they are what
+    read_commit_changes consumes. Passing N keeps the deltas of the most
+    recent N commits on the CURRENT chain and removes everything else
+    (older completed commits, crash-orphaned capture dirs, commits
     stranded off-chain by a rollback) — the blunt time-window retention
     every changelog carries (Delta logRetentionDuration): consumers must
-    read their range before it ages out; a walk into a dropped range
-    fails loudly and falls back to read_changes. Exception (r12 — VERDICT
-    r11 item 3): a delta referenced by a live ``_takedown/`` request
-    record's ``delete_commit`` stamp is ALWAYS retained regardless of N —
-    it is the crashed takedown's exact delete set, and recovery must
-    never find it vacuumed.
+    read their range before it ages out; a walk into a dropped range fails
+    loudly and falls back to read_changes. Exception: a delta referenced
+    by a live ``_takedown/`` request record's ``delete_commit`` stamp is
+    ALWAYS retained regardless of N — it is the crashed takedown's exact
+    delete set, and recovery must never find it vacuumed.
 
-    Staged-version protection (r10 — ADVICE r9): an unreferenced version
-    may be a LIVE commit's phase-1 staging whose manifest put has not
-    landed yet — a writer that raced past the lease (expired TTL,
-    lease-free deployment). Reclaiming it would let that commit's manifest
-    point at deleted files. Two complementary guards:
+    Staged-version protection: an unreferenced version may be a LIVE
+    commit's staging whose manifest put has not landed yet — a writer that
+    raced past the lease (expired TTL, lease-free deployment). Reclaiming
+    it would let that commit's manifest point at deleted files. Two
+    complementary guards:
 
     - ``staged_grace_sec``: unreferenced store versions and ``.staging``
       trees YOUNGER than the grace are spared (Delta's
       deletedFileRetentionDuration shape) — a live commit finishes well
       inside an hour; genuinely orphaned debris ages past it and the next
-      vacuum takes it. Pass 0 only when no writer can be in flight (e.g.
-      under the table lease in a single-writer deployment — erasure does).
+      vacuum takes it. Pass 0 only when no writer can be in flight.
     - On a CAS store, vacuum lands a conditional ``gc_epoch`` bump in the
-      manifest BEFORE reclaiming. The bump is a WRITE BARRIER (r11 —
-      ADVICE r10 closed the TOCTOU the r10 version left): (a) any commit
-      that read the pre-bump generation fails its conditional put, and
-      the rebase path treats the epoch change as a GENUINE conflict —
-      it raises instead of re-pointing, because this vacuum's reclaim
-      scan may already hold that merge's staged versions as doomed
-      debris (the r10 isdir re-verify could pass and the re-put land
-      in the window between vacuum's retained-set read and its rmtree);
+      manifest BEFORE reclaiming. The bump is a WRITE BARRIER: (a) any
+      commit that read the pre-bump generation fails its conditional put,
+      and the merge rebase treats the epoch change as a GENUINE conflict
+      — it raises instead of re-pointing, because this vacuum's reclaim
+      scan may already hold that merge's staged versions as doomed debris;
       (b) any writer that read the POST-bump generation staged its
       versions after the bump landed, so vacuum spares everything whose
-      mtime is at/after the bump instant regardless of grace — its
-      clean first-try put can then safely reference them. Together: the
-      winning manifest can never name files vacuum deleted, even at
-      ``staged_grace_sec=0``.
+      mtime is at/after the bump instant regardless of grace — its clean
+      first-try put can then safely reference them. Together: the winning
+      manifest can never name files vacuum deleted, even at
+      ``staged_grace_sec=0``."""
+    with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
+        return _vacuum_locked(target, fs, changes_keep, staged_grace_sec)
 
-    ``exclusive=True`` (r11): the caller GUARANTEES no writer can be in
-    flight (it holds the table's writer lease for the whole operation —
-    erase_everywhere's deadline vacuum). Skips the bump-anchored mtime
-    sparing, since that sparing would otherwise leave sub-second-old
-    superseded/rewritten-away versions on disk and break a zero-residual
-    erasure proof; the gc_epoch bump still lands, so a writer that DOES
-    race past the contract fails loudly instead of corrupting.
 
-    ``_release_lease=False`` (internal, r11): a caller that HOLDS the
-    lease for a longer operation (erase_everywhere) re-enters it here —
-    the release in this function's finally would match the caller's
-    owner token and free the lease mid-operation (review r11: the
-    erasure's scrub + final audit ran unprotected), so such callers keep
-    the hold and release it themselves."""
+def _vacuum_locked(
+    target: str,
+    fs: merge_fs.MergeFS,
+    changes_keep: int | None = None,
+    staged_grace_sec: float = 3600.0,
+    exclusive: bool = False,
+) -> list[str]:
+    """vacuum_merge_table's body, for a caller already in the table's
+    leased section. ``exclusive``: the caller holds the lease for its whole
+    operation (erase_everywhere), so no writer can be staging; the
+    bump-anchored sparing is skipped, since it would leave sub-second-old
+    superseded versions on disk and break a zero-residual erasure proof.
+    The gc_epoch bump still lands, so a writer that races past the lease
+    anyway fails loudly instead of corrupting."""
     import json
     import os
     import time as _time
 
-    token = merge_fs.acquire_writer_lease(
-        fs, target, owner=lease_owner, ttl_sec=lease_ttl_sec
-    )
-    try:
-        manifest, etag = _load_manifest_cas(target, fs)
-        if manifest is None:
-            return []
-        bump_cutoff: float | None = None
-        if getattr(fs, "supports_cas", False):
-            for _ in range(5):
-                bumped = dict(manifest)
-                bumped["gc_epoch"] = int(manifest.get("gc_epoch", 0)) + 1
-                # taken BEFORE the put: any writer that reads the bumped
-                # manifest stages strictly after this instant
-                cutoff_try = _time.time()
-                if fs.put_if_match(
-                    _manifest_path(target), json.dumps(bumped).encode(), etag
-                ):
-                    manifest = bumped
-                    bump_cutoff = cutoff_try
-                    break
-                # a commit landed between our read and the bump — re-read
-                # so the retained set below includes ITS versions, and so
-                # the bump preconditions on the new generation
-                manifest, etag = _load_manifest_cas(target, fs)
-                if manifest is None:
-                    return []
-            else:
-                raise merge_fs.ConcurrentWriterError(
-                    f"vacuum at {target} could not land its gc_epoch bump "
-                    "after 5 attempts — writers are committing "
-                    "continuously past the lease; re-run vacuum later"
-                )
-        removed: list[str] = []
-        now = _time.time()
+    manifest, etag = _load_manifest_cas(target, fs)
+    if manifest is None:
+        return []
+    bump_cutoff: float | None = None
+    if getattr(fs, "supports_cas", False):
+        for _ in range(5):
+            bumped = dict(manifest)
+            bumped["gc_epoch"] = int(manifest.get("gc_epoch", 0)) + 1
+            # taken BEFORE the put: any writer that reads the bumped
+            # manifest stages strictly after this instant
+            cutoff_try = _time.time()
+            if _put_manifest_conditional(target, fs, bumped, etag):
+                manifest = bumped
+                bump_cutoff = cutoff_try
+                break
+            # a commit landed between our read and the bump — re-read
+            # so the retained set below includes ITS versions, and so
+            # the bump preconditions on the new generation
+            manifest, etag = _load_manifest_cas(target, fs)
+            if manifest is None:
+                return []
+        else:
+            raise merge_fs.ConcurrentWriterError(
+                f"vacuum at {target} could not land its gc_epoch bump "
+                "after 5 attempts — writers are committing "
+                "continuously past the lease; re-run vacuum later"
+            )
+    removed: list[str] = []
+    now = _time.time()
 
-        def _in_grace(path: str) -> bool:
+    def _in_grace(path: str) -> bool:
+        try:
+            mt = fs.mtime(path)
+        except FileNotFoundError:
+            return True  # vanished concurrently — nothing to reclaim
+        if now - mt < staged_grace_sec:
+            return True
+        # bump-anchored barrier: anything staged at/after the gc_epoch
+        # bump belongs to a writer that read the POST-bump manifest, whose
+        # clean first-try conditional put can land after our retained-set
+        # read — reclaiming it would let a committed manifest name deleted
+        # files. The 1 s margin covers coarse mtime granularity on
+        # pluggable stores; over-sparing just leaves young debris for the
+        # next vacuum.
+        if exclusive:
+            return False
+        return bump_cutoff is not None and mt >= bump_cutoff - 1.0
+
+    staging = os.path.join(target, ".staging")
+    if fs.isdir(staging):
+        for d in fs.listdir(staging):
+            sub = os.path.join(staging, d)
+            if not _in_grace(sub):
+                fs.rmtree(sub)
+                removed.append(sub)
+        if not fs.listdir(staging):
+            fs.rmtree(staging)
+    for rel, is_ref in _store_versions(target, fs, _retained_rels(target, fs)):
+        if not is_ref and not _in_grace(os.path.join(target, rel)):
+            fs.rmtree(os.path.join(target, rel))
+            removed.append(os.path.join(target, rel))
+    if changes_keep is not None:
+        keep: set[str] = set()
+        cur = (manifest.get("commit") or {}).get("id")
+        while cur is not None and len(keep) < int(changes_keep):
+            keep.add(cur)
             try:
-                mt = fs.mtime(path)
+                cur = json.loads(
+                    fs.read_bytes(
+                        os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
+                    ).decode()
+                ).get("parent")
             except FileNotFoundError:
-                return True  # vanished concurrently — nothing to reclaim
-            if now - mt < staged_grace_sec:
-                return True
-            # bump-anchored barrier (r11 — ADVICE r10): anything staged
-            # at/after the gc_epoch bump belongs to a writer that read the
-            # POST-bump manifest, whose clean first-try conditional put can
-            # land after our retained-set read — reclaiming it would let a
-            # committed manifest name deleted files. The 1 s margin covers
-            # coarse mtime granularity on pluggable stores; over-sparing
-            # just leaves young debris for the next vacuum. An exclusive
-            # caller (lease held for the whole operation) opts out: no
-            # writer can be staging, and erasure needs the reclaim NOW.
-            if exclusive:
-                return False
-            return bump_cutoff is not None and mt >= bump_cutoff - 1.0
-
-        staging = os.path.join(target, ".staging")
-        if fs.isdir(staging):
-            for d in fs.listdir(staging):
-                sub = os.path.join(staging, d)
-                if not _in_grace(sub):
-                    fs.rmtree(sub)
-                    removed.append(sub)
-            if not fs.listdir(staging):
-                fs.rmtree(staging)
-        for rel, is_ref in _store_versions(target, fs, _retained_rels(target, fs)):
-            if not is_ref and not _in_grace(os.path.join(target, rel)):
-                fs.rmtree(os.path.join(target, rel))
-                removed.append(os.path.join(target, rel))
-        if changes_keep is not None:
-            keep: set[str] = set()
-            cur = (manifest.get("commit") or {}).get("id")
-            while cur is not None and len(keep) < int(changes_keep):
-                keep.add(cur)
+                break
+        # live takedown obligations PIN their delete commit: a crashed
+        # takedown's recovery reads EXACTLY its stamped commit's delta for
+        # the delete set. Spare every delta a live ``_takedown/`` record
+        # references — the snapshot-pin precedent applied to the commit
+        # log; the record is removed when the obligation is met, so the
+        # pin lives exactly as long as the recovery could need the delta.
+        # (Unstamped records never pin: their recovery path is the
+        # pinned-snapshot CDC read with the state-diff fallback, which
+        # survives delta loss by construction.)
+        tddir = os.path.join(target, merge_fs.TAKEDOWN_REQUEST_DIR)
+        if fs.isdir(tddir):
+            for f in fs.listdir(tddir):
+                if not f.endswith(".json"):
+                    continue
                 try:
-                    cur = json.loads(
-                        fs.read_bytes(
-                            os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
-                        ).decode()
-                    ).get("parent")
+                    trec = json.loads(
+                        fs.read_bytes(os.path.join(tddir, f)).decode()
+                    )
                 except FileNotFoundError:
-                    break
-            # live takedown obligations PIN their delete commit (r12 —
-            # VERDICT r11 item 3): a crashed takedown's recovery reads
-            # EXACTLY its stamped commit's delta for the delete set, and
-            # reclaiming it under changes_keep retention used to turn the
-            # erasure into a manual forensics procedure (recover raised).
-            # Spare every delta a live ``_takedown/`` record references —
-            # the snapshot-pin precedent applied to the commit log; the
-            # record is removed when the obligation is met, so the pin
-            # lives exactly as long as the recovery could need the delta.
-            # (Unstamped records never pin: their recovery path is the
-            # pinned-snapshot CDC read with the state-diff fallback, which
-            # survives delta loss by construction.)
-            tddir = os.path.join(target, merge_fs.TAKEDOWN_REQUEST_DIR)
-            if fs.isdir(tddir):
-                for f in fs.listdir(tddir):
-                    if not f.endswith(".json"):
-                        continue
-                    try:
-                        trec = json.loads(
-                            fs.read_bytes(os.path.join(tddir, f)).decode()
-                        )
-                    except FileNotFoundError:
-                        continue  # recovery removed it between list & read
-                    cid = trec.get(merge_fs.TAKEDOWN_DELETE_COMMIT_FIELD)
-                    if cid:
-                        keep.add(cid)
-            cdir = os.path.join(target, _CHANGES_DIR)
-            if fs.isdir(cdir):
-                for d in fs.listdir(cdir):
-                    if d not in keep:
-                        fs.rmtree(os.path.join(cdir, d))
-                        removed.append(os.path.join(cdir, d))
-        return removed
-    finally:
-        if _release_lease:
-            merge_fs.release_writer_lease(fs, target, token)
+                    continue  # recovery removed it between list & read
+                cid = trec.get(merge_fs.TAKEDOWN_DELETE_COMMIT_FIELD)
+                if cid:
+                    keep.add(cid)
+        cdir = os.path.join(target, _CHANGES_DIR)
+        if fs.isdir(cdir):
+            for d in fs.listdir(cdir):
+                if d not in keep:
+                    fs.rmtree(os.path.join(cdir, d))
+                    removed.append(os.path.join(cdir, d))
+    return removed
 
 
 def merge_table_stats(
@@ -2018,25 +2126,23 @@ def adopt_table_params(
     lease_owner: str | None = None,
 ) -> dict:
     """One-time migration for a merge table whose manifest predates pinned
-    params (ADVICE r7): VERIFY the claimed (keys, n_buckets) against the
-    committed data, then pin them into the manifest so future merges pass
+    params: VERIFY the claimed (keys, n_buckets) against the committed
+    data, then pin them into the manifest so future merges pass
     _check_params. Verification is one pruned read of the committed
     buckets asserting that EVERY row's pmod(xxhash64(*keys), n_buckets)
     equals its recorded __bucket — the property merge routing depends on;
     a single mismatching row means the claimed layout is wrong and
     adoption raises without writing anything. Also refuses committed
     bucket ids outside [0, n_buckets) (cheap driver-side pre-check, no
-    scan needed to reject an obviously-wrong n_buckets). A writer
-    operation under the table lease. Returns the updated manifest."""
-    import json
-
+    scan needed to reject an obviously-wrong n_buckets). A manifest writer
+    (commit protocol: module docstring) that stages nothing and records no
+    commit. Returns the updated manifest."""
     if int(n_buckets) < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     want = {"keys": list(keys), "order_cols": [str(c) for c in order_cols],
             "n_buckets": int(n_buckets)}
-    token = merge_fs.acquire_writer_lease(fs, target, owner=lease_owner)
-    try:
-        manifest, manifest_etag = _load_manifest_cas(target, fs)
+    with merge_fs.leased(fs, target, lease_owner):
+        manifest, etag = _load_manifest_cas(target, fs)
         if manifest is None:
             raise ValueError(f"no committed state at {target}")
         have = manifest.get("params")
@@ -2067,13 +2173,10 @@ def adopt_table_params(
                 f"n_buckets={n_buckets} — wrong keys or wrong n_buckets "
                 f"for the table at {target}"
             )
-        manifest["params"] = want
-        _put_manifest_conditional(
-            target, fs, manifest, manifest_etag, "params adoption"
+        return _commit(
+            target, fs, "params adoption", manifest, etag,
+            fields={"params": want}, record=False,
         )
-        return manifest
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
 
 
 def delete_from_merge_table(
@@ -2102,132 +2205,78 @@ def delete_from_merge_table(
       rewrites few buckets; a table-wide one degrades to the honest
       O(table) rewrite.
 
-    Same two-phase commit as merge: rewritten buckets stage invisibly,
-    ONE atomic manifest put flips readers (a bucket emptied by the delete
-    leaves the manifest entirely), superseded versions are GC'd unless
-    snapshot-pinned. CDC composes: read_changes(pre_delete_snapshot)
-    reports the removed rows as ``_change_type='delete'``. A writer
-    operation under the table lease. Returns the number of rows deleted."""
-    import json
-    import os
-
+    Same commit protocol as merge (module docstring): rewritten buckets
+    stage invisibly, ONE manifest put flips readers (a bucket emptied by
+    the delete leaves the manifest entirely), superseded versions are
+    GC'd unless snapshot-pinned. A delete only removes rows, so surviving
+    buckets keep their min/max and null-count entries as valid bounds;
+    per-file stats name the old version's files and are dropped. CDC
+    composes: read_changes(pre_delete_snapshot) reports the removed rows
+    as ``_change_type='delete'``. Returns the number of rows deleted."""
     if (keys is None) == (predicate is None):
         raise ValueError("pass exactly one of keys= or predicate=")
-    token = merge_fs.acquire_writer_lease(
-        fs, target, owner=lease_owner, ttl_sec=lease_ttl_sec
-    )
-    try:
-        with merge_fs.lease_heartbeat(fs, target, token, ttl_sec=lease_ttl_sec):
-            manifest, manifest_etag = _load_manifest_cas(target, fs)
-            if manifest is None:
+    with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
+        manifest, etag = _load_manifest_cas(target, fs)
+        if manifest is None:
+            return 0
+        params = manifest.get("params")
+        if params is None:
+            raise ValueError(
+                f"table at {target} predates pinned params; run "
+                "adopt_table_params before deleting"
+            )
+        key_cols, n_buckets = params["keys"], int(params["n_buckets"])
+        if keys is not None:
+            kdf = keys.select(*key_cols).distinct().withColumn(
+                "__bucket", F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+            )
+            touched = sorted(
+                r["__bucket"]
+                for r in kdf.select("__bucket").distinct().collect()
+            )
+            touched = [b for b in touched if str(b) in manifest["buckets"]]
+            if not touched:
                 return 0
-            params = manifest.get("params")
-            if params is None:
-                raise ValueError(
-                    f"table at {target} predates pinned params; run "
-                    "adopt_table_params before deleting"
-                )
-            key_cols, n_buckets = params["keys"], int(params["n_buckets"])
-            if keys is not None:
-                kdf = keys.select(*key_cols).distinct().withColumn(
-                    "__bucket", F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
-                )
-                touched = sorted(
-                    r["__bucket"]
-                    for r in kdf.select("__bucket").distinct().collect()
-                )
-                touched = [b for b in touched if str(b) in manifest["buckets"]]
-                if not touched:
-                    return 0
-                cur = read_merged(spark, target, buckets=touched, fs=fs)
-                remaining = cur.join(
-                    kdf.drop("__bucket"), on=key_cols, how="left_anti"
-                )
-            else:
-                cur_all = read_merged(spark, target, fs=fs)
-                if cur_all is None:
-                    return 0
-                # pruning pass: <= n_buckets rows to the driver
-                hits = (
-                    cur_all.filter(F.expr(predicate))
-                    .groupBy("__bucket")
-                    .count()
-                    .collect()
-                )
-                touched = sorted(int(r["__bucket"]) for r in hits if r["count"])
-                if not touched:
-                    return 0
-                cur = read_merged(spark, target, buckets=touched, fs=fs)
-                remaining = cur.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-            if keys is not None:
-                removed = cur.join(kdf.drop("__bucket"), on=key_cols, how="left_semi")
-            else:
-                removed = cur.filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            new_rels, staging = _stage_bucket_versions(
-                remaining, target, touched, fs
+            cur = read_merged(spark, target, buckets=touched, fs=fs)
+            remaining = cur.join(
+                kdf.drop("__bucket"), on=key_cols, how="left_anti"
             )
-            # commit-log capture (r8): the removed rows, as delete records.
-            # `removed` and `remaining` split the touched buckets' rows, so
-            # the delta's row count, observed on its own write, is the
-            # number of rows this delete removes
-            commit_id = uuid.uuid4().hex[:12]
-            parent = (manifest.get("commit") or {}).get("id")
-            obs = Observation()
-            _write_commit_delta(
-                target, commit_id, parent,
-                removed.select(
-                    *[c for c in cur.columns if c != "__bucket"]
-                ).withColumn("_change_type", F.lit("delete")).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                ),
-                fs, kind="delete",
+            removed = cur.join(kdf.drop("__bucket"), on=key_cols, how="left_semi")
+        else:
+            cur_all = read_merged(spark, target, fs=fs)
+            if cur_all is None:
+                return 0
+            # pruning pass: <= n_buckets rows to the driver
+            hits = (
+                cur_all.filter(F.expr(predicate))
+                .groupBy("__bucket")
+                .count()
+                .collect()
             )
-            manifest["commit"] = {"id": commit_id, "parent": parent}
-            old_rels = {str(b): manifest["buckets"].get(str(b)) for b in touched}
-            for b in touched:  # emptied buckets leave the manifest
-                manifest["buckets"].pop(str(b), None)
-            manifest["buckets"].update(new_rels)
-            # column stats (r9): a delete only REMOVES rows, so a touched
-            # bucket's recorded min/max stays a valid (conservative)
-            # superset bound — keep it for skipping; stats of emptied
-            # buckets go with them
-            if "stats" in manifest:
-                for b in touched:
-                    if str(b) not in manifest["buckets"]:
-                        manifest["stats"].pop(str(b), None)
-                if not manifest["stats"]:
-                    del manifest["stats"]
-            # null/row counts stay valid prune evidence under row removal
-            # (a delete can neither create nulls nor un-null a value, and
-            # both prune rules — all-null, zero-null — are monotone that
-            # way), so keep them like the min/max bounds
-            if "nullstats" in manifest:
-                for b in touched:
-                    if str(b) not in manifest["buckets"]:
-                        manifest["nullstats"].pop(str(b), None)
-                if not manifest["nullstats"]:
-                    del manifest["nullstats"]
-            # per-FILE cluster stats are version-specific (they name the
-            # version's files), so the delete's rewrite MUST drop them for
-            # every touched bucket — the new version has new file names;
-            # the reader's rel check would ignore stale entries anyway
-            if "filestats" in manifest:
-                for b in touched:
-                    manifest["filestats"].pop(str(b), None)
-                if not manifest["filestats"]:
-                    del manifest["filestats"]
-            # THE commit point — conditional on the generation read above
-            # (r10): a merge/vacuum racing past the lease fails THIS delete
-            # loudly instead of losing one side's update
-            _put_manifest_conditional(target, fs, manifest, manifest_etag, "delete")
-            pinned = _pinned_rels(target, fs)
-            for b, rel in old_rels.items():
-                if rel and rel != new_rels.get(b) and os.path.normpath(rel) not in pinned:
-                    fs.rmtree(os.path.join(target, rel))
-            fs.rmtree(staging)
-            return int(obs.get["n"])
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+            touched = sorted(int(r["__bucket"]) for r in hits if r["count"])
+            if not touched:
+                return 0
+            cur = read_merged(spark, target, buckets=touched, fs=fs)
+            hit = F.coalesce(F.expr(predicate), F.lit(False))
+            remaining = cur.filter(~hit)
+            removed = cur.filter(hit)
+        new_rels, staging = _stage_bucket_versions(
+            remaining, target, touched, fs
+        )
+        # the delta holds the removed rows as delete records; `removed`
+        # and `remaining` split the touched buckets' rows, so the delta's
+        # row count, observed on its own write, is the rows deleted
+        obs = Observation()
+        _commit(
+            target, fs, "delete", manifest, etag, staged=new_rels,
+            staging=staging, dropped=touched, entries={"filestats": {}},
+            changes=removed.select(
+                *[c for c in cur.columns if c != "__bucket"]
+            ).withColumn("_change_type", F.lit("delete")).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ),
+        )
+        return int(obs.get["n"])
 
 
 def merge_table(
@@ -2245,84 +2294,80 @@ def merge_table(
     cluster_files: int = 4,
 ) -> None:
     """MERGE one (micro-)batch of ANY schema into the bucket-versioned gold
-    table at ``target``, keyed by ``keys``, with a TWO-PHASE commit
-    (VERDICT r3 item 7 — the previous dynamic-partition-overwrite committed
-    per partition, so a crash between two bucket swaps could expose a torn
-    batch). MERGE semantics: the incoming batch wins per key (ties inside
-    the batch broken by ``order_cols`` descending) — the contract assumes
-    in-order ingestion, as micro-batch pipelines provide.
+    table at ``target``, keyed by ``keys``, with the table's commit
+    protocol (module docstring): a crash at any point leaves the previous
+    state intact, and readers see the whole batch or none of it. MERGE
+    semantics: the incoming batch wins per key (ties inside the batch
+    broken by ``order_cols`` descending) — the contract assumes in-order
+    ingestion, as micro-batch pipelines provide.
 
     I/O stays proportional to the batch's key range, not the table:
     - keys hash to ``__bucket = pmod(xxhash64(*keys), n_buckets)``;
     - only the buckets PRESENT IN THE BATCH are read back (manifest-pruned)
       and merged;
-    - phase 1 writes the merged buckets to ``.staging/<version>`` and moves
-      each finished bucket dir to ``store/<bucket>/<version>`` — all of it
-      invisible to readers;
-    - phase 2 is ONE atomic manifest put. Readers see the whole batch or
-      none of it; a crash at any point leaves the previous state intact.
+    - the merged buckets are staged as new versions and committed with
+      ONE manifest put.
 
     ``fs`` carries the bookkeeping I/O (streaming/fs.py): the protocol needs
     only an atomic full-object manifest put — bucket moves may be S3-style
     copy+delete (crash debris stays invisible; vacuum reclaims it), proven
     under NonAtomicRenameFS in tests/test_streaming.py.
 
-    Single-writer contract ENFORCED (VERDICT r5 item 7): the whole
-    read-merge-commit holds the table's writer lease, so a second
-    concurrent merger (or an overlapping vacuum) raises
-    ConcurrentWriterError instead of silently losing one writer's update in
-    the manifest read-modify-write. Streaming restarts that reuse a stable
+    Single writer: the whole read-merge-commit runs in the table's leased
+    section, so a second concurrent merger (or an overlapping vacuum)
+    raises ConcurrentWriterError. Streaming restarts that reuse a stable
     query id pass it as ``lease_owner`` to re-enter their own lease; a
     lease stranded by a crash expires after ``lease_ttl_sec`` (or
-    break_writer_lease after confirming the writer died).
+    break_writer_lease after confirming the writer died). Writers that
+    race past the lease anyway meet the conditional commit; a merge whose
+    buckets do not overlap the winner's rebases onto it.
 
     The first merge pins (keys, order_cols, n_buckets) INSIDE the manifest
     (versioned with the state — see _table_params); later merges with
     different parameters raise instead of mis-routing rows (_check_params).
 
-    ``capture_changes=False`` (ADVICE r8): skip the per-commit CDC delta
-    capture (a touched-bucket-proportional full-outer join + write) for
-    ingest-heavy tables whose consumers only ever use the read_changes
-    state diff — the commit record still lands (lineage stays walkable)
-    but read_commit_changes over a range containing such a commit fails
+    ``capture_changes=False``: skip the per-commit CDC delta capture (a
+    touched-bucket-proportional full-outer join + write) for ingest-heavy
+    tables whose consumers only ever use the read_changes state diff — the
+    commit record still lands (lineage stays walkable) but
+    read_commit_changes over a range containing such a commit fails
     loudly to the documented fallback. Default True: capture is what buys
     read_commit_changes its O(delta) contract.
 
-    ``stats_cols`` (r9 — Delta-style data skipping): record per-bucket
-    min/max for these columns in the manifest at every commit (one
-    aggregate over the bucket versions the commit just staged, read back
-    with their known schema — the merge is not recomputed), powering
-    ``read_merged(range_filters=...)``'s driver-side bucket skipping.
-    Per-commit state, not a pinned table param: a merge that omits it
-    DROPS its touched buckets' stats (stale-stat protection — pruning on
-    stale bounds could hide rows), so pass it consistently on tables that
-    want skipping. Numeric/string columns only; other types are silently
-    not recorded.
+    ``stats_cols`` (Delta-style data skipping): record per-bucket min/max,
+    null counts, row counts and approximate ndv for these columns in the
+    manifest at every commit (one aggregate over the bucket versions the
+    commit just staged, read back with their known schema — the merge is
+    not recomputed), powering ``read_merged(range_filters=...)``'s
+    driver-side bucket skipping. Per-commit state, not a pinned table
+    param: a merge that omits it DROPS its touched buckets' stats
+    (stale-stat protection — pruning on stale bounds could hide rows), so
+    pass it consistently on tables that want skipping. Numeric/string
+    columns only; other types are silently not recorded.
 
-    ``cluster_by`` (r10 — the LAYOUT half of data skipping, VERDICT r9
-    item 1): per-bucket min/max is useless for a column that does not
-    correlate with the key hash — on a mature hash-bucketed table every
-    bucket's span of an independent column converges to the full range
-    and ``stats_cols`` prunes nothing. ``cluster_by=col`` fixes the
-    layout instead: each touched bucket's version is written as
-    ~``cluster_files`` files range-DISJOINT in ``col`` (one range
-    shuffle in place of the stage write's default partitioning, plus a
-    within-file sort that compounds into parquet row-group stats), and
-    the manifest records each file's span. ``read_merged`` with a
-    ``range_filters`` entry on ``col`` then prunes FILES inside every
-    bucket — the Delta OPTIMIZE ZORDER / liquid-clustering shape, giving
-    ~1/``cluster_files`` read I/O on selective ranges regardless of key
-    correlation. A LIST of columns Z-ORDERS (r10): per-column range-bin
-    ids (sampling range partitioner — skew-adaptive, any orderable type)
-    bit-interleave into one z-value and files tile the multi-dim space,
-    so a ``range_filters`` entry on ANY of the listed columns prunes
-    files (each column's per-file span ≈ range/files^(1/dims) — the
-    multi-dim trade every Z-order makes). Like ``stats_cols`` it is
-    per-commit: a merge that
-    omits it drops its touched buckets' file stats (they name the old
-    version's files), and a DELETE rewrite or rebucket drops them too —
-    correctness never depends on them; pass it consistently to keep the
-    skip. Size ``cluster_files`` so a bucket-version file ≈ a parquet
+    ``cluster_by`` (the LAYOUT half of data skipping): per-bucket min/max
+    is useless for a column that does not correlate with the key hash — on
+    a mature hash-bucketed table every bucket's span of an independent
+    column converges to the full range and ``stats_cols`` prunes nothing.
+    ``cluster_by=col`` fixes the layout instead: each touched bucket's
+    version is written as ~``cluster_files`` files range-DISJOINT in
+    ``col`` (one range shuffle in place of the stage write's default
+    partitioning, plus a within-file sort that compounds into parquet
+    row-group stats), and the manifest records each file's span.
+    ``read_merged`` with a ``range_filters`` entry on ``col`` then prunes
+    FILES inside every bucket — the Delta OPTIMIZE ZORDER /
+    liquid-clustering shape, giving ~1/``cluster_files`` read I/O on
+    selective ranges regardless of key correlation. A LIST of columns
+    Z-ORDERS: per-column range-bin ids (sampling range partitioner —
+    skew-adaptive, any orderable type) bit-interleave into one z-value and
+    files tile the multi-dim space, so a ``range_filters`` entry on ANY of
+    the listed columns prunes files (each column's per-file span ≈
+    range/files^(1/dims) — the multi-dim trade every Z-order makes). Like
+    ``stats_cols`` it is per-commit: a merge that omits it drops its
+    touched buckets' file stats (they name the old version's files), and a
+    DELETE rewrite or rebucket drops them too — correctness never depends
+    on them; pass it consistently to keep the skip. Size
+    ``cluster_files`` so a bucket-version file ≈ a parquet
     row-group-friendly 128 MB–1 GB at your scale.
     """
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import topk
@@ -2343,21 +2388,11 @@ def merge_table(
     )
     if not touched:
         return
-
-    token = merge_fs.acquire_writer_lease(
-        fs, target, owner=lease_owner, ttl_sec=lease_ttl_sec
-    )
-    try:
-        # heartbeat (VERDICT r6 item 6): a wide-batch merge rewriting many
-        # buckets can outlive a conservative TTL; the background re-stamp
-        # keeps the lease live for the whole read-merge-commit body.
-        with merge_fs.lease_heartbeat(fs, target, token, ttl_sec=lease_ttl_sec):
-            _merge_locked(latest, target, touched, fs, keys, order_cols,
-                          n_buckets, capture_changes=capture_changes,
-                          stats_cols=stats_cols, cluster_by=cluster_by,
-                          cluster_files=cluster_files)
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+    with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
+        _merge_locked(latest, target, touched, fs, keys, order_cols,
+                      n_buckets, capture_changes=capture_changes,
+                      stats_cols=stats_cols, cluster_by=cluster_by,
+                      cluster_files=cluster_files)
 
 
 def merge_micro_batch(
@@ -2523,75 +2558,49 @@ def rebucket_merge_table(
     ``pmod(xxhash64(*keys), n_buckets)`` — deliberately O(table), the one
     full-rewrite maintenance op, like a table-format OPTIMIZE — staged
     invisibly and committed with a single manifest put that also updates
-    the pinned params, so readers flip atomically and a crash anywhere
-    leaves the old bucketing intact. Snapshot-pinned versions survive
+    the pinned params (commit protocol: module docstring), so readers
+    flip atomically and a crash anywhere leaves the old bucketing intact.
+    Bucket-keyed stats are dropped wholesale; the next stats_cols merge
+    rebuilds them per touched bucket. Snapshot-pinned versions survive
     (their manifests keep the OLD bucket map and params; time-travel reads
     and rollbacks restore the old bucketing wholesale). CDC across a
     rebucket sees every bucket as changed and degrades to a full-table
-    diff — correct, but schedule CDC consumers before the rebucket.
+    diff — correct, but schedule CDC consumers before the rebucket; the
+    commit log records it as an empty delta, so the chain stays walkable.
     Returns the new manifest."""
-    import json
-    import os
-
     if int(n_buckets) < 1:
         # pmod(x, 0) is NULL with ANSI off: the staged write would land
         # nothing and the commit + GC below would erase the whole table
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    token = merge_fs.acquire_writer_lease(
-        fs, target, owner=lease_owner, ttl_sec=lease_ttl_sec
-    )
-    try:
-        with merge_fs.lease_heartbeat(fs, target, token, ttl_sec=lease_ttl_sec):
-            manifest, manifest_etag = _load_manifest_cas(target, fs)
-            if manifest is None:
-                raise ValueError(f"no committed state to rebucket at {target}")
-            params = manifest.get("params")
-            if params is None:
-                raise ValueError(
-                    f"table at {target} predates pinned params; merge once "
-                    "to record them before rebucketing"
-                )
-            if int(n_buckets) == int(params["n_buckets"]):
-                return manifest
-            keys = params["keys"]
-            cur = read_merged(spark, target, fs=fs)
-            df = cur.drop("__bucket").withColumn(
-                "__bucket", F.pmod(F.xxhash64(*keys), F.lit(int(n_buckets)))
+    with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
+        manifest, etag = _load_manifest_cas(target, fs)
+        if manifest is None:
+            raise ValueError(f"no committed state to rebucket at {target}")
+        params = manifest.get("params")
+        if params is None:
+            raise ValueError(
+                f"table at {target} predates pinned params; merge once "
+                "to record them before rebucketing"
             )
-            new_rels, staging = _stage_bucket_versions(
-                df, target, list(range(int(n_buckets))), fs
-            )
-            old_rels = dict(manifest["buckets"])
-            # commit-log: a rebucket is a content no-op — empty delta
-            # keeps the chain walkable across it (r8)
-            commit_id = uuid.uuid4().hex[:12]
-            parent = (manifest.get("commit") or {}).get("id")
-            _write_commit_delta(target, commit_id, parent, None, fs, kind="rebucket")
-            new_manifest = {
-                # column stats (r9) are keyed by bucket id, so a rebucket
-                # invalidates them wholesale — the fresh manifest simply
-                # omits them (readers then never prune; the next
-                # stats_cols merge rebuilds per touched bucket)
-                "buckets": new_rels,
-                "params": {**params, "n_buckets": int(n_buckets)},
-                "schema": _nullable_schema_json(df.schema),
-                "commit": {"id": commit_id, "parent": parent},
-            }
-            # THE commit point — readers flip to the new bucketing
-            # atomically; conditional (r10) so a racing writer cannot be
-            # silently overwritten by the O(table) rewrite
-            _put_manifest_conditional(
-                target, fs, new_manifest, manifest_etag, "rebucket"
-            )
-            # best-effort GC of the entire old generation (spare pins)
-            pinned = _pinned_rels(target, fs)
-            for rel in old_rels.values():
-                if os.path.normpath(rel) not in pinned:
-                    fs.rmtree(os.path.join(target, rel))
-            fs.rmtree(staging)
-            return new_manifest
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+        if int(n_buckets) == int(params["n_buckets"]):
+            return manifest
+        keys = params["keys"]
+        cur = read_merged(spark, target, fs=fs)
+        df = cur.drop("__bucket").withColumn(
+            "__bucket", F.pmod(F.xxhash64(*keys), F.lit(int(n_buckets)))
+        )
+        new_rels, staging = _stage_bucket_versions(
+            df, target, list(range(int(n_buckets))), fs
+        )
+        fresh = {
+            "buckets": {},
+            "params": {**params, "n_buckets": int(n_buckets)},
+            "schema": _nullable_schema_json(df.schema),
+        }
+        return _commit(
+            target, fs, "rebucket", fresh, etag, read=manifest,
+            staged=new_rels, staging=staging, dropped=manifest["buckets"],
+        )
 
 
 def optimize_merge_table(
@@ -2615,135 +2624,103 @@ def optimize_merge_table(
     merge_table's.
 
     Content no-op by construction: each touched bucket's committed rows
-    are restaged in cluster order and ONE conditional manifest put flips
-    readers — per-bucket column stats/null counts stay untouched (row set
-    unchanged, so they remain exact), file stats are rebuilt for exactly
-    the touched buckets, and the commit chain carries an empty
-    kind='optimize' delta (CDC consumers cross it in O(0), like
-    rebucket). ``buckets`` limits the rewrite (incremental re-clustering
-    — run it bucket-range by bucket-range on a 100 TB table); default is
-    every committed bucket, the honest O(table) maintenance op.
-    ``only_decayed=True`` restricts further to buckets whose layout has
-    DECAYED — no file stats, stats naming a superseded version (a
-    non-clustering merge/delete rewrote the bucket), or stats recorded
-    for different cluster columns — so the scheduled maintenance run is
-    O(decay since last run), not O(table), and a fully-clustered table
-    is a cheap no-op.
-    Snapshot-pinned versions survive (time travel reads the OLD layout);
-    a crash anywhere before the put leaves readers on the old layout with
-    staged debris for vacuum. A writer operation under the table lease,
-    CAS-conditional on the manifest generation read.
+    are restaged in cluster order and committed with ONE conditional
+    manifest put (commit protocol: module docstring) — per-bucket column
+    stats/null counts stay untouched (row set unchanged, so they remain
+    exact), file stats are rebuilt for exactly the touched buckets, and
+    the commit chain carries an empty kind='optimize' delta (CDC consumers
+    cross it in O(0), like rebucket). ``buckets`` limits the rewrite
+    (incremental re-clustering — run it bucket-range by bucket-range on a
+    100 TB table); default is every committed bucket, the honest O(table)
+    maintenance op. ``only_decayed=True`` restricts further to buckets
+    whose layout has DECAYED — no file stats, stats naming a superseded
+    version (a non-clustering merge/delete rewrote the bucket), or stats
+    recorded for different cluster columns — so the scheduled maintenance
+    run is O(decay since last run), not O(table), and a fully-clustered
+    table is a cheap no-op. Snapshot-pinned versions survive (time travel
+    reads the OLD layout); a crash anywhere before the put leaves readers
+    on the old layout with staged debris for vacuum.
 
-    ``target_file_bytes`` (r11 — VERDICT r10 item 7, Delta OPTIMIZE's
-    maxFileSize shape): derive the file count from the DATA instead of a
-    fixed ``cluster_files`` — the touched buckets' committed on-disk
-    parquet bytes (driver-side fs listing, already-compressed sizes, so
-    the restaged files land near the target) divided by the target,
-    spread over the touched buckets; the range partitioner then
-    distributes boundaries by row density, so heavy buckets naturally
-    get more files. Overrides ``cluster_files`` when set. Size for
-    row-group-friendly 128 MB–1 GB files; SCALING.md's r11 curve
-    quantifies the skip-vs-files-per-bucket trade this knob moves. The
-    chosen sizing is reported in the returned manifest dict under
-    ``_optimize_sizing`` (report-only, not persisted)."""
+    ``target_file_bytes`` (Delta OPTIMIZE's maxFileSize shape): derive the
+    file count from the DATA instead of a fixed ``cluster_files`` — the
+    touched buckets' committed on-disk parquet bytes (driver-side fs
+    listing, already-compressed sizes, so the restaged files land near the
+    target) divided by the target, spread over the touched buckets; the
+    range partitioner then distributes boundaries by row density, so
+    heavy buckets naturally get more files. Overrides ``cluster_files``
+    when set. Size for row-group-friendly 128 MB–1 GB files; SCALING.md's
+    file-sizing curve quantifies the skip-vs-files-per-bucket trade this
+    knob moves. The chosen sizing is reported in the returned manifest
+    dict under ``_optimize_sizing`` (report-only, not persisted)."""
     import os
 
-    token = merge_fs.acquire_writer_lease(
-        fs, target, owner=lease_owner, ttl_sec=lease_ttl_sec
-    )
-    try:
-        with merge_fs.lease_heartbeat(fs, target, token, ttl_sec=lease_ttl_sec):
-            manifest, manifest_etag = _load_manifest_cas(target, fs)
-            if manifest is None:
-                raise ValueError(f"no committed state to optimize at {target}")
-            committed = sorted(int(b) for b in manifest["buckets"])
-            touched = (
-                committed
-                if buckets is None
-                else sorted(set(int(b) for b in buckets) & set(committed))
+    with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
+        manifest, etag = _load_manifest_cas(target, fs)
+        if manifest is None:
+            raise ValueError(f"no committed state to optimize at {target}")
+        committed = sorted(int(b) for b in manifest["buckets"])
+        touched = (
+            committed
+            if buckets is None
+            else sorted(set(int(b) for b in buckets) & set(committed))
+        )
+        if only_decayed:
+            want_cols = (
+                [cluster_by] if isinstance(cluster_by, str) else list(cluster_by)
             )
-            if only_decayed:
-                want_cols = (
-                    [cluster_by] if isinstance(cluster_by, str) else list(cluster_by)
+            fstats0 = manifest.get("filestats") or {}
+
+            def _decayed(b: int) -> bool:
+                fst = fstats0.get(str(b))
+                if fst is None or fst.get("rel") != manifest["buckets"][str(b)]:
+                    return True
+                have = fst.get("cols") or (
+                    [fst["col"]] if "col" in fst else []
                 )
-                fstats0 = manifest.get("filestats") or {}
+                return have != want_cols
 
-                def _decayed(b: int) -> bool:
-                    fst = fstats0.get(str(b))
-                    if fst is None or fst.get("rel") != manifest["buckets"][str(b)]:
-                        return True
-                    have = fst.get("cols") or (
-                        [fst["col"]] if "col" in fst else []
-                    )
-                    return have != want_cols
-
-                touched = [b for b in touched if _decayed(b)]
-            if not touched:
-                return manifest
-            sizing = None
-            if target_file_bytes is not None:
-                # committed parquet bytes of exactly the touched buckets:
-                # already-compressed sizes, so restaged files land near
-                # the target. Driver-side listing, bounded by file counts.
-                import math
-
-                total = 0
-                for b in touched:
-                    vdir = os.path.join(target, manifest["buckets"][str(b)])
-                    for f in fs.listdir(vdir):
-                        if f.endswith(".parquet"):
-                            total += fs.size(os.path.join(vdir, f))
-                cluster_files = max(
-                    1,
-                    math.ceil(
-                        total / float(target_file_bytes) / max(1, len(touched))
-                    ),
-                )
-                sizing = {
-                    "touched_bytes": total,
-                    "target_file_bytes": int(target_file_bytes),
-                    "cluster_files": cluster_files,
-                }
-            cur = read_merged(spark, target, buckets=touched, fs=fs)
-            new_rels, staging = _stage_bucket_versions(
-                cur, target, touched, fs,
-                cluster_by=cluster_by, cluster_files=cluster_files,
-            )
-            filestats_update = _file_stats_for(
-                spark, target, new_rels, cluster_by, cur.schema
-            )
-            commit_id = uuid.uuid4().hex[:12]
-            parent = (manifest.get("commit") or {}).get("id")
-            _write_commit_delta(target, commit_id, parent, None, fs, kind="optimize")
-            old_rels = {b: manifest["buckets"][b] for b in new_rels}
-            manifest["buckets"].update(new_rels)
-            fstats = dict(manifest.get("filestats") or {})
-            for b in new_rels:
-                if b in filestats_update:
-                    fstats[b] = filestats_update[b]
-                else:
-                    fstats.pop(b, None)
-            if fstats:
-                manifest["filestats"] = fstats
-            else:
-                manifest.pop("filestats", None)
-            manifest["commit"] = {"id": commit_id, "parent": parent}
-            # THE commit point (conditional — a racing writer raises here
-            # having committed nothing, staged layout is vacuum debris)
-            _put_manifest_conditional(target, fs, manifest, manifest_etag, "optimize")
-            pinned = _pinned_rels(target, fs)
-            for b, rel in old_rels.items():
-                if rel and rel != new_rels.get(b) and os.path.normpath(rel) not in pinned:
-                    fs.rmtree(os.path.join(target, rel))
-            fs.rmtree(staging)
-            if sizing is not None:
-                # report-only (NOT persisted — the manifest on disk was
-                # already committed above): what the auto-sizer chose
-                manifest = dict(manifest)
-                manifest["_optimize_sizing"] = sizing
+            touched = [b for b in touched if _decayed(b)]
+        if not touched:
             return manifest
-    finally:
-        merge_fs.release_writer_lease(fs, target, token)
+        sizing = None
+        if target_file_bytes is not None:
+            # committed parquet bytes of exactly the touched buckets:
+            # already-compressed sizes, so restaged files land near
+            # the target. Driver-side listing, bounded by file counts.
+            import math
+
+            total = 0
+            for b in touched:
+                vdir = os.path.join(target, manifest["buckets"][str(b)])
+                for f in fs.listdir(vdir):
+                    if f.endswith(".parquet"):
+                        total += fs.size(os.path.join(vdir, f))
+            cluster_files = max(
+                1,
+                math.ceil(
+                    total / float(target_file_bytes) / max(1, len(touched))
+                ),
+            )
+            sizing = {
+                "touched_bytes": total,
+                "target_file_bytes": int(target_file_bytes),
+                "cluster_files": cluster_files,
+            }
+        cur = read_merged(spark, target, buckets=touched, fs=fs)
+        new_rels, staging = _stage_bucket_versions(
+            cur, target, touched, fs,
+            cluster_by=cluster_by, cluster_files=cluster_files,
+        )
+        manifest = _commit(
+            target, fs, "optimize", manifest, etag, staged=new_rels,
+            staging=staging, entries={"filestats": _file_stats_for(
+                spark, target, new_rels, cluster_by, cur.schema
+            )},
+        )
+        if sizing is not None:
+            # report-only: the manifest on disk is already committed
+            manifest["_optimize_sizing"] = sizing
+        return manifest
 
 
 def _file_stats_for(
@@ -2815,44 +2792,20 @@ def _merge_locked(
     cluster_by=None,
     cluster_files: int = 4,
 ) -> None:
-    """merge_table's read-merge-commit body, run under the writer lease."""
+    """merge_table's read-merge-commit body, run in the leased section."""
     import os
 
     sess = latest.sparkSession
-    # CAS-conditional commit (r9 — VERDICT r8 item 5): on a store with the
-    # CAS capability, remember the manifest generation we read; the commit
-    # below replaces it ONLY IF still current (put_if_match keyed on this
-    # etag; put_if_absent for a first commit) — the Delta/Iceberg
-    # optimistic-concurrency protocol. Two writers that raced past the
-    # lease (expired TTL, lease-free deployment) then get loud conflict
-    # detection instead of a lost update: exactly one manifest put wins,
-    # the loser raises and its staged versions are invisible debris that
-    # vacuum reclaims.
-    manifest_etag: str | None = None
-    if getattr(fs, "supports_cas", False):
-        try:
-            raw, manifest_etag = fs.read_with_etag(_manifest_path(target))
-            import json as _json
-
-            manifest = _json.loads(raw.decode())
-            if "buckets" not in manifest or not isinstance(manifest["buckets"], dict):
-                raise ValueError(
-                    f"corrupt merge manifest at {_manifest_path(target)}: {manifest!r}"
-                )
-        except FileNotFoundError:
-            manifest = None
-    else:
-        manifest = _load_manifest(target, fs)
-    first_commit = manifest is None
+    manifest, etag = _load_manifest_cas(target, fs)
     manifest = manifest or {"buckets": {}}
     _check_params(manifest, target, keys, order_cols, n_buckets)
     current = read_merged(sess, target, buckets=touched, fs=fs)
     if current is None:  # none of the touched buckets committed yet
         # the empty current MUST carry the table's committed schema, not
-        # the batch's (code review r7): a batch touching only uncommitted
-        # buckets would otherwise re-commit manifest['schema'] as the
-        # batch-only schema — silently hiding evolved columns table-wide
-        # and letting a retyped column slip past the guard below
+        # the batch's: a batch touching only uncommitted buckets would
+        # otherwise re-commit manifest['schema'] as the batch-only schema
+        # — silently hiding evolved columns table-wide and letting a
+        # retyped column slip past the guard below
         if "schema" in manifest:
             from pyspark.sql.types import StructType
 
@@ -2880,8 +2833,6 @@ def _merge_locked(
     merged = merge_mod.merge_upsert(
         current, latest, keys=keys, order_cols=order_cols
     )
-
-    # ---- phase 1: stage the new bucket versions (reader-invisible) --------
     new_rels, staging = _stage_bucket_versions(
         merged, target, touched, fs,
         cluster_by=cluster_by, cluster_files=cluster_files,
@@ -2892,238 +2843,46 @@ def _merge_locked(
     staged = sess.read.schema(merged.schema).parquet(
         *[os.path.join(target, rel) for rel in new_rels.values()]
     )
-
-    # ---- column stats for data skipping (r9, opt-in) ----------------------
-    # One aggregate over the files just staged (touched-bucket-proportional,
-    # and no re-read of the buckets' previous versions); values land in the
-    # manifest (versioned with the state, like params — snapshots/rollback
-    # keep stats consistent with the buckets they describe). Only JSON-safe
-    # scalar types record.
-    stats_update: dict[str, dict] | None = None
-    nullstats_update: dict[str, dict] | None = None
+    # a merge replaces every entry of its buckets: with stats_cols, one
+    # aggregate over the files just staged (JSON-safe scalar types only);
+    # with cluster_by, one input_file_name pass over the same files; an
+    # entry kind the merge does not record is dropped for its buckets, so
+    # no stale bound survives to hide rows
+    entries: dict[str, dict] = {"stats": {}, "nullstats": {}, "filestats": {}}
     if stats_cols:
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in stats_cols:
             aggs.append(F.min(c).alias(f"__mn_{c}"))
             aggs.append(F.max(c).alias(f"__mx_{c}"))
-            # null counts (r10 — VERDICT r9 item 6): power IS [NOT] NULL
-            # pruning (read_merged null_filters); approx ndv rides the
-            # same aggregate as a join-size hint (merge_table_stats)
             aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nu_{c}"))
             aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
-        stats_update, nullstats_update = {}, {}
         for r in staged.groupBy("__bucket").agg(*aggs).collect():
-            d = {}
-            for c in stats_cols:
-                # JSON-safe encoding (ISO + type tag for ts/date); the
-                # reader parses it back for pruning (event-time ranges are
-                # THE skipping use case for an events gold table)
-                ent = _enc_bounds(r[f"__mn_{c}"], r[f"__mx_{c}"])
-                if ent is not None:
-                    d[c] = ent
             b = str(r["__bucket"])
-            stats_update[b] = d
-            nullstats_update[b] = {
+            entries["stats"][b] = {
+                c: ent for c in stats_cols
+                if (ent := _enc_bounds(r[f"__mn_{c}"], r[f"__mx_{c}"])) is not None
+            }
+            entries["nullstats"][b] = {
                 "rows": int(r["__rows"]),
                 "nulls": {c: int(r[f"__nu_{c}"]) for c in stats_cols},
                 "ndv": {c: int(r[f"__nd_{c}"]) for c in stats_cols},
             }
-
-    # per-FILE cluster stats (r10): the staged versions were range-laid-out
-    # by _stage_bucket_versions, so one input_file_name pass over exactly
-    # the new files records each file's disjoint cluster-column span
-    filestats_update: dict[str, dict] | None = None
     if cluster_by is not None:
-        filestats_update = _file_stats_for(
+        entries["filestats"] = _file_stats_for(
             sess, target, new_rels, cluster_by, merged.schema
         )
-
-    def _apply_stats(man: dict) -> None:
-        stats = dict(man.get("stats") or {})
-        nstats = dict(man.get("nullstats") or {})
-        fstats = dict(man.get("filestats") or {})
-        for b in new_rels:
-            if stats_update is not None and b in stats_update:
-                stats[b] = stats_update[b]
-            else:
-                # stale-stat protection: a merge without stats_cols drops
-                # its touched buckets' stats rather than leave bounds that
-                # no longer cover the bucket (pruning on them could hide
-                # rows)
-                stats.pop(b, None)
-            if nullstats_update is not None and b in nullstats_update:
-                nstats[b] = nullstats_update[b]
-            else:
-                nstats.pop(b, None)
-            if filestats_update is not None and b in filestats_update:
-                fstats[b] = filestats_update[b]
-            else:
-                # file stats are version-specific BY CONSTRUCTION (they
-                # list the version's file names), so a non-clustering
-                # merge MUST drop its touched buckets' entries — the
-                # reader's rel check would ignore them anyway; this keeps
-                # the manifest from accreting dead weight
-                fstats.pop(b, None)
-        if stats:
-            man["stats"] = stats
-        else:
-            man.pop("stats", None)
-        if nstats:
-            man["nullstats"] = nstats
-        else:
-            man.pop("nullstats", None)
-        if fstats:
-            man["filestats"] = fstats
-        else:
-            man.pop("filestats", None)
-
-    # ---- commit-log capture (r8): the batch's change rows ----------------
-    # Computed between the sides the merge already holds — `current` (the
-    # touched buckets' committed files, still intact until post-commit GC)
-    # and `staged`, the post-merge buckets read back from disk (one source
-    # of truth, same discipline as ivfpq_index_append's codes). Cost is
-    # one TOUCHED-BUCKET-proportional full-outer join plus the delta
-    # write (ADVICE r8: both sides carry the touched buckets' FULL
-    # contents, so a batch whose keys scatter widely pays proportionally
-    # more — the same scatter read_commit_changes then saves its
-    # consumers); it buys read_commit_changes its O(delta) contract.
-    # ``capture_changes=False`` skips the join+write for ingest-heavy
-    # tables whose consumers only ever state-diff — the commit record
-    # still lands (chain stays walkable for lineage checks) but is
-    # stamped captured=false, and a read_commit_changes range covering it
-    # fails loudly to the read_changes fallback. Reader-invisible until
-    # the manifest below names the commit id.
-    commit_id = uuid.uuid4().hex[:12]
-    parent = (manifest.get("commit") or {}).get("id")
-    commit_rec = _write_commit_delta(
-        target, commit_id, parent,
-        _change_rows(current, staged, keys) if capture_changes else None,
-        fs, captured=capture_changes,
+    # the commit's change rows are the diff between `current` (the touched
+    # buckets' committed files, intact until the post-commit GC) and
+    # `staged`: one touched-bucket-proportional full-outer join plus the
+    # delta write, which buys read_commit_changes its O(delta) contract.
+    # capture_changes=False records the commit uncaptured instead.
+    _commit(
+        target, fs, "merge", manifest, etag, staged=new_rels,
+        staging=staging, entries=entries,
+        fields={"schema": _nullable_schema_json(merged.schema)},
+        changes=_change_rows(current, staged, keys) if capture_changes else None,
+        captured=capture_changes,
     )
-    manifest["commit"] = {"id": commit_id, "parent": parent}
-
-    # ---- phase 2: atomic commit ------------------------------------------
-    old_rels = {b: manifest["buckets"].get(b) for b in new_rels}
-    base_schema = manifest.get("schema")  # as of OUR read, pre-update
-    base_gc_epoch = int(manifest.get("gc_epoch", 0))  # as of OUR read
-    manifest["buckets"].update(new_rels)
-    _apply_stats(manifest)
-    # the table schema AS OF this commit (all-nullable: evolved columns are
-    # null in pre-evolution rows) — snapshots copy the manifest, so every
-    # pinned state carries its own schema
-    manifest["schema"] = _nullable_schema_json(merged.schema)
-    import json
-
-    # THE commit point: one atomic full-object put of the manifest —
-    # CONDITIONAL on the generation read above where the store supports
-    # CAS (see the note at the top of this function)
-    data = json.dumps(manifest).encode()
-    if getattr(fs, "supports_cas", False):
-        committed = (
-            fs.put_if_absent(_manifest_path(target), data)
-            if first_commit
-            else fs.put_if_match(_manifest_path(target), data, manifest_etag)
-        )
-        # Disjoint-bucket REBASE (r9): a failed precondition means another
-        # writer committed since our read. If that writer touched NONE of
-        # our buckets (its head still points every one of our buckets at
-        # the exact versions we merged against), didn't change params, and
-        # didn't evolve the schema, then our staged bucket versions — and
-        # our captured delta — are just as valid against ITS head: re-point
-        # our commit's parent at its head, apply our bucket updates to its
-        # manifest, and retry the conditional put. This is Delta/Iceberg
-        # logical conflict resolution: concurrent writers to DISJOINT key
-        # ranges both succeed; a genuine overlap (same bucket, params
-        # change, concurrent schema evolution) still raises. Bounded
-        # retries — each loop is driver-side JSON I/O only, no data work.
-        rebases = 0
-        while not committed and not first_commit and rebases < 5:
-            try:
-                raw2, etag2 = fs.read_with_etag(_manifest_path(target))
-            except FileNotFoundError:
-                break  # manifest vanished — fall through to the raise
-            theirs = json.loads(raw2.decode())
-            if (
-                theirs.get("params") != manifest.get("params")
-                or theirs.get("schema") != base_schema
-                or any(
-                    theirs["buckets"].get(b) != old_rels.get(b)
-                    for b in new_rels
-                )
-            ):
-                break  # genuine conflict — fall through to the raise
-            # staged-version protection (r11 — ADVICE r10): a gc_epoch
-            # change means a vacuum ran between our read and this commit.
-            # That is a GENUINE conflict, not a rebase candidate: the
-            # vacuum's grace-less reclaim scan may already hold our staged
-            # versions as doomed debris, and an isdir re-verify here (the
-            # r10 fix) can pass in the window between its retained-set
-            # read and its rmtree — the re-put would then land a manifest
-            # naming files the vacuum deletes a moment later. Raise; the
-            # re-run reads the post-bump generation and stages fresh
-            # versions the vacuum's bump-anchored cutoff spares.
-            if int(theirs.get("gc_epoch", 0)) != base_gc_epoch:
-                raise merge_fs.ConcurrentWriterError(
-                    f"a concurrent vacuum at {target} bumped the gc_epoch "
-                    "between this merge's read and its commit — its "
-                    "reclaim scan may already hold this merge's staged "
-                    "versions as debris, so rebasing onto the bumped "
-                    "generation is unsafe. The merge committed NOTHING; "
-                    "re-run it against the new state."
-                )
-            # belt-and-suspenders for pre-gc_epoch manifests: verify the
-            # staged rels still exist before re-pointing the commit —
-            # a committed manifest must never name deleted files.
-            missing = [
-                rel for rel in new_rels.values()
-                if not fs.isdir(os.path.join(target, rel))
-            ]
-            if missing:
-                raise merge_fs.ConcurrentWriterError(
-                    f"a concurrent vacuum at {target} reclaimed this "
-                    f"merge's staged bucket versions ({missing}) before "
-                    "its commit landed — the merge committed NOTHING; "
-                    "re-run it, and give vacuum a nonzero "
-                    "staged_grace_sec when writers may be in flight"
-                )
-            parent2 = (theirs.get("commit") or {}).get("id")
-            commit_rec = {**commit_rec, "parent": parent2, "ts": _commit_now()}
-            fs.put_atomic(
-                os.path.join(target, _CHANGES_DIR, commit_id, "_commit.json"),
-                json.dumps(commit_rec).encode(),
-            )
-            manifest = dict(theirs)
-            manifest["buckets"] = dict(theirs["buckets"])
-            manifest["buckets"].update(new_rels)
-            _apply_stats(manifest)
-            manifest["schema"] = _nullable_schema_json(merged.schema)
-            manifest["commit"] = {"id": commit_id, "parent": parent2}
-            data = json.dumps(manifest).encode()
-            committed = fs.put_if_match(_manifest_path(target), data, etag2)
-            rebases += 1
-        if not committed:
-            raise merge_fs.ConcurrentWriterError(
-                f"manifest at {target} changed between this merge's read "
-                "and its commit — another writer raced past the lease "
-                "(expired TTL or lease-free deployment) and its commit "
-                "CONFLICTS with this one (same bucket, params change, or "
-                "concurrent schema evolution), so no rebase is possible. "
-                "This merge committed NOTHING (its staged versions are "
-                "invisible debris; vacuum reclaims them) — re-run it "
-                "against the new state."
-            )
-    else:
-        fs.put_atomic(_manifest_path(target), data)
-
-    # best-effort GC of superseded versions + staging (never part of
-    # commit). A version pinned by a retained SNAPSHOT must survive being
-    # superseded — time-travel reads depend on it; it becomes reclaimable
-    # only when its snapshot is dropped (then vacuum takes it).
-    pinned = _pinned_rels(target, fs)
-    for b, rel in old_rels.items():
-        if rel and rel != new_rels[b] and os.path.normpath(rel) not in pinned:
-            fs.rmtree(os.path.join(target, rel))
-    fs.rmtree(staging)
 
 
 def start_merge_latest(

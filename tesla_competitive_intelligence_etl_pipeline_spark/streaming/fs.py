@@ -377,14 +377,14 @@ def acquire_writer_lease(
     CAS (local rename, plain S3 PUT) the refresh is a non-conditional
     put_atomic after a plain read and the window remains; the operational
     rule is then the one above, applied to the HEARTBEAT INTERVAL: a
-    heartbeating long job (every derived-store write runs under
-    operators/index_commit.leased, which re-stamps every TTL/3) must use
-    a TTL comfortably above its longest between-heartbeat gap, so the
-    refresh always runs against a still-live lease,
-    where stomping is refreshing one's own record and the race is
-    vacuous.
+    heartbeating long job (every merge-table and derived-store write runs
+    in a ``leased`` section, which re-stamps every TTL/3) must use a TTL
+    comfortably above its longest between-heartbeat gap, so the refresh
+    always runs against a still-live lease, where stomping is refreshing
+    one's own record and the race is vacuous.
 
-    Returns the owner token to pass to release_writer_lease."""
+    Returns the owner token to pass to release_writer_lease. Writers do
+    not call this directly: they run in ``leased``."""
     now = time.time() if _now is None else _now
     owner = owner or uuid.uuid4().hex
     path = os.path.join(table_dir, LEASE_NAME)
@@ -496,15 +496,8 @@ def lease_heartbeat(
     TTL and reclaimed — the documented out-of-scope failure for TTL leases),
     the thread stops beating rather than stomp the new holder.
 
-    Usage: acquire the lease first, then wrap the long body::
-
-        token = acquire_writer_lease(fs, path, owner=..., ttl_sec=ttl)
-        try:
-            with lease_heartbeat(fs, path, token, ttl_sec=ttl):
-                ...long writes...
-        finally:
-            release_writer_lease(fs, path, token)
-    """
+    ``leased`` wraps a write section in acquire, this heartbeat and
+    release; writers use that."""
     interval = interval_sec if interval_sec is not None else ttl_sec / 3.0
     stop = threading.Event()
     path = os.path.join(table_dir, LEASE_NAME)
@@ -586,3 +579,17 @@ def lease_heartbeat(
     finally:
         stop.set()
         t.join(timeout=max(5.0, interval * 2))
+
+
+@contextlib.contextmanager
+def leased(fs: MergeFS, scope: str, owner: str | None = None, ttl_sec: float = 3600.0):
+    """The leased write section every table writer runs in: acquire the
+    writer lease on ``scope`` (a second writer gets ConcurrentWriterError),
+    keep it alive with ``lease_heartbeat`` while the body runs, release it
+    on exit. Yields the owner token."""
+    token = acquire_writer_lease(fs, scope, owner=owner, ttl_sec=ttl_sec)
+    try:
+        with lease_heartbeat(fs, scope, token, ttl_sec=ttl_sec):
+            yield token
+    finally:
+        release_writer_lease(fs, scope, token)

@@ -1196,6 +1196,76 @@ def test_rebucket_crash_at_every_op_never_tears(spark, tmp_path):
             assert rows(target) == want
 
 
+def test_optimize_crash_at_every_op_never_tears(spark, tmp_path):
+    """optimize_merge_table under crash injection at EVERY mutating fs op
+    (S3 semantics): the rows never change, and the manifest names either
+    the old layout (old versions, no file stats) or the new one (new
+    versions, each with file stats for its own files) — never a mix. A
+    grace-less vacuum then reclaims the debris and a re-run lands the new
+    layout."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
+
+    def build(target, fs=mfs.LOCAL_FS):
+        docs = spark.createDataFrame(
+            [(i, f"text-{i}", float(i % 7)) for i in range(16)],
+            "doc_id long, text string, score double",
+        )
+        strm.merge_table(docs, target, keys=["doc_id"], order_cols=["doc_id"],
+                         n_buckets=2, fs=fs)
+
+    def optimize(target, fs=mfs.LOCAL_FS):
+        strm.optimize_merge_table(spark, target, cluster_by="score",
+                                  cluster_files=2, fs=fs)
+
+    def rows(target):
+        return sorted(
+            (r.doc_id, r.text, r.score)
+            for r in strm.read_merged(spark, target).collect()
+        )
+
+    def is_new_layout(before, after):
+        fst = after.get("filestats") or {}
+        return (
+            set(after["buckets"]) == set(before["buckets"])
+            and all(after["buckets"][b] != before["buckets"][b] for b in before["buckets"])
+            and set(fst) == set(after["buckets"])
+            and all(fst[b]["rel"] == after["buckets"][b] and fst[b]["col"] == "score"
+                    for b in fst)
+        )
+
+    # op budget for a full optimize
+    probe = str(tmp_path / "probe")
+    probe_fs = mfs.NonAtomicRenameFS()
+    build(probe, probe_fs)
+    ops_build = probe_fs.ops
+    optimize(probe, probe_fs)
+    total_ops = probe_fs.ops - ops_build
+    assert total_ops >= 3
+    want = rows(probe)
+
+    for crash_at in range(total_ops):
+        target = str(tmp_path / f"run{crash_at}")
+        build(target)
+        before = strm._load_manifest(target)
+        try:
+            optimize(target, mfs.NonAtomicRenameFS(fail_after_ops=crash_at))
+        except mfs.NonAtomicRenameFS.InjectedCrash:
+            mfs.break_writer_lease(mfs.LOCAL_FS, target)
+        assert rows(target) == want, crash_at
+        after = strm._load_manifest(target)
+        landed = is_new_layout(before, after)
+        assert landed or after == before, crash_at
+        strm.vacuum_merge_table(target, staged_grace_sec=0.0)
+        assert rows(target) == want, crash_at
+        if not landed:
+            optimize(target)
+            assert is_new_layout(before, strm._load_manifest(target)), crash_at
+            assert rows(target) == want, crash_at
+        stats = strm.merge_table_stats(target)
+        assert stats["debris_versions"] == stats["staging_dirs"] == 0, crash_at
+
+
 def test_snapshot_repin_replay_safe_mode(spark, tmp_path):
     """ADVICE r7: a foreachBatch merge-then-pin batch replayed by the
     at-least-once contract re-merges the same rows under FRESH version

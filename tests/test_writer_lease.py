@@ -996,6 +996,136 @@ def test_rebucket_conditional_commit_loses_to_racing_merge(spark, tmp_path):
     } == got
 
 
+def _race_at_commit(writer, racer, fs):
+    """Run ``writer`` in a thread until the gate holds its manifest put,
+    run ``racer`` to commit first, then release the writer. Returns the
+    writer's result or the exception it raised."""
+    import threading
+
+    result: dict = {}
+
+    def run():
+        try:
+            result["w"] = writer()
+        except mfs.ConcurrentWriterError as e:
+            result["w"] = e
+
+    t = threading.Thread(target=run)
+    t.start()
+    assert fs.entered.wait(timeout=60.0)  # writer staged, gated at its put
+    racer()
+    fs.gate.set()
+    t.join(timeout=120.0)
+    assert not t.is_alive()
+    return result["w"]
+
+
+def test_optimize_conditional_commit_loses_to_racing_merge(spark, tmp_path):
+    """optimize_merge_table's put is conditional and, unlike merge, never
+    rebases: a merge that commits in the optimize's read-to-put window —
+    to a bucket the optimize does not touch, so a merge in the optimize's
+    place would rebase — makes it raise ConcurrentWriterError having
+    committed nothing, with the merge's manifest left in place; a clean
+    retry lays out the buckets."""
+    fs = _ManifestGateCASFS()
+    target = str(tmp_path / "gold")
+    fs.armed = False
+    strm.merge_micro_batch(
+        _evdf(spark, [(i, 100 + i, i, "a", 1.0) for i in range(1, 9)]),
+        target, n_buckets=4, fs=fs, lease_owner="job",
+    )
+    racer_bucket = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(9).cast("long")), F.lit(4)).alias("b")
+    ).first()["b"]
+    layout = sorted(
+        int(b) for b in strm._load_manifest(target, fs)["buckets"]
+        if int(b) != racer_bucket
+    )
+    assert layout
+    fs.armed = True
+    raced: dict = {}
+
+    def optimize():
+        return strm.optimize_merge_table(
+            spark, target, cluster_by="ts", buckets=layout, fs=fs,
+            lease_owner="job",
+        )
+
+    def racer():
+        strm.merge_micro_batch(
+            _evdf(spark, [(9, 900, 9, "b", 2.0)]),
+            target, n_buckets=4, fs=fs, lease_owner="job",
+        )
+        raced["manifest"] = strm._load_manifest(target, fs)
+
+    got = _race_at_commit(optimize, racer, fs)
+    assert isinstance(got, mfs.ConcurrentWriterError), got
+    assert strm._load_manifest(target, fs) == raced["manifest"]
+    assert "filestats" not in raced["manifest"]
+    rows = {r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()}
+    assert rows == set(range(1, 10))
+    # clean retry lands the layout on exactly the requested buckets
+    m = optimize()
+    assert sorted(int(b) for b in m["filestats"]) == layout
+    assert {
+        r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()
+    } == rows
+
+
+def test_adopt_conditional_commit_loses_to_racing_merge(spark, tmp_path):
+    """adopt_table_params's put is conditional and never rebases. Two
+    races, each won by the writer that commits in the adoption's
+    read-to-put window: a rollback that leaves params, schema and buckets
+    as they were (a merge would rebase onto it), then a writer that adopts
+    the same params and merges. Both times the adoption raises
+    ConcurrentWriterError having committed nothing, and the winner's
+    manifest stays in place."""
+    fs = _ManifestGateCASFS()
+    target = str(tmp_path / "gold")
+    fs.armed = False
+    strm.merge_micro_batch(
+        _evdf(spark, [(i, 100 + i, i, "a", 1.0) for i in range(1, 6)]),
+        target, n_buckets=4, fs=fs, lease_owner="job",
+    )
+    legacy = strm._load_manifest(target, fs)
+    params = legacy.pop("params")
+    fs.put_atomic(strm._manifest_path(target), json.dumps(legacy).encode())
+    strm.snapshot_merge_table(target, "legacy", fs=fs, lease_owner="job")
+    raced: dict = {}
+
+    def adopt():
+        return strm.adopt_table_params(
+            spark, target, params["keys"], params["order_cols"],
+            params["n_buckets"], fs=fs, lease_owner="job",
+        )
+
+    def rollback():
+        strm.rollback_merge_table(target, "legacy", fs=fs, lease_owner="job")
+        raced["manifest"] = strm._load_manifest(target, fs)
+
+    def adopt_and_merge():
+        adopt()
+        strm.merge_micro_batch(
+            _evdf(spark, [(9, 900, 9, "b", 2.0)]),
+            target, n_buckets=4, fs=fs, lease_owner="job",
+        )
+        raced["manifest"] = strm._load_manifest(target, fs)
+
+    for racer in (rollback, adopt_and_merge):
+        fs.entered.clear()
+        fs.gate.clear()
+        fs.armed = True
+        got = _race_at_commit(adopt, racer, fs)
+        assert isinstance(got, mfs.ConcurrentWriterError), (racer, got)
+        assert strm._load_manifest(target, fs) == raced["manifest"]
+    assert raced["manifest"]["params"] == params
+    assert {
+        r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()
+    } == {1, 2, 3, 4, 5, 9}
+    # the re-run finds the params pinned and is an idempotent no-op
+    assert adopt() == raced["manifest"]
+
+
 def test_vacuum_grace_spares_young_debris(spark, tmp_path):
     """r10 (ADVICE r9): an unreferenced store version may be a LIVE
     commit's phase-1 staging — vacuum's staged_grace_sec spares young
