@@ -40,6 +40,11 @@ Mechanics and their honest limits:
   in, r11). FIXTURE_ROOT carries a layout VERSION segment — when an
   operator's hashing layout changes, bump it along with the matching
   ensure_* so stale on-disk fixtures can never satisfy the skip.
+- Every ``ensure_*`` is an ``@artifact`` (plans/artifacts.py): one call
+  per process and sf does the work, later calls return at once; forget
+  an sf with ``ensure_*.forget(sf_dir)``. The leaves under FIXTURE_ROOT
+  are shared across processes, so the process-exit cleanup of the
+  scratch root never touches them.
 - The fixture derivation mirrors the operators' expressions at their
   default ``family="xxhash64"`` (dedup._with_shingles_and_sig /
   _band_explode / simhash + the 16-bit chunk split); values are deterministic, so fixture and query agree
@@ -53,10 +58,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import artifact, scratch
+
+# read at call time: a caller may repoint it after import
 FIXTURE_ROOT = "/tmp/spark_graft_fixtures/v1"
 
 _DOC_KEY: dict[str, tuple[int, int]] = {}
-_WRITTEN: set[tuple[str, str]] = set()
 
 
 def corpus_key(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
@@ -138,6 +145,16 @@ def _write(spark, sf_dir: str, group: str, tables: dict[str, DataFrame]) -> None
                 raise
 
 
+def crawl_increment(docs: DataFrame) -> DataFrame:
+    """The crawl increment of the cross-corpus dedup entries: the first 50
+    documents of ``docs`` (doc_id, text) re-keyed +1e6 with ' zz' appended.
+    The oracles spell the same rows in SQL."""
+    return docs.filter(F.col("doc_id") < 50).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
+    )
+
+
 def read_fixture(
     spark: SparkSession, sf_dir: str, group: str, name: str
 ) -> DataFrame:
@@ -151,11 +168,12 @@ def read_fixture(
     )
 
 
+@artifact
 def ensure_scd2ts_fixture(spark: SparkSession, sf_dir: str) -> None:
     """Commit-change rows WITH wall-clock ``_commit_ts`` from a real merge
-    table built out of the sf's events (r11 — VERDICT r10 item 2, the
-    wall-clock SCD2 gate). Build: per-user aggregate state for user_id<40,
-    snapshot, an update wave (user_id<20), a DELETE wave (user_id%5==0),
+    table built out of the sf's events (the wall-clock SCD2 gate). Build:
+    per-user aggregate state for user_id<40, snapshot, an update wave
+    (user_id<20), a DELETE wave (user_id%5==0),
     and an upsert wave straddling inserts and updates (35<=user_id<45) —
     inserts, updates, AND deletes all present in the captured range.
 
@@ -168,10 +186,7 @@ def ensure_scd2ts_fixture(spark: SparkSession, sf_dir: str) -> None:
     oracle_vec.scd2_commit_ts_fixture_sql."""
     import os
     import shutil
-    import tempfile
 
-    if ("scd2ts", sf_dir) in _WRITTEN:
-        return
     n, tl = corpus_key(spark, sf_dir)
     leaf = f"{FIXTURE_ROOT}/scd2ts/changes/n={n}_{tl}"
     if not os.path.exists(os.path.join(leaf, "_SUCCESS")):
@@ -187,7 +202,7 @@ def ensure_scd2ts_fixture(spark: SparkSession, sf_dir: str) -> None:
                 .agg(etype_expr.alias("event_type"), value_expr.alias("value"))
             )
 
-        tmp = tempfile.mkdtemp(prefix="scd2ts_fx_")
+        tmp = scratch("scd2ts_fx_")
         target = os.path.join(tmp, "gold")
         try:
             kw = dict(keys=["user_id"], order_cols=["value"], n_buckets=4)
@@ -224,19 +239,16 @@ def ensure_scd2ts_fixture(spark: SparkSession, sf_dir: str) -> None:
             _write(spark, sf_dir, "scd2ts", {"changes": ch})
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    _WRITTEN.add(("scd2ts", sf_dir))
 
 
+@artifact
 def ensure_gpt2_pretok_fixture(spark: SparkSession, sf_dir: str) -> None:
     """(word, freq) under the GPT-2 regex pre-tokenizer for the full
-    documents corpus (r11 — VERDICT r10 item 4): DuckDB's RE2 has no
-    lookahead, so the regex split itself — and ONLY it — stays
-    engine-side, persisted through the same expressions bpe_train uses
-    (operators/text.pretokenize_pieces + the trainer's length/empty
-    filters). The oracle re-derives symbolization and every unrolled
-    merge round in SQL from these words."""
-    if ("gpt2pretok", sf_dir) in _WRITTEN:
-        return
+    documents corpus: DuckDB's RE2 has no lookahead, so the regex split
+    itself — and ONLY it — stays engine-side, persisted through the same
+    expressions bpe_train uses (operators/text.pretokenize_pieces + the
+    trainer's length/empty filters). The oracle re-derives symbolization
+    and every unrolled merge round in SQL from these words."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -268,15 +280,15 @@ def ensure_gpt2_pretok_fixture(spark: SparkSession, sf_dir: str) -> None:
         ).alias("wpos", "word"),
     ).filter(F.col("word") != "")
     _write(spark, sf_dir, "gpt2pretok", {"wf": wf, "dw": dw})
-    _WRITTEN.add(("gpt2pretok", sf_dir))
 
 
+@artifact
 def ensure_bpehm_fixture(spark: SparkSession, sf_dir: str) -> None:
     """(word, sym) vocabulary + (merge_rank, pair, merged) merge list from
-    a HIGH-MERGE (96-round) BPE training run (r13 — VERDICT r12 item 6):
-    96 > BPE_EXPR_MAX_MERGES=64, so the ENCODE entry that reads these
-    exercises the deployment regime — the Arrow-UDF per-distinct-OOV-word
-    path — under the driver's hash gate. Training uses strategy='local'
+    a HIGH-MERGE (96-round) BPE training run: 96 > BPE_EXPR_MAX_MERGES=64,
+    so the ENCODE entry that reads these exercises the deployment regime —
+    the Arrow-UDF per-distinct-OOV-word path — under the driver's hash
+    gate. Training uses strategy='local'
     (bit-identical merge lists to the distributed trainer, pinned in
     tests/test_corpus.py); the oracle re-derives the OOV ranked-merge
     replay from the persisted merge list via a recursive CTE (one 3-pass
@@ -285,8 +297,6 @@ def ensure_bpehm_fixture(spark: SparkSession, sf_dir: str) -> None:
     vocabulary join, dense symbol ids, and ordered assembly. Only the
     TRAINING (separately oracle-checked at low merge counts by
     x5_bpe_train / x5_bpe_train_local) stays engine-side here."""
-    if ("bpehm", sf_dir) in _WRITTEN:
-        return
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -301,15 +311,13 @@ def ensure_bpehm_fixture(spark: SparkSession, sf_dir: str) -> None:
             "merges": merges.select("merge_rank", "pair", "merged"),
         },
     )
-    _WRITTEN.add(("bpehm", sf_dir))
 
 
+@artifact
 def ensure_minhash_fixture(spark: SparkSession, sf_dir: str) -> None:
     """(doc_id, sh) + (doc_id, band, bucket) for the full documents corpus —
     the xxhash64 outputs behind x2_minhash_lsh / x2_near_dedup_canonical /
     x2_cluster_dedup (num_hashes=32, bands=8, trigram shingles)."""
-    if ("minhash", sf_dir) in _WRITTEN:
-        return
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -325,9 +333,9 @@ def ensure_minhash_fixture(spark: SparkSession, sf_dir: str) -> None:
         )
     finally:
         sigs.unpersist()
-    _WRITTEN.add(("minhash", sf_dir))
 
 
+@artifact
 def ensure_simhash_fixture(spark: SparkSession, sf_dir: str) -> None:
     """(doc_id, sig) + (doc_id, band, chunk) for doc_id < 200 — the
     xxhash64-derived SimHash signatures and their 4x16-bit band chunks
@@ -335,8 +343,6 @@ def ensure_simhash_fixture(spark: SparkSession, sf_dir: str) -> None:
     candidate RECALL above hamming 3 depends on the exact chunk values, so
     the oracle must band on the engine's chunks, not a re-derivation with
     possibly different shift semantics."""
-    if ("simhash", sf_dir) in _WRITTEN:
-        return
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -369,27 +375,22 @@ def ensure_simhash_fixture(spark: SparkSession, sf_dir: str) -> None:
         )
     finally:
         sigs.unpersist()
-    _WRITTEN.add(("simhash", sf_dir))
 
 
+@artifact
 def ensure_crosslsh_fixture(spark: SparkSession, sf_dir: str) -> None:
     """(side, doc_id, sh) + (side, doc_id, band, bucket) for the crawl
     scenario behind x2_cross_corpus_lsh / x2_cross_corpus_indexed: existing
-    corpus = doc_id < 100 (side 0), increment = first 50 docs re-keyed
-    +1e6 with a ' zz' suffix (side 1). The indexed twin's stored signature
-    table holds byte-identical (sh, sig) values (same deterministic
-    expressions), so one fixture serves both entries."""
-    if ("crosslsh", sf_dir) in _WRITTEN:
-        return
+    corpus = doc_id < 100 (side 0), increment = ``crawl_increment``
+    (side 1). The indexed twin's stored signature table holds
+    byte-identical (sh, sig) values (same deterministic expressions), so
+    one fixture serves both entries."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.filter(F.col("doc_id") < 100)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     sigs = (
         dd._with_shingles_and_sig(new, "text", "doc_id", 32, 3)
         .withColumn("side", F.lit(1))
@@ -409,4 +410,3 @@ def ensure_crosslsh_fixture(spark: SparkSession, sf_dir: str) -> None:
         )
     finally:
         sigs.unpersist()
-    _WRITTEN.add(("crosslsh", sf_dir))

@@ -17,8 +17,6 @@ driver sorts columns by name before value-hashing).
 
 from __future__ import annotations
 
-import tempfile
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,6 +31,7 @@ from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import topk
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import oracle_vec as _oracle_vec
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import pipeline
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import scratch
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import registry_fns as rf
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry_ext import _NORM, _lang_id_sql
@@ -111,7 +110,7 @@ def snk_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = src.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="snk_rt_")
+    base = scratch("snk_rt_")
 
     src.write_parquet(orders, base + "/pq", partition_by=["o_orderstatus"], mode="overwrite")
     pq_back = spark.read.parquet(base + "/pq")
@@ -1813,10 +1812,8 @@ def xtra_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionByRange(ts) + sortWithinPartitions so each parquet file holds
     a tight time band (row-group stats -> file skipping on ts predicates);
     the read-back daily rollup must equal the source aggregate."""
-    import tempfile
-
     ev = src.load_events(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="clustered_") + "/events"
+    path = scratch("clustered_") + "/events"
     src.write_parquet_clustered(ev, path, ["ts"], n_files=8)
     back = spark.read.parquet(path)
     return (

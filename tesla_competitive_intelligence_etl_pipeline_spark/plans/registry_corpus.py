@@ -15,6 +15,7 @@ from tesla_competitive_intelligence_etl_pipeline_spark.operators import decontam
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import sampling
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import oracle_vec
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import artifact, scratch
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -638,35 +639,28 @@ def x3_kmeans_df_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One materialized PQ index per (session, sf_dir): (path, codebooks, query
-# vector). The build — k-means codebook training on a 20% stable sample +
-# the full-corpus map-side encode — is the OFFLINE ingest-time cost a
-# deployment pays once (exactly like build_ivf_index materializes the IVF
-# cells); the registered query below is the ONLINE search over the codes
-# table. bench.py builds the index in its untimed warmup section.
-_PQ_INDEX: dict[str, tuple[str, list, list]] = {}
-
-
+# The materialized PQ index: (path, codebooks, query vector). The build —
+# k-means codebook training on a 20% stable sample + the full-corpus
+# map-side encode — is the OFFLINE ingest-time cost a deployment pays once
+# (exactly like build_ivf_index materializes the IVF cells); the registered
+# query below is the ONLINE search over the codes table.
+@artifact
 def _ensure_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
-    if sf_dir not in _PQ_INDEX:
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
-
-        path = tempfile.mkdtemp(prefix="pq_index_")
-        emb = src.spread(
-            src.load_table(spark, sf_dir, "embeddings"), "vec_id"
-        ).persist()
-        try:
-            books = clustering.pq_build_index(
-                emb, path, m=4, k=16, max_iters=2, train_fraction=0.2,
-                round_decimals=6,
-            )
-            query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        finally:
-            emb.unpersist()
-        _PQ_INDEX[sf_dir] = (path, books, query)
-    return _PQ_INDEX[sf_dir]
+    path = scratch("pq_index_")
+    emb = src.spread(
+        src.load_table(spark, sf_dir, "embeddings"), "vec_id"
+    ).persist()
+    try:
+        books = clustering.pq_build_index(
+            emb, path, m=4, k=16, max_iters=2, train_fraction=0.2,
+            round_decimals=6,
+        )
+        query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    finally:
+        emb.unpersist()
+    return path, books, query
 
 
 @register(
@@ -694,32 +688,25 @@ def x3_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustering.pq_topk_indexed(spark, path, query, k=10, codebooks=books)
 
 
-# One materialized IVF-PQ index per (session, sf_dir) — the combined layout
-# (vectors + codes partitioned by cell, centroids, codebooks). Offline build
-# cached like the PQ index; bench.py warms it in the untimed section.
-_IVFPQ_INDEX: dict[str, tuple[str, list, list]] = {}
-
-
+# The materialized IVF-PQ index — the combined layout (vectors + codes
+# partitioned by cell, centroids, codebooks), built offline like the PQ index.
+@artifact
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
-    if sf_dir not in _IVFPQ_INDEX:
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
-
-        path = tempfile.mkdtemp(prefix="ivfpq_index_")
-        emb = src.spread(
-            src.load_table(spark, sf_dir, "embeddings"), "vec_id"
-        ).persist()
-        try:
-            books = clustering.build_ivfpq_index(
-                emb, path, m=4, k=16, max_iters=2, train_fraction=0.2,
-                round_decimals=6,
-            )
-            query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        finally:
-            emb.unpersist()
-        _IVFPQ_INDEX[sf_dir] = (path, books, query)
-    return _IVFPQ_INDEX[sf_dir]
+    path = scratch("ivfpq_index_")
+    emb = src.spread(
+        src.load_table(spark, sf_dir, "embeddings"), "vec_id"
+    ).persist()
+    try:
+        books = clustering.build_ivfpq_index(
+            emb, path, m=4, k=16, max_iters=2, train_fraction=0.2,
+            round_decimals=6,
+        )
+        query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    finally:
+        emb.unpersist()
+    return path, books, query
 
 
 @register(
@@ -785,29 +772,24 @@ def x3_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Takedown twin of the IVF-PQ index (r8): a COPY of the session index with
-# tombstones for vec_id % 11 == 3 — the offline half of x3_index_takedown.
-_TAKEDOWN_INDEX: dict[str, tuple[str, list, list]] = {}
-
-
+# Takedown twin of the IVF-PQ index: a COPY of it with tombstones for
+# vec_id % 11 == 3 — the offline half of x3_index_takedown.
+@artifact
 def _ensure_takedown_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
-    if sf_dir not in _TAKEDOWN_INDEX:
-        import shutil
-        import tempfile
+    import shutil
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
 
-        src_path, books, query = _ensure_ivfpq_index(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="ivfpq_takedown_") + "/index"
-        shutil.copytree(src_path, path)
-        gone = (
-            src.load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % 11 == 3)
-            .select("vec_id")
-        )
-        clustering.ivfpq_index_delete(spark, path, gone)
-        _TAKEDOWN_INDEX[sf_dir] = (path, books, query)
-    return _TAKEDOWN_INDEX[sf_dir]
+    src_path, books, query = _ensure_ivfpq_index(spark, sf_dir)
+    path = scratch("ivfpq_takedown_") + "/index"
+    shutil.copytree(src_path, path)
+    gone = (
+        src.load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % 11 == 3)
+        .select("vec_id")
+    )
+    clustering.ivfpq_index_delete(spark, path, gone)
+    return path, books, query
 
 
 @register(
@@ -1392,28 +1374,21 @@ def _wf0_cte(eow_sql: str, wf0_fixture_group: str | None) -> str:
     ),""".format(eow=eow_sql)
 
 
-# trained vocabulary materialized once per session/sf_dir (the tokenizer
-# ingest cost — same offline/online discipline as the sig tables and CDC
-# gold tables; bench.py warms it). x5_bpe_train remains the entry that
-# TIMES training; this cache keeps x5_bpe_encode's timed path the encode
-# join only (code review r7).
-_BPE_VOCAB: dict[str, str] = {}
-
-
+# trained vocabulary (the tokenizer ingest cost — same offline/online
+# discipline as the sig tables and CDC gold tables). x5_bpe_train remains
+# the entry that TIMES training; this artifact keeps x5_bpe_encode's timed
+# path the encode join only.
+@artifact
 def _ensure_bpe_vocab(spark: SparkSession, sf_dir: str) -> str:
     """Persist BOTH the vocabulary and the ranked merge list — a real
-    tokenizer artifact is (vocab, merges), and OOV encoding (VERDICT r7
-    item 1) needs the merges."""
-    if sf_dir not in _BPE_VOCAB:
-        import tempfile
-
-        docs = src.load_table(spark, sf_dir, "documents")
-        merges, vocab = tx.bpe_train(docs, n_merges=3, return_vocab=True)
-        path = tempfile.mkdtemp(prefix="bpe_vocab_")
-        vocab.write.parquet(path + "/vocab")
-        merges.write.parquet(path + "/merges")
-        _BPE_VOCAB[sf_dir] = path
-    return _BPE_VOCAB[sf_dir]
+    tokenizer artifact is (vocab, merges), and OOV encoding needs the
+    merges."""
+    docs = src.load_table(spark, sf_dir, "documents")
+    merges, vocab = tx.bpe_train(docs, n_merges=3, return_vocab=True)
+    path = scratch("bpe_vocab_")
+    vocab.write.parquet(path + "/vocab")
+    merges.write.parquet(path + "/merges")
+    return path
 
 
 @register("x5_bpe_encode", _bpe_oracle_sql(3, encode=True, heldout=True))
@@ -1600,25 +1575,19 @@ def x5_bpe_gpt2_pretok(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.bpe_train(docs, n_merges=4, pretokenize="gpt2")
 
 
-# gpt2-pretokenized tokenizer artifact, materialized once per session/sf
-# (the _ensure_bpe_vocab discipline): x5_bpe_gpt2_pretok times the
-# training; the encode entry's timed path is the encode join only
-_GPT2_VOCAB: dict[str, str] = {}
-
-
+# gpt2-pretokenized tokenizer artifact (the _ensure_bpe_vocab discipline):
+# x5_bpe_gpt2_pretok times the training; the encode entry's timed path is
+# the encode join only
+@artifact
 def _ensure_gpt2_vocab(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _GPT2_VOCAB:
-        import tempfile
-
-        docs = src.load_table(spark, sf_dir, "documents")
-        merges, vocab = tx.bpe_train(
-            docs, n_merges=4, pretokenize="gpt2", return_vocab=True
-        )
-        path = tempfile.mkdtemp(prefix="bpe_gpt2_")
-        tx.bpe_save(path, merges, vocab, byte_fallback=True,
-                    pretokenize="gpt2")
-        _GPT2_VOCAB[sf_dir] = path
-    return _GPT2_VOCAB[sf_dir]
+    docs = src.load_table(spark, sf_dir, "documents")
+    merges, vocab = tx.bpe_train(
+        docs, n_merges=4, pretokenize="gpt2", return_vocab=True
+    )
+    path = scratch("bpe_gpt2_")
+    tx.bpe_save(path, merges, vocab, byte_fallback=True,
+                pretokenize="gpt2")
+    return path
 
 
 @register(
@@ -1794,24 +1763,18 @@ def _bpe_hm_oracle_sql(
     ){final}"""
 
 
-# high-merge tokenizer artifact, trained once per session/sf via the
-# vocab-scale local strategy and persisted with bpe_save (the deployment
-# shape); the encode entry's timed path is load + encode only
-_HM_VOCAB: dict[str, str] = {}
-
-
+# high-merge tokenizer artifact, trained via the vocab-scale local strategy
+# and persisted with bpe_save (the deployment shape); the encode entry's
+# timed path is load + encode only
+@artifact
 def _ensure_hm_vocab(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _HM_VOCAB:
-        import tempfile
-
-        docs = src.load_table(spark, sf_dir, "documents")
-        merges, vocab = tx.bpe_train(
-            docs, n_merges=96, return_vocab=True, strategy="local"
-        )
-        path = tempfile.mkdtemp(prefix="bpe_hm_")
-        tx.bpe_save(path, merges, vocab)
-        _HM_VOCAB[sf_dir] = path
-    return _HM_VOCAB[sf_dir]
+    docs = src.load_table(spark, sf_dir, "documents")
+    merges, vocab = tx.bpe_train(
+        docs, n_merges=96, return_vocab=True, strategy="local"
+    )
+    path = scratch("bpe_hm_")
+    tx.bpe_save(path, merges, vocab)
+    return path
 
 
 @register("x5_bpe_encode_highmerge", _bpe_hm_oracle_sql())

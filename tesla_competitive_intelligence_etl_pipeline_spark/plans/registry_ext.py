@@ -22,7 +22,9 @@ from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import multimodal as mm
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
-from tesla_competitive_intelligence_etl_pipeline_spark.plans import oracle_vec
+from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures, oracle_vec
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import artifact, clone, scratch
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.fixtures import crawl_increment
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
@@ -88,8 +90,6 @@ def x2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures + band buckets as a fixture (plans/fixtures.py) and the
     oracle re-derives capping/candidates/Jaccard in SQL from them — only
     the hash call stays engine-side (VERDICT r9 item 4)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures
-
     fixtures.ensure_minhash_fixture(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents")
     return dd.minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=256)
@@ -209,8 +209,6 @@ def x2_near_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked since r10 via the minhash fixture (VERDICT r9 item 4):
     the oracle re-derives the verified pair set from the engine's
     persisted signatures and applies the same removal policy in SQL."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures
-
     fixtures.ensure_minhash_fixture(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents")
     return dd.near_dedup_canonical(
@@ -257,34 +255,24 @@ def x2_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of the LSH-based x2_cross_corpus_lsh."""
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.filter(F.col("doc_id") < 100)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_jaccard(new, old, threshold=0.5)
 
 
-# One materialized signature table per (session, sf_dir) — the LSH twin of
-# the IVF/PQ index caches: shingling+signatures for the EXISTING corpus are
-# the offline ingest cost; each crawl increment dedups against the stored
-# table (x2_cross_corpus_indexed) without re-processing existing text.
-# bench.py builds it in the untimed warmup section.
-_SIG_TABLE: dict[str, str] = {}
-
-
+# The materialized signature table, the LSH twin of the IVF/PQ indexes:
+# shingling+signatures for the EXISTING corpus are the offline ingest cost;
+# each crawl increment dedups against the stored table
+# (x2_cross_corpus_indexed) without re-processing existing text.
+@artifact
 def _ensure_sig_table(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _SIG_TABLE:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="lsh_sigs_") + "/signatures"
-        old = (
-            src.load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 100)
-        )
-        dd.write_signature_table(old, path)
-        _SIG_TABLE[sf_dir] = path
-    return _SIG_TABLE[sf_dir]
+    path = scratch("lsh_sigs_") + "/signatures"
+    old = (
+        src.load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    dd.write_signature_table(old, path)
+    return path
 
 
 @register("x2_cross_corpus_indexed", oracle_vec.cross_corpus_fixture_sql(0.5, 256))
@@ -298,36 +286,25 @@ def x2_cross_corpus_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked since r10 against the SAME crosslsh-fixture oracle as the
     unindexed twin — the stored table holds byte-identical (sh, sig) values
     (deterministic expressions), so indexed == unindexed == oracle."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures
-
     fixtures.ensure_crosslsh_fixture(spark, sf_dir)
     sig_path = _ensure_sig_table(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, sig_path, threshold=0.5, max_bucket_size=256
     )
 
 
-_SIG_TABLE_PORTABLE: dict[str, str] = {}
-
-
+@artifact
 def _ensure_sig_table_portable(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _SIG_TABLE_PORTABLE:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="lsh_sigs_md5_") + "/signatures"
-        old = (
-            src.load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 100)
-        )
-        dd.write_signature_table(old, path, family="md5")
-        _SIG_TABLE_PORTABLE[sf_dir] = path
-    return _SIG_TABLE_PORTABLE[sf_dir]
+    path = scratch("lsh_sigs_md5_") + "/signatures"
+    old = (
+        src.load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    dd.write_signature_table(old, path, family="md5")
+    return path
 
 
 @register(
@@ -346,37 +323,26 @@ def x2_cross_corpus_indexed_portable(spark: SparkSession, sf_dir: str) -> DataFr
     a loud error instead of a silent one."""
     sig_path = _ensure_sig_table_portable(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
-# Takedown twin of the portable signature table (r9): a COPY of the session
-# table with tombstones for doc_id % 7 == 2 — the offline half of
-# x2_sig_takedown, mirroring registry_corpus._ensure_takedown_index.
-_SIG_TABLE_TAKEDOWN: dict[str, str] = {}
-
-
+# Takedown twin of the portable signature table: a COPY of it with
+# tombstones for doc_id % 7 == 2 — the offline half of x2_sig_takedown,
+# mirroring registry_corpus._ensure_takedown_index.
+@artifact
 def _ensure_sig_table_takedown(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _SIG_TABLE_TAKEDOWN:
-        import shutil
-        import tempfile
-
-        src_path = _ensure_sig_table_portable(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="lsh_sigs_takedown_") + "/signatures"
-        shutil.copytree(src_path, path)
-        gone = (
-            src.load_table(spark, sf_dir, "documents")
-            .filter((F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2))
-            .select("doc_id")
-        )
-        dd.delete_signature_entries(spark, path, gone)
-        _SIG_TABLE_TAKEDOWN[sf_dir] = path
-    return _SIG_TABLE_TAKEDOWN[sf_dir]
+    path = clone("lsh_sigs_takedown_", _ensure_sig_table_portable(spark, sf_dir))
+    path += "/signatures"
+    gone = (
+        src.load_table(spark, sf_dir, "documents")
+        .filter((F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2))
+        .select("doc_id")
+    )
+    dd.delete_signature_entries(spark, path, gone)
+    return path
 
 
 @register(
@@ -400,33 +366,22 @@ def x2_sig_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (warmed by bench.py); the timed query is the online crawl dedup."""
     sig_path = _ensure_sig_table_takedown(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
-# Physical-purge twin (r9): the takedown table after
+# Physical-purge twin: the takedown table after
 # compact_signature_table(purge_tombstones=True) — tombstoned rows OFF
 # DISK, tombstones cleared. Same oracle as x2_sig_takedown: purge must
 # not change a single answer.
-_SIG_TABLE_PURGED: dict[str, str] = {}
-
-
+@artifact
 def _ensure_sig_table_purged(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _SIG_TABLE_PURGED:
-        import shutil
-        import tempfile
-
-        src_path = _ensure_sig_table_takedown(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="lsh_sigs_purged_") + "/signatures"
-        shutil.copytree(src_path, path)
-        dd.compact_signature_table(spark, path, purge_tombstones=True)
-        _SIG_TABLE_PURGED[sf_dir] = path
-    return _SIG_TABLE_PURGED[sf_dir]
+    path = clone("lsh_sigs_purged_", _ensure_sig_table_takedown(spark, sf_dir))
+    path += "/signatures"
+    dd.compact_signature_table(spark, path, purge_tombstones=True)
+    return path
 
 
 @register(
@@ -448,45 +403,32 @@ def x2_sig_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_sig_table_purged (warmed by bench.py)."""
     sig_path = _ensure_sig_table_purged(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, sig_path, threshold=0.5, family="md5"
     )
 
 
-# One-call takedown orchestration (r10 — VERDICT r9 item 3): the operator a
-# deployment actually schedules. The PRISTINE corpus gold table + signature
-# table are warmed once per session; each run clones them (takedown mutates)
+# One-call takedown orchestration: the operator a deployment actually
+# schedules. The PRISTINE corpus gold table + signature table are an
+# artifact; each run clones them (takedown mutates)
 # and times the full request path — corpus DELETE, commit-log CDC read,
 # tombstone fan-out — then answers the crawl query from the taken-down
 # signature table, oracle-checked against the survivor-excluding SQL.
-_TAKEDOWN_E2E_PRISTINE: dict[str, str] = {}
-
-
+@artifact
 def _ensure_takedown_e2e_pristine(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _TAKEDOWN_E2E_PRISTINE:
-        import shutil
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
-
-        root = tempfile.mkdtemp(prefix="takedown_e2e_")
-        docs = (
-            src.load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 100)
-        )
-        strm.merge_table(
-            docs, root + "/corpus", keys=["doc_id"], order_cols=["doc_id"]
-        )
-        shutil.copytree(
-            _ensure_sig_table_portable(spark, sf_dir), root + "/signatures"
-        )
-        _TAKEDOWN_E2E_PRISTINE[sf_dir] = root
-    return _TAKEDOWN_E2E_PRISTINE[sf_dir]
+    root = clone("takedown_e2e_", _ensure_sig_table_portable(spark, sf_dir))
+    docs = (
+        src.load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    strm.merge_table(
+        docs, root + "/corpus", keys=["doc_id"], order_cols=["doc_id"]
+    )
+    return root
 
 
 @register(
@@ -507,15 +449,10 @@ def x_takedown_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead: durable request record, ephemeral snapshot pin, commit-id
     stamp, record cleanup (operators/takedown.py — ADVICE r9 closures).
     Crash recovery is pinned in tests/test_ext.py's crash sweep."""
-    import shutil
-    import tempfile
-
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown as td
 
     root = _ensure_takedown_e2e_pristine(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="takedown_run_")
-    shutil.copytree(root + "/corpus", work + "/corpus")
-    shutil.copytree(root + "/signatures", work + "/signatures")
+    work = clone("takedown_run_", root + "/corpus", root + "/signatures")
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     doomed = docs.filter(
         (F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2)
@@ -526,10 +463,7 @@ def x_takedown_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=doomed,
         signature_tables=(work + "/signatures",),
     )
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
@@ -551,56 +485,42 @@ def x_takedown_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-source-of-truth path end to end: a store registered once can
     never be forgotten by a later erasure call (the forgotten-store
     fail-loudly half is pinned in tests/test_ext.py)."""
-    import shutil
-    import tempfile
-
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown as td
 
     root = _ensure_takedown_e2e_pristine(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="takedown_reg_")
-    shutil.copytree(root + "/corpus", work + "/corpus")
-    shutil.copytree(root + "/signatures", work + "/signatures")
+    work = clone("takedown_reg_", root + "/corpus", root + "/signatures")
     td.register_store(work + "/corpus", work + "/signatures", "signature")
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     doomed = docs.filter(
         (F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2)
     ).select("doc_id")
     td.takedown(spark, work + "/corpus", keys=doomed)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
 
 
-# Build-time auto-registration (r13 — VERDICT r12 item 3): the pristine pair
-# is built with write_signature_table(corpus=..., family="md5") — the BUILDER
-# registers the store; nobody calls register_store. Warmed once per session.
-_AUTOREG_PRISTINE: dict[str, str] = {}
-
-
+# Build-time auto-registration: the pristine pair is built with
+# write_signature_table(corpus=..., family="md5") — the BUILDER registers the
+# store; nobody calls register_store.
+@artifact
 def _ensure_autoreg_pristine(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _AUTOREG_PRISTINE:
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
-
-        root = tempfile.mkdtemp(prefix="takedown_autoreg_")
-        docs = (
-            src.load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 100)
-        )
-        strm.merge_table(
-            docs, root + "/corpus", keys=["doc_id"], order_cols=["doc_id"]
-        )
-        dd.write_signature_table(
-            docs, root + "/signatures", corpus=root + "/corpus", family="md5"
-        )
-        _AUTOREG_PRISTINE[sf_dir] = root
-    return _AUTOREG_PRISTINE[sf_dir]
+    root = scratch("takedown_autoreg_")
+    docs = (
+        src.load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    strm.merge_table(
+        docs, root + "/corpus", keys=["doc_id"], order_cols=["doc_id"]
+    )
+    dd.write_signature_table(
+        docs, root + "/signatures", corpus=root + "/corpus", family="md5"
+    )
+    return root
 
 
 @register(
@@ -623,24 +543,16 @@ def x_store_autoregister(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor-excluding oracle as x_takedown_registry. Closes the pre-r13
     hole where an index built without a manual register_store call
     silently escaped no-args takedown/verify."""
-    import shutil
-    import tempfile
-
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown as td
 
     root = _ensure_autoreg_pristine(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="takedown_autoreg_run_")
-    shutil.copytree(root + "/corpus", work + "/corpus")
-    shutil.copytree(root + "/signatures", work + "/signatures")
+    work = clone("takedown_autoreg_run_", root + "/corpus", root + "/signatures")
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     doomed = docs.filter(
         (F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2)
     ).select("doc_id")
     td.takedown(spark, work + "/corpus", keys=doomed)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup_indexed(
         new, spark, work + "/signatures", threshold=0.5, family="md5"
     )
@@ -656,15 +568,10 @@ def x2_cross_corpus_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the combined-population cap, the cross-side-only candidate join, and
     exact Jaccard from the engine's persisted xxhash64 values (VERDICT r9
     item 4)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures
-
     fixtures.ensure_crosslsh_fixture(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.filter(F.col("doc_id") < 100)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup(new, old, threshold=0.5, max_bucket_size=256)
 
 
@@ -683,10 +590,7 @@ def x2_cross_corpus_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     increment = first 50 docs re-crawled with shifted ids + ' zz'."""
     docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.filter(F.col("doc_id") < 100)
-    new = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
+    new = crawl_increment(docs)
     return dd.cross_corpus_neardup(new, old, threshold=0.5, family="md5")
 
 
@@ -698,8 +602,6 @@ def x2_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     above hamming 3 depends on the exact chunk values) as a fixture; the
     oracle re-derives candidates and bit_count(xor) hamming in SQL from
     them (VERDICT r9 item 4)."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.plans import fixtures
-
     fixtures.ensure_simhash_fixture(spark, sf_dir)
     docs = src.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return dd.simhash_pairs(docs, max_hamming=8)

@@ -9,14 +9,13 @@ safe cast → rescale) is hash-checked end-to-end against the oracle.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.functions import scalars, validation
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import pipeline
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import scratch
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import REGISTRY, _dsum, register
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import fixtures
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
@@ -662,7 +661,7 @@ def snk_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNK-3: partitioned parquet append sink — written, read back, aggregated;
     parity with the source proves the write path is lossless."""
     orders = src.load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="snk_parquet_") + "/orders"
+    path = scratch("snk_parquet_") + "/orders"
     src.write_parquet(orders, path, partition_by=["o_orderstatus"], mode="overwrite")
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
@@ -681,7 +680,7 @@ def snk_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNK-2 + SRC-6: CSV export then typed re-ingestion (reference
     transform.py:281-289 export, load.py:202-227 re-ingest)."""
     customer = src.load_table(spark, sf_dir, "customer")
-    path = tempfile.mkdtemp(prefix="snk_csv_") + "/customer"
+    path = scratch("snk_csv_") + "/customer"
     src.write_csv(customer, path)
     back = src.read_csv_typed(
         spark,
@@ -706,7 +705,7 @@ def snk_json_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = src.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="snk_json_") + "/orders"
+    path = scratch("snk_json_") + "/orders"
     src.write_json_bronze(orders, path, partition_col="o_orderstatus")
     back = spark.read.json(path)
     return back.groupBy("o_orderstatus").agg(

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import artifact, clone, scratch
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import oracle_vec as _oracle_vec
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
@@ -174,26 +175,20 @@ def x9_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# events gold table + pinned base snapshot, built once per session/sf_dir
-_CDC_GOLD: dict[str, str] = {}
-
-
+# events gold table + pinned base snapshot
+@artifact
 def _ensure_cdc_gold(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _CDC_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        cutoff = F.lit("2024-01-16").cast("timestamp")
-        target = tempfile.mkdtemp(prefix="cdc_") + "/gold"
-        strm.merge_micro_batch(ev.filter(F.col("ts") < cutoff), target)
-        strm.snapshot_merge_table(target, "base")
-        strm.merge_micro_batch(ev.filter(F.col("ts") >= cutoff), target)
-        _CDC_GOLD[sf_dir] = target
-    return _CDC_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    cutoff = F.lit("2024-01-16").cast("timestamp")
+    target = scratch("cdc_") + "/gold"
+    strm.merge_micro_batch(ev.filter(F.col("ts") < cutoff), target)
+    strm.snapshot_merge_table(target, "base")
+    strm.merge_micro_batch(ev.filter(F.col("ts") >= cutoff), target)
+    return target
 
 
 @register(
@@ -251,44 +246,38 @@ def x1_cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# documents gold table + crawl merge + pinned base, once per session/sf_dir
-_DOCS_GOLD: dict[str, str] = {}
-
-
+# documents gold table + crawl merge + pinned base
+@artifact
 def _ensure_docs_gold(spark: SparkSession, sf_dir: str) -> str:
     """Corpus gold table, pinned 'base' snapshot, crawl merge, AND the
     base state's distinct-md5 table (the offline half of incremental
     dedup — recomputing it per query would charge O(corpus) hashing to a
-    path documented as O(delta), code review r7). Crawl ids offset by
+    path documented as O(delta)). Crawl ids offset by
     max(doc_id)+1 so they can never collide with existing keys at any
     scale factor (collision would turn oracle 'inserts' into engine
     'updates')."""
-    if sf_dir not in _DOCS_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
-
-        docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        off = docs.agg(F.max("doc_id")).first()[0] + 1  # one scalar, driver-side
-        crawl = docs.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + off).alias("doc_id"), "text"
-        ).unionByName(
-            docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-                (F.col("doc_id") + 2 * off).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" (revised)")).alias("text"),
-            )
+    docs = src.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    off = docs.agg(F.max("doc_id")).first()[0] + 1  # one scalar, driver-side
+    crawl = docs.filter(F.col("doc_id") < 50).select(
+        (F.col("doc_id") + off).alias("doc_id"), "text"
+    ).unionByName(
+        docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
+            (F.col("doc_id") + 2 * off).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" (revised)")).alias("text"),
         )
-        target = tempfile.mkdtemp(prefix="cdc_docs_") + "/corpus"
-        strm.merge_table(docs, target, keys=["doc_id"], order_cols=["doc_id"])
-        strm.snapshot_merge_table(target, "base")
-        strm.merge_table(crawl, target, keys=["doc_id"], order_cols=["doc_id"])
-        strm.read_merged(spark, target, snapshot="base").select(
-            F.md5("text").alias("h")
-        ).distinct().write.parquet(target + "_basehash")
-        _DOCS_GOLD[sf_dir] = target
-    return _DOCS_GOLD[sf_dir]
+    )
+    target = scratch("cdc_docs_") + "/corpus"
+    strm.merge_table(docs, target, keys=["doc_id"], order_cols=["doc_id"])
+    strm.snapshot_merge_table(target, "base")
+    strm.merge_table(crawl, target, keys=["doc_id"], order_cols=["doc_id"])
+    strm.read_merged(spark, target, snapshot="base").select(
+        F.md5("text").alias("h")
+    ).distinct().write.parquet(target + "_basehash")
+    return target
 
 
 # ===========================================================================
@@ -300,10 +289,8 @@ def _ensure_docs_gold(spark: SparkSession, sf_dir: str) -> str:
 # atomic commit) — the index tracks the table without ever re-reading it.
 # ===========================================================================
 
-# (index_path, codebooks, query_vec) per (session, sf_dir)
-_CDC_EMB_INDEX: dict[str, tuple[str, list, list]] = {}
-
-
+# (index_path, codebooks, query_vec)
+@artifact
 def _ensure_cdc_emb_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
     """Offline half of the CDC -> index-refresh loop, once per
     session/sf_dir: merge the base corpus (15/16 of embeddings) into a
@@ -313,46 +300,42 @@ def _ensure_cdc_emb_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, 
     ivfpq_index_append. The timed entry is the SEARCH over the refreshed
     index; CDC-fed append == direct bulk append is pinned in
     tests/test_streaming.py."""
-    if sf_dir not in _CDC_EMB_INDEX:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        emb = io_mod.load_table(spark, sf_dir, "embeddings").select(
+    emb = io_mod.load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", "label"
+    )
+    base = emb.filter(F.col("vec_id") % 16 != 0)
+    inc = emb.filter(F.col("vec_id") % 16 == 0)
+    root = scratch("cdc_emb_")
+    target = root + "/corpus"
+    strm.merge_table(base, target, keys=["vec_id"], order_cols=["vec_id"])
+    strm.snapshot_merge_table(target, "base")
+    path = root + "/index"
+    books = clustering.build_ivfpq_index(
+        strm.read_merged(spark, target, snapshot="base").select(
             "vec_id", "embedding", "label"
-        )
-        base = emb.filter(F.col("vec_id") % 16 != 0)
-        inc = emb.filter(F.col("vec_id") % 16 == 0)
-        root = tempfile.mkdtemp(prefix="cdc_emb_")
-        target = root + "/corpus"
-        strm.merge_table(base, target, keys=["vec_id"], order_cols=["vec_id"])
-        strm.snapshot_merge_table(target, "base")
-        path = root + "/index"
-        books = clustering.build_ivfpq_index(
-            strm.read_merged(spark, target, snapshot="base").select(
-                "vec_id", "embedding", "label"
-            ),
-            path, m=4, k=16, max_iters=2, train_fraction=0.2, round_decimals=6,
-        )
-        strm.merge_table(inc, target, keys=["vec_id"], order_cols=["vec_id"])
-        # consume the COMMIT LOG (r8): O(delta) regardless of how the
-        # increment's keys scatter across buckets — the state-diff
-        # read_changes would re-read every touched bucket's full content
-        # (measured growing with base size, SCALING.md r8); both readers
-        # yield the identical insert set here, pinned in tests
-        changed = strm.read_commit_changes(spark, target, since="base").filter(
-            F.col("_change_type") == "insert"
-        ).select("vec_id", "embedding")
-        clustering.ivfpq_index_append(spark, path, changed)
-        query = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-        ]
-        _CDC_EMB_INDEX[sf_dir] = (path, books, query)
-    return _CDC_EMB_INDEX[sf_dir]
+        ),
+        path, m=4, k=16, max_iters=2, train_fraction=0.2, round_decimals=6,
+    )
+    strm.merge_table(inc, target, keys=["vec_id"], order_cols=["vec_id"])
+    # consume the COMMIT LOG: O(delta) regardless of how the
+    # increment's keys scatter across buckets — the state-diff
+    # read_changes would re-read every touched bucket's full content
+    # (measured growing with base size, SCALING.md); both readers
+    # yield the identical insert set here, pinned in tests
+    changed = strm.read_commit_changes(spark, target, since="base").filter(
+        F.col("_change_type") == "insert"
+    ).select("vec_id", "embedding")
+    clustering.ivfpq_index_append(spark, path, changed)
+    query = [
+        float(x)
+        for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
+    ]
+    return path, books, query
 
 
 @register(
@@ -390,9 +373,7 @@ def x3_cdc_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the deltas since the pre-delete snapshot are pure delete records.
 # ===========================================================================
 
-_DELETE_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_delete_gold(spark: SparkSession, sf_dir: str) -> str:
     """Events gold table + 'pre' snapshot + BOTH delete modes applied —
     keys-mode (user_id % 7 == 0: routes through bucket hashing, touches
@@ -400,26 +381,22 @@ def _ensure_delete_gold(spark: SparkSession, sf_dir: str) -> str:
     the survivors: one pruning count pass, rewrites only buckets that
     contain matches). Once per session/sf_dir; the timed entry is the CDC
     read of the removed rows."""
-    if sf_dir not in _DELETE_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        target = tempfile.mkdtemp(prefix="del_gold_") + "/gold"
-        strm.merge_micro_batch(ev, target)
-        strm.snapshot_merge_table(target, "pre")
-        gone_users = (
-            ev.select("user_id").distinct().filter(F.col("user_id") % 7 == 0)
-        )
-        strm.delete_from_merge_table(spark, target, keys=gone_users)
-        strm.delete_from_merge_table(
-            spark, target, predicate="last_value < 50"
-        )
-        _DELETE_GOLD[sf_dir] = target
-    return _DELETE_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    target = scratch("del_gold_") + "/gold"
+    strm.merge_micro_batch(ev, target)
+    strm.snapshot_merge_table(target, "pre")
+    gone_users = (
+        ev.select("user_id").distinct().filter(F.col("user_id") % 7 == 0)
+    )
+    strm.delete_from_merge_table(spark, target, keys=gone_users)
+    strm.delete_from_merge_table(
+        spark, target, predicate="last_value < 50"
+    )
+    return target
 
 
 @register(
@@ -468,33 +445,27 @@ def x9_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows in the range, independent of table size.
 # ===========================================================================
 
-_COMMIT_LOG_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_commit_log_gold(spark: SparkSession, sf_dir: str) -> str:
     """Events gold table built as THREE time-ordered merges with 'base'
     pinned after the first — commits 2 and 3 then carry per-commit
     deltas; a user whose latest event moves in both windows appears in
     both (per-commit granularity, unlike the compacted state diff)."""
-    if sf_dir not in _COMMIT_LOG_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        c1 = F.lit("2024-01-11").cast("timestamp")
-        c2 = F.lit("2024-01-21").cast("timestamp")
-        target = tempfile.mkdtemp(prefix="clog_") + "/gold"
-        strm.merge_micro_batch(ev.filter(F.col("ts") < c1), target)
-        strm.snapshot_merge_table(target, "base")
-        strm.merge_micro_batch(
-            ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)), target
-        )
-        strm.merge_micro_batch(ev.filter(F.col("ts") >= c2), target)
-        _COMMIT_LOG_GOLD[sf_dir] = target
-    return _COMMIT_LOG_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    c1 = F.lit("2024-01-11").cast("timestamp")
+    c2 = F.lit("2024-01-21").cast("timestamp")
+    target = scratch("clog_") + "/gold"
+    strm.merge_micro_batch(ev.filter(F.col("ts") < c1), target)
+    strm.snapshot_merge_table(target, "base")
+    strm.merge_micro_batch(
+        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)), target
+    )
+    strm.merge_micro_batch(ev.filter(F.col("ts") >= c2), target)
+    return target
 
 
 def _clog_state(alias: str, upper: str | None) -> str:
@@ -574,30 +545,24 @@ def x9_commit_log_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(table) state diff).
 # ===========================================================================
 
-_ROLLBACK_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_rollback_gold(spark: SparkSession, sf_dir: str) -> str:
     """Events gold: merge window 1, pin 'base', merge window 2 (the bad
     write), then ROLL BACK to 'base' with delta capture. Once per
     session/sf_dir; the timed entry is the commit-log read across the
     rollback."""
-    if sf_dir not in _ROLLBACK_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        c1 = F.lit("2024-01-11").cast("timestamp")
-        target = tempfile.mkdtemp(prefix="rbk_") + "/gold"
-        strm.merge_micro_batch(ev.filter(F.col("ts") < c1), target)
-        strm.snapshot_merge_table(target, "base")
-        strm.merge_micro_batch(ev.filter(F.col("ts") >= c1), target)
-        strm.rollback_merge_table(target, "base", spark=spark)
-        _ROLLBACK_GOLD[sf_dir] = target
-    return _ROLLBACK_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    c1 = F.lit("2024-01-11").cast("timestamp")
+    target = scratch("rbk_") + "/gold"
+    strm.merge_micro_batch(ev.filter(F.col("ts") < c1), target)
+    strm.snapshot_merge_table(target, "base")
+    strm.merge_micro_batch(ev.filter(F.col("ts") >= c1), target)
+    strm.rollback_merge_table(target, "base", spark=spark)
+    return target
 
 
 def _clog_diff_full(seq: int, old: str, new: str) -> str:
@@ -646,36 +611,30 @@ def x9_rollback_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prune provably-disjoint buckets before Spark ever lists their files.
 # ===========================================================================
 
-_STATS_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_stats_gold(spark: SparkSession, sf_dir: str) -> str:
     """Events gold merged WITH stats_cols=['last_value'] — the offline
     ingest; the timed entry is the stats-pruned range read."""
-    if sf_dir not in _STATS_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        target = tempfile.mkdtemp(prefix="stats_gold_") + "/gold"
-        strm.merge_table(
-            ev.select(
-                "user_id",
-                F.col("event_type").alias("last_event_type"),
-                F.col("value").alias("last_value"),
-                "ts",
-                "event_id",
-            ),
-            target,
-            keys=["user_id"],
-            order_cols=["ts", "event_id"],
-            stats_cols=["last_value"],
-        )
-        _STATS_GOLD[sf_dir] = target
-    return _STATS_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    target = scratch("stats_gold_") + "/gold"
+    strm.merge_table(
+        ev.select(
+            "user_id",
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
+            "ts",
+            "event_id",
+        ),
+        target,
+        keys=["user_id"],
+        order_cols=["ts", "event_id"],
+        stats_cols=["last_value"],
+    )
+    return target
 
 
 @register(
@@ -772,41 +731,35 @@ def x9_stats_join_autobroadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # read then skips files inside every bucket (Delta OPTIMIZE ZORDER shape).
 # ===========================================================================
 
-_CLUSTERED_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_clustered_gold(spark: SparkSession, sf_dir: str) -> str:
     """Events gold merged with ``cluster_by='last_value'`` — last_value
     hash-scatters across user_id buckets, so every bucket's min/max spans
     ~the full value range and stats_cols-only pruning reads everything
     (asserted in tests/test_plans.py); the clustered file layout is what
     earns the skip. Offline ingest; the timed entry is the pruned read."""
-    if sf_dir not in _CLUSTERED_GOLD:
-        import tempfile
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        target = tempfile.mkdtemp(prefix="clustered_gold_") + "/gold"
-        strm.merge_table(
-            ev.select(
-                "user_id",
-                F.col("event_type").alias("last_event_type"),
-                F.col("value").alias("last_value"),
-                "ts",
-                "event_id",
-            ),
-            target,
-            keys=["user_id"],
-            order_cols=["ts", "event_id"],
-            stats_cols=["last_value"],
-            cluster_by="last_value",
-            cluster_files=4,
-        )
-        _CLUSTERED_GOLD[sf_dir] = target
-    return _CLUSTERED_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    target = scratch("clustered_gold_") + "/gold"
+    strm.merge_table(
+        ev.select(
+            "user_id",
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
+            "ts",
+            "event_id",
+        ),
+        target,
+        keys=["user_id"],
+        order_cols=["ts", "event_id"],
+        stats_cols=["last_value"],
+        cluster_by="last_value",
+        cluster_files=4,
+    )
+    return target
 
 
 @register(
@@ -854,9 +807,7 @@ def x9_clustered_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multiplicatively.
 # ===========================================================================
 
-_ZORDER_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_zorder_gold(spark: SparkSession, sf_dir: str) -> str:
     """The FULL events fact as a merge table keyed by event_id, Z-ordered
     on ``['value', 'ts']`` — both columns hash-scatter across event_id
@@ -865,25 +816,21 @@ def _ensure_zorder_gold(spark: SparkSession, sf_dir: str) -> str:
     every event: the canonical fact-table shape whose reads filter a score
     band AND a time window together. Offline ingest (warmed by bench.py);
     the timed entry is the read."""
-    if sf_dir not in _ZORDER_GOLD:
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        target = tempfile.mkdtemp(prefix="zorder_gold_") + "/gold"
-        strm.merge_table(
-            ev.select("event_id", "user_id", "event_type", "value", "ts"),
-            target,
-            keys=["event_id"],
-            order_cols=["ts"],
-            n_buckets=8,
-            stats_cols=["value", "ts"],
-            cluster_by=["value", "ts"],
-            cluster_files=4,
-        )
-        _ZORDER_GOLD[sf_dir] = target
-    return _ZORDER_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    target = scratch("zorder_gold_") + "/gold"
+    strm.merge_table(
+        ev.select("event_id", "user_id", "event_type", "value", "ts"),
+        target,
+        keys=["event_id"],
+        order_cols=["ts"],
+        n_buckets=8,
+        stats_cols=["value", "ts"],
+        cluster_by=["value", "ts"],
+        cluster_files=4,
+    )
+    return target
 
 
 @register(
@@ -917,30 +864,24 @@ def x9_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "event_type", "value")
 
 
-_UNCLUSTERED_GOLD: dict[str, str] = {}
-
-
+@artifact
 def _ensure_unclustered_gold(spark: SparkSession, sf_dir: str) -> str:
     """The same events fact as _ensure_zorder_gold but ingested WITHOUT
     cluster_by — the pristine input x9_optimize_layout clones and
     re-lays-out each run."""
-    if sf_dir not in _UNCLUSTERED_GOLD:
-        import tempfile
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
 
-        from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
-
-        ev = io_mod.load_events(spark, sf_dir)
-        target = tempfile.mkdtemp(prefix="unclustered_gold_") + "/gold"
-        strm.merge_table(
-            ev.select("event_id", "user_id", "event_type", "value", "ts"),
-            target,
-            keys=["event_id"],
-            order_cols=["ts"],
-            n_buckets=8,
-            stats_cols=["value", "ts"],
-        )
-        _UNCLUSTERED_GOLD[sf_dir] = target
-    return _UNCLUSTERED_GOLD[sf_dir]
+    ev = io_mod.load_events(spark, sf_dir)
+    target = scratch("unclustered_gold_") + "/gold"
+    strm.merge_table(
+        ev.select("event_id", "user_id", "event_type", "value", "ts"),
+        target,
+        keys=["event_id"],
+        order_cols=["ts"],
+        n_buckets=8,
+        stats_cols=["value", "ts"],
+    )
+    return target
 
 
 @register(
@@ -967,12 +908,8 @@ def x9_optimize_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle are pinned in
     tests/test_streaming.py::test_optimize_merge_table_clusters_committed_layout."""
     import datetime as _dt
-    import shutil
-    import tempfile
 
-    pristine = _ensure_unclustered_gold(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="optimize_run_") + "/gold"
-    shutil.copytree(pristine, work)
+    work = clone("optimize_run_", _ensure_unclustered_gold(spark, sf_dir)) + "/gold"
     strm.optimize_merge_table(
         spark, work, cluster_by=["value", "ts"], cluster_files=4
     )

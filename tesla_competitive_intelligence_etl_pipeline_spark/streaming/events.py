@@ -63,7 +63,6 @@ buckets and calls ``_commit``:
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -170,7 +169,7 @@ def start_to_table(
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+            .option("checkpointLocation", merge_fs.scratch("ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2892,13 +2891,15 @@ def start_merge_latest(
     fs: merge_fs.MergeFS = merge_fs.LOCAL_FS,
 ):
     """Non-blocking variant of foreach_batch_merge_latest: returns
-    (query, target_path); await the query, then read the target.
+    (query, target_path); await the query, then read the target. Without
+    ``target_dir`` the table, like the checkpoint, goes under the
+    process's scratch root (``fs.scratch``) and is removed at exit.
 
     The writer lease is held per micro-batch under ONE stable owner id for
     the whole query, so a restart of the same query (same checkpoint)
     re-enters its own lease instead of waiting out a TTL, while a second
     distinct query against the same target fails loudly."""
-    target = target_dir or tempfile.mkdtemp(prefix="gold_") + "/user_state"
+    target = target_dir or merge_fs.scratch("gold_") + "/user_state"
     query_owner = f"merge_latest_{uuid.uuid4().hex[:12]}"
     q = (
         events.writeStream.foreachBatch(
@@ -2906,7 +2907,7 @@ def start_merge_latest(
                 batch, target, n_buckets, fs, lease_owner=query_owner
             )
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", merge_fs.scratch("ckpt_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -32,10 +32,12 @@ upsert at /root/reference/load.py:128-154.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import json
 import os
 import shutil
+import tempfile
 import threading
 import time
 import uuid
@@ -593,3 +595,31 @@ def leased(fs: MergeFS, scope: str, owner: str | None = None, ttl_sec: float = 3
             yield token
     finally:
         release_writer_lease(fs, scope, token)
+
+
+# (root, pid of the process that created it); see scratch
+_SCRATCH: tuple[str, int] | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch(prefix: str) -> str:
+    """A new empty directory for this process's throwaway state: the
+    registry's session artifacts and per-call copies, and the default
+    checkpoint and target dirs of the streaming helpers.
+
+    All of them sit under one root, made at first use under
+    ``tempfile.gettempdir()`` (so ``TMPDIR`` and ``tempfile.tempdir`` are
+    honoured) and removed when the interpreter exits, only by the process
+    that made it: a forked child that exits normally leaves its parent's
+    root alone."""
+    global _SCRATCH
+    with _SCRATCH_LOCK:
+        if _SCRATCH is None:
+            _SCRATCH = (tempfile.mkdtemp(prefix="spark_graft_"), os.getpid())
+            atexit.register(_remove_scratch, *_SCRATCH)
+        return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH[0])
+
+
+def _remove_scratch(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)

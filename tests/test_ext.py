@@ -2869,7 +2869,7 @@ def test_fixture_publication_heals_partial_leaf(spark, sf_dir):
     mtime0 = os.path.getmtime(leaf)
 
     # complete leaf: ensure is create-once (no rewrite)
-    fx._WRITTEN.discard(("gpt2pretok", sf_dir))
+    fx.ensure_gpt2_pretok_fixture.forget(sf_dir)
     fx.ensure_gpt2_pretok_fixture(spark, sf_dir)
     assert os.path.getmtime(leaf) == mtime0
 
@@ -2883,7 +2883,7 @@ def test_fixture_publication_heals_partial_leaf(spark, sf_dir):
     old = time.time() - 7200
     os.utime(stale, (old, old))
 
-    fx._WRITTEN.discard(("gpt2pretok", sf_dir))
+    fx.ensure_gpt2_pretok_fixture.forget(sf_dir)
     fx.ensure_gpt2_pretok_fixture(spark, sf_dir)
     assert os.path.exists(os.path.join(leaf, "_SUCCESS"))  # healed
     assert not os.path.isdir(stale)  # stranded staging swept

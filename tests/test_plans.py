@@ -579,7 +579,7 @@ def test_clustered_skipping_prunes_files_not_buckets(spark, sf_dir, registry):
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
     df = registry["x9_clustered_skipping"][0](spark, sf_dir)
-    target = rs._CLUSTERED_GOLD[sf_dir]
+    target = rs._ensure_clustered_gold(spark, sf_dir)
     man = json.loads(open(strm._manifest_path(target)).read())
     lo, hi = 25.0, 45.0
     # (1) bucket-level stats CANNOT prune the surviving buckets (at tiny
@@ -612,7 +612,7 @@ def test_zorder_skipping_prunes_on_both_dims(spark, sf_dir, registry):
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
     df = registry["x9_zorder_skipping"][0](spark, sf_dir)
-    target = rs._ZORDER_GOLD[sf_dir]
+    target = rs._ensure_zorder_gold(spark, sf_dir)
     man = json.loads(open(strm._manifest_path(target)).read())
     for fb in man["filestats"].values():
         assert fb["cols"] == ["value", "ts"]
