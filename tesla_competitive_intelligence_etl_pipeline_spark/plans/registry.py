@@ -18,7 +18,7 @@ Determinism rules used throughout (so value-hashes match exactly):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
@@ -42,6 +42,11 @@ def register(name: str, oracle: str | None):
 # exact decimal accumulator twin for oracle SQL
 def _dsum(expr: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
+
+
+def net_revenue() -> Column:
+    """A line's discounted revenue, ``l_extendedprice * (1 - l_discount)``."""
+    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 # ===========================================================================

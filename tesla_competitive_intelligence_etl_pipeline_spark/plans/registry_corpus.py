@@ -1,13 +1,16 @@
 """Registry batch 8: corpus-hygiene operators for pre-training pipelines
 (Gopher-style repetition signals, benchmark decontamination) and the
 remaining classic TPC-H query shapes (Q13/Q15/Q17/Q19/Q22) — outer-join
-histograms, argmax-of-aggregate, decorrelated per-group averages,
-disjunctive pushdown, and anti-join + scalar subquery.
+histograms, argmax-of-aggregate, per-group averages as a window over a
+semi-joined subset, disjunctive pushdown, and anti-join + scalar subquery.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
@@ -16,7 +19,7 @@ from tesla_competitive_intelligence_etl_pipeline_spark.operators import sampling
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
 from tesla_competitive_intelligence_etl_pipeline_spark.plans import oracle_vec
 from tesla_competitive_intelligence_etl_pipeline_spark.plans.artifacts import artifact, scratch
-from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, net_revenue, register
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
 # DuckDB twin of text.normalized_text (same as registry_ext._NORM)
@@ -306,23 +309,28 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: argmax over an aggregate (top revenue supplier in a
-    quarter). The scalar max is a 1-row broadcast cross join — the revenue
-    aggregate is computed once and reused for both sides (no window over the
-    whole table). Exact-decimal revenue makes the equality deterministic."""
+    quarter). The scalar max is a 1-row broadcast cross join, so no window
+    spans the whole table. Exact-decimal revenue makes the equality
+    deterministic.
+
+    Both consumers of the revenue aggregate, the max and the supplier join,
+    read ONE shuffle of it. An equi-join on ``l_suppkey`` would let Catalyst
+    infer ``isnotnull(l_suppkey)`` and push it below the aggregate on the
+    join's side only; the two subtrees would then differ and the exchange
+    would run twice. The null-safe join infers nothing, and the supplier
+    side's ``s_suppkey IS NOT NULL`` gives it the equi-join's semantics: a
+    NULL ``l_suppkey`` group matches no supplier, even when it holds the
+    max."""
     li = src.load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
-    rev = li.groupBy("l_suppkey").agg(
-        agg.exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "total_revenue"
-        )
-    )
+    rev = li.groupBy("l_suppkey").agg(agg.exact_sum(net_revenue()).alias("total_revenue"))
     mx = rev.agg(F.max("total_revenue").alias("mx"))
-    s = src.load_table(spark, sf_dir, "supplier")
+    s = src.load_table(spark, sf_dir, "supplier").filter(F.col("s_suppkey").isNotNull())
     return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_revenue") == F.col("mx"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(s), F.col("l_suppkey").eqNullSafe(F.col("s_suppkey")))
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -344,27 +352,66 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated per-part average decorrelated into a
-    pre-aggregated join (the avg side shrinks to one row per part before the
-    shuffle); brand filter broadcast."""
-    # r13: spread keyed on l_partkey — the per-part average groupBy AND the
-    # qlim join are both keyed the same way, so this one exchange serves
-    # all three consumers (guide §2.4/§2.5)
-    li = src.spread(src.load_table(spark, sf_dir, "lineitem"), "l_partkey")
-    p = src.load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
-    qlim = li.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
-        (F.lit(0.2) * agg.exact_avg(F.col("l_quantity"), 2)).alias("qlim")
+    """TPC-H Q17 shape: a correlated per-part average, computed as a window
+    over only the lines of the Brand#3 parts.
+
+    The broadcast semi-join keeps every line of each kept part, because the
+    brand is a function of ``l_partkey``; so the window partitioned by
+    ``l_partkey`` sees the same lines the oracle's per-part subquery
+    averages, and the average counts every line, NULL quantities included,
+    as the oracle's ``COUNT(*)`` does. The one shuffle is the window's, on
+    the brand's lines alone; the window stays partitioned by part at any
+    scale. The inner join after the filter restores the oracle's row per
+    matching part row (a duplicated ``p_partkey`` counts each line twice);
+    its broadcast is the semi-join's, reused."""
+    p = (
+        src.load_table(spark, sf_dir, "part")
+        .filter(F.col("p_brand") == "Brand#3")
+        .select("p_partkey")
+    )
+    li = src.load_table(spark, sf_dir, "lineitem")
+    per_part = Window.partitionBy("l_partkey")
+    qlim = F.lit(0.2) * (
+        F.sum(F.col("l_quantity").cast("decimal(38,2)")).over(per_part).cast("double")
+        / F.count(F.lit(1)).over(per_part).cast("double")
     )
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(qlim, li.l_partkey == qlim.t_partkey)
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
+        .withColumn("qlim", qlim)
         .filter(F.col("l_quantity") < F.col("qlim"))
+        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
         .agg(
             (
                 F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double")
                 / F.lit(7.0)
             ).alias("avg_yearly")
         )
+    )
+
+
+# (brand, largest p_size, l_quantity range) of each Q19 arm
+_Q19_ARMS = (("Brand#1", 5, 1, 11), ("Brand#2", 10, 10, 20), ("Brand#3", 15, 20, 30))
+
+
+def q19_quantity() -> Column:
+    """The lineitem side of Q19's predicate: the OR of the arms' quantity
+    ranges, which every matching line satisfies."""
+    return reduce(
+        operator.or_, (F.col("l_quantity").between(lo, hi) for _, _, lo, hi in _Q19_ARMS)
+    )
+
+
+def q19_match() -> Column:
+    """Q19's predicate over a lineitem ⋈ part row: the OR of one
+    brand, size and quantity conjunction per arm."""
+    return reduce(
+        operator.or_,
+        (
+            (F.col("p_brand") == brand)
+            & F.col("p_size").between(1, size_hi)
+            & F.col("l_quantity").between(lo, hi)
+            for brand, size_hi, lo, hi in _Q19_ARMS
+        ),
     )
 
 
@@ -385,20 +432,10 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-conjunctions across both join sides. Catalyst
     derives the single-side residuals (brand/size on part, quantity 1-30 on
     lineitem) and pushes them below the broadcast join."""
-    # r13 (revised): probe-side spread measured SLOWER warm (tpch_suite
-    # +24% interleaved A/B) — reverted (guide §2.3 over §2.5).
     li = src.load_table(spark, sf_dir, "lineitem")
     p = src.load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    arm = lambda brand, size_hi, q_lo, q_hi: (  # noqa: E731
-        (F.col("p_brand") == brand)
-        & F.col("p_size").between(1, size_hi)
-        & F.col("l_quantity").between(q_lo, q_hi)
-    )
-    cond = arm("Brand#1", 5, 1, 11) | arm("Brand#2", 10, 10, 20) | arm("Brand#3", 15, 20, 30)
-    return j.filter(cond).agg(
-        agg.exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-    )
+    return j.filter(q19_match()).agg(agg.exact_sum(net_revenue()).alias("revenue"))
 
 
 @register(

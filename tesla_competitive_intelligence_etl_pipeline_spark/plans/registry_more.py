@@ -4,12 +4,12 @@ query shapes (Q6/Q12/Q14/Q18)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
-from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, register
+from tesla_competitive_intelligence_etl_pipeline_spark.plans.registry import _dsum, net_revenue, register
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
@@ -149,11 +149,11 @@ def x5_per_language_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure scan + conjunctive pushdown filter + one agg."""
-    # r13: spread the decimal aggregation across cores (guide §2.5)
-    li = src.spread(src.load_table(spark, sf_dir, "lineitem"), "l_orderkey")
+    """TPC-H Q6 shape: pure scan + conjunctive pushdown filter + one global
+    agg, whose partial aggregate runs in the scan's own tasks."""
     return (
-        li.filter(
+        src.load_table(spark, sf_dir, "lineitem")
+        .filter(
             (F.col("l_shipdate") >= "1996-01-01")
             & (F.col("l_shipdate") < "1997-01-01")
             & (F.col("l_discount").between(0.05, 0.07))
@@ -194,6 +194,22 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q14_shipped() -> Column:
+    """Q14's lineitem predicate: shipped in September 1996."""
+    return (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
+
+
+def q14_promo_revenue() -> Column:
+    """Q14's numerator measure: the revenue of promotion parts, 0 otherwise.
+    Its denominator measure is ``net_revenue``."""
+    return F.when(F.col("p_type").like("TYPE_1%"), net_revenue()).otherwise(F.lit(0.0))
+
+
+def q14_pct(promo: Column, total: Column) -> Column:
+    """Q14's result: promotion revenue as a percentage of all revenue."""
+    return F.lit(100.0) * promo / total
+
+
 @register(
     "q14_promo_ratio",
     f"""
@@ -207,17 +223,12 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_promo_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-aggregate ratio over a dim join."""
-    li = src.load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
-    )
+    li = src.load_table(spark, sf_dir, "lineitem").filter(q14_shipped())
     p = src.load_table(spark, sf_dir, "part")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("TYPE_1%"), disc).otherwise(F.lit(0.0))
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    totals = joined.agg(
-        agg.exact_sum(promo).alias("a"), agg.exact_sum(disc).alias("b")
+    totals = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).agg(
+        agg.exact_sum(q14_promo_revenue()).alias("a"), agg.exact_sum(net_revenue()).alias("b")
     )
-    return totals.select((F.lit(100.0) * F.col("a") / F.col("b")).alias("promo_revenue_pct"))
+    return totals.select(q14_pct(F.col("a"), F.col("b")).alias("promo_revenue_pct"))
 
 
 @register(

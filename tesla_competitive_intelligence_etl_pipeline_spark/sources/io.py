@@ -186,9 +186,9 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Scale-ADAPTIVE compute spread (r13 — guide §2.5 "input skew: one huge
-    unsplittable file … repartition immediately after the read"): the driver
-    testdata tables are ONE parquet file with ONE row group, so every
+    """Scale-ADAPTIVE compute spread, for input skew: repartition one huge
+    unsplittable file right after the read. The engine's test tables are
+    ONE parquet file with ONE row group, so every
     scan(+partial-aggregate/join-probe) stage runs as a SINGLE task no
     matter how `spark.sql.files.maxPartitionBytes` is set — Spark can only
     split parquet at row-group boundaries. Heavy per-row work downstream of
@@ -210,7 +210,12 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     REUSED — the spread replaces the aggregation's own shuffle instead of
     adding one. Results are unchanged for the engine's query shapes: exact
     aggregates use order-independent decimal accumulators, and
-    windows/sorts establish their own order."""
+    windows/sorts establish their own order.
+
+    A spread ahead of a global aggregate adds a raw-row shuffle stage and
+    saves nothing: writing each row to the shuffle costs about what the
+    partial aggregate's per-row add it would spread costs, and the final
+    aggregate runs in one task either way."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     # .rdd here only PLANS the query to read its partitioning — no job runs
