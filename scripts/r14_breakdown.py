@@ -115,7 +115,7 @@ def probe_stream(spark):
     q, name = strm.start_to_table(
         spark, strm.tumbling_counts(strm.stream_events(spark, SF))
     )
-    q.awaitTermination()
+    strm.await_drained(q)
     out["stream_replay"] = round(time.perf_counter() - t0, 3)
     prog = [json.loads(p.json) for p in q.recentProgress]
     out["n_micro_batches"] = len(prog)

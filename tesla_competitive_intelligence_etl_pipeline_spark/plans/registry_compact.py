@@ -1225,8 +1225,7 @@ def x9_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         strm.start_to_table(spark, sliding),
         strm.start_to_table(spark, strm.session_aggregation(strm.stream_events(spark, sf_dir))),
     ]
-    for q, _ in started:
-        q.awaitTermination()
+    strm.await_drained(*(q for q, _ in started))
     tumb, slide, sess = (spark.table(name) for _, name in started)
 
     def h(kind: str, df: DataFrame, k1, wstart, cnt: str, val) -> DataFrame:
@@ -1273,8 +1272,7 @@ def x9_stream_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_partitions=None,
     )
     q2, target = strm.start_merge_latest(strm.stream_events(spark, sf_dir))
-    q1.awaitTermination()
-    q2.awaitTermination()
+    strm.await_drained(q1, q2)
     # update-mode memory sink keeps every emitted snapshot; latest per user
     # is the final state (single batch here, but stay general)
     out = spark.table(tbl)
@@ -1729,13 +1727,21 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: national market share — one nation's slice of a
     region's yearly volume for one part type. With q8/q21-minus-dates this
     completes every TPC-H query expressible on this testdata (Q2/9/11/16/20
-    need partsupp; Q21 needs receipt/commit dates). Seven-table snowflake:
-    selective part-type and date filters pushed to the fact scans, all four
-    dims broadcast, one groupBy on year with two exact-decimal sums divided
-    in double space (reference parity: numeric discipline of
-    transform.py:184-186)."""
-    # r13 (revised): probe-side spread measured SLOWER warm (tpch_suite
-    # +24% interleaved A/B) — reverted, see q7 note.
+    need partsupp; Q21 needs receipt/commit dates). The rows are
+    ``q8_share_by_year``'s, ordered by year."""
+    return q8_share_by_year(spark, sf_dir).orderBy("o_year")
+
+
+def q8_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q8's rows without its ORDER BY, for consumers that lose the order
+    anyway (``tpch_suite``'s union): the sort would cost a range-partition
+    sample job and a range shuffle. Seven-table snowflake: selective
+    part-type and date filters pushed to the fact scans, all four dims
+    broadcast, one groupBy on year with two exact-decimal sums divided in
+    double space (reference parity: numeric discipline of
+    transform.py:184-186). A probe-side spread measured slower warm
+    (``tpch_suite`` +24% in an interleaved A/B), so the probe side is not
+    spread."""
     li = src.load_table(spark, sf_dir, "lineitem")
     p = src.load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     s = src.load_table(spark, sf_dir, "supplier")
@@ -1768,7 +1774,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         / agg.exact_sum(F.col("volume")),
         6,
     )
-    return vol.groupBy("o_year").agg(share.alias("mkt_share")).orderBy("o_year")
+    return vol.groupBy("o_year").agg(share.alias("mkt_share"))
 
 
 # ===========================================================================

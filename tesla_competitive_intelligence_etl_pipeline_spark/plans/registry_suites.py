@@ -19,10 +19,12 @@ oracle-backed query family gets a hard driver-green row:
 Same fold contract as registry_compact: each composite calls the SAME
 registered builders (or their shared stream constructors) and its oracle is
 the UNION ALL of the original oracles under matching aliases; the folded
-fine-grained entries stay registered after the window. One exception:
-``tpch_suite``'s Q14 and Q19 branches are one fused lineitem ⋈ part pass
-(``q14_q19_pass``) over the same measure and predicate definitions the
-standalone ``q14_promo_ratio`` and ``q19_disjunctive_revenue`` builders use.
+fine-grained entries stay registered after the window. Two exceptions in
+``tpch_suite``: its Q14 and Q19 branches are one fused lineitem ⋈ part
+pass (``q14_q19_pass``) over the same measure and predicate definitions
+the standalone ``q14_promo_ratio`` and ``q19_disjunctive_revenue``
+builders use, and its Q8 branch is ``q8_market_share`` without the ORDER
+BY (``q8_share_by_year``).
 
 This module must be imported LAST (plans.load_registry does) because the
 composite oracles splice REGISTRY[...] SQL registered across every other
@@ -151,9 +153,10 @@ def tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H shapes Q4/5/6/7/8/10/12/13/14/15/17/19/22 in one harmonized
     result, each branch tagged and mapped onto (k1, k2, cnt, val). Each
     branch is the registered builder of its query, except Q14 and Q19, which
-    share one lineitem ⋈ part pass (``q14_q19_pass``). Q1/Q3/Q18 and the
-    correlated-subquery shape keep their own window slots (headline
-    queries). With these, every TPC-H query expressible on this testdata is
+    share one lineitem ⋈ part pass (``q14_q19_pass``), and Q8, whose branch
+    is its builder without the ORDER BY the union would lose
+    (``q8_share_by_year``). Q1/Q3/Q18 and the correlated-subquery shape
+    keep their own window slots (headline queries). With these, every TPC-H query expressible on this testdata is
     covered (Q2/9/11/16/20 need partsupp; Q21 needs receipt/commit dates).
 
     The three fact/dim tables the branches scan are served from ONE persisted
@@ -181,7 +184,7 @@ def tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("q7").alias("branch"), F.col("supp_nation").alias("k1"),
                 F.col("cust_nation").alias("k2"), F.col("l_year").alias("cnt"),
                 F.col("revenue").alias("val")),
-            run("q8_market_share").select(
+            registry_compact.q8_share_by_year(spark, sf_dir).select(
                 F.lit("q8").alias("branch"), F.col("o_year").cast("string").alias("k1"),
                 ns.alias("k2"), nb.alias("cnt"), F.col("mkt_share").alias("val")),
             run("q10_returned_items").select(
@@ -473,8 +476,7 @@ def x9_joins_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
         ),
     ]
-    for q, _ in started:
-        q.awaitTermination()
+    strm.await_drained(*(q for q, _ in started))
     ded, stat, ssj = (spark.table(name) for _, name in started)
 
     nb = F.lit(-1).cast("long")

@@ -24,6 +24,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+INCOMING = "__is_incoming"
+
+
+def merge_winners(
+    current: DataFrame,
+    staged: DataFrame,
+    keys: list[str],
+    order_cols: list | None = None,
+    preimage: str | None = None,
+) -> DataFrame:
+    """The one merge window: current ∪ staged (by name, missing columns
+    null-filled), each row tagged ``INCOMING`` (1 for a staged row),
+    partitioned by ``keys`` and ordered by ``INCOMING`` then ``order_cols``,
+    all descending. Rank 1 is the row the merge keeps: the top staged row
+    when the key has one — so duplicate staged keys need no dedup of their
+    own — else the current row. Returns the winners with ``INCOMING`` kept.
+
+    ``preimage`` names a struct column added to each winner holding the
+    key's current row (null for a key only the staged side has), computed
+    in the same window, so a caller gets each key's old and new rows side
+    by side without a join."""
+    tagged = current.withColumn(INCOMING, F.lit(0)).unionByName(
+        staged.withColumn(INCOMING, F.lit(1)), allowMissingColumns=True
+    )
+    w = Window.partitionBy(*keys).orderBy(
+        F.desc(INCOMING), *[F.desc(c) for c in (order_cols or [])]
+    )
+    if preimage is not None:
+        # current rows sort after every staged row of their key, so the
+        # last row of the key's whole frame is its committed row when it
+        # has one. Plain columns as the window's inputs: an expression
+        # input (a struct of the row) would be projected ahead of the
+        # window's shuffle and shuffled as a second copy of the row
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        cols = [c for c in tagged.columns if c != INCOMING]
+        tagged = tagged.withColumn(preimage, F.when(
+            F.last(INCOMING).over(whole) == 0,
+            F.struct(*[F.last(c).over(whole).alias(c) for c in cols]),
+        ))
+    return (
+        tagged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def merge_upsert(
     current: DataFrame,
     staged: DataFrame,
@@ -31,17 +77,9 @@ def merge_upsert(
     order_cols: list | None = None,
 ) -> DataFrame:
     """Return current MERGE staged ON keys (staged wins; ties broken by
-    ``order_cols`` descending, then arbitrary-but-deterministic)."""
-    cur = current.withColumn("__is_incoming", F.lit(0))
-    stg = staged.withColumn("__is_incoming", F.lit(1))
-    unioned = cur.unionByName(stg, allowMissingColumns=True)
-    order = [F.desc("__is_incoming")] + [F.desc(c) for c in (order_cols or [])]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__is_incoming")
-    )
+    ``order_cols`` descending, then arbitrary-but-deterministic): the
+    winners of ``merge_winners``."""
+    return merge_winners(current, staged, keys, order_cols).drop(INCOMING)
 
 
 def merge_with_audit(

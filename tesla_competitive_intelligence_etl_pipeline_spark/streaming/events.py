@@ -45,9 +45,14 @@ buckets and calls ``_commit``:
    the CAS capability, the generation (etag) it was read at.
 3. Stage. New bucket versions are written under ``.staging/`` and moved
    to ``store/<bucket>/<version>`` (a move may be copy+delete). Nothing is
-   visible until a manifest names it.
+   visible until a manifest names it. A merge computes its staged rows and
+   its change rows in ONE window over the touched buckets ∪ batch; with
+   change capture that result is a local checkpoint, computed by the stage
+   write and read again by the delta write, and its blocks are released
+   after step 4 whether the commit landed, lost its race or raised.
 4. Commit. ``_commit`` writes the commit record and change rows under
-   ``changes/<commit>/``, applies the staged versions and their
+   ``changes/<commit>/`` (a merge whose checkpoint lost a block fails
+   here, before the put), applies the staged versions and their
    stats/nullstats/filestats entries to the manifest, and makes ONE put
    (``_put_manifest_conditional``): conditional on the generation read in
    step 2 on a CAS store, an atomic overwrite elsewhere. That put is the
@@ -146,10 +151,11 @@ def start_to_table(
     state_partitions: int | None = 8,
 ):
     """Start an AvailableNow drain into an in-memory sink WITHOUT blocking.
-    Returns (query, table_name); await the query, then read the table.
-    Multiple streams started this way run concurrently in one session (each
-    has its own checkpoint + query name) — composites that replay several
-    streams pay max(stream time), not the sum.
+    Returns (query, table_name); await the query with ``await_drained``,
+    then read the table. Multiple streams started this way run
+    concurrently in one session (each has its own checkpoint + query
+    name) — composites that replay several streams pay max(stream time),
+    not the sum.
 
     ``state_partitions`` sizes the stream's STATE partitioning (the stream
     snapshots ``spark.sql.shuffle.partitions`` at start and pins it in the
@@ -165,18 +171,47 @@ def start_to_table(
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", merge_fs.scratch("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+        q = _start_drain(
+            sdf.writeStream.format("memory").queryName(name).outputMode(mode)
         )
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return q, name
+
+
+# query id -> the checkpoint dir _start_drain made for it
+_DRAIN_CHECKPOINTS: dict[str, str] = {}
+
+
+def _start_drain(writer):
+    """Start ``writer`` with Trigger.AvailableNow on a fresh scratch
+    checkpoint, remembered for ``await_drained``."""
+    ckpt = merge_fs.scratch("ckpt_")
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    _DRAIN_CHECKPOINTS[q.id] = ckpt
+    return q
+
+
+def await_drained(*queries) -> None:
+    """Await queries started by ``start_to_table`` or
+    ``start_merge_latest``, then remove the checkpoint of each one that has
+    terminated, whether it drained or failed. A drained AvailableNow
+    replay is never resumed, and neither the memory sink's table nor the
+    merge target reads its checkpoint, so keeping it until the process
+    exits would only grow the scratch root with every call. A query still
+    running when another one's failure is raised keeps its checkpoint."""
+    import shutil
+
+    try:
+        for q in queries:
+            q.awaitTermination()
+    finally:
+        for q in queries:
+            if not q.isActive:
+                ckpt = _DRAIN_CHECKPOINTS.pop(q.id, None)
+                if ckpt is not None:
+                    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_table(
@@ -188,7 +223,7 @@ def run_to_table(
     """Drain the stream with Trigger.AvailableNow into an in-memory sink and
     return the final static result."""
     q, name = start_to_table(spark, sdf, mode, state_partitions)
-    q.awaitTermination()
+    await_drained(q)
     return spark.table(name)
 
 
@@ -1406,7 +1441,7 @@ def read_changes(
     shuffle is the key-equi full-outer join over those buckets' rows.
 
     Works in either direction: since=newer/until=older yields the inverse
-    diff. Delete records arise from delete_from_merge_table (r8), from
+    diff. Delete records arise from delete_from_merge_table, from
     rollbacks diffed against a later snapshot, and from inverse-direction
     reads."""
     import os
@@ -1430,8 +1465,8 @@ def _manifest_diff(
     fs: merge_fs.MergeFS,
     since: str | None = None,
 ) -> DataFrame:
-    """State-diff core of read_changes over two already-loaded manifests —
-    factored out (r9) so rollback_merge_table can capture the synthetic
+    """State-diff core of read_changes over two already-loaded manifests,
+    so rollback_merge_table can capture the synthetic
     rollback delta (old side = the manifest being rolled back, new side =
     the snapshot being restored) without those states both carrying
     snapshot tags."""
@@ -1479,15 +1514,15 @@ def _manifest_diff(
 
 
 def _change_rows(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataFrame:
-    """The CDC diff core, shared by read_changes (state diff between two
-    pinned manifests) and the per-commit delta capture in _merge_locked
-    (state diff between a batch's pre- and post-merge touched buckets):
-    key-equi full-outer join, one projection emitting insert / delete /
-    update pre+post images. __bucket is write-routing metadata, not data —
-    kept out of both the change comparison and the output. Schema
-    evolution: the output uses the NEW side's schema (Delta-CDF
-    convention) — columns it added are typed nulls on the old side,
-    columns it dropped are not emitted."""
+    """The state-diff core of read_changes (two pinned manifests' changed
+    buckets, and rollback's synthetic delta): a key-equi full-outer join
+    of the two sides, whose paired rows go through _emit_changes.
+    __bucket is write-routing metadata, not data — kept out of both the
+    change comparison and the output. Schema evolution: the output uses
+    the NEW side's schema (Delta-CDF convention) — columns it added are
+    typed nulls on the old side, columns it dropped are not emitted. A
+    merge commit's own delta needs no join: its merge window already pairs
+    each key's rows (_merge_locked)."""
     new_fields = {f.name: f.dataType for f in new_df.schema.fields}
     old_have = set(old_df.columns)
     old_df = old_df.select(
@@ -1497,7 +1532,6 @@ def _change_rows(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataF
         ]
     )
     data_cols = [c for c in new_df.columns if c != "__bucket"]
-    non_keys = [c for c in data_cols if c not in keys]
     # presence markers decide which side a joined row exists on (NOT key
     # nullness — a genuinely-null key would false-read as "absent")
     o = old_df.select(*data_cols).withColumn("__o", F.lit(True)).alias("o")
@@ -1508,32 +1542,51 @@ def _change_rows(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataF
         cond = eq if cond is None else cond & eq
     j = o.join(n, on=cond, how="full_outer")
 
-    def _img(side: str):
-        return F.struct(*[F.col(f"{side}.{c}").alias(c) for c in data_cols])
+    def _img(side: str, marker: str):
+        return F.when(F.col(f"{side}.{marker}").isNotNull(), F.struct(
+            *[F.col(f"{side}.{c}").alias(c) for c in data_cols]
+        ))
 
-    o_only = F.col("n.__n").isNull()
-    n_only = F.col("o.__o").isNull()
-    differs = ~F.struct(*[F.col(f"o.{c}") for c in non_keys]).eqNullSafe(
-        F.struct(*[F.col(f"n.{c}") for c in non_keys])
+    return _emit_changes(j, _img("o", "__o"), _img("n", "__n"), data_cols, keys)
+
+
+def _emit_changes(
+    df: DataFrame, old, new, data_cols: list[str], keys: list[str]
+) -> DataFrame:
+    """The one change-row emission, behind both read_changes (_change_rows'
+    join) and a merge commit's delta (_merge_locked's window). ``old`` and
+    ``new`` are struct columns of ``df``: one key's row before and after,
+    null where the key is absent on that side; ``data_cols`` are read from
+    them (extra fields are ignored) and are the output's columns, in the
+    new side's schema. Each input row yields ``insert``, ``delete``, or —
+    when a non-key column differs under ``eqNullSafe`` — an
+    ``update_preimage`` and ``update_postimage`` pair, through one
+    projection and one explode; an unchanged key yields nothing."""
+    non_keys = [c for c in data_cols if c not in keys]
+    differs = ~F.struct(*[old[c] for c in non_keys]).eqNullSafe(
+        F.struct(*[new[c] for c in non_keys])
     )
-    # two candidate change records per joined row; a null _change_type means
-    # "not a change from this side" and is filtered before the explode —
-    # one join, one projection, updates get both images in a single pass
+
+    def _row(img):
+        return F.struct(*[img[c].alias(c) for c in data_cols]).alias("row")
+
+    # two candidate change records per input row; a null _change_type means
+    # "not a change from this side" and is filtered before the explode
     candidates = F.array(
         F.struct(
-            _img("o").alias("row"),
-            F.when(o_only, F.lit("delete"))
-            .when(~n_only & differs, F.lit("update_preimage"))
+            _row(old),
+            F.when(new.isNull(), F.lit("delete"))
+            .when(old.isNotNull() & differs, F.lit("update_preimage"))
             .alias("_change_type"),
         ),
         F.struct(
-            _img("n").alias("row"),
-            F.when(n_only, F.lit("insert"))
-            .when(~o_only & differs, F.lit("update_postimage"))
+            _row(new),
+            F.when(old.isNull(), F.lit("insert"))
+            .when(new.isNotNull() & differs, F.lit("update_postimage"))
             .alias("_change_type"),
         ),
     )
-    ex = j.select(
+    ex = df.select(
         F.explode(F.filter(candidates, lambda c: c["_change_type"].isNotNull())).alias("c")
     )
     return ex.select(*[F.col(f"c.row.{c}").alias(c) for c in data_cols],
@@ -2325,24 +2378,33 @@ def merge_table(
     (versioned with the state — see _table_params); later merges with
     different parameters raise instead of mis-routing rows (_check_params).
 
-    ``capture_changes=False``: skip the per-commit CDC delta capture (a
-    touched-bucket-proportional full-outer join + write) for ingest-heavy
-    tables whose consumers only ever use the read_changes state diff — the
-    commit record still lands (lineage stays walkable) but
-    read_commit_changes over a range containing such a commit fails
-    loudly to the documented fallback. Default True: capture is what buys
-    read_commit_changes its O(delta) contract.
+    ``capture_changes`` (default True) writes the commit's change rows,
+    which buy read_commit_changes its O(delta) contract. They come from
+    the merge window itself: it ranks each key's batch rows above its
+    committed row, so its winner carries that committed row as the
+    pre-image, and only a key won by the batch can change (insert, or an
+    update pre+post image pair when a non-key column differs). The
+    window's result is a local checkpoint — executor blocks, in memory and
+    on disk, proportional to the touched buckets — that the stage write
+    computes and the delta write reads, released when the merge ends; a
+    lost block fails the commit with nothing committed, and a re-run is
+    safe. ``capture_changes=False`` skips the checkpoint and the delta
+    write for ingest-heavy tables whose consumers only ever use the
+    read_changes state diff — the commit record still lands (lineage stays
+    walkable) but read_commit_changes over a range containing such a
+    commit fails loudly to the documented fallback.
 
     ``stats_cols`` (Delta-style data skipping): record per-bucket min/max,
     null counts, row counts and approximate ndv for these columns in the
     manifest at every commit (one aggregate over the bucket versions the
-    commit just staged, read back with their known schema — the merge is
-    not recomputed), powering ``read_merged(range_filters=...)``'s
-    driver-side bucket skipping. Per-commit state, not a pinned table
-    param: a merge that omits it DROPS its touched buckets' stats
-    (stale-stat protection — pruning on stale bounds could hide rows), so
-    pass it consistently on tables that want skipping. Numeric/string
-    columns only; other types are silently not recorded.
+    commit just staged, read back with their known schema — neither the
+    merge window nor its checkpoint is read for it), powering
+    ``read_merged(range_filters=...)``'s driver-side bucket skipping.
+    Per-commit state, not a pinned table param: a merge that omits it
+    DROPS its touched buckets' stats (stale-stat protection — pruning on
+    stale bounds could hide rows), so pass it consistently on tables that
+    want skipping. Numeric/string columns only; other types are silently
+    not recorded.
 
     ``cluster_by`` (the LAYOUT half of data skipping): per-bucket min/max
     is useless for a column that does not correlate with the key hash — on
@@ -2369,26 +2431,21 @@ def merge_table(
     ``cluster_files`` so a bucket-version file ≈ a parquet
     row-group-friendly 128 MB–1 GB at your scale.
     """
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import topk
-
     if int(n_buckets) < 1:
         # ANSI is off: pmod(x, 0) would be NULL, staging nothing and
         # committing a manifest that silently drops the batch
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     bucket = F.pmod(F.xxhash64(*keys), F.lit(n_buckets))
-    latest = topk.dedup_last_write_wins(
-        batch, keys=keys, order_cols=order_cols
-    ).withColumn("__bucket", bucket)
-    # tiny driver-side list (<= n_buckets values) used for manifest pruning.
-    # A bucket depends only on the keys and the dedup keeps one row per key,
-    # so the batch's own keys give the same set without running the window
-    touched = sorted(
-        r[0] for r in batch.select(bucket.alias("__bucket")).distinct().collect()
-    )
+    # duplicate batch keys are not deduplicated here: the merge window
+    # ranks every batch row of a key above its committed row, ordered by
+    # order_cols, so its winner already is the batch's last write
+    batch = batch.withColumn("__bucket", bucket)
+    # tiny driver-side list (<= n_buckets values) used for manifest pruning
+    touched = sorted(r[0] for r in batch.select("__bucket").distinct().collect())
     if not touched:
         return
     with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
-        _merge_locked(latest, target, touched, fs, keys, order_cols,
+        _merge_locked(batch, target, touched, fs, keys, order_cols,
                       n_buckets, capture_changes=capture_changes,
                       stats_cols=stats_cols, cluster_by=cluster_by,
                       cluster_files=cluster_files)
@@ -2779,7 +2836,7 @@ def _file_stats_for(
 
 
 def _merge_locked(
-    latest,
+    batch,
     target: str,
     touched: list[int],
     fs,
@@ -2794,7 +2851,7 @@ def _merge_locked(
     """merge_table's read-merge-commit body, run in the leased section."""
     import os
 
-    sess = latest.sparkSession
+    sess = batch.sparkSession
     manifest, etag = _load_manifest_cas(target, fs)
     manifest = manifest or {"buckets": {}}
     _check_params(manifest, target, keys, order_cols, n_buckets)
@@ -2812,7 +2869,7 @@ def _merge_locked(
                 [], StructType.fromJson(manifest["schema"])
             )
         else:
-            current = sess.createDataFrame([], latest.schema)
+            current = sess.createDataFrame([], batch.schema)
     else:
         current = current.filter(F.col("__bucket").isin(touched))
     # schema evolution guard: a batch may ADD columns (old rows null-fill)
@@ -2821,7 +2878,7 @@ def _merge_locked(
     # explicit-schema read of untouched buckets — refuse loudly.
     # Nullability is normalized out of the comparison (_as_nullable).
     cur_types = {f.name: _as_nullable(f.dataType) for f in current.schema.fields}
-    for f in latest.schema.fields:
+    for f in batch.schema.fields:
         if f.name in cur_types and cur_types[f.name] != _as_nullable(f.dataType):
             raise ValueError(
                 f"column {f.name!r} changes type "
@@ -2829,59 +2886,78 @@ def _merge_locked(
                 f"{f.dataType.simpleString()}; schema evolution supports "
                 "adding columns, not retyping them"
             )
-    merged = merge_mod.merge_upsert(
-        current, latest, keys=keys, order_cols=order_cols
+    # one window over current ∪ batch: each key's winner, its committed
+    # row alongside as the pre-image. With capture, the result has two
+    # consumers (the stage write and the delta), so its lineage is
+    # truncated once: the write computes the window and keeps its blocks,
+    # the delta reads them. A local checkpoint, not persist: it keeps
+    # AQE's coalesced partitioning, so the staged files are the same.
+    winners = merge_mod.merge_winners(
+        current, batch, keys=keys, order_cols=order_cols,
+        preimage="__pre" if capture_changes else None,
     )
-    new_rels, staging = _stage_bucket_versions(
-        merged, target, touched, fs,
-        cluster_by=cluster_by, cluster_files=cluster_files,
-    )
-    # the staged versions, read back with the schema they were written
-    # with (no footer job): the one source of truth for the stats and the
-    # change capture below, which therefore never re-run the merge
-    staged = sess.read.schema(merged.schema).parquet(
-        *[os.path.join(target, rel) for rel in new_rels.values()]
-    )
-    # a merge replaces every entry of its buckets: with stats_cols, one
-    # aggregate over the files just staged (JSON-safe scalar types only);
-    # with cluster_by, one input_file_name pass over the same files; an
-    # entry kind the merge does not record is dropped for its buckets, so
-    # no stale bound survives to hide rows
-    entries: dict[str, dict] = {"stats": {}, "nullstats": {}, "filestats": {}}
-    if stats_cols:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in stats_cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nu_{c}"))
-            aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
-        for r in staged.groupBy("__bucket").agg(*aggs).collect():
-            b = str(r["__bucket"])
-            entries["stats"][b] = {
-                c: ent for c in stats_cols
-                if (ent := _enc_bounds(r[f"__mn_{c}"], r[f"__mx_{c}"])) is not None
-            }
-            entries["nullstats"][b] = {
-                "rows": int(r["__rows"]),
-                "nulls": {c: int(r[f"__nu_{c}"]) for c in stats_cols},
-                "ndv": {c: int(r[f"__nd_{c}"]) for c in stats_cols},
-            }
-    if cluster_by is not None:
-        entries["filestats"] = _file_stats_for(
-            sess, target, new_rels, cluster_by, merged.schema
+    if capture_changes:
+        winners = winners.localCheckpoint(eager=False)
+    try:
+        merged = winners.drop(merge_mod.INCOMING, "__pre")
+        new_rels, staging = _stage_bucket_versions(
+            merged, target, touched, fs,
+            cluster_by=cluster_by, cluster_files=cluster_files,
         )
-    # the commit's change rows are the diff between `current` (the touched
-    # buckets' committed files, intact until the post-commit GC) and
-    # `staged`: one touched-bucket-proportional full-outer join plus the
-    # delta write, which buys read_commit_changes its O(delta) contract.
-    # capture_changes=False records the commit uncaptured instead.
-    _commit(
-        target, fs, "merge", manifest, etag, staged=new_rels,
-        staging=staging, entries=entries,
-        fields={"schema": _nullable_schema_json(merged.schema)},
-        changes=_change_rows(current, staged, keys) if capture_changes else None,
-        captured=capture_changes,
-    )
+        # a merge replaces every entry of its buckets: with stats_cols, one
+        # aggregate over the versions just staged, read back with the
+        # schema they were written with (no footer job); with cluster_by,
+        # one input_file_name pass over the same files; an entry kind the
+        # merge does not record is dropped for its buckets, so no stale
+        # bound survives to hide rows
+        entries: dict[str, dict] = {"stats": {}, "nullstats": {}, "filestats": {}}
+        if stats_cols:
+            staged = sess.read.schema(merged.schema).parquet(
+                *[os.path.join(target, rel) for rel in new_rels.values()]
+            )
+            aggs = [F.count(F.lit(1)).alias("__rows")]
+            for c in stats_cols:
+                aggs.append(F.min(c).alias(f"__mn_{c}"))
+                aggs.append(F.max(c).alias(f"__mx_{c}"))
+                aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nu_{c}"))
+                aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
+            for r in staged.groupBy("__bucket").agg(*aggs).collect():
+                b = str(r["__bucket"])
+                entries["stats"][b] = {
+                    c: ent for c in stats_cols
+                    if (ent := _enc_bounds(r[f"__mn_{c}"], r[f"__mx_{c}"])) is not None
+                }
+                entries["nullstats"][b] = {
+                    "rows": int(r["__rows"]),
+                    "nulls": {c: int(r[f"__nu_{c}"]) for c in stats_cols},
+                    "ndv": {c: int(r[f"__nd_{c}"]) for c in stats_cols},
+                }
+        if cluster_by is not None:
+            entries["filestats"] = _file_stats_for(
+                sess, target, new_rels, cluster_by, merged.schema
+            )
+        # the commit's change rows: only a key whose winner came from the
+        # batch can change, and its pre-image is the committed row the
+        # window carried. capture_changes=False records the commit
+        # uncaptured instead.
+        changes = None
+        if capture_changes:
+            data_cols = [c for c in merged.columns if c != "__bucket"]
+            incoming = winners.filter(F.col(merge_mod.INCOMING) == 1)
+            changes = _emit_changes(
+                incoming, F.col("__pre"), F.struct(*data_cols), data_cols, keys
+            )
+        _commit(
+            target, fs, "merge", manifest, etag, staged=new_rels,
+            staging=staging, entries=entries,
+            fields={"schema": _nullable_schema_json(merged.schema)},
+            changes=changes, captured=capture_changes,
+        )
+    finally:
+        if capture_changes:
+            # the checkpoint's blocks go now, not when the driver's GC
+            # reaches the RDD: committed, lost race or failed alike
+            winners._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def start_merge_latest(
@@ -2891,8 +2967,8 @@ def start_merge_latest(
     fs: merge_fs.MergeFS = merge_fs.LOCAL_FS,
 ):
     """Non-blocking variant of foreach_batch_merge_latest: returns
-    (query, target_path); await the query, then read the target. Without
-    ``target_dir`` the table, like the checkpoint, goes under the
+    (query, target_path); await the query with ``await_drained``, then
+    read the target. Without ``target_dir`` the table goes under the
     process's scratch root (``fs.scratch``) and is removed at exit.
 
     The writer lease is held per micro-batch under ONE stable owner id for
@@ -2901,16 +2977,11 @@ def start_merge_latest(
     distinct query against the same target fails loudly."""
     target = target_dir or merge_fs.scratch("gold_") + "/user_state"
     query_owner = f"merge_latest_{uuid.uuid4().hex[:12]}"
-    q = (
-        events.writeStream.foreachBatch(
-            lambda batch, batch_id: merge_micro_batch(
-                batch, target, n_buckets, fs, lease_owner=query_owner
-            )
+    q = _start_drain(events.writeStream.foreachBatch(
+        lambda batch, batch_id: merge_micro_batch(
+            batch, target, n_buckets, fs, lease_owner=query_owner
         )
-        .option("checkpointLocation", merge_fs.scratch("ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    ))
     return q, target
 
 
@@ -2926,5 +2997,5 @@ def foreach_batch_merge_latest(
     user_id. Per-batch cost ∝ touched buckets (see merge_micro_batch), not
     table size; commits are manifest-atomic."""
     q, target = start_merge_latest(events, target_dir, n_buckets, fs)
-    q.awaitTermination()
+    await_drained(q)
     return read_merged(spark, target, fs=fs)

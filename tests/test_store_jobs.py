@@ -1,9 +1,10 @@
 """Merge-table commits compute each thing once: the touched buckets come
-from the batch keys, the column stats and the change capture from one
-known-schema read of the staged files, per-file stats and commit deltas
-are read with the schema they were written with, and a delete's count is
-observed on its delta write. Job budgets are counted per operation in a
-job group of its own, on the session fixture's small in-memory tables."""
+from the batch keys, the merged rows and the commit's change rows from one
+merge window, the column stats from one known-schema read of the staged
+files, per-file stats and commit deltas are read with the schema they were
+written with, and a delete's count is observed on its delta write. Job
+budgets are counted per operation in a job group of its own, on the
+session fixture's small in-memory tables."""
 
 from __future__ import annotations
 
@@ -73,11 +74,15 @@ def _rows(df):
 
 
 def test_merge_with_stats_and_capture_stays_in_its_job_budget(spark, table):
-    # re-running the merge for the stats, the dedup window for the touched
-    # buckets or a footer job on the staged files would exceed 10
+    # the touched-bucket list (2), the merge window's shuffle and the stage
+    # write that computes it (2), the stats aggregate (2) and the delta
+    # write from the window's checkpoint (1). Deduplicating the batch in a
+    # window of its own, re-running the merge for the stats or the delta,
+    # joining old and staged files for the change rows or a footer job on
+    # the staged files would exceed 7
     _, n = _jobs(spark, lambda: strm.merge_table(
         _batch(spark, 50, 65, 5), table, **_KW))
-    assert n <= 10
+    assert n <= 7
     live = {r.user_id: r.value for r in strm.read_merged(spark, table).collect()}
     assert len(live) == 55 + 5 + 25 + 25  # 0..54, 55..59 new, 60..84, 90..114
     assert live[52] == 260.0 and live[59] == 295.0 and live[64] == 320.0
@@ -181,3 +186,119 @@ def test_scrubbed_delta_reads_through_its_recorded_schema(spark, table):
     inferred = strm.read_commit_changes(spark, table, since="s0")
     assert inferred.schema == recorded.schema
     assert _rows(inferred) == got
+
+
+_CDC_SCHEMA = "k long, v string, w double, t long"
+_CDC_KW = dict(keys=["k"], order_cols=["t"], n_buckets=2)
+# (step, batch schema, batch rows): each merged on the state the steps
+# before it left, on a table first holding a NULL key and keys 1..3
+_CDC_STEPS = [
+    ("null key", _CDC_SCHEMA,
+     [(None, "a2", 1.5, 2), (3, "d", 4.0, 2)]),
+    ("duplicate batch keys", _CDC_SCHEMA,
+     [(1, "x", 9.0, 5), (1, "y", 8.0, 7), (1, "z", 7.0, 6),
+      (4, "p", 1.0, 1), (4, "q", 2.0, 3)]),
+    ("row equal to its stored row", _CDC_SCHEMA, [(2, "c", 3.0, 1)]),
+    ("added column", _CDC_SCHEMA + ", extra string",
+     [(2, "c", 3.0, 1, "e"), (5, "n", 0.0, 1, "f")]),
+    ("omitted column", "k long, v string, t long",
+     [(1, "y", 7), (6, "m", 1)]),
+]
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_merge_delta_is_the_state_diff_without_a_join(spark, tmp_path, monkeypatch):
+    """Each commit's delta equals ``_change_rows`` over the states before
+    and after it, and the delta the commit writes is planned without a
+    join: the merge window pairs each key's rows."""
+    target = str(tmp_path / "cdc")
+    strm.merge_table(spark.createDataFrame(
+        [(None, "a", 1.0, 1), (1, "b", 2.0, 1), (2, "c", 3.0, 1), (3, "d", 4.0, 1)],
+        _CDC_SCHEMA), target, **_CDC_KW)
+    strm.snapshot_merge_table(target, "step0")
+    plans = []
+    commit = strm._commit
+
+    def _spy(*args, **kw):
+        if kw.get("changes") is not None:
+            plans.append(kw["changes"]._jdf.queryExecution().optimizedPlan().toString())
+        return commit(*args, **kw)
+
+    monkeypatch.setattr(strm, "_commit", _spy)
+    for i, (step, schema, rows) in enumerate(_CDC_STEPS, start=1):
+        strm.merge_table(spark.createDataFrame(rows, schema), target, **_CDC_KW)
+        strm.snapshot_merge_table(target, f"step{i}")
+        got = strm.read_commit_changes(
+            spark, target, since=f"step{i - 1}", until=f"step{i}"
+        ).drop("_commit_seq", "_commit_ts")
+        want = strm._change_rows(
+            strm.read_merged(spark, target, snapshot=f"step{i - 1}"),
+            strm.read_merged(spark, target, snapshot=f"step{i}"), ["k"])
+        assert got.columns == want.columns, step
+        assert _sorted_rows(got) == _sorted_rows(want), step
+    assert len(plans) == len(_CDC_STEPS)
+    assert not [p for p in plans if "Join" in p]
+    # the steps' own expectations, so an equal but wrong pair cannot pass
+    deltas = [
+        _sorted_rows(strm.read_commit_changes(
+            spark, target, since=f"step{i - 1}", until=f"step{i}"
+        ).drop("_commit_seq", "_commit_ts").select("k", "v", "_change_type"))
+        for i in range(1, len(_CDC_STEPS) + 1)
+    ]
+    assert deltas[0] == sorted([
+        (None, "a", "update_preimage"), (None, "a2", "update_postimage"),
+        (3, "d", "update_preimage"), (3, "d", "update_postimage")], key=repr)
+    assert deltas[1] == sorted([
+        (1, "b", "update_preimage"), (1, "y", "update_postimage"),
+        (4, "q", "insert")], key=repr)
+    assert deltas[2] == []
+    assert deltas[3] == sorted([
+        (2, "c", "update_preimage"), (2, "c", "update_postimage"),
+        (5, "n", "insert")], key=repr)
+    assert deltas[4] == sorted([
+        (1, "y", "update_preimage"), (1, "y", "update_postimage"),
+        (6, "m", "insert")], key=repr)
+    live = {r.k: (r.v, r.w, r.t, r.extra) for r in strm.read_merged(spark, target).collect()}
+    assert live == {None: ("a2", 1.5, 2, None), 1: ("y", None, 7, None),
+                    2: ("c", 3.0, 1, "e"), 3: ("d", 4.0, 2, None),
+                    4: ("q", 2.0, 3, None), 5: ("n", 0.0, 1, "f"),
+                    6: ("m", None, 1, None)}
+
+
+def _cached_rdds(spark):
+    return {int(i.id()) for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_merge_releases_its_checkpoint_blocks(spark, tmp_path, monkeypatch):
+    """The delta is written from the merge window's materialized blocks,
+    and a merge releases them when it ends: after it commits and after
+    its commit raises."""
+    target = str(tmp_path / "gold")
+    before = _cached_rdds(spark)
+    during = []
+    commit = strm._commit
+
+    def _spy(*args, **kw):
+        during.append(_cached_rdds(spark) - before)
+        return commit(*args, **kw)
+
+    monkeypatch.setattr(strm, "_commit", _spy)
+    for c in range(3):
+        strm.merge_table(_batch(spark, 20 * c, 20 * c + 30, c + 1), target, **_KW)
+    assert len(during) == 3 and all(during)
+    assert _cached_rdds(spark) - before == set()
+
+    def _lost(*args, **kw):
+        during.append(_cached_rdds(spark) - before)
+        raise mfs.ConcurrentWriterError("lost the race")
+
+    monkeypatch.setattr(strm, "_commit", _lost)
+    with pytest.raises(mfs.ConcurrentWriterError):
+        strm.merge_table(_batch(spark, 70, 80, 9), target, **_KW)
+    assert during[-1]
+    assert _cached_rdds(spark) - before == set()
+    assert strm.read_merged(spark, target).count() == 70
+

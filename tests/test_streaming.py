@@ -2782,3 +2782,32 @@ def test_optimize_target_file_bytes_auto_sizing(spark, tmp_path):
     rd = strm.read_merged(spark, target, range_filters={"v": (0, 60)})
     assert 0 < len(rd.inputFiles()) < len(full.inputFiles())
     assert rd.count() == rows.filter("v between 0 and 60").count()
+
+
+def _drain_checkpoints():
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
+
+    probe = mfs.scratch("probe_")
+    os.rmdir(probe)
+    root = os.path.dirname(probe)
+    return {d for d in os.listdir(root) if d.startswith("ckpt_")}
+
+
+def test_drained_streams_leave_no_checkpoint(spark, tmp_path):
+    """A drained AvailableNow query's checkpoint is removed once it has
+    terminated, whether it drained or failed."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
+
+    src_dir = str(tmp_path / "src")
+    spark.range(5).write.parquet(src_dir)
+    stream = spark.readStream.schema("id long").parquet(src_dir)
+    before = _drain_checkpoints()
+    out = strm.run_to_table(spark, stream.groupBy().count())
+    assert out.first()[0] == 5
+    assert _drain_checkpoints() == before
+    with pytest.raises(StreamingQueryException):
+        strm.run_to_table(spark, stream.select(F.raise_error(F.lit("boom"))), mode="append")
+    assert _drain_checkpoints() == before
