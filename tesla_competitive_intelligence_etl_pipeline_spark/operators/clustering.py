@@ -304,11 +304,11 @@ def kmeans_df(
     operators/dedup). Returns (assignments df, (cluster, centroid) df).
 
     Precondition: ``id_col`` must be unique — it is the grouping key of
-    the per-iteration assignment aggregate (r14) and of
-    assign_clusters_join's argmin, exactly as every other consumer of the
-    embeddings key assumes. Rows sharing an id would collapse to one
-    update contribution (pre-r14 they were re-attached by a join and each
-    counted, under a shared label — a differently-arbitrary answer);
+    the per-iteration assignment aggregate and of assign_clusters_join's
+    argmin, exactly as every other consumer of the embeddings key assumes.
+    Rows sharing an id would collapse to one update contribution, so the
+    first iteration raises on a repeated id (a row count per id group in
+    that aggregate, checked with ``raise_error``: no extra Spark job);
     deduplicate upstream if ingestion can produce id collisions."""
     from pyspark.ml.functions import array_to_vector, vector_to_array
     from pyspark.ml.stat import Summarizer
@@ -359,8 +359,8 @@ def kmeans_df(
                 stacklevel=2,
             )
         for _ in range(max_iters):
-            # Assignment WITHOUT the join-back (r14 — guide §1.2 step 1 /
-            # §2.4: one shuffle fewer per iteration): the update step only
+            # Assignment without a join-back (one shuffle fewer per
+            # iteration): the update step only
             # needs (cluster, __v), and __v is constant across the k
             # broadcast-fanned rows of one id, so it rides INSIDE the argmin
             # struct instead of being re-attached by the
@@ -368,7 +368,8 @@ def kmeans_df(
             # is untouched — (s, j) is strictly ordered within an id group
             # (one row per cluster), so the trailing __v field can never
             # decide a min; assignments are bit-identical to
-            # assign_clusters_join (pinned in tests).
+            # assign_clusters_join (pinned in tests). An id group holds one
+            # row per cluster, so more than actual_k rows is a repeated id.
             score = F.aggregate(
                 F.zip_with(F.col("__v"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
                 F.lit(0.0),
@@ -384,10 +385,16 @@ def kmeans_df(
                             F.col("cluster").alias("j"),
                             F.col("__v").alias("v"),
                         )
-                    ).alias("__best")
+                    ).alias("__best"),
+                    F.count(F.lit(1)).alias("__n"),
                 )
                 .select(
-                    F.col("__best").getField("j").alias("cluster"),
+                    F.when(
+                        F.col("__n") > actual_k,
+                        F.raise_error(F.format_string(
+                            f"kmeans_df: {id_col} %s is not unique", F.col(id_col)
+                        )),
+                    ).otherwise(F.col("__best").getField("j")).alias("cluster"),
                     F.col("__best").getField("v").alias("__v"),
                 )
             )
@@ -613,7 +620,8 @@ def pq_index_append(
     append write — O(batch), never a re-encode of the corpus.
 
     A staged append under the index lease (operators/index_commit):
-    readers never see a torn batch, and recover_pq_index heals a crash.
+    readers never see a torn batch, and ``index_commit.recover`` heals a
+    crash.
     The stored codebooks are read inside the leased section, so a re-train
     landing meanwhile cannot leave codes that searches with the new
     codebooks misread; a caller-passed ``codebooks`` skips that read and
@@ -629,12 +637,6 @@ def pq_index_append(
         )
         ic.staged_append(fs, st, ["codes"], codes.write.parquet)
     return int(obs.get["n"])
-
-
-def recover_pq_index(path: str, fs=None) -> dict[str, list[str]]:
-    """Heal a PQ codes table after a crashed pq_index_append
-    (index_commit.recover). Idempotent and leaseless."""
-    return ic.recover(ic.store("pq", path), fs)
 
 
 def pq_topk_indexed(
@@ -791,7 +793,6 @@ def _ivfpq_search(
     id_col: str,
     vec_col: str,
     cell_col: str,
-    tombstones: DataFrame | None = None,
 ) -> DataFrame:
     """Shared IVF-PQ search core: probe the n_probe cells whose centroid is
     nearest the query (an n_probe-row collect — the standard IVF probe),
@@ -815,16 +816,8 @@ def _ivfpq_search(
         .collect()
     )
     cells = [r[cell_col] for r in probed_rows]
-    cand = codes.filter(F.col(cell_col).isin(cells))
-    if tombstones is not None:
-        # takedown: ONE anti-join ahead of the ADC scan removes
-        # tombstoned ids from candidacy entirely — the shortlist (and
-        # therefore the refine join) then provably excludes them, and
-        # with frozen quantizers the results equal an index that never
-        # contained those vectors (pinned in tests).
-        cand = cand.join(tombstones.select(id_col), id_col, "left_anti")
     shortlist = pq_topk(
-        cand,
+        codes.filter(F.col(cell_col).isin(cells)),
         codebooks,
         [float(v) for v in query_vec],
         k=k * refine,
@@ -864,12 +857,14 @@ def ivfpq_topk_indexed(
         codebooks = pq_load_codebooks(spark, path)
     return _ivfpq_search(
         spark.read.parquet(path + "/centroids"),
-        spark.read.parquet(path + "/codes"),
+        # tombstoned ids never reach the ADC scan, so the shortlist and the
+        # refine join exclude them: with frozen quantizers the results
+        # equal an index that never held those vectors
+        ic.read_live(spark, ic.store("ivfpq", path), "codes", id_col),
         spark.read.parquet(path + "/vectors"),
         codebooks,
         query_vec,
         k, n_probe, refine, id_col, vec_col, cell_col,
-        tombstones=load_tombstones(spark, path),
     )
 
 
@@ -944,7 +939,7 @@ def ivfpq_index_append(
     One staged append into BOTH tables with a single root marker
     (operators/index_commit), vectors landing before codes: readers never
     see codes whose vectors are missing or a torn batch in either table,
-    and recover_ivfpq_index heals a crash. The codes are encoded by
+    and ``index_commit.recover`` heals a crash. The codes are encoded by
     reading back the staged vectors, so they cannot disagree with the
     vectors that land (a second evaluation of a non-deterministic batch
     could). Centroids and codebooks are read inside the leased section,
@@ -970,94 +965,6 @@ def ivfpq_index_append(
 
         ic.staged_append(fs, st, ["vectors", "codes"], write)
     return int(obs.get["n"])
-
-
-def ivfpq_index_delete(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    id_col: str = "vec_id",
-    fs=None,
-    lease_owner: str | None = None,
-) -> int:
-    """Takedown for the IVF-PQ index: tombstone the given ids so every
-    later search behaves exactly as if the index never contained them. It
-    is the propagation target of a corpus delete_from_merge_table (feed it
-    read_commit_changes' delete records; takedown.takedown does). The
-    vectors/codes rows stay in their immutable cell files; one small append
-    lands the distinct ids in ``tombstones/`` (index_commit), and both
-    search paths anti-join it ahead of the ADC scan. O(batch); absent ids
-    are harmless and re-deleting is idempotent. Physical erasure is
-    compact_ivfpq_index(purge_tombstones=True). Returns the number of
-    tombstone ids appended."""
-    return ic.write_tombstones(ic.store("ivfpq", path), keys, id_col, fs, lease_owner)
-
-
-def load_tombstones(spark: SparkSession, path: str, fs=None) -> DataFrame | None:
-    """The index's committed tombstone ids, or None when nothing was ever
-    deleted."""
-    return ic.read_tombstones(spark, ic.store("ivfpq", path), fs)
-
-
-def recover_ivfpq_index(path: str, fs=None) -> dict[str, list[str]]:
-    """Heal a combined IVF-PQ index after a crashed ivfpq_index_append,
-    ivfpq_index_delete or compact_ivfpq_index (index_commit.recover).
-    Idempotent and leaseless."""
-    return ic.recover(ic.store("ivfpq", path), fs)
-
-
-def compact_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    max_files_per_cell: int = 8,
-    target_files_per_cell: int = 1,
-    fs=None,
-    lease_owner: str | None = None,
-    purge_tombstones: bool = False,
-    id_col: str = "vec_id",
-) -> dict:
-    """Small-file compaction for a continuously-appended IVF-PQ index:
-    every ivfpq_index_append leaves one or more files per touched cell in
-    BOTH tables, and the codes table, which every search ADC-scans, feels
-    the file-open cost first. Rewrites the over-threshold cells of
-    vectors/ and codes/ like compact_ivf_index (index_commit.compact).
-    Without purging, content never changes, so each cell swap stands
-    alone and search results are identical throughout. Returns
-    {"vectors": {cell: files}, "codes": {cell: files}} for rewritten cells.
-
-    ``purge_tombstones=True`` drops tombstoned rows from BOTH tables while
-    rewriting exactly the cells that hold them, then clears the consumed
-    tombstones last: until then every search still anti-joins them, so a
-    half-purged index answers identically and a re-run converges. Adds
-    ``purged_rows`` (across both tables) and ``tombstones_cleared``."""
-    out = ic.compact(
-        spark, ic.store("ivfpq", path), fs, target_files_per_cell, max_files_per_cell,
-        purge=purge_tombstones, id_col=id_col, lease_owner=lease_owner,
-    )
-    if not purge_tombstones:
-        return out["rewritten"]
-    return {
-        **out["rewritten"],
-        "purged_rows": out["purged_rows"],
-        "tombstones_cleared": out["tombstones_cleared"],
-    }
-
-
-def ivfpq_tombstoned_rows(
-    spark: SparkSession, path: str, fs=None, id_col: str = "vec_id"
-) -> int:
-    """Tombstoned rows still physically on disk across vectors/ and codes/,
-    the purge-debt gauge: 0 after compact_ivfpq_index(purge_tombstones=True)."""
-    return ic.tombstoned_rows(spark, ic.store("ivfpq", path), fs, id_col)
-
-
-def ivfpq_index_stats(path: str, fs=None) -> dict:
-    """Operational stats for a combined IVF-PQ index (index_commit.stats):
-    per-table committed cell/file counts and crash debris, root multi-table
-    append markers, tombstone files and the lease state. A rising
-    ``max_files_per_cell`` in either table calls for compact_ivfpq_index;
-    non-zero debris calls for recover_ivfpq_index."""
-    return ic.stats(ic.store("ivfpq", path), fs)
 
 
 def ivfpq_topk_batch(
@@ -1113,13 +1020,9 @@ def ivfpq_topk_batch(
     m = len(codebooks)
     sub_dim = len(codebooks[0][0])
     centroids = spark.read.parquet(path + "/centroids")
-    codes = spark.read.parquet(path + "/codes")
+    # tombstoned ids never reach the ADC stage of any query
+    codes = ic.read_live(spark, ic.store("ivfpq", path), "codes", id_col)
     vectors = spark.read.parquet(path + "/vectors")
-    tombstones = load_tombstones(spark, path)
-    if tombstones is not None:
-        # takedown: same single anti-join as the per-query path —
-        # tombstoned ids never reach the ADC stage of ANY query
-        codes = codes.join(tombstones.select(id_col), id_col, "left_anti")
 
     qvec = F.col(query_vec_col).cast("array<double>")
 

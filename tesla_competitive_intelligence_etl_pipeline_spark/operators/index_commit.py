@@ -7,15 +7,22 @@ itself, or a sibling ``<path>.lock`` for the signature table, whose root is
 the parquet dir that a rebuild's ``mode("overwrite")`` replaces), its data
 tables (cell-partitioned ``<cell_col>=<value>`` dirs, or one flat table at
 the root) and its tombstone dir. ``store(kind, path)`` builds the
-description of a registered kind; the kind modules keep only what differs
+description of a registered kind. The kind modules keep only what differs
 per kind (centroid assignment, PQ encoding, the signature ``_params``
-check) and call the functions here.
+check) and stage their appends here; every other operation is called
+directly on ``store(kind, path)`` and returns one result shape for every
+kind: ``recover``, ``compact``, ``write_tombstones``, ``read_tombstones``,
+``read_live`` (a table's rows minus committed tombstones, the read every
+search runs), ``stats``, ``tombstoned_rows`` and ``units``. Per-kind
+policy comes from the ``Store`` (cells are coalesced, a flat table is
+repartitioned; the signature table's id column is fixed).
 
-Every mutation runs in a ``streaming.fs.leased`` section: the store's
-writer lease is acquired (a second writer gets ``ConcurrentWriterError``),
-a heartbeat re-stamps it while the section runs, and it is released on
-exit. A crashed writer strands its lease; break it
-(``streaming.fs.break_writer_lease``) once the writer is known dead.
+Every mutation, recovery included, runs in a ``streaming.fs.leased``
+section: the store's writer lease is acquired (a second writer gets
+``ConcurrentWriterError``), a heartbeat re-stamps it while the section
+runs, and it is released on exit. A crashed writer strands its lease;
+break it (``streaming.fs.break_writer_lease``) once the writer is known
+dead, then ``recover``.
 
 Crash model. ``put_atomic`` is the only atomicity requirement (true of an
 S3 object PUT). A file move may be copy+delete, and a single-object copy is
@@ -125,9 +132,13 @@ def _data_files(fs, d: str) -> list[str]:
     )
 
 
-def units(fs, table_dir: str, cells: bool) -> dict[str, list[str]]:
-    """{unit: data files} of one table: its cell dirs, or "" for a flat table."""
-    if not cells:
+def units(st: Store, rel: str, fs=None) -> dict[str, list[str]]:
+    """{unit: committed data files} of the table ``rel``: its cell dirs, or
+    "" for a flat table. Crash debris is not listed. A rising file count
+    per unit under continuous appends calls for ``compact``."""
+    fs = fs or mfs.LOCAL_FS
+    table_dir = st.path(rel)
+    if not st.cells:
         files = _data_files(fs, table_dir)
         return {"": files} if files else {}
     if not fs.isdir(table_dir):
@@ -214,11 +225,24 @@ def write_tombstones(
 
 
 def read_tombstones(spark, st: Store, fs=None) -> DataFrame | None:
-    """The committed tombstone ids, or None when there are none (search
-    plans then stay those of a store that never deleted)."""
+    """The committed tombstone ids, or None when there are none."""
     if not st.tombstones or not _data_files(fs or mfs.LOCAL_FS, st.path(st.tombstones)):
         return None
     return spark.read.parquet(st.path(st.tombstones))
+
+
+def read_live(spark, st: Store, rel: str, id_col: str = "vec_id", fs=None) -> DataFrame:
+    """The rows of table ``rel`` minus the committed tombstones: the read
+    every search runs. The tombstone side is bounded by takedown volume,
+    so it is broadcast; filters a search puts on the result (the probed
+    cells) still reach the scan's PartitionFilters. With no tombstone the
+    plan is the bare scan of a store that never deleted."""
+    rows = spark.read.parquet(st.path(rel))
+    tombs = read_tombstones(spark, st, fs)
+    if tombs is None:
+        return rows
+    id_col = st.id_col or id_col
+    return rows.join(F.broadcast(tombs.select(id_col)), id_col, "left_anti")
 
 
 def _drop_tombstones(fs, st: Store, files: list[str]) -> None:
@@ -346,22 +370,30 @@ def _heal_dir_swaps(fs, table_dir: str, out: dict) -> None:
                 out["restored"].append(live)
 
 
-def recover(st: Store, fs=None) -> dict[str, list[str]]:
-    """Heal the store after a crash at any point (module docstring): roll
-    committed appends and swaps forward, drop marker-less staging.
-    Idempotent. Returns {"completed": [tags], "removed": [paths]}, plus
-    "restored": [cell dirs] for cell-partitioned stores. Takes no lease."""
-    fs = fs or mfs.LOCAL_FS
-    out: dict[str, list[str]] = {"completed": [], "removed": []}
+def _recover(fs, st: Store) -> dict[str, list[str]]:
+    out: dict[str, list[str]] = {"completed": [], "removed": [], "restored": []}
     tables = [st.path(rel) for rel in st.tables]
     tombs = [st.path(st.tombstones)] if st.tombstones else []
     _recover_appends(fs, st, tables + tombs, out)
     for table_dir in tables:
         _replay_swaps(fs, st, table_dir, out)
         if st.cells:
-            out.setdefault("restored", [])
             _heal_dir_swaps(fs, table_dir, out)
     return out
+
+
+def recover(st: Store, fs=None) -> dict[str, list[str]]:
+    """Heal the store after a crash at any point (module docstring): roll
+    committed appends and swaps forward, drop marker-less staging.
+    Idempotent. Runs under the store's writer lease like every mutation,
+    so a live writer's staging is never taken for debris: a writer that
+    crashed strands its lease, which is broken
+    (``streaming.fs.break_writer_lease``) once the writer is known dead.
+    Returns {"completed": [commit tags], "removed": [paths], "restored":
+    [cell dirs]}."""
+    fs = fs or mfs.LOCAL_FS
+    with mfs.leased(fs, st.lease):
+        return _recover(fs, st)
 
 
 def compact(
@@ -370,15 +402,16 @@ def compact(
     fs=None,
     target_files: int = 1,
     max_files: int | None = None,
-    shuffle: bool = False,
     purge: bool = False,
     id_col: str = "vec_id",
     lease_owner: str | None = None,
 ) -> dict:
     """Rewrite each unit holding more than ``max_files`` data files (every
     unit when None) into ``target_files`` files, through one swap per unit.
-    ``shuffle`` repartitions instead of coalescing, keeping the read fully
-    parallel. ``purge`` drops tombstoned rows: units holding one are
+    A cell is coalesced; a flat table is repartitioned instead, keeping its
+    read fully parallel. Content never changes without ``purge``, so search
+    results are identical before and after. ``purge`` drops
+    tombstoned rows (physical erasure): units holding one are
     rewritten whatever their file count, and the consumed tombstones are
     cleared last. Recovers first, under the store's lease. Returns
     {"rewritten": {table: {unit: files}}, "files_before", "purged_rows",
@@ -386,7 +419,7 @@ def compact(
     fs = fs or mfs.LOCAL_FS
     id_col = st.id_col or id_col
     with mfs.leased(fs, st.lease, lease_owner):
-        recover(st, fs)
+        _recover(fs, st)
         tomb_files = _data_files(fs, st.path(st.tombstones)) if purge else []
         ids = (
             spark.read.parquet(st.path(st.tombstones)).select(id_col).distinct()
@@ -394,15 +427,14 @@ def compact(
         )
         plan = []  # (table, unit, its files, drops tombstoned rows)
         for rel in st.tables:
-            table_dir = st.path(rel)
-            found = units(fs, table_dir, st.cells)
+            found = units(st, rel, fs)
             force = set(found) if ids is not None else set()
             if force and st.cells:
                 # one id-and-cell-column scan finds the cells to purge
                 cell_col = next(iter(found)).split("=", 1)[0]
                 force = {
                     f"{cell_col}={r[cell_col]}"
-                    for r in spark.read.parquet(table_dir)
+                    for r in spark.read.parquet(st.path(rel))
                     .join(F.broadcast(ids), id_col, "semi")
                     .select(cell_col).distinct().collect()
                 }
@@ -425,7 +457,7 @@ def compact(
                 n_before = df.count()  # parquet footers, no data scan
                 df = df.join(F.broadcast(ids), id_col, "left_anti")
             df, obs = counted(df)
-            df = df.repartition(target_files) if shuffle else df.coalesce(target_files)
+            df = df.coalesce(target_files) if st.cells else df.repartition(target_files)
             tag = uuid.uuid4().hex[:8]
             staging = os.path.join(table_dir, COMPACT_PREFIX + tag)
             df.write.parquet(staging)
@@ -470,7 +502,7 @@ def stats(st: Store, fs=None) -> dict:
     }
     for rel in st.tables:
         table_dir = st.path(rel)
-        counts = [len(f) for f in units(fs, table_dir, st.cells).values()]
+        counts = [len(f) for f in units(st, rel, fs).values()]
         entries = fs.listdir(table_dir) if fs.isdir(table_dir) else []
         out[rel] = {
             "cells": len(counts),

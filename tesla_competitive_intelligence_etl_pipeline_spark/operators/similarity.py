@@ -257,14 +257,10 @@ def ivf_topk_indexed(
     ONLY those cell partitions with an exact cosine re-rank. The cell filter
     lands in the scan's PartitionFilters (asserted in tests/test_plans.py) —
     at 100 TB the probe reads n_probe/n_cells of the corpus."""
-    vectors = spark.read.parquet(path + "/vectors")
-    tombs = load_tombstones(spark, path)
-    if tombs is not None:
-        # tombstoned ids leave the index entirely — both
-        # candidacy AND the query-by-id lookup (a deleted id used as a
-        # query resolves to an empty result, exactly as on an index that
-        # never held it; pinned in tests)
-        vectors = vectors.join(tombs.select(id_col), id_col, "left_anti")
+    # tombstoned ids leave both candidacy and the query-by-id lookup: a
+    # deleted id used as a query resolves to an empty result, exactly as
+    # on an index that never held it
+    vectors = ic.read_live(spark, ic.store("ivf", path), "vectors", id_col)
     centroids = spark.read.parquet(path + "/centroids")
     q = vectors.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__qvec"))
     probed_rows = (
@@ -332,7 +328,8 @@ def ivf_index_append(
     accumulates (the standard re-index cadence trade-off).
 
     A staged append under the index lease (operators/index_commit):
-    readers never see a torn batch, and recover_ivf_index heals a crash.
+    readers never see a torn batch, and ``index_commit.recover`` heals a
+    crash.
     Appended rows carry exactly (id_col, vec_col, cell_col), the schema
     build_ivf_index wrote. Returns the number of rows appended, observed
     on the write's own evaluation."""
@@ -344,124 +341,3 @@ def ivf_index_append(
         )
         ic.staged_append(fs, st, ["vectors"], assigned.write.partitionBy(cell_col).parquet)
     return int(obs.get["n"])
-
-
-def cell_file_counts(table_dir: str, fs=None) -> dict[str, int]:
-    """Parquet data files per committed cell partition of ONE
-    cell-partitioned table dir (the IVF vectors table, the IVF-PQ vectors
-    and codes tables); crash debris is not counted."""
-    units = ic.units(fs or mfs.LOCAL_FS, table_dir, cells=True)
-    return {cell: len(files) for cell, files in units.items()}
-
-
-def ivf_cell_file_counts(path: str, fs=None) -> dict[str, int]:
-    """Parquet data files per committed cell partition of a materialized IVF
-    index: watch this grow under continuous ivf_index_append."""
-    return cell_file_counts(path + "/vectors", fs)
-
-
-def tombstone_ids(
-    spark,
-    path: str,
-    keys: DataFrame,
-    id_col: str = "vec_id",
-    fs=None,
-    lease_owner: str | None = None,
-) -> int:
-    """Land the distinct ids in ``<index>/tombstones/`` (a staged append,
-    operators/index_commit); searches anti-join the table ahead of
-    candidate ranking. O(batch) and idempotent; ids absent from the index
-    are harmless; compaction with ``purge_tombstones=True`` erases the rows
-    physically. Returns the number of ids appended."""
-    return ic.write_tombstones(ic.store("ivf", path), keys, id_col, fs, lease_owner)
-
-
-def load_tombstones(spark, path: str, fs=None):
-    """The index's committed tombstone ids, or None when nothing was ever
-    deleted (the common case: search plans stay byte-identical)."""
-    return ic.read_tombstones(spark, ic.store("ivf", path), fs)
-
-
-def ivf_index_delete(
-    spark,
-    path: str,
-    keys: DataFrame,
-    id_col: str = "vec_id",
-    fs=None,
-    lease_owner: str | None = None,
-) -> int:
-    """Takedown for the plain IVF index (tombstone_ids): ivf_topk_indexed
-    never surfaces the ids again, and the immutable cell files stay
-    untouched. Returns the number of tombstone ids appended."""
-    return tombstone_ids(spark, path, keys, id_col=id_col, fs=fs,
-                         lease_owner=lease_owner)
-
-
-def ivf_index_stats(path: str, fs=None) -> dict:
-    """Operational stats for a materialized IVF index, the index twin of
-    streaming.events.merge_table_stats: committed cell/file counts, the
-    crash debris (append staging dirs, unprocessed append markers,
-    compaction staging dirs and swap markers), tombstone files and the
-    writer-lease state. Non-zero debris calls for recover_ivf_index (after
-    breaking a stranded lease); a rising ``max_files_per_cell`` calls for
-    compaction. No data file is read."""
-    out = ic.stats(ic.store("ivf", path), fs)
-    return {
-        **out["vectors"],
-        "tombstone_files": out["tombstone_files"],
-        "lease": out["lease"],
-    }
-
-
-def recover_ivf_index(path: str, fs=None) -> dict[str, list[str]]:
-    """Heal a materialized IVF index after a crashed append, tombstone
-    write or compaction (index_commit.recover). Idempotent and leaseless;
-    compact_ivf_index runs it first. Returns {"restored": [...],
-    "removed": [...]}."""
-    out = ic.recover(ic.store("ivf", path), fs)
-    return {"restored": out["completed"] + out["restored"], "removed": out["removed"]}
-
-
-def compact_ivf_index(
-    spark,
-    path: str,
-    max_files_per_cell: int = 8,
-    target_files_per_cell: int = 1,
-    fs=None,
-    lease_owner: str | None = None,
-    purge_tombstones: bool = False,
-    id_col: str = "vec_id",
-) -> dict:
-    """Small-file compaction for a continuously-appended IVF index: every
-    ivf_index_append leaves one or more parquet files per touched cell (a
-    100 TB index appended hourly accrues ~10^4 files/cell/year, and scans
-    become file-open bound). Rewrites every cell holding more than
-    ``max_files_per_cell`` files into ``target_files_per_cell`` files;
-    other cells keep their exact files. Search results are bit-identical
-    before and after; centroids are untouched. Each cell is one swap of
-    index_commit.compact under the index lease; run it where a deployment
-    runs OPTIMIZE. Returns {cell: new_file_count} for the rewritten cells.
-
-    ``purge_tombstones=True`` turns logical takedown into physical erasure:
-    cells holding tombstoned rows are rewritten without them (O(touched
-    cells), not a re-index), and the consumed tombstones are cleared once
-    no tombstoned row is left on disk, so searches never surface a deleted
-    id mid-purge. Returns {"rewritten": {cell: files}, "purged_rows": n,
-    "tombstones_cleared": bool} in this mode."""
-    out = ic.compact(
-        spark, ic.store("ivf", path), fs, target_files_per_cell, max_files_per_cell,
-        purge=purge_tombstones, id_col=id_col, lease_owner=lease_owner,
-    )
-    if not purge_tombstones:
-        return out["rewritten"]["vectors"]
-    return {
-        "rewritten": out["rewritten"]["vectors"],
-        "purged_rows": out["purged_rows"],
-        "tombstones_cleared": out["tombstones_cleared"],
-    }
-
-
-def ivf_tombstoned_rows(spark, path: str, fs=None, id_col: str = "vec_id") -> int:
-    """Tombstoned rows still physically on disk in the vectors table, the
-    purge-debt gauge: 0 after compact_ivf_index(purge_tombstones=True)."""
-    return ic.tombstoned_rows(spark, ic.store("ivf", path), fs, id_col)

@@ -26,8 +26,8 @@ spared) from one stranded by a crash AFTER propagation completed (record
 gone — safe to drop), closing ADVICE r9 low's live-pin race without age
 heuristics.
 
-Run ``recover_takedowns`` at restart healing, where the other recover_*
-functions run, BEFORE resuming other writers to the corpus: a record
+Run ``recover_takedowns`` at restart healing, where the stores'
+``index_commit.recover`` runs, BEFORE resuming other writers to the corpus: a record
 without a recorded delete-commit id (the crash hit before the delete
 committed, or before the stamp landed) falls back to the pinned-state CDC
 read, which is exact only while no LATER commit has landed on the table.
@@ -38,7 +38,7 @@ Scale shape: the corpus DELETE is bucket-span / pruning-pass I/O, the CDC
 read is O(delta) (exactly the delete records the commit captured), every
 tombstone append is O(batch), and the request record is one tiny JSON.
 Nothing reads the corpus or any index's data files. Physical purge stays a
-scheduled job (compact_*(purge_tombstones=True) — see DEPLOYMENT.md's
+scheduled job (``index_commit.compact(purge=True)`` — see DEPLOYMENT.md's
 maintenance table); this operator is the request-time half.
 """
 
@@ -520,7 +520,7 @@ def takedown_verify(
     live/version/snapshot/changes); store hits scan the COMMITTED data
     files raw (dot-staging is invisible to Spark's listing; tombstones are
     deliberately NOT applied — a tombstoned-but-unpurged row is still
-    retained content on disk until ``compact_*(purge_tombstones=True)``
+    retained content on disk until ``index_commit.compact(purge=True)``
     runs, exactly what this audit must surface). Tombstone files
     themselves hold only the ids (key-only erasure EVIDENCE, the analog of
     the commit log's key-only delete records) and never count. Store

@@ -347,7 +347,7 @@ def cross_corpus_indexed_portable_sql(
 
     ``exclude_pred`` (r9 — the signature-takedown twin): stored-side docs
     matching the predicate are dropped BEFORE signatures are derived,
-    modeling a table whose tombstones (delete_signature_entries) suppress
+    modeling a table whose tombstones (index_commit.write_tombstones) suppress
     those docs from banding and verification — i.e. a table rebuilt from
     the survivors."""
     old_src = "SELECT doc_id, text FROM documents WHERE doc_id < 100"

@@ -815,7 +815,7 @@ def x3_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_takedown_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
     import shutil
 
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 
     src_path, books, query = _ensure_ivfpq_index(spark, sf_dir)
     path = scratch("ivfpq_takedown_") + "/index"
@@ -825,7 +825,7 @@ def _ensure_takedown_index(spark: SparkSession, sf_dir: str) -> tuple[str, list,
         .filter(F.col("vec_id") % 11 == 3)
         .select("vec_id")
     )
-    clustering.ivfpq_index_delete(spark, path, gone)
+    ic.write_tombstones(ic.store("ivfpq", path), gone, "vec_id")
     return path, books, query
 
 
@@ -837,8 +837,8 @@ def _ensure_takedown_index(spark: SparkSession, sf_dir: str) -> tuple[str, list,
     ),
 )
 def x3_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-3 takedown (r8): search the IVF-PQ index AFTER a tombstone
-    delete (ivfpq_index_delete, vec_id % 11 == 3) — removed ids must
+    """X-3 takedown: search the IVF-PQ index AFTER a tombstone
+    write (index_commit.write_tombstones, vec_id % 11 == 3) — removed ids must
     never surface, without rebuilding the index: one committed tombstone
     table, one anti-join ahead of the ADC scan, quantizers frozen. With
     frozen quantizers the result EQUALS an index that never contained

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import multimodal as mm
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import text as tx
@@ -341,7 +342,7 @@ def _ensure_sig_table_takedown(spark: SparkSession, sf_dir: str) -> str:
         .filter((F.col("doc_id") < 100) & (F.col("doc_id") % 7 == 2))
         .select("doc_id")
     )
-    dd.delete_signature_entries(spark, path, gone)
+    ic.write_tombstones(ic.store("signature", path), gone, "doc_id")
     return path
 
 
@@ -352,8 +353,8 @@ def _ensure_sig_table_takedown(spark: SparkSession, sf_dir: str) -> str:
     ),
 )
 def x2_sig_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-2 takedown (r9 — VERDICT r8 item 1): the incremental crawl dedup
-    AFTER a signature-table tombstone delete (delete_signature_entries,
+    """X-2 takedown: the incremental crawl dedup
+    AFTER a signature-table tombstone write (index_commit.write_tombstones,
     doc_id % 7 == 2) — erased documents must never again match a crawl
     increment, without rebuilding the table: one committed tombstone table
     under _tombstones/, one broadcast anti-join ahead of banding. The
@@ -373,14 +374,14 @@ def x2_sig_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Physical-purge twin: the takedown table after
-# compact_signature_table(purge_tombstones=True) — tombstoned rows OFF
+# index_commit.compact(purge=True) — tombstoned rows OFF
 # DISK, tombstones cleared. Same oracle as x2_sig_takedown: purge must
 # not change a single answer.
 @artifact
 def _ensure_sig_table_purged(spark: SparkSession, sf_dir: str) -> str:
     path = clone("lsh_sigs_purged_", _ensure_sig_table_takedown(spark, sf_dir))
     path += "/signatures"
-    dd.compact_signature_table(spark, path, purge_tombstones=True)
+    ic.compact(spark, ic.store("signature", path), target_files=8, purge=True)
     return path
 
 
@@ -391,8 +392,8 @@ def _ensure_sig_table_purged(spark: SparkSession, sf_dir: str) -> str:
     ),
 )
 def x2_sig_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-2 physical erasure (r9): the crawl dedup AFTER
-    compact_signature_table(purge_tombstones=True) rewrote the takedown
+    """X-2 physical erasure: the crawl dedup AFTER
+    index_commit.compact(purge=True) rewrote the takedown
     table — tombstoned docs' rows are physically off disk, _tombstones/
     is cleared (the read plan is back to the bare scan, no anti-join),
     and every answer is pinned identical to the logical-takedown twin

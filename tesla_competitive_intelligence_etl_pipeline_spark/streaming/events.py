@@ -2044,7 +2044,7 @@ def merge_table_stats(
 ) -> dict:
     """Operational stats for a merge gold table — the observability twin of
     vacuum_merge_table (and the merge-table analog of
-    similarity.ivf_cell_file_counts): committed bucket/version/file counts
+    index_commit.units): committed bucket/version/file counts
     plus the DEBRIS a crash left behind (unreferenced store versions,
     staging trees). ``debris_versions`` or ``staging_dirs`` > 0 is the
     signal to schedule a vacuum; ``live_files`` growing much faster than

@@ -321,10 +321,10 @@ LOCAL_FS = LocalFS()
 
 
 # ---------------------------------------------------------------------------
-# Writer lease (VERDICT r5 item 7): ENFORCE the single-writer contract that
-# merge_micro_batch / vacuum_merge_table / compact_ivf_index / the index
-# appends previously only documented — a second concurrent writer now fails
-# loudly (ConcurrentWriterError) instead of corrupting shared state.
+# Writer lease: the single-writer contract of the merge-table writers and
+# of the derived stores' appends and maintenance (operators/index_commit) —
+# a second concurrent writer fails loudly (ConcurrentWriterError) instead
+# of corrupting shared state.
 # ---------------------------------------------------------------------------
 
 LEASE_NAME = ".writer_lease.json"

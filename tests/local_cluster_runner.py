@@ -38,6 +38,7 @@ def crash_cycle(spark, sf_dir: str, workdir: str) -> dict:
 
     from pyspark.sql import functions as F
 
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as srcio
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
@@ -68,7 +69,7 @@ def crash_cycle(spark, sf_dir: str, workdir: str) -> dict:
             sim.ivf_index_append(spark, path, batch, fs=fs)
         except mfs.NonAtomicRenameFS.InjectedCrash:
             mfs.break_writer_lease(mfs.LOCAL_FS, path)  # dead-writer restart
-        sim.recover_ivf_index(path)
+        ic.recover(ic.store("ivf", path))
         n_vec = spark.read.parquet(path + "/vectors").count()
         if n_vec == base.count():  # rolled back: retry must land the batch
             assert sim.ivf_index_append(spark, path, batch) == appended

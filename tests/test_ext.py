@@ -9,9 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import multimodal as mm
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
+
+def _file_counts(st, rel: str) -> dict[str, int]:
+    """Committed data files per unit of one store table."""
+    return {unit: len(files) for unit, files in ic.units(st, rel).items()}
+
 
 BASE_DOC = (
     "the quick brown fox jumps over the lazy dog while the spark engine "
@@ -741,6 +747,18 @@ def test_assign_clusters_join_matches_literal_and_ivf(spark, sf_dir):
     assert {r.vec_id: r.cluster for r in by_join.collect()} == ref
 
 
+def test_kmeans_df_rejects_repeated_ids(spark):
+    """kmeans_df's unique-id precondition is checked in code: a repeated
+    id raises in the first iteration instead of collapsing two rows into
+    one update contribution."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+
+    rows = [(i, [float(i), 0.0]) for i in range(6)] + [(3, [9.0, 9.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="vec_id 3 is not unique"):
+        clustering.kmeans_df(df, k=2, max_iters=2)
+
+
 def test_kmeans_df_matches_literal_kmeans(spark, sf_dir):
     """kmeans_df (DataFrame-resident centroids, r6) must reproduce the
     literal kmeans EXACTLY under round_decimals: same seeds, same
@@ -970,7 +988,7 @@ def test_ivf_index_append_incremental_maintenance(spark, sf_dir, tmp_path):
 
 def test_compact_ivf_index_drops_files_and_preserves_results(spark, sf_dir, tmp_path):
     """VERDICT r4 item 4: repeated ivf_index_append accrues small files per
-    cell; compact_ivf_index must (a) cut over-threshold cells to the target
+    cell; index_commit.compact must (a) cut over-threshold cells to the target
     file count, (b) leave under-threshold cells' files byte-for-byte
     untouched, and (c) keep indexed search results bit-identical."""
     import glob
@@ -986,7 +1004,7 @@ def test_compact_ivf_index_drops_files_and_preserves_results(spark, sf_dir, tmp_
         batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20))
         sim.ivf_index_append(spark, path, batch.select("vec_id", "embedding"))
 
-    before_counts = sim.ivf_cell_file_counts(path)
+    before_counts = _file_counts(ic.store("ivf", path), "vectors")
     assert max(before_counts.values()) > 2  # appends really fragmented cells
     before_rows = sorted(
         tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
@@ -1004,9 +1022,9 @@ def test_compact_ivf_index_drops_files_and_preserves_results(spark, sf_dir, tmp_
         for c in untouched
     }
 
-    rewritten = sim.compact_ivf_index(spark, path, max_files_per_cell=2)
+    rewritten = ic.compact(spark, ic.store("ivf", path), max_files=2)["rewritten"]["vectors"]
     assert rewritten  # something was over threshold
-    after_counts = sim.ivf_cell_file_counts(path)
+    after_counts = _file_counts(ic.store("ivf", path), "vectors")
     assert all(n == 1 for c, n in after_counts.items() if c in rewritten)
     assert all(after_counts[c] == before_counts[c] for c in untouched)
     for c in untouched:  # byte-for-byte: same files, same mtimes
@@ -1167,7 +1185,7 @@ def test_pq_index_append_matches_full_encode(spark, sf_dir, tmp_path):
 
 
 def test_compact_ivf_index_under_nonatomic_rename_fs(spark, sf_dir, tmp_path):
-    """compact_ivf_index's swap protocol must hold under S3 semantics (the
+    """index_commit.compact's swap protocol must hold under S3 semantics (the
     NonAtomicRenameFS copy+delete moves): same file-count reduction, same
     bit-identical rows."""
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
@@ -1180,11 +1198,11 @@ def test_compact_ivf_index_under_nonatomic_rename_fs(spark, sf_dir, tmp_path):
         sim.ivf_index_append(spark, path, batch.select("vec_id", "embedding"))
 
     before_rows = sorted(tuple(r) for r in spark.read.parquet(path + "/vectors").collect())
-    rewritten = sim.compact_ivf_index(
-        spark, path, max_files_per_cell=2, fs=mfs.NonAtomicRenameFS()
-    )
+    rewritten = ic.compact(
+        spark, ic.store("ivf", path), mfs.NonAtomicRenameFS(), max_files=2
+    )["rewritten"]["vectors"]
     assert rewritten
-    after_counts = sim.ivf_cell_file_counts(path)
+    after_counts = _file_counts(ic.store("ivf", path), "vectors")
     assert all(after_counts[c] == 1 for c in rewritten)
     assert sorted(tuple(r) for r in spark.read.parquet(path + "/vectors").collect()) == before_rows
 
@@ -1241,7 +1259,7 @@ def test_recover_ivf_index_heals_crashed_swap_states(spark, sf_dir, tmp_path):
     # (c) an unreferenced pre-commit staging dir
     fs.makedirs(os.path.join(vectors, ".compact_orphan"))
 
-    out = sim.recover_ivf_index(path)
+    out = ic.recover(ic.store("ivf", path))
     assert out["restored"] == [cell_dir]
     assert os.path.join(vectors, ".compact_orphan") in out["removed"]
     assert not fs.exists(os.path.join(vectors, ".swap_deadA.json"))
@@ -1259,14 +1277,14 @@ def test_recover_ivf_index_heals_crashed_swap_states(spark, sf_dir, tmp_path):
              "files": files + ["part-MISSING.parquet"]}
         ).encode(),
     )
-    out2 = sim.recover_ivf_index(path)
+    out2 = ic.recover(ic.store("ivf", path))
     assert out2["restored"] == []
     assert staging_b in out2["removed"]
     assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
     # idempotent: a second recovery is a no-op
-    out3 = sim.recover_ivf_index(path)
-    assert out3 == {"restored": [], "removed": []}
+    out3 = ic.recover(ic.store("ivf", path))
+    assert out3 == {"completed": [], "removed": [], "restored": []}
 
 
 def test_semantic_dedup_cluster_cap_excludes_degenerate_mass(spark):
@@ -1335,95 +1353,6 @@ def test_leakage_safe_split_keeps_dup_groups_together(spark):
     assert {"train", "val", "test"} <= set(grp_split.values())
 
 
-@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
-def test_compact_crash_at_every_op_recovers_losslessly(spark, sf_dir, tmp_path, kind):
-    """Exhaustive crash sweep for the compaction swap under S3 semantics:
-    inject a crash after EVERY mutating filesystem op (marker puts, each
-    copied file, each delete) across the whole multi-cell compaction, run
-    recovery with a fresh filesystem (simulating restart), and require the
-    index rows bit-identical to the pristine index at every crash point —
-    the compaction twin of the merge's crash sweep.
-
-    The IVF-PQ case compacts with ``purge_tombstones=True`` after one id
-    was tombstoned: at every crash point the healed index must answer
-    exactly like the pristine (tombstoned) index, and a clean re-run must
-    leave no tombstoned row on disk and every other row intact."""
-    import shutil
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
-
-    emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
-    pristine = str(tmp_path / "pristine")
-    if kind == "ivf":
-        sim.build_ivf_index(emb.filter(F.col("vec_id") < 100), pristine)
-        append, recover = sim.ivf_index_append, sim.recover_ivf_index
-        compact = functools.partial(sim.compact_ivf_index, max_files_per_cell=1)
-    else:
-        books = clustering.build_ivfpq_index(
-            emb.filter(F.col("vec_id") < 100), pristine,
-            m=4, k=8, max_iters=2, round_decimals=6,
-        )
-        append, recover = clustering.ivfpq_index_append, clustering.recover_ivfpq_index
-        # a threshold no cell reaches: the purge alone picks the cells
-        compact = functools.partial(
-            clustering.compact_ivfpq_index,
-            max_files_per_cell=10_000, purge_tombstones=True,
-        )
-    for lo in (100, 120):
-        batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20))
-        append(spark, pristine, batch.select("vec_id", "embedding"))
-    if kind == "ivfpq":
-        query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-
-        def search(p):
-            return [tuple(r) for r in clustering.ivfpq_topk_indexed(
-                spark, p, query, k=10, n_probe=2, refine=4, codebooks=books
-            ).collect()]
-
-        doomed = next(r[0] for r in search(pristine) if r[0] != 0)
-        clustering.ivfpq_index_delete(
-            spark, pristine, spark.createDataFrame([(doomed,)], "vec_id long")
-        )
-        want = search(pristine)
-        assert doomed not in {r[0] for r in want}
-    before = sorted(
-        tuple(r) for r in spark.read.parquet(pristine + "/vectors").collect()
-    )
-
-    # how many mutating fs ops does a full compaction take?
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    assert compact(spark, probe, fs=probe_fs)
-    total_ops = probe_fs.ops
-    assert total_ops >= 6  # several cells x (put + copies + deletes)
-
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            compact(spark, path, fs=fs)
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path)
-        recover(path)  # restart with a healthy filesystem
-        if kind == "ivf":
-            after = sorted(
-                tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
-            )
-            assert after == before, f"rows diverged after crash at op {crash_at}"
-        else:
-            assert search(path) == want, f"search diverged at crash op {crash_at}"
-            compact(spark, path)  # a clean re-run completes the purge
-            assert clustering.ivfpq_tombstoned_rows(spark, path) == 0
-            after = sorted(
-                tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
-            )
-            assert after == [r for r in before if r[0] != doomed], crash_at
-        shutil.rmtree(path)
-
-
 def test_recover_ivf_index_heals_legacy_retired_dirs(spark, sf_dir, tmp_path):
     """Indexes crashed under the short-lived pre-marker rename-aside scheme
     left data in .retired_<tag>__<cell>; recovery must still restore a
@@ -1441,13 +1370,13 @@ def test_recover_ivf_index_heals_legacy_retired_dirs(spark, sf_dir, tmp_path):
     cell_dir = os.path.join(vectors, cell)
 
     shutil.move(cell_dir, os.path.join(vectors, f".retired_old__{cell}"))
-    out = sim.recover_ivf_index(path)
+    out = ic.recover(ic.store("ivf", path))
     assert out["restored"] == [cell_dir]
     assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
     # superseded legacy copy (live cell present) is debris
     shutil.copytree(cell_dir, os.path.join(vectors, f".retired_dup__{cell}"))
-    out2 = sim.recover_ivf_index(path)
+    out2 = ic.recover(ic.store("ivf", path))
     assert os.path.join(vectors, f".retired_dup__{cell}") in out2["removed"]
     assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
@@ -1502,9 +1431,9 @@ def test_compact_ivfpq_index_compacts_both_tables_and_preserves_search(
     spark, sf_dir, tmp_path
 ):
     """Continuous ivfpq_index_append fragments vectors/ AND codes/;
-    compact_ivfpq_index must cut over-threshold cells in BOTH tables to the
+    index_commit.compact must cut over-threshold cells in BOTH tables to the
     target file count, leave content row-identical, keep search results
-    bit-identical, and report the fragmentation in ivfpq_index_stats
+    bit-identical, and report the fragmentation in index_commit.stats
     before/after."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
 
@@ -1520,7 +1449,7 @@ def test_compact_ivfpq_index_compacts_both_tables_and_preserves_search(
             spark, path, batch.select("vec_id", "embedding")
         )
 
-    stats = clustering.ivfpq_index_stats(path)
+    stats = ic.stats(ic.store("ivfpq", path))
     assert stats["vectors"]["max_files_per_cell"] > 2
     assert stats["codes"]["max_files_per_cell"] > 2
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
@@ -1535,11 +1464,11 @@ def test_compact_ivfpq_index_compacts_both_tables_and_preserves_search(
         ).collect()
     ]
 
-    rewritten = clustering.compact_ivfpq_index(spark, path, max_files_per_cell=2)
+    rewritten = ic.compact(spark, ic.store("ivfpq", path), max_files=2)["rewritten"]
     assert rewritten["vectors"] and rewritten["codes"]
-    after_stats = clustering.ivfpq_index_stats(path)
+    after_stats = ic.stats(ic.store("ivfpq", path))
     for t in ("vectors", "codes"):
-        counts = sim.cell_file_counts(path + "/" + t)
+        counts = _file_counts(ic.store("ivfpq", path), t)
         assert all(counts[c] == 1 for c in rewritten[t])
         assert sorted(
             tuple(r) for r in spark.read.parquet(path + "/" + t).collect()
@@ -1658,7 +1587,7 @@ def test_ivfpq_tombstone_takedown(spark, sf_dir, tmp_path):
     batch search; with frozen quantizers the takedown index answers
     EXACTLY like an index that never contained those vectors; the
     corpus-side composition (delete_from_merge_table ->
-    read_commit_changes -> ivfpq_index_delete) propagates table deletes;
+    read_commit_changes -> index_commit.write_tombstones) propagates table deletes;
     a crash mid-tombstone-append heals; re-deleting is idempotent."""
     import shutil
 
@@ -1687,8 +1616,7 @@ def test_ivfpq_tombstone_takedown(spark, sf_dir, tmp_path):
     shutil.copytree(pristine, takedown)
     clustering.ivfpq_index_append(
         spark, takedown, extra.select("vec_id", "embedding"))
-    n = clustering.ivfpq_index_delete(
-        spark, takedown, doomed.select("vec_id"))
+    n = ic.write_tombstones(ic.store("ivfpq", takedown), doomed.select("vec_id"), "vec_id")
     assert n == doomed.count()
     # survivor index: SAME quantizers, never saw the doomed ids
     clean = str(tmp_path / "clean")
@@ -1719,13 +1647,13 @@ def test_ivfpq_tombstone_takedown(spark, sf_dir, tmp_path):
     assert got_b == want_b
 
     # idempotent re-delete; stats expose the tombstone table
-    clustering.ivfpq_index_delete(spark, takedown, doomed.select("vec_id"))
+    ic.write_tombstones(ic.store("ivfpq", takedown), doomed.select("vec_id"), "vec_id")
     got2 = [tuple(r) for r in clustering.ivfpq_topk_indexed(
         spark, takedown, queries[0], k=10, n_probe=2, refine=4).collect()]
     want2 = [tuple(r) for r in clustering.ivfpq_topk_indexed(
         spark, clean, queries[0], k=10, n_probe=2, refine=4).collect()]
     assert got2 == want2
-    assert clustering.ivfpq_index_stats(takedown)["tombstone_files"] >= 2
+    assert ic.stats(ic.store("ivfpq", takedown))["tombstone_files"] >= 2
 
     # corpus-side composition: table delete -> commit-log deletes -> index
     target = str(tmp_path / "corpus")
@@ -1739,7 +1667,7 @@ def test_ivfpq_tombstone_takedown(spark, sf_dir, tmp_path):
     shutil.copytree(pristine, composed)
     clustering.ivfpq_index_append(
         spark, composed, extra.select("vec_id", "embedding"))
-    clustering.ivfpq_index_delete(spark, composed, cdc_gone)
+    ic.write_tombstones(ic.store("ivfpq", composed), cdc_gone, "vec_id")
     got3 = [tuple(r) for r in clustering.ivfpq_topk_indexed(
         spark, composed, queries[1], k=10, n_probe=2, refine=4).collect()]
     want3 = [tuple(r) for r in clustering.ivfpq_topk_indexed(
@@ -1747,18 +1675,17 @@ def test_ivfpq_tombstone_takedown(spark, sf_dir, tmp_path):
     assert got3 == want3
 
     # crash mid-tombstone-append: pre-marker -> rolled back (search still
-    # sees the id), retry converges; healing is recover_ivfpq_index
+    # sees the id), retry converges; healing is index_commit.recover
     crashed = str(tmp_path / "crashed")
     shutil.copytree(pristine, crashed)
     clustering.ivfpq_index_append(
         spark, crashed, extra.select("vec_id", "embedding"))
     fs = mfs.NonAtomicRenameFS(fail_after_ops=1)
     with pytest.raises(mfs.NonAtomicRenameFS.InjectedCrash):
-        clustering.ivfpq_index_delete(
-            spark, crashed, doomed.select("vec_id"), fs=fs)
+        ic.write_tombstones(ic.store("ivfpq", crashed), doomed.select("vec_id"), "vec_id", fs)
     mfs.break_writer_lease(mfs.LOCAL_FS, crashed)
-    clustering.recover_ivfpq_index(crashed)
-    clustering.ivfpq_index_delete(spark, crashed, doomed.select("vec_id"))
+    ic.recover(ic.store("ivfpq", crashed))
+    ic.write_tombstones(ic.store("ivfpq", crashed), doomed.select("vec_id"), "vec_id")
     got4 = [tuple(r) for r in clustering.ivfpq_topk_indexed(
         spark, crashed, queries[0], k=10, n_probe=2, refine=4).collect()]
     assert got4 == want2
@@ -1789,7 +1716,7 @@ def test_plain_ivf_tombstone_takedown(spark, sf_dir, tmp_path):
     takedown = str(tmp_path / "takedown")
     shutil.copytree(pristine, takedown)
     sim.ivf_index_append(spark, takedown, extra)
-    assert sim.ivf_index_delete(spark, takedown, doomed) == doomed.count()
+    assert ic.write_tombstones(ic.store("ivf", takedown), doomed, "vec_id") == doomed.count()
     clean = str(tmp_path / "clean")
     shutil.copytree(pristine, clean)
     sim.ivf_index_append(spark, clean, survivors)
@@ -1801,7 +1728,7 @@ def test_plain_ivf_tombstone_takedown(spark, sf_dir, tmp_path):
             spark, clean, q, k=10, n_probe=2).collect()]
         assert got == want, q
         assert not any(r[0] % 2 == 0 and r[0] >= 100 for r in got)
-    assert sim.ivf_index_stats(takedown)["tombstone_files"] >= 1
+    assert ic.stats(ic.store("ivf", takedown))["tombstone_files"] >= 1
 
     # crash before the tombstone marker -> rolled back; heal + retry
     crashed = str(tmp_path / "crashed")
@@ -1809,10 +1736,10 @@ def test_plain_ivf_tombstone_takedown(spark, sf_dir, tmp_path):
     sim.ivf_index_append(spark, crashed, extra)
     fs = mfs.NonAtomicRenameFS(fail_after_ops=1)
     with pytest.raises(mfs.NonAtomicRenameFS.InjectedCrash):
-        sim.ivf_index_delete(spark, crashed, doomed, fs=fs)
+        ic.write_tombstones(ic.store("ivf", crashed), doomed, "vec_id", fs)
     mfs.break_writer_lease(mfs.LOCAL_FS, crashed)
-    sim.recover_ivf_index(crashed)
-    sim.ivf_index_delete(spark, crashed, doomed)
+    ic.recover(ic.store("ivf", crashed))
+    ic.write_tombstones(ic.store("ivf", crashed), doomed, "vec_id")
     got = [tuple(r) for r in sim.ivf_topk_indexed(
         spark, crashed, 0, k=10, n_probe=2).collect()]
     want = [tuple(r) for r in sim.ivf_topk_indexed(
@@ -1822,13 +1749,13 @@ def test_plain_ivf_tombstone_takedown(spark, sf_dir, tmp_path):
 
 def test_ivfpq_purge_tombstones(spark, sf_dir, tmp_path):
     """r9 (VERDICT r8 item 2): opt-in PHYSICAL purge — compaction with
-    purge_tombstones=True rewrites exactly the cells holding tombstoned
+    purge=True rewrites exactly the cells holding tombstoned
     rows in BOTH tables (dropping those rows), then clears the satisfied
     tombstones; post-purge there are ZERO tombstoned rows on disk and
-    load_tombstones is None (search plans back to the never-deleted
+    read_tombstones is None (search plans back to the never-deleted
     shape); search results are pinned identical before/after purge AND
     equal to a survivor-only index; a crash mid-purge heals through
-    recover_ivfpq_index and a re-run converges; purging with no
+    index_commit.recover and a re-run converges; purging with no
     tombstones is a no-op."""
     import shutil
 
@@ -1855,7 +1782,7 @@ def test_ivfpq_purge_tombstones(spark, sf_dir, tmp_path):
     purged = str(tmp_path / "purged")
     shutil.copytree(pristine, purged)
     clustering.ivfpq_index_append(spark, purged, extra.select("vec_id", "embedding"))
-    clustering.ivfpq_index_delete(spark, purged, doomed)
+    ic.write_tombstones(ic.store("ivfpq", purged), doomed, "vec_id")
     clean = str(tmp_path / "clean")
     shutil.copytree(pristine, clean)
     clustering.ivfpq_index_append(spark, clean, survivors.select("vec_id", "embedding"))
@@ -1870,15 +1797,15 @@ def test_ivfpq_purge_tombstones(spark, sf_dir, tmp_path):
             spark, path, qv, k=10, n_probe=2, refine=4, codebooks=books).collect()]
 
     before = [search(purged, qv) for qv in queries]
-    assert clustering.ivfpq_tombstoned_rows(spark, purged) > 0
+    assert ic.tombstoned_rows(spark, ic.store("ivfpq", purged)) > 0
 
     # threshold high so ONLY the purge forces rewrites (O(touched cells))
-    out = clustering.compact_ivfpq_index(
-        spark, purged, max_files_per_cell=10_000, purge_tombstones=True)
+    out = ic.compact(
+        spark, ic.store("ivfpq", purged), max_files=10_000, purge=True)
     assert out["purged_rows"] > 0 and out["tombstones_cleared"]
-    assert clustering.ivfpq_tombstoned_rows(spark, purged) == 0
-    assert clustering.ivfpq_index_stats(purged)["tombstone_files"] == 0
-    assert clustering.load_tombstones(spark, purged) is None
+    assert ic.tombstoned_rows(spark, ic.store("ivfpq", purged)) == 0
+    assert ic.stats(ic.store("ivfpq", purged))["tombstone_files"] == 0
+    assert ic.read_tombstones(spark, ic.store("ivfpq", purged)) is None
     doomed_ids = {r.vec_id for r in doomed.collect()}
     for tbl in ("vectors", "codes"):
         on_disk = {r.vec_id for r in spark.read.parquet(
@@ -1891,41 +1818,39 @@ def test_ivfpq_purge_tombstones(spark, sf_dir, tmp_path):
         assert got == search(clean, qv)
 
     # purge on an index with no tombstones: clean no-op
-    out2 = clustering.compact_ivfpq_index(
-        spark, purged, max_files_per_cell=10_000, purge_tombstones=True)
+    out2 = ic.compact(
+        spark, ic.store("ivfpq", purged), max_files=10_000, purge=True)
     assert out2["purged_rows"] == 0
     assert search(purged, queries[0]) == before[0]
 
-    # crash mid-purge: heal with recover_ivfpq_index, re-run converges
+    # crash mid-purge: heal with index_commit.recover, re-run converges
     crashed = str(tmp_path / "crashed")
     shutil.copytree(pristine, crashed)
     clustering.ivfpq_index_append(spark, crashed, extra.select("vec_id", "embedding"))
-    clustering.ivfpq_index_delete(spark, crashed, doomed)
+    ic.write_tombstones(ic.store("ivfpq", crashed), doomed, "vec_id")
     probe_fs = mfs.NonAtomicRenameFS()
     probe = str(tmp_path / "probe")
     shutil.copytree(crashed, probe)
-    clustering.compact_ivfpq_index(
-        spark, probe, max_files_per_cell=10_000, purge_tombstones=True,
-        fs=probe_fs)
+    ic.compact(
+        spark, ic.store("ivfpq", probe), probe_fs, max_files=10_000, purge=True)
     # inject a crash somewhere inside the swap/clear sequence
     for crash_at in (2, probe_fs.ops // 2, probe_fs.ops - 1):
         run = str(tmp_path / f"crash{crash_at}")
         shutil.copytree(crashed, run)
         fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
         try:
-            clustering.compact_ivfpq_index(
-                spark, run, max_files_per_cell=10_000, purge_tombstones=True,
-                fs=fs)
+            ic.compact(
+                spark, ic.store("ivfpq", run), fs, max_files=10_000, purge=True)
         except mfs.NonAtomicRenameFS.InjectedCrash:
             mfs.break_writer_lease(mfs.LOCAL_FS, run)
-        clustering.recover_ivfpq_index(run)
+        ic.recover(ic.store("ivfpq", run))
         # whatever state the crash left, search NEVER surfaces doomed ids
         got_mid = search(run, queries[1])
         assert not {r[0] for r in got_mid} & doomed_ids
         # re-run completes the purge
-        clustering.compact_ivfpq_index(
-            spark, run, max_files_per_cell=10_000, purge_tombstones=True)
-        assert clustering.ivfpq_tombstoned_rows(spark, run) == 0
+        ic.compact(
+            spark, ic.store("ivfpq", run), max_files=10_000, purge=True)
+        assert ic.tombstoned_rows(spark, ic.store("ivfpq", run)) == 0
         assert search(run, queries[1]) == before[1]
         shutil.rmtree(run)
 
@@ -1952,20 +1877,20 @@ def test_ivf_purge_tombstones(spark, sf_dir, tmp_path):
     purged = str(tmp_path / "purged")
     shutil.copytree(pristine, purged)
     sim.ivf_index_append(spark, purged, extra)
-    sim.ivf_index_delete(spark, purged, doomed)
+    ic.write_tombstones(ic.store("ivf", purged), doomed, "vec_id")
     clean = str(tmp_path / "clean")
     shutil.copytree(pristine, clean)
     sim.ivf_index_append(spark, clean, survivors)
 
     before = [tuple(r) for r in sim.ivf_topk_indexed(
         spark, purged, 0, k=10, n_probe=2).collect()]
-    assert sim.ivf_tombstoned_rows(spark, purged) > 0
-    out = sim.compact_ivf_index(
-        spark, purged, max_files_per_cell=10_000, purge_tombstones=True)
+    assert ic.tombstoned_rows(spark, ic.store("ivf", purged)) > 0
+    out = ic.compact(
+        spark, ic.store("ivf", purged), max_files=10_000, purge=True)
     assert out["purged_rows"] > 0 and out["tombstones_cleared"]
-    assert sim.ivf_tombstoned_rows(spark, purged) == 0
-    assert sim.ivf_index_stats(purged)["tombstone_files"] == 0
-    assert sim.load_tombstones(spark, purged) is None
+    assert ic.tombstoned_rows(spark, ic.store("ivf", purged)) == 0
+    assert ic.stats(ic.store("ivf", purged))["tombstone_files"] == 0
+    assert ic.read_tombstones(spark, ic.store("ivf", purged)) is None
     got = [tuple(r) for r in sim.ivf_topk_indexed(
         spark, purged, 0, k=10, n_probe=2).collect()]
     want = [tuple(r) for r in sim.ivf_topk_indexed(
@@ -1980,7 +1905,7 @@ def test_signature_table_takedown(spark, sf_dir, tmp_path):
     survivors, re-deleting is idempotent, the corpus-side composition
     (delete_from_merge_table -> read_commit_changes -> takedown) wires
     end-to-end, and a crash mid-tombstone-append heals through
-    recover_signature_table."""
+    index_commit.recover."""
     import shutil
 
     import pytest
@@ -2004,7 +1929,7 @@ def test_signature_table_takedown(spark, sf_dir, tmp_path):
 
     takedown = str(tmp_path / "takedown")
     dd.write_signature_table(stored, takedown)
-    n = dd.delete_signature_entries(spark, takedown, doomed)
+    n = ic.write_tombstones(ic.store("signature", takedown), doomed, "doc_id")
     assert n == doomed.count() > 0
     clean = str(tmp_path / "clean")
     dd.write_signature_table(survivors, clean)
@@ -2018,16 +1943,16 @@ def test_signature_table_takedown(spark, sf_dir, tmp_path):
     assert not {m for _, m, _ in got} & {r.doc_id for r in doomed.collect()}
 
     # idempotent re-delete; ids absent from the table are harmless
-    dd.delete_signature_entries(spark, takedown, doomed)
-    dd.delete_signature_entries(
-        spark, takedown, spark.range(990000, 990003).select(
-            F.col("id").alias("doc_id")))
+    ic.write_tombstones(ic.store("signature", takedown), doomed, "doc_id")
+    ic.write_tombstones(
+        ic.store("signature", takedown),
+        spark.range(990000, 990003).select(F.col("id").alias("doc_id")), "doc_id")
     assert crawl(takedown) == want
 
     # the md5 family shares the read path
     takedown_p = str(tmp_path / "takedown_p")
     dd.write_signature_table(stored, takedown_p, family="md5")
-    dd.delete_signature_entries(spark, takedown_p, doomed)
+    ic.write_tombstones(ic.store("signature", takedown_p), doomed, "doc_id")
     clean_p = str(tmp_path / "clean_p")
     dd.write_signature_table(survivors, clean_p, family="md5")
     got_p = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
@@ -2046,27 +1971,27 @@ def test_signature_table_takedown(spark, sf_dir, tmp_path):
         F.col("_change_type") == "delete").select("doc_id")
     composed = str(tmp_path / "composed")
     dd.write_signature_table(stored, composed)
-    dd.delete_signature_entries(spark, composed, cdc_gone)
+    ic.write_tombstones(ic.store("signature", composed), cdc_gone, "doc_id")
     assert crawl(composed) == want
 
     # crash before the tombstone marker -> rolled back (doomed still
-    # match); heal with recover_signature_table, retry converges
+    # match); heal with index_commit.recover, retry converges
     crashed = str(tmp_path / "crashed")
     shutil.copytree(str(tmp_path / "composed"), crashed)
     shutil.rmtree(crashed + "/_tombstones")
     assert crawl(crashed) != want  # tombstones gone -> doomed match again
     fs = mfs.NonAtomicRenameFS(fail_after_ops=1)
     with pytest.raises(mfs.NonAtomicRenameFS.InjectedCrash):
-        dd.delete_signature_entries(spark, crashed, doomed, fs=fs)
+        ic.write_tombstones(ic.store("signature", crashed), doomed, "doc_id", fs)
     mfs.break_writer_lease(mfs.LOCAL_FS, crashed + ".lock")
-    dd.recover_signature_table(crashed)
-    dd.delete_signature_entries(spark, crashed, doomed)
+    ic.recover(ic.store("signature", crashed))
+    ic.write_tombstones(ic.store("signature", crashed), doomed, "doc_id")
     assert crawl(crashed) == want
 
 
 def test_signature_table_compact_and_purge(spark, sf_dir, tmp_path):
-    """r9: compact_signature_table coalesces an append-fragmented table
-    (crawl answers unchanged, file count down) and purge_tombstones=True
+    """index_commit.compact coalesces an append-fragmented signature table
+    (crawl answers unchanged, file count down) and purge=True
     makes takedown PHYSICAL — post-purge the tombstoned docs' rows are
     off disk, _tombstones/ is cleared, the crawl answer equals a
     survivor-rebuilt table, and a re-run is a no-op. No text is re-read:
@@ -2105,8 +2030,8 @@ def test_signature_table_compact_and_purge(spark, sf_dir, tmp_path):
 
     want_full = crawl(path)
     n_frag = len(files(path))
-    out = dd.compact_signature_table(spark, path, coalesce_files=2)
-    assert out["files_before"] == n_frag and out["files_after"] == 2
+    out = ic.compact(spark, ic.store("signature", path), target_files=2)
+    assert out["files_before"] == n_frag and out["rewritten"] == {"": {"": 2}}
     assert out["purged_rows"] == 0
     assert crawl(path) == want_full
 
@@ -2117,14 +2042,12 @@ def test_signature_table_compact_and_purge(spark, sf_dir, tmp_path):
     assert len(files(path)) > 2
 
     # purge: tombstone, then physically erase
-    dd.delete_signature_entries(spark, path, doomed)
+    ic.write_tombstones(ic.store("signature", path), doomed, "doc_id")
     want_takedown = crawl(path)
-    out2 = dd.compact_signature_table(
-        spark, path, coalesce_files=2, purge_tombstones=True
-    )
+    out2 = ic.compact(spark, ic.store("signature", path), target_files=2, purge=True)
     assert out2["purged_rows"] > 0 and out2["tombstones_cleared"]
     assert not os.path.isdir(path + "/_tombstones")
-    assert dd.load_signature_tombstones(spark, path) is None
+    assert ic.read_tombstones(spark, ic.store("signature", path)) is None
     on_disk = {r.doc_id for r in spark.read.parquet(path).select("doc_id").collect()}
     assert not on_disk & {r.doc_id for r in doomed.collect()}
     assert crawl(path) == want_takedown
@@ -2139,9 +2062,7 @@ def test_signature_table_compact_and_purge(spark, sf_dir, tmp_path):
     assert crawl(path) == crawl(clean)
 
     # re-run: no-op
-    out3 = dd.compact_signature_table(
-        spark, path, coalesce_files=2, purge_tombstones=True
-    )
+    out3 = ic.compact(spark, ic.store("signature", path), target_files=2, purge=True)
     assert out3["purged_rows"] == 0 and not out3["tombstones_cleared"]
     assert crawl(path) == want_takedown
 
@@ -2295,10 +2216,10 @@ def test_takedown_verify_zero_residual_everywhere(spark, sf_dir, tmp_path):
     assert {"snapshot", "changes"} | store_kinds <= kinds(a1)
 
     # both purges: derived stores physically clean; corpus history remains
-    sim.compact_ivf_index(spark, ivf, purge_tombstones=True, id_col="doc_id")
-    clustering.compact_ivfpq_index(spark, ivfpq, purge_tombstones=True,
+    ic.compact(spark, ic.store("ivf", ivf), max_files=8, purge=True, id_col="doc_id")
+    ic.compact(spark, ic.store("ivfpq", ivfpq), max_files=8, purge=True,
                                    id_col="doc_id")
-    dd.compact_signature_table(spark, sig, purge_tombstones=True)
+    ic.compact(spark, ic.store("signature", sig), target_files=8, purge=True)
     a2 = audit()
     assert not (kinds(a2) & store_kinds)
     assert {"snapshot", "changes"} <= kinds(a2)
@@ -3080,8 +3001,8 @@ def test_store_registry_defaults_takedown_and_verify(spark, sf_dir, tmp_path):
     assert out["manual_tables"] == [derived]
     # zero residual in the registered erasable stores after purge; the
     # registered plain table still shows up until ITS pipeline erases it
-    sim.compact_ivf_index(spark, ivf, purge_tombstones=True, id_col="doc_id")
-    dd.compact_signature_table(spark, sig, purge_tombstones=True)
+    ic.compact(spark, ic.store("ivf", ivf), max_files=8, purge=True, id_col="doc_id")
+    ic.compact(spark, ic.store("signature", sig), target_files=8, purge=True)
     a2 = td.takedown_verify(spark, corpus, doomed, id_col="doc_id")
     assert {h["store"] for h in a2} & {ivf, sig} == set()
     assert [h for h in a2 if h["store"] == derived and h["kind"] == "table_rows"]

@@ -1,141 +1,291 @@
-"""Crash-at-every-op sweeps for the STAGED index appends (VERDICT r5 item 1).
+"""Crash-at-every-op sweeps of the derived-store layer (operators/index_commit).
 
-ivf_index_append / pq_index_append commit through the atomic-marker protocol
-in operators/index_commit — the same standard compact_ivf_index set. These
-sweeps inject a crash after EVERY mutating filesystem op of the commit
-(marker PUT, each per-file copy, each delete) under simulated S3 semantics
-(NonAtomicRenameFS: rename = copy+delete, put_atomic all-or-nothing), run
-recovery with a healthy filesystem (simulating restart), and require the
-table to be EXACTLY pre-append or EXACTLY post-append at every crash point —
-never a torn batch — and, when rolled back, that a retry lands the batch.
+One sweep per layer operation, parametrized over the store kinds that
+support it: staged append (single-table for ivf, pq and signature,
+multi-table for ivfpq), tombstone write, compaction and compaction with
+purge. Each sweep injects a crash after EVERY mutating filesystem op of the
+operation under simulated S3 semantics (NonAtomicRenameFS: rename =
+copy+delete, put_atomic all-or-nothing), breaks the dead writer's lease,
+runs ``index_commit.recover`` with a healthy filesystem (the restart) and
+requires at every crash point:
+
+- the store exactly before or exactly after the operation (a compaction of
+  several units may stop between two unit swaps; its content never
+  changes, and a purge never lets a tombstoned row back into a read);
+- search read-back equal to the never-crashed store's, before the
+  operation where the crash rolled it back and after it otherwise;
+- a retry that converges on the never-crashed store;
+
+and, over the sweep, both sides of the commit point. The stores are tiny
+(two IVF cells, a handful of documents), built once per module.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
-
-def _rows(spark, path):
-    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
-
-
-def test_ivf_append_crash_at_every_op_never_tears(spark, sf_dir, tmp_path):
-    emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 140)
-    base = emb.filter(F.col("vec_id") < 100)
-    batch = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
-
-    pristine = str(tmp_path / "pristine")
-    sim.build_ivf_index(base, pristine)
-    before = _rows(spark, pristine + "/vectors")
-
-    # reference post-append content + a probe run to count mutating fs ops
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    assert sim.ivf_index_append(spark, probe, batch, fs=probe_fs) == 40
-    after = _rows(spark, probe + "/vectors")
-    assert len(after) == len(before) + 40
-    total_ops = probe_fs.ops
-    assert total_ops >= 4  # marker put + >=1 cell x (copy + delete) + cleanup
-
-    outcomes = set()
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            sim.ivf_index_append(spark, path, batch, fs=fs)
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            # a crashed writer strands its lease by design; the restart
-            # breaks it after confirming the writer is dead
-            mfs.break_writer_lease(mfs.LOCAL_FS, path)
-        sim.recover_ivf_index(path)  # restart with a healthy filesystem
-        got = _rows(spark, path + "/vectors")
-        assert got in (before, after), f"torn append at crash op {crash_at}"
-        outcomes.add("rolled_back" if got == before else "rolled_forward")
-        if got == before:
-            # pre-marker crash: the batch is simply not there — a retry
-            # must land it cleanly on the healed table
-            assert sim.ivf_index_append(spark, path, batch) == 40
-            assert _rows(spark, path + "/vectors") == after
-        shutil.rmtree(path)
-    # the sweep must actually exercise both sides of the commit point
-    assert outcomes == {"rolled_back", "rolled_forward"}
-
-    # indexed search over a crashed+healed append is bit-identical to the
-    # never-crashed index (VERDICT r5 done-criterion)
-    healed = str(tmp_path / "healed")
-    shutil.copytree(pristine, healed)
-    fs = mfs.NonAtomicRenameFS(fail_after_ops=total_ops - 1)
-    try:
-        sim.ivf_index_append(spark, healed, batch, fs=fs)
-    except mfs.NonAtomicRenameFS.InjectedCrash:
-        pass
-    sim.recover_ivf_index(healed)
-    want = [tuple(r) for r in sim.ivf_topk_indexed(spark, probe, 0, k=10).collect()]
-    got = [tuple(r) for r in sim.ivf_topk_indexed(spark, healed, 0, k=10).collect()]
-    assert got == want
+_PQ = dict(m=2, k=4, max_iters=1, round_decimals=6)
+_BIG = 10_000  # a file-count threshold no unit reaches: only a purge picks units
 
 
-def test_pq_append_crash_at_every_op_never_tears(spark, sf_dir, tmp_path):
-    emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 140)
-    base = emb.filter(F.col("vec_id") < 100)
-    batch = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
+def _text(prefix: str, tail: str = "") -> str:
+    return " ".join(f"{prefix}_{j}" for j in range(30)) + tail
 
-    pristine = str(tmp_path / "pristine")
-    clustering.pq_build_index(
-        base, pristine, m=4, k=8, max_iters=2, round_decimals=6
+
+class _Kind:
+    """One store kind on tiny data: how to build, append to and search it."""
+
+    def __init__(self, spark, sf_dir, name):
+        self.spark, self.name = spark, name
+        self.id_col = "doc_id" if name == "signature" else "vec_id"
+        if name == "signature":
+            docs = [(i, _text(f"tok{i}")) for i in range(4)] + [(9, _text("shared"))]
+            self.base = spark.createDataFrame(docs, "doc_id long, text string")
+            self.batches = [
+                spark.createDataFrame(rows, "doc_id long, text string")
+                for rows in ([(100, _text("new")), (101, _text("other"))],
+                             [(102, _text("third")), (103, _text("fourth"))])
+            ]
+            self.increment = spark.createDataFrame(
+                [(1000, _text("shared", " tail")), (1001, _text("new", " tail"))],
+                "doc_id long, text string",
+            )
+            return
+        emb = (
+            src.load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("label") < 2).orderBy("vec_id").limit(40).collect()
+        )
+        df = spark.createDataFrame(emb[:24], "vec_id long, embedding array<float>, label int")
+        self.base = df.coalesce(1)
+        self.batches = [
+            spark.createDataFrame(
+                [(r.vec_id, r.embedding) for r in emb[lo:lo + 8]],
+                "vec_id long, embedding array<float>",
+            ).coalesce(1)
+            for lo in (24, 32)
+        ]
+        self.query_id = emb[0].vec_id
+        self.query = [float(x) for x in emb[0].embedding]
+
+    def store(self, path):
+        return ic.store(self.name, path)
+
+    def build(self, path):
+        if self.name == "ivf":
+            sim.build_ivf_index(self.base, path)
+        elif self.name == "pq":
+            clustering.pq_build_index(self.base, path, **_PQ)
+        elif self.name == "ivfpq":
+            clustering.build_ivfpq_index(self.base, path, **_PQ)
+        else:
+            dd.write_signature_table(self.base, path)
+
+    def append(self, path, batch, fs=None):
+        if self.name == "ivf":
+            return sim.ivf_index_append(self.spark, path, batch, fs=fs)
+        if self.name == "pq":
+            return clustering.pq_index_append(self.spark, path, batch, fs=fs)
+        if self.name == "ivfpq":
+            return clustering.ivfpq_index_append(self.spark, path, batch, fs=fs)
+        return dd.append_signature_table(batch, path, fs=fs, coalesce_files=1)
+
+    def search(self, path):
+        if self.name == "ivf":
+            out = sim.ivf_topk_indexed(self.spark, path, self.query_id, k=10)
+        elif self.name == "pq":
+            out = clustering.pq_topk_indexed(self.spark, path, self.query, k=10)
+        elif self.name == "ivfpq":
+            out = clustering.ivfpq_topk_indexed(
+                self.spark, path, self.query, k=10, n_probe=2, refine=4
+            )
+        else:
+            out = dd.cross_corpus_neardup_indexed(
+                self.increment, self.spark, path, threshold=0.5
+            )
+            return sorted(tuple(r) for r in out.collect())
+        return [tuple(r) for r in out.collect()]  # ranked: order counts
+
+    def doomed(self, path):
+        """A key frame holding one id the store's search returns."""
+        hit = 9 if self.name == "signature" else next(
+            r[0] for r in self.search(path) if r[0] != self.query_id
+        )
+        return self.spark.createDataFrame([(hit,)], f"{self.id_col} long")
+
+
+def _canon(rows):
+    return tuple(sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows
+    ))
+
+
+def _state(spark, kind, path):
+    """Every data table's rows, the tombstone ids and each unit's file count."""
+    st = kind.store(path)
+    tombs = ic.read_tombstones(spark, st)
+    return (
+        tuple(_canon(spark.read.parquet(st.path(rel)).collect()) for rel in st.tables),
+        _canon(tombs.collect()) if tombs is not None else (),
+        tuple(
+            tuple((unit, len(files)) for unit, files in ic.units(st, rel).items())
+            for rel in st.tables
+        ),
     )
-    before = _rows(spark, pristine + "/codes")
 
+
+def _live(spark, kind, path):
+    st = kind.store(path)
+    return tuple(
+        _canon(ic.read_live(spark, st, rel, kind.id_col).collect()) for rel in st.tables
+    )
+
+
+@pytest.fixture(scope="module")
+def bases(spark, sf_dir, tmp_path_factory):
+    """``bases(name)`` -> (kind, {"base", "fragmented", "tombstoned"} ->
+    pristine path), built on first use: the built store; the same with one
+    more append (two files per index cell); and the fragmented store with
+    one searched id tombstoned."""
+    root = tmp_path_factory.mktemp("store_bases")
+    built = {}
+
+    def get(name):
+        if name not in built:
+            kind = _Kind(spark, sf_dir, name)
+            base = str(root / name / "base")
+            kind.build(base)
+            frag = str(root / name / "fragmented")
+            shutil.copytree(base, frag)
+            kind.append(frag, kind.batches[1])
+            paths = {"base": base, "fragmented": frag}
+            if kind.store(base).tombstones:
+                tomb = str(root / name / "tombstoned")
+                shutil.copytree(frag, tomb)
+                ic.write_tombstones(kind.store(tomb), kind.doomed(tomb), kind.id_col)
+                paths["tombstoned"] = tomb
+            built[name] = kind, paths
+        return built[name]
+
+    return get
+
+
+def _sweep(spark, tmp_path, kind, pristine, op, exact=True):
+    """Crash ``op(path, fs)`` after every mutating fs op, recover, and check
+    the store (module docstring). ``exact``: every crash point leaves the
+    store exactly before or after; otherwise a point may stop between
+    unit swaps, and each point must keep the live rows and the answer."""
+    live, before, answer = (
+        _live(spark, kind, pristine), _state(spark, kind, pristine), kind.search(pristine)
+    )
     probe = str(tmp_path / "probe")
     shutil.copytree(pristine, probe)
     probe_fs = mfs.NonAtomicRenameFS()
-    assert clustering.pq_index_append(spark, probe, batch, fs=probe_fs) == 40
-    after = _rows(spark, probe + "/codes")
-    assert len(after) == len(before) + 40
-    total_ops = probe_fs.ops
-    assert total_ops >= 4
+    op(probe, probe_fs)
+    after, want, total_ops = _state(spark, kind, probe), kind.search(probe), probe_fs.ops
+    assert after != before and total_ops >= 3
+    assert exact or want == answer
 
     outcomes = set()
     for crash_at in range(total_ops):
         path = str(tmp_path / f"run{crash_at}")
         shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
         try:
-            clustering.pq_index_append(spark, path, batch, fs=fs)
+            op(path, mfs.NonAtomicRenameFS(fail_after_ops=crash_at))
         except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path)
-        clustering.recover_pq_index(path)
-        got = _rows(spark, path + "/codes")
-        assert got in (before, after), f"torn append at crash op {crash_at}"
-        outcomes.add("rolled_back" if got == before else "rolled_forward")
-        if got == before:
-            assert clustering.pq_index_append(spark, path, batch) == 40
-            assert _rows(spark, path + "/codes") == after
+            # a crashed writer strands its lease; the restart breaks it
+            # once the writer is known dead
+            mfs.break_writer_lease(mfs.LOCAL_FS, kind.store(path).lease)
+        ic.recover(kind.store(path))
+        got = _state(spark, kind, path)
+        outcome = {before: "rolled_back", after: "rolled_forward"}.get(got, "between")
+        assert not exact or outcome != "between", f"torn at crash op {crash_at}"
+        outcomes.add(outcome)
+        if not exact:
+            assert _live(spark, kind, path) == live, f"live rows at op {crash_at}"
+        expected = answer if outcome == "rolled_back" else want
+        assert kind.search(path) == expected, f"read-back at op {crash_at}"
+        if outcome != "rolled_forward":
+            op(path, None)  # the retry converges on the never-crashed store
+            assert _state(spark, kind, path) == after, f"retry at op {crash_at}"
         shutil.rmtree(path)
-    assert outcomes == {"rolled_back", "rolled_forward"}
+    assert {"rolled_back", "rolled_forward"} <= outcomes
 
-    # search parity across crashed+healed vs never-crashed
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    healed = str(tmp_path / "healed")
-    shutil.copytree(pristine, healed)
-    fs = mfs.NonAtomicRenameFS(fail_after_ops=total_ops - 1)
-    try:
-        clustering.pq_index_append(spark, healed, batch, fs=fs)
-    except mfs.NonAtomicRenameFS.InjectedCrash:
-        pass
-    clustering.recover_pq_index(healed)
-    want = [tuple(r) for r in clustering.pq_topk_indexed(spark, probe, query, k=10).collect()]
-    got = [tuple(r) for r in clustering.pq_topk_indexed(spark, healed, query, k=10).collect()]
-    assert got == want
+
+@pytest.mark.parametrize("name", ["ivf", "pq", "ivfpq", "signature"])
+def test_append_crash_at_every_op(spark, tmp_path, bases, name):
+    """Staged append: one table (ivf, pq, signature) or, for ivfpq, vectors
+    and codes under one root marker — never one table appended without
+    the other."""
+    kind, paths = bases(name)
+    _sweep(spark, tmp_path, kind, paths["base"],
+           lambda path, fs: kind.append(path, kind.batches[0], fs))
+
+
+@pytest.mark.parametrize("name", ["ivf", "ivfpq", "signature"])
+def test_tombstone_write_crash_at_every_op(spark, tmp_path, bases, name):
+    """Tombstone write: the search answers exactly pre-takedown (the doomed
+    id still surfaces) or exactly post-takedown (it never does)."""
+    kind, paths = bases(name)
+    doomed = kind.doomed(paths["base"])
+    _sweep(spark, tmp_path, kind, paths["base"],
+           lambda path, fs: ic.write_tombstones(kind.store(path), doomed, kind.id_col, fs))
+
+
+@pytest.mark.parametrize("name", ["ivf", "pq", "ivfpq", "signature"])
+def test_compact_crash_at_every_op(spark, tmp_path, bases, name):
+    """Compaction of every unit holding more than one file: rows and search
+    never change, and a re-run finishes the units a crash left. A flat
+    table is one unit, so it is exactly before or after."""
+    kind, paths = bases(name)
+    _sweep(spark, tmp_path, kind, paths["fragmented"],
+           lambda path, fs: ic.compact(spark, kind.store(path), fs, max_files=1),
+           exact=not kind.store("").cells)
+
+
+@pytest.mark.parametrize("name", ["ivf", "ivfpq", "signature"])
+def test_compact_purge_crash_at_every_op(spark, tmp_path, bases, name):
+    """Compaction with purge: the search is the takedown answer at every
+    crash point (tombstones are cleared only after the last tombstoned row
+    is off disk), and a re-run converges on the purged store."""
+    kind, paths = bases(name)
+    _sweep(
+        spark, tmp_path, kind, paths["tombstoned"],
+        lambda path, fs: ic.compact(
+            spark, kind.store(path), fs, max_files=_BIG, purge=True, id_col=kind.id_col
+        ),
+        exact=not kind.store("").cells,
+    )
+
+
+def test_recover_refuses_a_live_writer(bases, tmp_path):
+    """Recovery takes the store's writer lease like every mutation: while
+    another owner holds it, marker-less staging may be that writer's batch
+    in flight, so ``recover`` raises and leaves it in place."""
+    kind, paths = bases("ivf")
+    path = str(tmp_path / "ivf")
+    shutil.copytree(paths["base"], path)
+    st = kind.store(path)
+    staging = ic.staging_path(st.path("vectors"), "inflight")
+    os.makedirs(os.path.join(staging, "label=0"))
+    mfs.acquire_writer_lease(mfs.LOCAL_FS, st.lease, owner="live-writer")
+    with pytest.raises(mfs.ConcurrentWriterError):
+        ic.recover(st)
+    assert os.path.isdir(staging)
+    mfs.break_writer_lease(mfs.LOCAL_FS, st.lease)  # the writer is now dead
+    assert staging in ic.recover(st)["removed"]
+    assert not os.path.exists(staging)
 
 
 def test_append_staging_invisible_to_readers(spark, sf_dir, tmp_path):
@@ -148,7 +298,7 @@ def test_append_staging_invisible_to_readers(spark, sf_dir, tmp_path):
     batch = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
     path = str(tmp_path / "ivf")
     sim.build_ivf_index(base, path)
-    before = _rows(spark, path + "/vectors")
+    before = _canon(spark.read.parquet(path + "/vectors").collect())
 
     # crash right before the marker PUT (op 1 is the writer-lease acquire,
     # op 2 the marker): staging fully written, zero commits
@@ -158,348 +308,38 @@ def test_append_staging_invisible_to_readers(spark, sf_dir, tmp_path):
     except mfs.NonAtomicRenameFS.InjectedCrash:
         mfs.break_writer_lease(mfs.LOCAL_FS, path)
     # a reader sees the pre-append table exactly, debris and all
-    assert _rows(spark, path + "/vectors") == before
-    out = sim.recover_ivf_index(path)
+    assert _canon(spark.read.parquet(path + "/vectors").collect()) == before
+    out = ic.recover(ic.store("ivf", path))
     assert out["removed"]  # the stranded staging dir was reclaimed
-    assert _rows(spark, path + "/vectors") == before
-
-
-def test_ivfpq_append_crash_at_every_op_never_tears_either_table(
-    spark, sf_dir, tmp_path
-):
-    """The combined-index append commits vectors AND codes through ONE root
-    marker: at every crash point, after recovery, BOTH tables must be in
-    the SAME state (both exactly pre-append or both exactly post-append) —
-    a codes row whose vector is missing, or vice versa, is a torn index."""
-    emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 140)
-    base = emb.filter(F.col("vec_id") < 100)
-    batch = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
-
-    pristine = str(tmp_path / "pristine")
-    clustering.build_ivfpq_index(
-        base, pristine, m=4, k=8, max_iters=2, round_decimals=6
-    )
-    before_v = _rows(spark, pristine + "/vectors")
-    before_c = _rows(spark, pristine + "/codes")
-
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    assert clustering.ivfpq_index_append(spark, probe, batch, fs=probe_fs) == 40
-    after_v = _rows(spark, probe + "/vectors")
-    after_c = _rows(spark, probe + "/codes")
-    assert len(after_v) == len(before_v) + 40
-    assert len(after_c) == len(before_c) + 40
-    total_ops = probe_fs.ops
-    assert total_ops >= 6  # lease + marker + two tables' moves + cleanup
-
-    outcomes = set()
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            clustering.ivfpq_index_append(spark, path, batch, fs=fs)
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path)
-        clustering.recover_ivfpq_index(path)
-        got_v = _rows(spark, path + "/vectors")
-        got_c = _rows(spark, path + "/codes")
-        assert got_v in (before_v, after_v), f"torn vectors at crash op {crash_at}"
-        assert got_c in (before_c, after_c), f"torn codes at crash op {crash_at}"
-        # cross-table atomicity: never one table appended without the other
-        assert (got_v == before_v) == (got_c == before_c), (
-            f"vectors/codes disagree at crash op {crash_at}"
-        )
-        outcomes.add("rolled_back" if got_v == before_v else "rolled_forward")
-        if got_v == before_v:
-            assert clustering.ivfpq_index_append(spark, path, batch) == 40
-            assert _rows(spark, path + "/vectors") == after_v
-            assert _rows(spark, path + "/codes") == after_c
-        shutil.rmtree(path)
-    assert outcomes == {"rolled_back", "rolled_forward"}
-
-    # search parity: crashed+healed index answers exactly like never-crashed
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    healed = str(tmp_path / "healed")
-    shutil.copytree(pristine, healed)
-    fs = mfs.NonAtomicRenameFS(fail_after_ops=total_ops - 1)
-    try:
-        clustering.ivfpq_index_append(spark, healed, batch, fs=fs)
-    except mfs.NonAtomicRenameFS.InjectedCrash:
-        pass
-    clustering.recover_ivfpq_index(healed)
-    want = [
-        tuple(r)
-        for r in clustering.ivfpq_topk_indexed(
-            spark, probe, query, k=10, n_probe=2, refine=4
-        ).collect()
-    ]
-    got = [
-        tuple(r)
-        for r in clustering.ivfpq_topk_indexed(
-            spark, healed, query, k=10, n_probe=2, refine=4
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_signature_append_crash_at_every_op_never_tears(spark, tmp_path):
-    """append_signature_table commits through the same atomic-marker
-    protocol as the index appends — crash after EVERY mutating fs op, heal
-    with recover_signature_table, and require the stored table to be
-    exactly pre- or post-append, with both sides of the commit point
-    exercised and a clean retry after every rollback."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
-
-    base = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}_{j}" for j in range(30))) for i in range(6)],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, " ".join(f"new_{j}" for j in range(30))),
-         (101, " ".join(f"other_{j}" for j in range(30)))],
-        "doc_id long, text string",
-    )
-
-    def sig_rows(path):
-        return sorted(
-            (r.doc_id, tuple(r.sh), tuple(r.sig))
-            for r in spark.read.parquet(path).collect()
-        )
-
-    pristine = str(tmp_path / "pristine")
-    dd.write_signature_table(base, pristine)
-    before = sig_rows(pristine)
-
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    assert dd.append_signature_table(batch, probe, fs=probe_fs) == 2
-    after = sig_rows(probe)
-    assert len(after) == len(before) + 2
-    total_ops = probe_fs.ops
-    assert total_ops >= 3
-
-    outcomes = set()
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            dd.append_signature_table(batch, path, fs=fs)
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path + ".lock")
-        dd.recover_signature_table(path)
-        got = sig_rows(path)
-        assert got in (before, after), f"torn append at crash op {crash_at}"
-        outcomes.add("rolled_back" if got == before else "rolled_forward")
-        if got == before:
-            assert dd.append_signature_table(batch, path) == 2
-            assert sig_rows(path) == after
-        shutil.rmtree(path)
-    assert outcomes == {"rolled_back", "rolled_forward"}
-
-    # the healed table answers the crawl-dedup query identically to the
-    # never-crashed one
-    healed = str(tmp_path / "healed")
-    shutil.copytree(pristine, healed)
-    fs = mfs.NonAtomicRenameFS(fail_after_ops=total_ops - 1)
-    try:
-        dd.append_signature_table(batch, healed, fs=fs)
-    except mfs.NonAtomicRenameFS.InjectedCrash:
-        mfs.break_writer_lease(mfs.LOCAL_FS, healed + ".lock")
-    dd.recover_signature_table(healed)
-    probe_q = spark.createDataFrame(
-        [(7, " ".join(f"new_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
-    )
-    want = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
-        probe_q, spark, probe, threshold=0.5).collect())
-    got = sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
-        probe_q, spark, healed, threshold=0.5).collect())
-    assert got == want and len(got) == 1
-
-
-def test_signature_takedown_crash_at_every_op_never_tears(spark, tmp_path):
-    """delete_signature_entries (r9) commits tombstones through the same
-    atomic-marker protocol — crash after EVERY mutating fs op, heal with
-    recover_signature_table, and require the crawl-dedup ANSWER to be
-    exactly pre-takedown (doomed doc still matches) or exactly
-    post-takedown (it never matches), with both sides of the commit point
-    exercised and a clean retry after every rollback."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
-
-    base = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}_{j}" for j in range(30))) for i in range(4)]
-        + [(9, " ".join(f"shared_{j}" for j in range(30)))],
-        "doc_id long, text string",
-    )
-    doomed = spark.createDataFrame([(9,)], "doc_id long")
-    # the increment near-dups ONLY doc 9, so takedown flips one match
-    increment = spark.createDataFrame(
-        [(1000, " ".join(f"shared_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
-    )
-
-    pristine = str(tmp_path / "pristine")
-    dd.write_signature_table(base, pristine)
-
-    def crawl(path):
-        return sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
-            increment, spark, path, threshold=0.5).collect())
-
-    before = crawl(pristine)
-    assert len(before) == 1 and before[0][1] == 9
-
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    assert dd.delete_signature_entries(spark, probe, doomed, fs=probe_fs) == 1
-    after = crawl(probe)
-    assert after == []
-    total_ops = probe_fs.ops
-    assert total_ops >= 3
-
-    outcomes = set()
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            dd.delete_signature_entries(spark, path, doomed, fs=fs)
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path + ".lock")
-        dd.recover_signature_table(path)
-        got = crawl(path)
-        assert got in (before, after), f"torn takedown at crash op {crash_at}"
-        outcomes.add("rolled_back" if got == before else "rolled_forward")
-        if got == before:
-            assert dd.delete_signature_entries(spark, path, doomed) == 1
-            assert crawl(path) == after
-        shutil.rmtree(path)
-    assert outcomes == {"rolled_back", "rolled_forward"}
-
-
-def test_signature_compact_purge_crash_at_every_op_never_resurfaces(spark, tmp_path):
-    """compact_signature_table(purge_tombstones=True) commits through an
-    atomic swap marker — crash after EVERY mutating fs op, heal with
-    recover_signature_table, and require (a) the crawl ANSWER to be the
-    takedown answer at every crash point (an erased doc must NEVER
-    resurface once tombstoned — tombstones are cleared only after its
-    rows are off disk), and (b) the healed table to be exactly pre- or
-    post-compact in content, with a clean re-run converging."""
-    from pyspark.sql import functions as F
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
-
-    base = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}_{j}" for j in range(30))) for i in range(4)]
-        + [(9, " ".join(f"shared_{j}" for j in range(30)))],
-        "doc_id long, text string",
-    )
-    doomed = spark.createDataFrame([(9,)], "doc_id long")
-    increment = spark.createDataFrame(
-        [(1000, " ".join(f"shared_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
-    )
-
-    pristine = str(tmp_path / "pristine")
-    dd.write_signature_table(base, pristine)
-    dd.delete_signature_entries(spark, pristine, doomed)
-
-    def crawl(p):
-        return sorted(tuple(r) for r in dd.cross_corpus_neardup_indexed(
-            increment, spark, p, threshold=0.5).collect())
-
-    def sig_rows(p):
-        return sorted(
-            (r.doc_id, tuple(r.sh), tuple(r.sig))
-            for r in spark.read.parquet(p).collect()
-        )
-
-    want = crawl(pristine)
-    assert want == []  # tombstoned: doc 9 must not match
-    before_rows = sig_rows(pristine)
-
-    probe = str(tmp_path / "probe")
-    shutil.copytree(pristine, probe)
-    probe_fs = mfs.NonAtomicRenameFS()
-    out = dd.compact_signature_table(
-        spark, probe, coalesce_files=1, purge_tombstones=True, fs=probe_fs
-    )
-    assert out["purged_rows"] == 1 and out["tombstones_cleared"]
-    after_rows = sig_rows(probe)
-    assert len(after_rows) == len(before_rows) - 1
-    total_ops = probe_fs.ops
-    assert total_ops >= 5
-
-    outcomes = set()
-    for crash_at in range(total_ops):
-        path = str(tmp_path / f"run{crash_at}")
-        shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
-        try:
-            dd.compact_signature_table(
-                spark, path, coalesce_files=1, purge_tombstones=True, fs=fs
-            )
-        except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path + ".lock")
-        dd.recover_signature_table(path)
-        got_rows = sig_rows(path)
-        assert got_rows in (before_rows, after_rows), f"torn at op {crash_at}"
-        outcomes.add(
-            "rolled_back" if got_rows == before_rows else "rolled_forward"
-        )
-        # THE erasure invariant: the crawl answer is the takedown answer
-        # at EVERY crash point (rolled back -> tombstones still filter;
-        # rolled forward -> rows physically gone)
-        assert crawl(path) == want, f"erased doc resurfaced at op {crash_at}"
-        # re-run converges to the purged state
-        dd.compact_signature_table(
-            spark, path, coalesce_files=1, purge_tombstones=True
-        )
-        assert sig_rows(path) == after_rows
-        shutil.rmtree(path)
-    assert outcomes == {"rolled_back", "rolled_forward"}
+    assert _canon(spark.read.parquet(path + "/vectors").collect()) == before
 
 
 def test_compact_purge_lands_crashed_tombstone_append_before_purge(
     spark, tmp_path
 ):
-    """ADVICE r10 (high, a): a delete_signature_entries that crashed AFTER
-    its marker committed but BEFORE the staged tombstone file landed left
-    an erasure that load_signature_tombstones cannot see — the old purge
-    then rmtree'd _tombstones/ and destroyed the committed tombstone while
-    the doc's rows survived the rewrite (silent GDPR-erasure loss).
-    compact_signature_table must land crashed tombstone appends FIRST, so
-    the purge consumes them: erased rows off disk, nothing resurfaces."""
-    import json
-    import os
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
-
+    """A tombstone write that crashed after its marker committed but before
+    the staged tombstone file landed leaves an erasure that
+    ``read_tombstones`` cannot see yet. A purge that cleared the tombstone
+    dir then would destroy the committed tombstone while the doc's rows
+    survive the rewrite (a silently lost erasure). ``compact`` lands
+    crashed tombstone appends first, so the purge consumes them: erased
+    rows off disk, nothing resurfaces."""
     base = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}_{j}" for j in range(30))) for i in range(4)]
-        + [(9, " ".join(f"shared_{j}" for j in range(30)))],
+        [(i, _text(f"tok{i}")) for i in range(4)] + [(9, _text("shared"))],
         "doc_id long, text string",
     )
     increment = spark.createDataFrame(
-        [(1000, " ".join(f"shared_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
+        [(1000, _text("shared", " tail"))], "doc_id long, text string"
     )
     path = str(tmp_path / "table")
     dd.write_signature_table(base, path)
+    st = ic.store("signature", path)
 
     # hand-build the exact crash state: tombstone staged + marker PUT
-    # (the commit point), files never landed — what a process crash
-    # inside delete_signature_entries leaves behind
-    tdir = path + "/_tombstones"
+    # (the commit point), files never landed
+    tdir = st.path(st.tombstones)
     tag, staging = ic.new_staging(tdir)
-    spark.createDataFrame([(9,)], "doc_id long").coalesce(1).write.parquet(
-        staging
-    )
+    spark.createDataFrame([(9,)], "doc_id long").coalesce(1).write.parquet(staging)
     files = ic._staged_files(mfs.LOCAL_FS, staging)
     assert files, "staged tombstone file missing"
     mfs.LOCAL_FS.put_atomic(
@@ -507,67 +347,53 @@ def test_compact_purge_lands_crashed_tombstone_append_before_purge(
         json.dumps({"tag": tag, "files": files}).encode(),
     )
     # committed but unlanded: the plain tombstone read cannot see it yet
-    assert dd.load_signature_tombstones(spark, path) is None
+    assert ic.read_tombstones(spark, st) is None
 
-    out = dd.compact_signature_table(
-        spark, path, coalesce_files=1, purge_tombstones=True
-    )
+    out = ic.compact(spark, st, target_files=1, purge=True)
     # the purge consumed the landed tombstone: rows physically gone
     assert out["purged_rows"] > 0
     assert 9 not in {r.doc_id for r in spark.read.parquet(path).collect()}
-    got = dd.cross_corpus_neardup_indexed(
-        increment, spark, path, threshold=0.5
-    ).collect()
+    got = dd.cross_corpus_neardup_indexed(increment, spark, path, threshold=0.5).collect()
     assert got == [], "erased doc resurfaced after purge"
     # and the consumed tombstone is cleared (no leftover erasure debris)
-    assert dd.load_signature_tombstones(spark, path) is None
+    assert ic.read_tombstones(spark, st) is None
 
 
 def test_compaction_crash_replay_spares_later_tombstones(spark, tmp_path):
-    """ADVICE r10 (high, b): a tombstone committed BETWEEN a post-marker
-    compaction crash and its recovery must survive the stale marker's
-    replay — the marker now records exactly the tombstone files its purge
-    consumed and roll-forward deletes only those, never the whole dir.
-    Sweep every crash point; at each, erase a SECOND doc after the crash,
-    heal, and require both erasures to hold (doc 9 via purge-or-tombstone,
-    doc 8 via its post-crash tombstone) with a clean re-purge landing."""
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import dedup as dd
-
+    """A tombstone committed BETWEEN a post-marker compaction crash and its
+    recovery must survive the stale marker's replay: the marker records
+    exactly the tombstone files its purge consumed and roll-forward deletes
+    only those, never the whole dir. Sweep every crash point; at each,
+    erase a SECOND doc after the crash, heal, and require both erasures to
+    hold (doc 9 via purge-or-tombstone, doc 8 via its post-crash
+    tombstone) with a clean re-purge landing."""
     base = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}_{j}" for j in range(30))) for i in range(4)]
-        + [(9, " ".join(f"shared_{j}" for j in range(30)))]
-        + [(8, " ".join(f"second_{j}" for j in range(30)))],
+        [(i, _text(f"tok{i}")) for i in range(4)]
+        + [(9, _text("shared")), (8, _text("second"))],
         "doc_id long, text string",
     )
-    inc9 = spark.createDataFrame(
-        [(1000, " ".join(f"shared_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
-    )
-    inc8 = spark.createDataFrame(
-        [(2000, " ".join(f"second_{j}" for j in range(30)) + " tail")],
-        "doc_id long, text string",
-    )
+    inc9 = spark.createDataFrame([(1000, _text("shared", " tail"))], "doc_id long, text string")
+    inc8 = spark.createDataFrame([(2000, _text("second", " tail"))], "doc_id long, text string")
 
     pristine = str(tmp_path / "pristine")
     dd.write_signature_table(base, pristine)
-    dd.delete_signature_entries(
-        spark, pristine, spark.createDataFrame([(9,)], "doc_id long")
+    ic.write_tombstones(
+        ic.store("signature", pristine), spark.createDataFrame([(9,)], "doc_id long"), "doc_id"
     )
 
     def crawl(p, inc):
         return sorted(
             tuple(r)
-            for r in dd.cross_corpus_neardup_indexed(
-                inc, spark, p, threshold=0.5
-            ).collect()
+            for r in dd.cross_corpus_neardup_indexed(inc, spark, p, threshold=0.5).collect()
         )
+
+    def purge(p, fs=None):
+        ic.compact(spark, ic.store("signature", p), fs, target_files=1, purge=True)
 
     probe = str(tmp_path / "probe")
     shutil.copytree(pristine, probe)
     probe_fs = mfs.NonAtomicRenameFS()
-    dd.compact_signature_table(
-        spark, probe, coalesce_files=1, purge_tombstones=True, fs=probe_fs
-    )
+    purge(probe, probe_fs)
     total_ops = probe_fs.ops
 
     doomed8 = spark.createDataFrame([(8,)], "doc_id long")
@@ -575,30 +401,24 @@ def test_compaction_crash_replay_spares_later_tombstones(spark, tmp_path):
     for crash_at in range(total_ops):
         path = str(tmp_path / f"run{crash_at}")
         shutil.copytree(pristine, path)
-        fs = mfs.NonAtomicRenameFS(fail_after_ops=crash_at)
+        st = ic.store("signature", path)
         try:
-            dd.compact_signature_table(
-                spark, path, coalesce_files=1, purge_tombstones=True, fs=fs
-            )
+            purge(path, mfs.NonAtomicRenameFS(fail_after_ops=crash_at))
         except mfs.NonAtomicRenameFS.InjectedCrash:
-            mfs.break_writer_lease(mfs.LOCAL_FS, path + ".lock")
-        # the window the advice names: a NEW erasure commits between the
-        # crash and the restart healing
-        dd.delete_signature_entries(spark, path, doomed8)
+            mfs.break_writer_lease(mfs.LOCAL_FS, st.lease)
+        # a NEW erasure commits between the crash and the restart healing
+        ic.write_tombstones(st, doomed8, "doc_id")
         marked_post_commit = any(
-            e.startswith(".sigswap_")
-            for e in mfs.LOCAL_FS.listdir(path)
+            e.startswith(ic.SWAP_PREFIX) for e in mfs.LOCAL_FS.listdir(path)
         )
-        dd.recover_signature_table(path)
+        ic.recover(st)
         # BOTH erasures hold at every crash point
         assert crawl(path, inc9) == [], f"doc 9 resurfaced at op {crash_at}"
         assert crawl(path, inc8) == [], f"doc 8 erasure lost at op {crash_at}"
         if marked_post_commit:
             spared += 1  # replay ran with the later tombstone present
         # a clean purge then lands doc 8's physical erasure too
-        dd.compact_signature_table(
-            spark, path, coalesce_files=1, purge_tombstones=True
-        )
+        purge(path)
         left = {r.doc_id for r in spark.read.parquet(path).collect()}
         assert 8 not in left and 9 not in left
         assert crawl(path, inc8) == [] and crawl(path, inc9) == []

@@ -156,6 +156,36 @@ def test_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_tombstoned_search_keeps_cell_filter_in_the_scan(spark, sf_dir, tmp_path):
+    """The tombstone-aware read (index_commit.read_live) anti-joins the
+    tombstones below the search's probed-cell filter, and that filter still
+    reaches the PartitionFilters of the scan it reads: IVF vectors, IVF-PQ
+    codes. Tombstoned ids never come back."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
+
+    emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
+    gone = spark.createDataFrame([(i,) for i in range(1, 100, 3)], "vec_id long")
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    sim.build_ivf_index(emb, ivf)
+    clustering.build_ivfpq_index(emb, ivfpq, m=4, k=8, max_iters=2, round_decimals=6)
+    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    for kind, path in (("ivf", ivf), ("ivfpq", ivfpq)):
+        ic.write_tombstones(ic.store(kind, path), gone, "vec_id")
+    for out in (
+        sim.ivf_topk_indexed(spark, ivf, query_id=0, k=10, n_probe=2),
+        clustering.ivfpq_topk_indexed(spark, ivfpq, query, k=10, n_probe=2, refine=4),
+    ):
+        plan = _plan(out)
+        assert "LeftAnti" in plan
+        pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert any("label" in p and ("IN" in p.upper() or "In(" in p) for p in pfs), pfs
+        got = {r.vec_id for r in out.collect()}
+        assert got and not got & {i for i in range(1, 100, 3)}
+
+
 def test_ivfpq_probe_prunes_codes_and_vectors(spark, sf_dir, tmp_path):
     """The combined IVF-PQ index must keep BOTH heavy scans partition-pruned:
     the probed-cell filter lands in the codes scan's AND the vectors scan's
@@ -449,7 +479,7 @@ def test_sig_takedown_plan_broadcast_anti_before_banding(spark, sf_dir, registry
 def test_sig_purge_plan_is_bare_scan_again(spark, sf_dir, registry):
     """x2_sig_purge (r9): after the physical purge cleared the tombstones,
     the crawl plan must be back to the never-deleted shape — NO anti-join
-    at all (load_signature_tombstones returned None), same banding."""
+    at all (index_commit.read_tombstones returned None), same banding."""
     df = registry["x2_sig_purge"][0](spark, sf_dir)
     plan = _plan(df)
     assert "LeftAnti" not in plan
@@ -457,7 +487,7 @@ def test_sig_purge_plan_is_bare_scan_again(spark, sf_dir, registry):
 
 
 def test_purge_locate_scan_prunes_to_id_column(spark, sf_dir, tmp_path):
-    """compact_ivfpq_index(purge_tombstones=True)'s cell-locate scan must
+    """index_commit.compact(purge=True)'s cell-locate scan must
     read ONLY the id column (plus the partition column, which costs
     nothing — it is derived from dir names): column pruning is what keeps
     the locate pass a sliver of the table at 100 TB. Pinned on the scan

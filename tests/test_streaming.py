@@ -1411,6 +1411,7 @@ def test_cdc_index_refresh_equals_direct_append_and_survives_crash(spark, sf_dir
     import shutil
 
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+    from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
     from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as io_mod
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
@@ -1490,7 +1491,7 @@ def test_cdc_index_refresh_equals_direct_append_and_survives_crash(spark, sf_dir
         crashed_mid = True
         mfs.break_writer_lease(mfs.LOCAL_FS, crashed)
     assert crashed_mid
-    clustering.recover_ivfpq_index(crashed)
+    ic.recover(ic.store("ivfpq", crashed))
     if rows(crashed, "/vectors") != rows(direct, "/vectors"):
         assert clustering.ivfpq_index_append(spark, crashed, changed) == n_inc
     for table in ("/vectors", "/codes"):

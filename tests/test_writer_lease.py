@@ -1,5 +1,5 @@
-"""Writer-lease enforcement of the single-writer contract (VERDICT r5
-item 7): merge_micro_batch / vacuum_merge_table / compact_ivf_index /
+"""Writer-lease enforcement of the single-writer contract:
+merge_micro_batch / vacuum_merge_table / index_commit.compact /
 ivf_index_append / pq_index_append take the table's lease, so a concurrent
 second writer FAILS LOUDLY (ConcurrentWriterError) instead of corrupting —
 and a lease stranded by a dead writer is reclaimable (TTL expiry or
@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import clustering
+from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import similarity as sim
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
@@ -75,28 +76,32 @@ def test_lease_refresh_and_info(tmp_path):
 
 
 def test_ivf_index_stats_reports_debris_and_lease(spark, sf_dir, tmp_path):
-    """ivf_index_stats: clean index -> zero debris; a crashed append leaves
-    visible staging debris and the stranded lease; recovery zeroes it."""
+    """index_commit.stats: clean index -> zero debris; a crashed append
+    leaves visible staging debris and the stranded lease; recovery zeroes
+    it."""
     emb = src.load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 120)
     path = str(tmp_path / "ivf")
     sim.build_ivf_index(emb.filter(F.col("vec_id") < 100), path)
-    clean = sim.ivf_index_stats(path)
+    st = ic.store("ivf", path)
+    clean = ic.stats(st)
+    assert clean["lease"] is None
+    clean = clean["vectors"]
     assert clean["cells"] >= 2 and clean["data_files"] >= clean["cells"]
     assert clean["append_staging_dirs"] == clean["append_markers"] == 0
-    assert clean["lease"] is None
 
     batch = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
     fs = mfs.NonAtomicRenameFS(fail_after_ops=1)  # die before the marker
     with pytest.raises(mfs.NonAtomicRenameFS.InjectedCrash):
         sim.ivf_index_append(spark, path, batch, fs=fs)
-    dirty = sim.ivf_index_stats(path)
-    assert dirty["append_staging_dirs"] == 1  # the debris is VISIBLE
+    dirty = ic.stats(st)
+    assert dirty["vectors"]["append_staging_dirs"] == 1  # the debris is VISIBLE
     assert dirty["lease"] is not None  # ...and so is the stranded lease
 
     mfs.break_writer_lease(mfs.LOCAL_FS, path)
-    sim.recover_ivf_index(path)
-    healed = sim.ivf_index_stats(path)
-    assert healed["append_staging_dirs"] == healed["append_markers"] == 0
+    ic.recover(st)
+    healed = ic.stats(st)
+    assert healed["vectors"]["append_staging_dirs"] == 0
+    assert healed["vectors"]["append_markers"] == 0
     assert healed["lease"] is None
 
 
@@ -175,7 +180,7 @@ def test_ivf_maintenance_refuses_concurrent_writer(spark, sf_dir, tmp_path):
     with pytest.raises(mfs.ConcurrentWriterError):
         sim.ivf_index_append(spark, path, batch)
     with pytest.raises(mfs.ConcurrentWriterError):
-        sim.compact_ivf_index(spark, path, max_files_per_cell=0)
+        ic.compact(spark, ic.store("ivf", path), max_files=0)
     # refused writers changed nothing
     assert sorted(
         tuple(r) for r in spark.read.parquet(path + "/vectors").collect()
