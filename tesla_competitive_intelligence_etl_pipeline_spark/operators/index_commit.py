@@ -421,8 +421,9 @@ def compact(
     with mfs.leased(fs, st.lease, lease_owner):
         _recover(fs, st)
         tomb_files = _data_files(fs, st.path(st.tombstones)) if purge else []
+        # duplicate ids change no semi or anti join: no distinct
         ids = (
-            spark.read.parquet(st.path(st.tombstones)).select(id_col).distinct()
+            spark.read.parquet(st.path(st.tombstones)).select(id_col)
             if tomb_files else None
         )
         plan = []  # (table, unit, its files, drops tombstoned rows)
@@ -523,7 +524,7 @@ def tombstoned_rows(spark, st: Store, fs=None, id_col: str = "vec_id") -> int:
     if tombs is None:
         return 0
     id_col = st.id_col or id_col
-    ids = F.broadcast(tombs.select(id_col).distinct())
+    ids = F.broadcast(tombs.select(id_col))
     return sum(
         spark.read.parquet(st.path(rel)).join(ids, id_col, "semi").count()
         for rel in st.tables

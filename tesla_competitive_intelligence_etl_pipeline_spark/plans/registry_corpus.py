@@ -210,9 +210,9 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, ts) pairs per step shuffle; cohorts shrink monotonically."""
     from tesla_competitive_intelligence_etl_pipeline_spark.operators import funnel as fu
 
-    # r13: spread keyed on user_id — every step groupBy reuses it (§2.4)
-    ev = src.spread(src.load_events(spark, sf_dir), "user_id")
-    return fu.funnel_counts(ev, ["signup", "view", "click", "purchase"])
+    return fu.funnel_counts(
+        src.load_events(spark, sf_dir), ["signup", "view", "click", "purchase"]
+    )
 
 
 @register(

@@ -1267,9 +1267,7 @@ def evt_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows (an event at exactly start+gap joins the session; pinned in
     test_streaming.py::test_session_gap_boundary_matches_session_window),
     so batch, streaming, and oracle agree on boundary-straddling gaps."""
-    # r13: spread keyed on the session key — both windows and the final
-    # groupBy share this one exchange (guide §2.4/§2.5)
-    ev = src.spread(src.load_events(spark, sf_dir), "user_id")
+    ev = src.load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = 1800 * 1_000_000
     flagged = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(

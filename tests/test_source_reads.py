@@ -1,13 +1,16 @@
 """The source read contract (sources.io.read_parquet): one parquet footer
 job per file identity per session, none on later reads of the same file; a
 rewritten file or a changed type-inference conf re-infers; a directory of
-part files keeps the plain inferred read."""
+part files keeps the plain inferred read. Also ``spread``'s rule: a scan
+with too few partitions is repartitioned only when the relations it reads
+reach ``SPREAD_MIN_BYTES``, decided without a job."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 import os
+import random
 import uuid
 from datetime import datetime
 
@@ -17,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from perfbench.workloads import ANALYTICS
+from tests import exchanges as X
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import io as src
 
 
@@ -123,3 +127,57 @@ def test_stream_events_follows_a_rewritten_events_file(spark, tmp_path):
     ev = strm.stream_events(spark, str(tmp_path))
     assert ev.isStreaming
     assert "props" in ev.columns and ev.schema["ts"].dataType.typeName() == "timestamp"
+
+
+def _spread_tables(tmp_path):
+    """One single-row-group table below the spread floor and one above it,
+    uncompressed random text so the file's bytes are the estimate."""
+    rng = random.Random(7)
+    for name, rows in (("small", 200), ("big", 4000)):
+        table = pa.table(
+            {"k": list(range(rows)), "s": ["%0200x" % rng.getrandbits(800) for _ in range(rows)]}
+        )
+        pq.write_table(
+            table, str(tmp_path / f"{name}.parquet"), compression="none", use_dictionary=False
+        )
+    sizes = {n: os.path.getsize(tmp_path / f"{n}.parquet") for n in ("small", "big")}
+    assert sizes["small"] < src.SPREAD_MIN_BYTES <= sizes["big"]
+    return str(tmp_path)
+
+
+def _spreads(spark, df) -> bool:
+    out, jobs = _jobs(spark, lambda: src.spread(df, "k"))
+    assert jobs == 0  # the decision only plans df
+    return out is not df
+
+
+def test_spread_only_above_the_size_floor(spark, tmp_path):
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a one-slot session never spreads")
+    root = _spread_tables(tmp_path)
+    small = src.load_table(spark, root, "small")
+    assert small.rdd.getNumPartitions() == 1
+    out = src.spread(small, "k")
+    assert out is small
+    out.collect()
+    assert not [s for s in X.shuffles(out) if "REPARTITION_BY_NUM" in s]
+
+    big = src.load_table(spark, root, "big")
+    assert big.rdd.getNumPartitions() == 1
+    out = src.spread(big, "k")
+    assert len(out.collect()) == 4000
+    (shuffle,) = [s for s in X.shuffles(out) if "REPARTITION_BY_NUM" in s]
+    assert shuffle.startswith("hashpartitioning(k#")
+    # the rule reads the scanned bytes, not a projection's narrower estimate
+    proj = big.select("k")
+    assert proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < src.SPREAD_MIN_BYTES
+    assert src.spread(proj, "k") is not proj
+
+
+def test_spread_decides_without_a_job_and_alike_in_shared_scans(spark, tmp_path):
+    root = _spread_tables(tmp_path)
+    bare = {n: _spreads(spark, src.load_table(spark, root, n)) for n in ("small", "big")}
+    with src.shared_scans(spark, root, "small", "big"):
+        shared = {n: _spreads(spark, src.load_table(spark, root, n)) for n in ("small", "big")}
+    assert shared == bare
+    assert bare == {"small": False, "big": spark.sparkContext.defaultParallelism > 1}
