@@ -1,41 +1,47 @@
-"""Distributed k-means (Lloyd) over embedding columns — corpus clustering
-for training-data curation (domain balancing, dedup-aware sampling strata,
-topic mixture analysis).
+"""Distributed k-means (Lloyd) over embedding columns, for training-data
+curation (domain balancing, dedup-aware sampling strata, topic mixture
+analysis), and product quantization (PQ) built on it.
 
-Scale design (the iterative-algorithm pattern, like operators/dedup
-connected components):
+One Lloyd loop (``_lloyd``) trains both: ``kmeans`` is its one-subspace
+case, and ``pq_train`` runs all m subspaces of a PQ codebook in it at once.
 
-- **Centroids live on the driver** (k x dim floats — a few KB) and enter each
-  iteration's plan as literal arrays, so assignment is a pure map-side
-  expression: no join, no shuffle to label a vector.
-- **The update step shuffles k rows, not the corpus.** Per-cluster vector
-  sums use MLlib's ``Summarizer`` typed aggregator — one JVM-side hash
-  aggregate with map-side partial combine whose plan is constant-size at
-  any embedding width; only (cluster, count, sum-vector) rows cross the
-  wire. The posexplode formulation (shuffle n x dim rows) is exactly what
-  this avoids.
-- **One pass per iteration**, fixed iteration cap + early stop on centroid
-  drift; the per-iteration driver collect is k rows (the same sanctioned
-  tiny-collect as the IVF centroid table).
+- **Centroids live on the driver** (k x dim floats, a few KB) and enter each
+  iteration's plan as one literal, so assignment is a pure map-side
+  expression: no join, no shuffle to label a vector. Every subspace is
+  assigned against its own codebook inside the same expression.
+- **The update step shuffles m x k rows, not the corpus.** Per-(subspace,
+  cluster) vector sums use MLlib's ``Summarizer`` typed aggregator: one
+  JVM-side hash aggregate with map-side partial combine whose plan is
+  constant-size at any embedding width; only (sub, cluster, count,
+  sum-vector) rows cross the wire.
+- **One pass per iteration** over one persisted (id, vector) scan, whatever
+  m is, with a fixed iteration cap. A subspace stops on its own once its
+  largest centroid shift falls below ``tol``: it freezes and leaves the
+  later iterations. The per-iteration driver collect is m x k rows.
 - Deterministic: seeds are the k vectors with the smallest stable md5
-  bucket of their id (engine-portable, no rand()), ties by id; argmin over
-  (distance, cluster) struct breaks distance ties by lowest cluster index.
+  bucket of their id (engine-portable, no rand()), ties by id, and every
+  subspace is seeded from the same k rows; argmin over (distance, cluster)
+  breaks distance ties by lowest cluster index.
+- Preconditions are checked in the plan: a non-null vector whose length
+  differs from the centroids' raises through ``raise_error`` inside the
+  assignment expression (no extra job).
 
-Driver-memory bound (the 100x operator's arithmetic): centroid state is
-k x dim x 8 B held on the driver AND serialized into each iteration's plan
-as a literal — k=8/dim=64 is 4 KiB; k=4,096/dim=1,024 is 32 MiB (fine);
-k=65,536/dim=4,096 is ~2 GiB and does NOT fit the literal-broadcast
-pattern. Escape hatch at that scale — IMPLEMENTED as
-``assign_clusters_join`` (r6): centroids as a (cluster, centroid)
-DataFrame, broadcast-join + one min/max aggregate per point, no
-driver-held state; pinned bit-identical to the literal path (and to
-ivf_index_append's cosine argmax) in tests. The literal form stays the
-default because typical curation clusterings (k <= a few thousand) sit
-far below the bound and it saves a join per iteration.
+Driver-memory bound: centroid state is k x dim x 8 B held on the driver
+AND serialized into each iteration's plan as a literal. k=8/dim=64 is
+4 KiB; k=4,096/dim=1,024 is 32 MiB (fine); k=65,536/dim=4,096 is ~2 GiB
+and does NOT fit the literal pattern. Past it use ``assign_clusters_join``
+and ``kmeans_df``: centroids as a (cluster, centroid) DataFrame,
+broadcast-join + one min/max aggregate per point, no driver-held state;
+pinned bit-identical to the literal path (and to ivf_index_append's cosine
+argmax) in tests. The literal form stays the default because typical
+curation clusterings (k <= a few thousand) sit far below the bound and it
+saves a join per iteration.
 """
 
 from __future__ import annotations
 
+import contextlib
+import threading
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +50,58 @@ from pyspark.sql import functions as F
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import index_commit as ic
 from tesla_competitive_intelligence_etl_pipeline_spark.operators.sampling import stable_bucket
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
+
+
+def _sq_dist(a, b):
+    """Squared L2 distance of two array<double> columns, folded left to
+    right: the one distance every assignment, update shift and ADC table
+    here computes."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _sq_dist_py(a: list[float], b: list[float]) -> float:
+    """``_sq_dist`` on the driver, for centroid shifts and query tables."""
+    return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _matrix(rows: list[list[float]]):
+    """A list of vectors as one array<array<double>> literal."""
+    return F.lit([[float(v) for v in r] for r in rows])
+
+
+def _slice_subspace(vec, sub: int, sub_dim: int):
+    """Subvector for subspace ``sub`` (arrays are 1-indexed in F.slice)."""
+    return F.slice(vec, sub * sub_dim + 1, sub_dim)
+
+
+def _length_checked(vec, dim, value):
+    """``value``, or an error raised in the plan when the non-null vector
+    ``vec`` is not ``dim`` (an int column) long. Null vectors pass."""
+    return F.when(
+        vec.isNotNull() & (F.size(vec) != dim),
+        F.raise_error(F.format_string(
+            "vector of length %d, expected length %d", F.size(vec), dim
+        )),
+    ).otherwise(value)
+
+
+def _nearest(vec, centroids):
+    """Argmin struct ``(d, j)`` of the array<double> column ``vec`` over
+    the array<array<double>> column ``centroids``: the squared distance
+    ``d`` to the nearest centroid and its index ``j``, distance ties to the
+    lowest index, so assignment is total. All centroids are scanned by a
+    single ``transform`` lambda, so the expression is constant-size in both
+    k and dim. Raises when a non-null vector's length differs from the
+    centroids'."""
+    best = F.array_min(F.transform(
+        centroids,
+        lambda c, j: F.struct(_sq_dist(vec, c).alias("d"), j.alias("j")),
+    ))
+    return _length_checked(vec, F.size(F.get(centroids, 0)), best)
 
 
 def assign_clusters(
@@ -56,27 +114,9 @@ def assign_clusters(
     distance go to the lowest cluster index, so assignment is total.
     ``with_distance`` also emits ``sq_dist`` (the distance to the assigned
     centroid) from the SAME argmin expression — consumers that need both
-    must not pay the k x dim distance computation twice.
-
-    All k centroids enter the plan as ONE 2-D array literal scanned by a
-    single ``transform`` lambda, so the expression tree is constant-size in
-    both k and dim. The earlier struct-per-centroid form (k aggregate
-    subtrees over k*dim literal nodes) cost ~1.4 s per iteration at
-    k=8/dim=64 in analysis + codegen alone; this form measures ~0.5 s/iter
-    for the same job."""
-    vec = F.col(vec_col).cast("array<double>")
-    pairs = F.transform(
-        F.lit([[float(v) for v in c] for c in centroids]),
-        lambda c, j: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            j.alias("j"),
-        ),
-    )
-    best = F.array_min(pairs)
+    must not pay the k x dim distance computation twice. A non-null vector
+    whose length differs from the centroids' raises."""
+    best = _nearest(F.col(vec_col).cast("array<double>"), _matrix(centroids))
     out = df.withColumn("cluster", best.getField("j"))
     if with_distance:
         out = out.withColumn("sq_dist", best.getField("d"))
@@ -103,11 +143,10 @@ def assign_clusters_join(
     cluster_col: str = "cluster",
     centroid_col: str = "centroid",
 ) -> DataFrame:
-    """The documented ESCAPE HATCH for centroid state too big for a plan
-    literal (module docstring: k x dim beyond ~10^8 floats — k=65,536 at
-    dim 4,096 is ~2 GiB and cannot ride the literal/driver pattern), now
-    implemented rather than promised (r6): centroids arrive as a
-    (cluster, centroid) DataFrame, each row is scored against ALL centroids
+    """The ESCAPE HATCH for centroid state too big for a plan literal
+    (module docstring: k x dim beyond ~10^8 floats — k=65,536 at dim 4,096
+    is ~2 GiB and cannot ride the literal/driver pattern): centroids
+    arrive as a (cluster, centroid) DataFrame, each row is scored against ALL centroids
     through a BROADCAST nested-loop join, and one min/max aggregate per row
     picks the assignment — no driver-held centroid state anywhere.
 
@@ -119,20 +158,15 @@ def assign_clusters_join(
     ``assign_clusters`` below ~10^7-10^8 centroid floats; switch to this
     past it (or when centroids already live in a table).
 
-    ``metric``: 'l2' matches assign_clusters bit-for-bit (same zip_with
-    fold, same ties-to-lowest-cluster via min over (dist, cluster));
-    'cosine' matches ivf_index_append's argmax (round-9 cosine, max over
-    (sim, cell) — its tie rule) so an IVF deployment can swap it in for
+    ``metric``: 'l2' matches assign_clusters bit-for-bit (same
+    ``_sq_dist`` fold, same ties-to-lowest-cluster via min over (dist,
+    cluster)); 'cosine' matches ivf_index_append's argmax (cosine rounded
+    to 9 decimals, max over (sim, cell) — its tie rule) so an IVF deployment can swap it in for
     the append's assignment. Equivalence is pinned in tests."""
     vec = F.col(vec_col).cast("array<double>")
     cent = F.col(centroid_col).cast("array<double>")
     if metric == "l2":
-        score = F.aggregate(
-            F.zip_with(vec, cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        best = F.min(F.struct(score.alias("s"), F.col(cluster_col).alias("j")))
+        best = F.min(F.struct(_sq_dist(vec, cent).alias("s"), F.col(cluster_col).alias("j")))
     elif metric == "cosine":
         from tesla_competitive_intelligence_etl_pipeline_spark.operators.similarity import cosine
 
@@ -159,31 +193,125 @@ def assign_clusters_join(
     return out.drop("__s")
 
 
-def _cluster_stats(
-    assigned: DataFrame, vec_col: str, dim: int
-) -> dict[int, tuple[int, list[float]]]:
-    """Per-cluster (count, per-dimension sums), collected driver-side
-    (k rows x dim values — the sanctioned tiny collect of the update step).
+_FALLBACK_THRESHOLD = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+_FALLBACK_LOCK = threading.Lock()
 
-    ONE hash-aggregate job at ANY embedding width: the vector sum uses
-    MLlib's ``Summarizer`` typed aggregator (JVM-side, map-side partial
-    combine, k rows shuffled), so the plan holds a single aggregate
-    expression instead of ``dim`` per-dimension SUMs. The earlier chunked
-    per-dimension form (VERDICT r3 item 4) bounded codegen at wide dims but
-    still paid ceil(dim/256) jobs; this is dim-independent in both plan size
-    and job count — dim 4096 is the same one job as dim 64."""
+
+@contextlib.contextmanager
+def _fallback_scaled(spark: SparkSession, m: int):
+    """Scale the session's object-hash-aggregate fallback threshold by
+    ``m`` for the block, then restore it. One block at a time per process,
+    so two trainings cannot interleave their raise and restore."""
+    with _FALLBACK_LOCK:
+        prev = spark.conf.get(_FALLBACK_THRESHOLD)
+        spark.conf.set(_FALLBACK_THRESHOLD, str(int(prev) * m))
+        try:
+            yield
+        finally:
+            spark.conf.set(_FALLBACK_THRESHOLD, prev)
+
+
+def _lloyd(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    m: int,
+    k: int,
+    max_iters: int,
+    tol: float,
+    round_decimals: int | None,
+) -> list[list[list[float]]]:
+    """Lloyd's k-means on each of the m equal-width subspaces of
+    ``vec_col`` at once; returns codebooks[sub][cluster] -> centroid.
+
+    ``(id, vector)`` is spread across cores (small single-file inputs
+    otherwise iterate on ONE partition) and persisted once; the persist is
+    released before returning. One collect takes the k seed rows, shared
+    by every subspace, and ``dim`` from them; ``dim`` must be divisible by
+    ``m``. Each iteration is one job pair: the persisted rows are exploded
+    into one (sub, slice) row per subspace still training, each slice is
+    assigned against its own subspace's codebook, and ONE ``Summarizer``
+    aggregate grouped by (sub, cluster) returns the m x k vector sums (one
+    aggregate expression at any width, so the plan and the job count do not
+    grow with dim or m). Means and shifts are computed on the driver; empty
+    clusters keep their centroid, and a subspace whose largest squared
+    centroid shift falls below ``tol`` freezes and leaves the later
+    iterations. Each subspace so follows exactly the steps of a one-subspace
+    run over its slice alone.
+
+    The aggregate holds up to m x k Summarizer buffers per task, where a
+    one-subspace run holds k. Past the session's fallback threshold (128
+    buffers by default) Spark finishes the task sort-based and merges
+    partial sums, which moves their last bits, so the iterations run under
+    ``_fallback_scaled``: each subspace keeps the buffer budget, and the
+    sums, of a run on its own. The buffers total k x dim doubles, the size
+    of the centroid literal the plan already carries."""
     from pyspark.ml.functions import array_to_vector, vector_to_array
     from pyspark.ml.stat import Summarizer
 
-    vec = F.col(vec_col).cast("array<double>")
-    rows = (
-        assigned.select("cluster", array_to_vector(vec).alias("__v"))
-        .groupBy("cluster")
-        .agg(F.count("*").alias("n"), Summarizer.sum(F.col("__v")).alias("s"))
-        .select("cluster", "n", vector_to_array("s").alias("s"))
-        .collect()
-    )
-    return {r["cluster"]: (r["n"], list(r["s"])) for r in rows}
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
+
+    def _round(cents):
+        if round_decimals is None:
+            return cents
+        return [[round(v, round_decimals) for v in c] for c in cents]
+
+    base = spread(
+        df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")),
+        id_col,
+    ).persist()
+    try:
+        seeds = [
+            list(r["__v"])
+            for r in base.orderBy(
+                stable_bucket(F.col(id_col), 1 << 31).asc(), F.col(id_col).asc()
+            ).limit(k).collect()
+        ]
+        if not seeds:
+            raise ValueError("empty input (or train_fraction sampled zero rows)")
+        dim = len(seeds[0])
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m {m}")
+        if len(seeds) < k:
+            warnings.warn(
+                f"k={k} but input has only {len(seeds)} rows; "
+                f"proceeding with k={len(seeds)}",
+                stacklevel=3,
+            )
+        w = dim // m
+        books = [_round([s[sub * w:(sub + 1) * w] for s in seeds]) for sub in range(m)]
+        vec = F.col("__v")
+        active = list(range(m))
+        with _fallback_scaled(df.sparkSession, m):
+            for _ in range(max_iters):
+                parts = base.select(
+                    F.inline(_length_checked(vec, F.lit(dim), F.array(*[
+                        F.struct(F.lit(sub).alias("sub"), _slice_subspace(vec, sub, w).alias("sv"))
+                        for sub in active
+                    ])))
+                )
+                books_lit = F.array(*[_matrix(b) for b in books])
+                best = _nearest(F.col("sv"), F.get(books_lit, F.col("sub")))
+                stats = (
+                    parts.groupBy("sub", best.getField("j").alias("cluster"))
+                    .agg(F.count("*").alias("n"), Summarizer.sum(array_to_vector("sv")).alias("s"))
+                    .select("sub", "cluster", "n", vector_to_array("s").alias("s"))
+                    .collect()
+                )
+                new_books = {sub: list(books[sub]) for sub in active}
+                for r in stats:
+                    new_books[r["sub"]][r["cluster"]] = [v / r["n"] for v in r["s"]]
+                for sub, new in new_books.items():
+                    new = _round(new)
+                    shift = max(_sq_dist_py(a, b) for a, b in zip(books[sub], new))
+                    books[sub] = new
+                    if shift < tol:
+                        active.remove(sub)
+                if not active:
+                    break
+    finally:
+        base.unpersist()
+    return books
 
 
 def kmeans(
@@ -195,12 +323,10 @@ def kmeans(
     tol: float = 1e-6,
     round_decimals: int | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Lloyd's k-means. Returns (assignments df with a ``cluster`` column,
-    final centroids). ``df`` is scanned once per iteration, so it is
-    repartitioned across cores (small single-file inputs otherwise iterate
-    on ONE partition) and persisted for the iteration loop; the persist is
-    released before returning (the returned assignment plan recomputes from
-    the final centroids — no storage leak in long-lived sessions).
+    """Lloyd's k-means: the one-subspace case of ``_lloyd``. Returns
+    (assignments df with a ``cluster`` column, final centroids). The
+    assignment plan recomputes from the final centroids, so no persisted
+    data outlives the call.
 
     ``round_decimals``: round each updated centroid component (driver-side,
     Python round) to this many decimals per iteration. This makes the final
@@ -213,51 +339,8 @@ def kmeans(
     not change clustering quality, it pins reproducibility."""
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
 
-    df = spread(df, id_col).persist()
-    try:
-        # deterministic, engine-portable seeding: k lowest stable-bucket rows
-        # (r13, guide §1.2 step 1 — one fewer pass: the former dim-probe
-        # `first()` job is folded into this collect; dim comes from seeds)
-        seeds = (
-            df.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-            .orderBy(stable_bucket(F.col(id_col), 1 << 31).asc(), F.col(id_col).asc())
-            .limit(k)
-            .collect()
-        )
-        if not seeds:
-            raise ValueError("kmeans: empty input (or empty training sample)")
-        dim = len(seeds[0]["v"])
-        if len(seeds) < k:
-            warnings.warn(
-                f"kmeans: k={k} but input has only {len(seeds)} rows; "
-                f"proceeding with k={len(seeds)}",
-                stacklevel=2,
-            )
-            k = len(seeds)
-        centroids = [list(r["v"]) for r in seeds]
-
-        if round_decimals is not None:
-            centroids = [[round(v, round_decimals) for v in c] for c in centroids]
-        for _ in range(max_iters):
-            assigned = assign_clusters(df, vec_col, centroids)
-            stats = _cluster_stats(assigned, vec_col, dim)
-            new_centroids = list(centroids)  # empty clusters keep their centroid
-            for c, (n, sums) in stats.items():
-                new_centroids[c] = [s / n for s in sums]
-            if round_decimals is not None:
-                new_centroids = [
-                    [round(v, round_decimals) for v in c] for c in new_centroids
-                ]
-            shift = max(
-                sum((a - b) * (a - b) for a, b in zip(old, new))
-                for old, new in zip(centroids, new_centroids)
-            )
-            centroids = new_centroids
-            if shift < tol:
-                break
-    finally:
-        df.unpersist()
-    return assign_clusters(df, vec_col, centroids), centroids
+    (centroids,) = _lloyd(df, vec_col, id_col, 1, k, max_iters, tol, round_decimals)
+    return assign_clusters(spread(df, id_col), vec_col, centroids), centroids
 
 
 def kmeans_df(
@@ -270,7 +353,7 @@ def kmeans_df(
     round_decimals: int | None = None,
     reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """DataFrame-RESIDENT Lloyd — the huge-k twin of ``kmeans`` (r6): the
+    """DataFrame-RESIDENT Lloyd — the huge-k twin of ``kmeans``: the
     centroid state never touches the driver. Assignment goes through
     assign_clusters_join (broadcast join, no plan literal), the update is a
     groupBy(cluster) Summarizer aggregate whose result STAYS a (cluster,
@@ -279,7 +362,7 @@ def kmeans_df(
     past the literal form's ~10^8-float centroid bound (module docstring);
     below it, ``kmeans`` saves a join per iteration.
 
-    Switch rule, MEASURED (r7 crossover sweep, SCALING.md): there is no
+    Switch rule, MEASURED (crossover sweep in SCALING.md): there is no
     performance crossover — the df/literal ratio WIDENS with k (1.55x at
     k=128, 2.07x at k=512, 2.43x at k=1024 on 16x sf0.1) because the join
     fan-out is also O(k) per row while the literal form does the same
@@ -290,8 +373,8 @@ def kmeans_df(
     Semantics mirror ``kmeans`` exactly — same stable-md5 seeding order,
     same ties-to-lowest-cluster argmin, same empty-cluster and early-stop
     rules; ``round_decimals`` uses HALF_EVEN (F.bround) where the literal
-    form uses Python round() — both HALF_EVEN, but on different operands
-    (ADVICE r6): round() acts on the exact binary double, F.bround on the
+    form uses Python round() — both HALF_EVEN, but on different operands:
+    round() acts on the exact binary double, F.bround on the
     shortest decimal repr (Java BigDecimal.valueOf). They agree except when
     a centroid component's shortest repr is an EXACT tie at the target
     scale (e.g. 2.675 at 2 decimals — repr-tie rounds to 2.68, the binary
@@ -299,9 +382,10 @@ def kmeans_df(
     shortest-repr tie at 6 decimals is a measure-zero event the pinned-data
     tests would catch deterministically if the fixtures ever produced one;
     on any tie-free input the two variants produce IDENTICAL centroids and
-    assignments (pinned in tests). Per-iteration centroid lineage is truncated (localCheckpoint;
-    ``reliable=True`` for decommissioning-prone clusters, as in
-    operators/dedup). Returns (assignments df, (cluster, centroid) df).
+    assignments (pinned in tests). Per-iteration centroid lineage is
+    truncated (localCheckpoint; ``reliable=True`` for decommissioning-prone
+    clusters, as in operators/dedup). Returns (assignments df, (cluster,
+    centroid) df).
 
     Precondition: ``id_col`` must be unique — it is the grouping key of
     the per-iteration assignment aggregate and of assign_clusters_join's
@@ -336,8 +420,7 @@ def kmeans_df(
         # same deterministic seeding as kmeans: the k lowest
         # (stable_bucket(id), id) rows, cluster index = seed rank. The
         # k-row window is the one k-sized single-task stage (seeding only).
-        # (r13: the former `slim.first()` empty-probe job is folded into the
-        # actual_k count below — one fewer pass, guide §1.2 step 1.)
+        # The actual_k count below doubles as the empty-input probe.
         order = [stable_bucket(F.col(id_col), 1 << 31).asc(), F.col(id_col).asc()]
         w = Window.orderBy(*order)
         cents = _truncate_lineage(
@@ -370,11 +453,7 @@ def kmeans_df(
             # decide a min; assignments are bit-identical to
             # assign_clusters_join (pinned in tests). An id group holds one
             # row per cluster, so more than actual_k rows is a repeated id.
-            score = F.aggregate(
-                F.zip_with(F.col("__v"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+            score = _sq_dist(F.col("__v"), F.col("centroid"))
             assigned = (
                 slim.join(F.broadcast(cents))
                 .groupBy(id_col)
@@ -413,21 +492,14 @@ def kmeans_df(
             )
             # The per-cluster squared shift is computed IN the same plan the
             # checkpoint materializes (the old centroid is right there in
-            # the join) — the former dedicated old x new join per iteration
-            # is gone; the convergence probe below just max-reduces k
-            # checkpointed rows (r14, guide §1.2 step 1).
+            # the join), so the convergence probe below just max-reduces k
+            # checkpointed rows.
             new_cents = _truncate_lineage(
                 cents.join(means, "cluster", "left").select(
                     "cluster",
                     F.coalesce("new_c", "centroid").alias("centroid"),
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("centroid"),
-                            F.coalesce("new_c", "centroid"),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
+                    _sq_dist(
+                        F.col("centroid"), F.coalesce("new_c", "centroid")
                     ).alias("__shift"),
                 ),
                 reliable,
@@ -447,16 +519,32 @@ def kmeans_df(
 # Product quantization (PQ): the memory-scale path for billion-vector ANN.
 # A dim-d float vector (4d bytes) becomes m uint8-ish codes (m bytes): the
 # vector is split into m subspaces, each quantized against its own k-word
-# codebook (k-means per subspace). Search uses asymmetric distance: the
-# query's per-subspace distance table (m x k floats, driver-computed) enters
-# the plan as a literal, so scoring a vector is m array lookups + adds —
-# map-side, no join, no full-precision vectors read at query time.
+# codebook (all m trained in one Lloyd loop). Search uses asymmetric
+# distance: the query's per-subspace distance table (m x k floats,
+# driver-computed) enters the plan as a literal, so scoring a vector is m
+# array lookups + adds — map-side, no join, no full-precision vectors read
+# at query time.
 # ---------------------------------------------------------------------------
 
 
-def _slice_subspace(vec, m: int, sub: int, sub_dim: int):
-    """Subvector for subspace ``sub`` (arrays are 1-indexed in F.slice)."""
-    return F.slice(vec, sub * sub_dim + 1, sub_dim)
+def _adc(tables, m: int):
+    """Asymmetric distance of each row's ``pq_code``: the sum over the m
+    subspaces of ``tables[sub][code]``, folded left to right."""
+    return F.aggregate(
+        F.zip_with(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            F.col("pq_code"),
+            lambda sub, code: F.get(F.get(tables, sub), code),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _dist_table(vec, book: list[list[float]]):
+    """Squared distances of the column ``vec`` to each codeword of
+    ``book``: one row of a query's ADC table, computed map-side."""
+    return F.transform(_matrix(book), lambda c: _sq_dist(vec, c))
 
 
 def pq_train(
@@ -469,10 +557,13 @@ def pq_train(
     train_fraction: float | None = None,
     round_decimals: int | None = None,
 ) -> list[list[list[float]]]:
-    """Train PQ codebooks: k-means per subspace (m runs over the SAME scan,
-    each on a sub_dim-wide slice). Returns codebooks[sub][code] -> centroid.
-    dim must be divisible by m. ``round_decimals`` is forwarded to each
-    subspace k-means (engine-portable codebooks — see kmeans).
+    """Train PQ codebooks: k-means on each of the m sub_dim-wide slices,
+    all m in ONE Lloyd loop over one scan (``_lloyd``), so the job count of
+    a training run does not grow with m. Each codebook equals what
+    ``kmeans`` returns on its slice alone. Returns
+    codebooks[sub][code] -> centroid. dim must be divisible by m.
+    ``round_decimals`` rounds each update (engine-portable codebooks — see
+    kmeans).
 
     ``train_fraction``: train on a stable md5-bucket sample (the standard
     100 TB practice — codebooks converge on a 1-10% sample; ENCODING is the
@@ -484,28 +575,7 @@ def pq_train(
         )
 
         df = sample_fraction(df, id_col, train_fraction)
-    probe = df.select(vec_col).first()
-    if probe is None:
-        raise ValueError(
-            "pq_train: empty input (or train_fraction sampled zero rows)"
-        )
-    dim = len(probe[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub_dim = dim // m
-    vec = F.col(vec_col).cast("array<double>")
-    codebooks = []
-    for sub in range(m):
-        sliced = df.select(
-            F.col(id_col).alias("vec_id"),
-            _slice_subspace(vec, m, sub, sub_dim).alias("sv"),
-        )
-        _, cents = kmeans(
-            sliced, vec_col="sv", id_col="vec_id", k=k, max_iters=max_iters,
-            round_decimals=round_decimals,
-        )
-        codebooks.append(cents)
-    return codebooks
+    return _lloyd(df, vec_col, id_col, m, k, max_iters, 1e-6, round_decimals)
 
 
 def pq_encode(
@@ -515,35 +585,16 @@ def pq_encode(
 ) -> DataFrame:
     """Add ``pq_code`` (array<int>, length m): nearest codeword per subspace.
     Map-side expression; write this table instead of the float vectors for a
-    dim*4/m compression of the searchable corpus."""
+    dim*4/m compression of the searchable corpus. A non-null vector whose
+    length is not m x sub_dim raises."""
     m = len(codebooks)
     sub_dim = len(codebooks[0][0])
     vec = F.col(vec_col).cast("array<double>")
-    # one 2-D codebook literal + one transform lambda per subspace (constant
-    # plan size in k_codes), mirroring assign_clusters' argmin form; the
-    # factory binds `sub` without changing the lambda's arity (PySpark infers
-    # the higher-order signature from it)
-    def _subspace_argmin(sub: int):
-        sliced = _slice_subspace(vec, m, sub, sub_dim)
-
-        def picker(c, code):
-            return F.struct(
-                F.aggregate(
-                    F.zip_with(sliced, c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                code.alias("j"),
-            )
-
-        return F.array_min(
-            F.transform(
-                F.lit([[float(v) for v in c] for c in codebooks[sub]]), picker
-            )
-        ).getField("j")
-
-    codes = F.array(*[_subspace_argmin(sub) for sub in range(m)])
-    return df.withColumn("pq_code", codes)
+    codes = F.array(*[
+        _nearest(_slice_subspace(vec, sub, sub_dim), _matrix(codebooks[sub])).getField("j")
+        for sub in range(m)
+    ])
+    return df.withColumn("pq_code", _length_checked(vec, F.lit(m * sub_dim), codes))
 
 
 def pq_build_index(
@@ -671,27 +722,13 @@ def pq_topk(
     m = len(codebooks)
     sub_dim = len(codebooks[0][0])
     table = [
-        [
-            sum(
-                (query_vec[sub * sub_dim + i] - c[i]) ** 2
-                for i in range(sub_dim)
-            )
-            for c in codebooks[sub]
-        ]
-        for sub in range(m)
+        [_sq_dist_py(query_vec[sub * sub_dim:(sub + 1) * sub_dim], c) for c in book]
+        for sub, book in enumerate(codebooks)
     ]
-    tbl_lit = F.lit([[float(d) for d in row] for row in table])
-    dist = F.aggregate(
-        F.zip_with(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.col("pq_code"),
-            lambda sub, code: F.get(F.get(tbl_lit, sub), code),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
-        encoded.select(F.col(id_col), F.round(dist, 6).alias("approx_sq_dist"))
+        encoded.select(
+            F.col(id_col), F.round(_adc(_matrix(table), m), 6).alias("approx_sq_dist")
+        )
         .orderBy(F.col("approx_sq_dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -735,7 +772,7 @@ def build_ivfpq_index(
     float vectors for only the k*refine-row shortlist — at 100 TB the heavy
     scan is the compressed codes of the probed cells, never the corpus.
 
-    Tuning (measured, SCALING.md r7): ``m`` is the recall lever when
+    Tuning (measured, SCALING.md): ``m`` is the recall lever when
     neighbors are weakly separated — on the adversarial structureless
     corpus recall@10 doubles from m=4 (64x compression) to m=32 (8x), and
     at m=32 / refine=8 recall exactly meets the n_probe/n_cells
@@ -1026,21 +1063,13 @@ def ivfpq_topk_batch(
 
     qvec = F.col(query_vec_col).cast("array<double>")
 
-    def _sub_dists(sub: int):
-        sliced = _slice_subspace(qvec, m, sub, sub_dim)
-        return F.transform(
-            F.lit([[float(v) for v in c] for c in codebooks[sub]]),
-            lambda c: F.aggregate(
-                F.zip_with(sliced, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
     q = queries.select(
         F.col(query_id_col),
         F.col(query_vec_col),
-        F.array(*[_sub_dists(sub) for sub in range(m)]).alias("__dtab"),
+        F.array(*[
+            _dist_table(_slice_subspace(qvec, sub, sub_dim), book)
+            for sub, book in enumerate(codebooks)
+        ]).alias("__dtab"),
     )
     from pyspark.sql import Window
 
@@ -1056,32 +1085,22 @@ def ivfpq_topk_batch(
         .filter(F.col("__pr") <= n_probe)
         .select(query_id_col, cell_col, query_vec_col, "__dtab")
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.col("pq_code"),
-            lambda sub, code: F.get(F.get(F.col("__dtab"), sub), code),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     short_w = Window.partitionBy(query_id_col).orderBy(
         F.asc("__adc"), F.asc(id_col)
     )
     shortlist = (
         codes.join(F.broadcast(probe), cell_col)
-        .withColumn("__adc", F.round(adc, 6))
+        .withColumn("__adc", F.round(_adc(F.col("__dtab"), m), 6))
         .withColumn("__sr", F.row_number().over(short_w))
         .filter(F.col("__sr") <= k * refine)
-        # the candidate's cell rides along (r14 — VERDICT r13 item 6, guide
-        # §6 partition pruning): joining the refine scan on (cell, id)
-        # instead of id alone lets dynamic partition pruning cut the
-        # cell-partitioned vectors/ table to the shortlisted cells — the
-        # per-query path prunes via its isin() filter, but this batch path
-        # previously read EVERY cell's float vectors to refine a few
-        # hundred rows. Candidates are unchanged: codes and vectors carry
-        # the SAME cell for an id (both written from one assignment), so
-        # the extra equi-key drops nothing.
+        # the candidate's cell rides along: joining the refine scan on
+        # (cell, id) instead of id alone lets dynamic partition pruning cut
+        # the cell-partitioned vectors/ table to the shortlisted cells (the
+        # per-query path prunes via its isin() filter), instead of reading
+        # EVERY cell's float vectors to refine a few hundred rows.
+        # Candidates are unchanged: codes and vectors carry the SAME cell
+        # for an id (both written from one assignment), so the extra
+        # equi-key drops nothing.
         .select(query_id_col, cell_col, id_col, query_vec_col)
     )
     final_w = Window.partitionBy(query_id_col).orderBy(
