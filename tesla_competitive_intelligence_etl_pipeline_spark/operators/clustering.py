@@ -358,7 +358,8 @@ def kmeans_df(
     assign_clusters_join (broadcast join, no plan literal), the update is a
     groupBy(cluster) Summarizer aggregate whose result STAYS a (cluster,
     centroid) DataFrame, empty clusters keep their centroid via a left
-    join + coalesce, and convergence is a 1-row max-shift aggregate. Use
+    join + coalesce, and convergence is the max shift, observed on the job
+    that fills the iteration's checkpoint. Use
     past the literal form's ~10^8-float centroid bound (module docstring);
     below it, ``kmeans`` saves a join per iteration.
 
@@ -407,7 +408,10 @@ def kmeans_df(
             return col
         return F.transform(col, lambda x: F.bround(x, round_decimals))
 
-    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import (
+        observed,
+        spread,
+    )
 
     slim = (
         spread(
@@ -492,8 +496,8 @@ def kmeans_df(
             )
             # The per-cluster squared shift is computed IN the same plan the
             # checkpoint materializes (the old centroid is right there in
-            # the join), so the convergence probe below just max-reduces k
-            # checkpointed rows.
+            # the join), so the convergence probe below is observed on the
+            # job that fills the checkpoint.
             new_cents = _truncate_lineage(
                 cents.join(means, "cluster", "left").select(
                     "cluster",
@@ -506,7 +510,7 @@ def kmeans_df(
             )
             # convergence: ONE scalar (max squared centroid shift) — the
             # only driver-bound data in the whole loop
-            shift = new_cents.agg(F.max("__shift").alias("m")).first()["m"]
+            shift = observed(new_cents, F.max("__shift"))[0]
             cents = new_cents.select("cluster", "centroid")
             if shift < tol:
                 break

@@ -73,6 +73,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import observed
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
 MARKER_PREFIX = ".appendcommit_"
@@ -431,13 +432,16 @@ def compact(
             found = units(st, rel, fs)
             force = set(found) if ids is not None else set()
             if force and st.cells:
-                # one id-and-cell-column scan finds the cells to purge
+                # one id-and-cell-column scan observes the cells to purge
                 cell_col = next(iter(found)).split("=", 1)[0]
                 force = {
-                    f"{cell_col}={r[cell_col]}"
-                    for r in spark.read.parquet(st.path(rel))
-                    .join(F.broadcast(ids), id_col, "semi")
-                    .select(cell_col).distinct().collect()
+                    f"{cell_col}={c}"
+                    for c in observed(
+                        spark.read.parquet(st.path(rel))
+                        .join(F.broadcast(ids), id_col, "semi")
+                        .select(cell_col),
+                        F.collect_set(cell_col),
+                    )[0]
                 }
             plan += [
                 (rel, unit, files, unit in force) for unit, files in found.items()

@@ -19,6 +19,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Default driver heap: 8g, or half the host's physical memory when
+    that is less, so one session cannot claim most of a small host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(8 << 10, half_mb)}m"
+
+
 def get_spark(app_name: str = "tesla-ci-etl-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the canonical SparkSession.
 
@@ -45,7 +52,7 @@ def get_spark(app_name: str = "tesla-ci-etl-spark", shuffle_partitions: int | No
         # surfaces TIMESTAMP_NTZ. sources.io.normalize_event_ts handles all.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     if SparkSession.getActiveSession() is None:

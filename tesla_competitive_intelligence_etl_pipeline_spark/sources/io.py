@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql.types import StructType
 
 # confs that change the schema Spark infers from the same parquet footer
@@ -240,6 +240,20 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     return df.repartition(target, *[F.col(k) for k in keys])
+
+
+def observed(df: DataFrame, *aggs) -> Row:
+    """Run ``df`` once through the ``noop`` sink and return the row of
+    ``aggs``, aggregate columns observed on that run.
+
+    The aggregates ride on the run's own tasks and Spark merges the
+    per-task results, so a small fact about ``df`` (a key set, a maximum)
+    costs the one job that evaluates ``df`` and no exchange: a
+    ``groupBy``/``distinct`` plus ``collect`` adds a shuffle stage. Running
+    ``df`` also fills any lazy checkpoint it reads or is."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return Row(**obs.get)
 
 
 def write_json_bronze(df: DataFrame, path: str, partition_col: str = "ticker") -> None:

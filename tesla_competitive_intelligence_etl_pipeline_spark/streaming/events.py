@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import merge as merge_mod
+from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import observed
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as merge_fs
 
 
@@ -2252,8 +2253,8 @@ def delete_from_merge_table(
       and anti-joined, untouched buckets keep their exact files.
     - ``predicate``: a SQL boolean over the table's columns (GDPR-style
       content predicate that key routing cannot prune). One pruning scan
-      counts matches per bucket first, so only buckets that actually
-      CONTAIN matches are rewritten — a selective predicate still
+      observes which buckets hold a match first, so only buckets that
+      actually CONTAIN matches are rewritten — a selective predicate still
       rewrites few buckets; a table-wide one degrades to the honest
       O(table) rewrite.
 
@@ -2279,33 +2280,30 @@ def delete_from_merge_table(
             )
         key_cols, n_buckets = params["keys"], int(params["n_buckets"])
         if keys is not None:
-            kdf = keys.select(*key_cols).distinct().withColumn(
-                "__bucket", F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
-            )
+            # duplicate keys change no semi or anti join: no distinct
+            kdf = keys.select(*key_cols)
+            # the keys' buckets, observed on one pass over the keys
             touched = sorted(
-                r["__bucket"]
-                for r in kdf.select("__bucket").distinct().collect()
+                b for b in observed(kdf, F.collect_set(
+                    F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+                ))[0]
+                if str(b) in manifest["buckets"]
             )
-            touched = [b for b in touched if str(b) in manifest["buckets"]]
             if not touched:
                 return 0
             cur = read_merged(spark, target, buckets=touched, fs=fs)
-            remaining = cur.join(
-                kdf.drop("__bucket"), on=key_cols, how="left_anti"
-            )
-            removed = cur.join(kdf.drop("__bucket"), on=key_cols, how="left_semi")
+            remaining = cur.join(kdf, on=key_cols, how="left_anti")
+            removed = cur.join(kdf, on=key_cols, how="left_semi")
         else:
             cur_all = read_merged(spark, target, fs=fs)
             if cur_all is None:
                 return 0
-            # pruning pass: <= n_buckets rows to the driver
-            hits = (
-                cur_all.filter(F.expr(predicate))
-                .groupBy("__bucket")
-                .count()
-                .collect()
-            )
-            touched = sorted(int(r["__bucket"]) for r in hits if r["count"])
+            # pruning pass: the buckets holding a match, observed on one
+            # pass over the table
+            touched = sorted(observed(
+                cur_all.filter(F.expr(predicate)),
+                F.collect_set("__bucket"),
+            )[0])
             if not touched:
                 return 0
             cur = read_merged(spark, target, buckets=touched, fs=fs)
@@ -2396,9 +2394,8 @@ def merge_table(
 
     ``stats_cols`` (Delta-style data skipping): record per-bucket min/max,
     null counts, row counts and approximate ndv for these columns in the
-    manifest at every commit (one aggregate over the bucket versions the
-    commit just staged, read back with their known schema — neither the
-    merge window nor its checkpoint is read for it), powering
+    manifest at every commit (observed on the write that stages the
+    bucket versions: no second read of them), powering
     ``read_merged(range_filters=...)``'s driver-side bucket skipping.
     Per-commit state, not a pinned table param: a merge that omits it
     DROPS its touched buckets' stats (stale-stat protection — pruning on
@@ -2440,8 +2437,11 @@ def merge_table(
     # ranks every batch row of a key above its committed row, ordered by
     # order_cols, so its winner already is the batch's last write
     batch = batch.withColumn("__bucket", bucket)
-    # tiny driver-side list (<= n_buckets values) used for manifest pruning
-    touched = sorted(r[0] for r in batch.select("__bucket").distinct().collect())
+    # tiny driver-side list (<= n_buckets values) used for manifest
+    # pruning, observed on one pass over the batch
+    touched = sorted(
+        observed(batch.select("__bucket"), F.collect_set("__bucket"))[0]
+    )
     if not touched:
         return
     with merge_fs.leased(fs, target, lease_owner, lease_ttl_sec):
@@ -2508,14 +2508,20 @@ def _nullable_schema_json(schema) -> dict:
 
 def _stage_bucket_versions(
     df, target: str, buckets: list[int], fs,
-    cluster_by=None, cluster_files: int = 4,
+    cluster_by=None, cluster_files: int = 4, observe=None,
 ) -> tuple[dict, str]:
     """Phase-1 of the commit protocol: write ``df`` (carrying __bucket) to a
     dot-prefixed staging dir, one sub-dir per bucket, and move each present
     bucket dir to ``store/<bucket>/<version>`` — all invisible to readers
     until a manifest names it. Returns ({bucket: rel_path}, staging_dir).
 
-    ``cluster_by`` (r10 — the layout half of data skipping): range-shuffle
+    ``observe`` is an Observation and its aggregate columns, hung on the
+    DataFrame the write runs, after any range shuffle and sort: the
+    metrics are then taken in the write's result stage, where neither a
+    retried map stage nor the range partitioner's sampling job adds to
+    them.
+
+    ``cluster_by`` (the layout half of data skipping): range-shuffle
     the rows on (__bucket, cluster_by) so each bucket's version lands as
     ~``cluster_files`` files whose cluster-column ranges are DISJOINT
     (range partitioner boundaries) and internally sorted (parquet
@@ -2524,7 +2530,7 @@ def _stage_bucket_versions(
     bucket's min/max spans everything, but each file's span is 1/Nth of
     it (Delta OPTIMIZE ZORDER's 1-D case / liquid clustering's shape).
 
-    A LIST of columns Z-ORDERS (r10, multi-dim): each column gets a
+    A LIST of columns Z-ORDERS (multi-dim): each column gets a
     range-bin id from the sampling range partitioner
     (``repartitionByRange`` + ``spark_partition_id`` — monotone in the
     column, skew-adaptive, any orderable type; exactly Delta OPTIMIZE
@@ -2580,6 +2586,8 @@ def _stage_bucket_versions(
             .sortWithinPartitions("__bucket", "__zval")
             .drop("__zval", *zb)
         )
+    if observe is not None:
+        df = df.observe(*observe)
     # __bucket stays a DATA column in the files; __bucket_p only routes the
     # write into one dir per bucket for the per-bucket moves below
     df.withColumn("__bucket_p", F.col("__bucket")).write.partitionBy(
@@ -2784,8 +2792,7 @@ def _file_stats_for(
 ) -> dict[str, dict]:
     """Per-file min/max of the cluster column(s) for freshly landed bucket
     versions — ONE pass over exactly the files the merge just wrote
-    (touched-bucket-proportional, same cost class as the stats_cols
-    aggregate), grouped by input_file_name. ``schema`` is the schema the
+    (touched-bucket-proportional), grouped by input_file_name. ``schema`` is the schema the
     caller wrote the versions with; reading through it costs no parquet
     footer job. Entry formats ("rel" pins
     which version the file list describes, so a reader can never apply it
@@ -2835,6 +2842,33 @@ def _file_stats_for(
     return out
 
 
+def _bucket_stats_aggs(touched: list[int], stats_cols: list[str] | None) -> list:
+    """The aggregates a merge observes on its stage write for the
+    ``stats_cols`` entries: one struct per touched bucket b, its row count
+    and, per column c (by position j), the min, max, null count and
+    approximate ndv of `CASE WHEN __bucket = b THEN c END`.
+    Those equal a groupBy("__bucket")'s values: min, max and HLL++ skip
+    the NULLs the other buckets' rows give. The aggregates are SQL text,
+    one expression per bucket: built as Column objects they cost thousands
+    of py4j calls at 64 buckets (about 2 s on a 4-core host)."""
+    aggs = []
+    for b in touched if stats_cols else ():
+        inb = f"__bucket = {int(b)}"
+        fields = [f"'rows', count(CASE WHEN {inb} THEN 1 END)"]
+        for j, c in enumerate(stats_cols):
+            # the reference F.col(c) makes: a dot reaches into a struct,
+            # a name holding backticks is already quoted
+            q = c if "`" in c else ".".join(f"`{p}`" for p in c.split("."))
+            v = f"CASE WHEN {inb} THEN {q} END"
+            fields += [
+                f"'mn{j}', min({v})", f"'mx{j}', max({v})",
+                f"'nu{j}', count(CASE WHEN {inb} AND {q} IS NULL THEN 1 END)",
+                f"'nd{j}', approx_count_distinct({v})",
+            ]
+        aggs.append(F.expr(f"named_struct({', '.join(fields)})").alias(str(b)))
+    return aggs
+
+
 def _merge_locked(
     batch,
     target: str,
@@ -2849,8 +2883,6 @@ def _merge_locked(
     cluster_files: int = 4,
 ) -> None:
     """merge_table's read-merge-commit body, run in the leased section."""
-    import os
-
     sess = batch.sparkSession
     manifest, etag = _load_manifest_cas(target, fs)
     manifest = manifest or {"buckets": {}}
@@ -2900,38 +2932,29 @@ def _merge_locked(
         winners = winners.localCheckpoint(eager=False)
     try:
         merged = winners.drop(merge_mod.INCOMING, "__pre")
+        obs, aggs = Observation(), _bucket_stats_aggs(touched, stats_cols)
         new_rels, staging = _stage_bucket_versions(
             merged, target, touched, fs,
             cluster_by=cluster_by, cluster_files=cluster_files,
+            observe=(obs, *aggs) if aggs else None,
         )
-        # a merge replaces every entry of its buckets: with stats_cols, one
-        # aggregate over the versions just staged, read back with the
-        # schema they were written with (no footer job); with cluster_by,
-        # one input_file_name pass over the same files; an entry kind the
+        # a merge replaces every entry of its buckets: with stats_cols, the
+        # stats observed on the stage write; with cluster_by, one
+        # input_file_name pass over the staged files; an entry kind the
         # merge does not record is dropped for its buckets, so no stale
         # bound survives to hide rows
         entries: dict[str, dict] = {"stats": {}, "nullstats": {}, "filestats": {}}
-        if stats_cols:
-            staged = sess.read.schema(merged.schema).parquet(
-                *[os.path.join(target, rel) for rel in new_rels.values()]
-            )
-            aggs = [F.count(F.lit(1)).alias("__rows")]
-            for c in stats_cols:
-                aggs.append(F.min(c).alias(f"__mn_{c}"))
-                aggs.append(F.max(c).alias(f"__mx_{c}"))
-                aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nu_{c}"))
-                aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
-            for r in staged.groupBy("__bucket").agg(*aggs).collect():
-                b = str(r["__bucket"])
-                entries["stats"][b] = {
-                    c: ent for c in stats_cols
-                    if (ent := _enc_bounds(r[f"__mn_{c}"], r[f"__mx_{c}"])) is not None
-                }
-                entries["nullstats"][b] = {
-                    "rows": int(r["__rows"]),
-                    "nulls": {c: int(r[f"__nu_{c}"]) for c in stats_cols},
-                    "ndv": {c: int(r[f"__nd_{c}"]) for c in stats_cols},
-                }
+        cs = list(enumerate(stats_cols or []))
+        for b, r in (obs.get if aggs else {}).items():
+            entries["stats"][b] = {
+                c: ent for j, c in cs
+                if (ent := _enc_bounds(r[f"mn{j}"], r[f"mx{j}"])) is not None
+            }
+            entries["nullstats"][b] = {
+                "rows": int(r["rows"]),
+                "nulls": {c: int(r[f"nu{j}"]) for j, c in cs},
+                "ndv": {c: int(r[f"nd{j}"]) for j, c in cs},
+            }
         if cluster_by is not None:
             entries["filestats"] = _file_stats_for(
                 sess, target, new_rels, cluster_by, merged.schema

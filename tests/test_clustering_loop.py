@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import uuid
 import warnings
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,6 +44,19 @@ def test_pq_train_costs_about_one_kmeans(spark, sf_dir):
     _, pq_jobs = _jobs(spark, lambda: clustering.pq_train(emb, m=8, k=16, max_iters=5))
     assert km_jobs <= 11, km_jobs
     assert pq_jobs <= km_jobs + 1, (pq_jobs, km_jobs)
+
+
+def test_kmeans_df_observes_its_shift_on_the_checkpoint_job(spark):
+    # per iteration: the assignment and update aggregates and the job that
+    # fills the centroid checkpoint and observes the max shift. A separate
+    # max-shift aggregate over the checkpoint added one job per iteration
+    # (38 jobs for this cold build). The tables are a copy of sf0.01.
+    from tesla_competitive_intelligence_etl_pipeline_spark.plans import load_registry
+
+    sf = str(Path(__file__).resolve().parents[1] / "perfbench" / "data" / "sf0.01")
+    build = load_registry()["x3_kmeans_df_clusters"][0]
+    _, n = _jobs(spark, lambda: build(spark, sf))
+    assert n <= 33, n
 
 
 def _staggered(spark):

@@ -1,10 +1,10 @@
-"""Merge-table commits compute each thing once: the touched buckets come
-from the batch keys, the merged rows and the commit's change rows from one
-merge window, the column stats from one known-schema read of the staged
-files, per-file stats and commit deltas are read with the schema they were
-written with, and a delete's count is observed on its delta write. Job
-budgets are counted per operation in a job group of its own, on the
-session fixture's small in-memory tables."""
+"""Merge-table commits compute each thing once: the touched buckets are
+observed on one pass over the batch keys, the merged rows and the commit's
+change rows come from one merge window, the column stats are observed on
+the write that stages the buckets, per-file stats and commit deltas are
+read with the schema they were written with, and a delete's count is
+observed on its delta write. Job budgets are counted per operation in a
+job group of its own, on the session fixture's small in-memory tables."""
 
 from __future__ import annotations
 
@@ -74,15 +74,16 @@ def _rows(df):
 
 
 def test_merge_with_stats_and_capture_stays_in_its_job_budget(spark, table):
-    # the touched-bucket list (2), the merge window's shuffle and the stage
-    # write that computes it (2), the stats aggregate (2) and the delta
-    # write from the window's checkpoint (1). Deduplicating the batch in a
-    # window of its own, re-running the merge for the stats or the delta,
-    # joining old and staged files for the change rows or a footer job on
-    # the staged files would exceed 7
+    # the observed touched-bucket set (1), the merge window's shuffle and
+    # the stage write that computes it and observes the stats (2), and the
+    # delta write from the window's checkpoint (1). Collecting the touched
+    # buckets through a distinct, deduplicating the batch in a window of
+    # its own, re-reading the staged files for the stats, re-running the
+    # merge for the delta or joining old and staged files for the change
+    # rows would exceed 4
     _, n = _jobs(spark, lambda: strm.merge_table(
         _batch(spark, 50, 65, 5), table, **_KW))
-    assert n <= 7
+    assert n <= 4
     live = {r.user_id: r.value for r in strm.read_merged(spark, table).collect()}
     assert len(live) == 55 + 5 + 25 + 25  # 0..54, 55..59 new, 60..84, 90..114
     assert live[52] == 260.0 and live[59] == 295.0 and live[64] == 320.0
@@ -97,21 +98,22 @@ def test_optimize_stays_in_its_job_budget(spark, table):
 
 
 def test_keys_delete_counts_rows_from_its_delta_write(spark, table):
-    # counting the touched buckets before or after the commit would
-    # exceed 10
+    # collecting the touched buckets through a distinct, or counting rows
+    # before or after the commit, would exceed 9
     keys = spark.createDataFrame([(3,), (33,), (999,)], "user_id long")
     removed, n = _jobs(
         spark, lambda: strm.delete_from_merge_table(spark, table, keys=keys))
-    assert removed == 2 and n <= 10
+    assert removed == 2 and n <= 9
     assert strm.read_merged(spark, table).count() == 105 - 2
 
 
 def test_predicate_delete_counts_rows_from_its_delta_write(spark, table):
-    # counting the touched buckets before or after would exceed 4.
+    # counting matches per bucket through a groupBy, or rows before or
+    # after, would exceed 3.
     # Values 180..252 sit at keys 60..84 (77 is null): 67..84 less 77 match
     removed, n = _jobs(spark, lambda: strm.delete_from_merge_table(
         spark, table, predicate="value BETWEEN 200 AND 300"))
-    assert removed == 17 and n <= 4
+    assert removed == 17 and n <= 3
     assert strm.read_merged(spark, table).count() == 105 - 17
 
 
@@ -122,15 +124,16 @@ def test_read_commit_changes_builds_without_a_job(spark, base):
     assert df.agg(F.max("_commit_seq")).first()[0] == 3
 
 
-def test_manifest_stats_equal_a_recomputed_aggregate(spark, base):
-    man = strm._load_manifest(base)
-    cols = _KW["stats_cols"]
+def _assert_stats_recomputed(spark, target, cols):
+    """The manifest's per-bucket stats equal a groupBy over the table.
+    Bounds are compared as JSON text, so NaN and the sign of -0.0 count."""
+    man = strm._load_manifest(target)
     aggs = [F.count(F.lit(1)).alias("rows")]
     for c in cols:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"),
                  F.sum(F.col(c).isNull().cast("long")).alias(f"nu_{c}"),
                  F.approx_count_distinct(c).alias(f"nd_{c}")]
-    got = strm.read_merged(spark, base).groupBy("__bucket").agg(*aggs).collect()
+    got = strm.read_merged(spark, target).groupBy("__bucket").agg(*aggs).collect()
     assert {str(r["__bucket"]) for r in got} == set(man["stats"]) == set(man["buckets"])
     for r in got:
         b = str(r["__bucket"])
@@ -139,7 +142,64 @@ def test_manifest_stats_equal_a_recomputed_aggregate(spark, base):
         for c in cols:
             assert ns["nulls"][c] == r[f"nu_{c}"]
             assert ns["ndv"][c] == r[f"nd_{c}"]
-            assert man["stats"][b][c] == strm._enc_bounds(r[f"mn_{c}"], r[f"mx_{c}"])
+            want = strm._enc_bounds(r[f"mn_{c}"], r[f"mx_{c}"])
+            assert json.dumps(man["stats"][b].get(c)) == json.dumps(want), (b, c)
+    return man
+
+
+def test_manifest_stats_equal_a_recomputed_aggregate(spark, base):
+    _assert_stats_recomputed(spark, base, _KW["stats_cols"])
+
+
+_TYPED_COLS = ["s", "d", "day", "t"]
+
+
+def _typed_batch(spark, lo, hi):
+    """Keys ``lo..hi-1`` with a string, a double, a date and a timestamp
+    column. The double is NULL in every row of bucket 0 (of 4), -0.0 at
+    every 9th key and NaN at every 13th; no row holds +0.0, so each
+    bucket's minimum has one sign."""
+    b = F.pmod(F.xxhash64("k"), F.lit(4))
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 7 != 0, F.concat(F.lit("s"), (F.col("id") % 5).cast("string"))).alias("s"),
+        F.when(b == 0, F.lit(None).cast("double"))
+        .when(F.col("id") % 9 == 0, F.lit(-0.0))
+        .when(F.col("id") % 13 == 0, F.lit(float("nan")))
+        .otherwise(F.col("id") * 1.5 + 1).alias("d"),
+        F.when(F.col("id") % 11 != 0, F.date_add(F.lit(dt.date(2024, 1, 1)), F.col("id").cast("int"))).alias("day"),
+        (F.lit(dt.datetime(2024, 1, 1)) + F.make_interval(hours=F.col("id").cast("int"))).alias("t"),
+    )
+
+
+def test_observed_stats_equal_a_recomputed_aggregate_for_every_write_shape(spark, tmp_path):
+    """Stats observed on the stage write equal the grouped aggregate for
+    string, double, date and timestamp columns, an all-NULL bucket, a
+    clustered write (whose range partitioner samples its input: rows must
+    not be counted twice) and an uncaptured merge; an empty batch commits
+    nothing in one job."""
+    target = str(tmp_path / "typed")
+    kw = dict(keys=["k"], order_cols=["t"], n_buckets=4, stats_cols=_TYPED_COLS)
+    strm.merge_table(_typed_batch(spark, 0, 60), target, **kw)
+    man = _assert_stats_recomputed(spark, target, _TYPED_COLS)
+    nulls = [b for b, ns in man["nullstats"].items() if ns["nulls"]["d"] == ns["rows"]]
+    assert nulls == ["0"] and "d" not in man["stats"]["0"]
+    assert man["nullstats"]["0"]["ndv"]["d"] == 0
+    assert any(json.dumps(st["d"][0]) == "-0.0" for st in man["stats"].values() if "d" in st)
+    assert any(json.dumps(st["d"][1]) == "NaN" for st in man["stats"].values() if "d" in st)
+
+    strm.merge_table(_typed_batch(spark, 40, 100), target, cluster_by="t", cluster_files=2, **kw)
+    man = _assert_stats_recomputed(spark, target, _TYPED_COLS)
+    assert set(man["filestats"]) == set(man["buckets"])
+    assert sum(ns["rows"] for ns in man["nullstats"].values()) == 100
+
+    strm.merge_table(_typed_batch(spark, 90, 130), target, capture_changes=False, **kw)
+    man = _assert_stats_recomputed(spark, target, _TYPED_COLS)
+    assert sum(ns["rows"] for ns in man["nullstats"].values()) == 130
+
+    _, n = _jobs(spark, lambda: strm.merge_table(_typed_batch(spark, 0, 0), target, **kw))
+    assert n == 1
+    assert json.dumps(strm._load_manifest(target)) == json.dumps(man)
 
 
 def _record(target, cid):
