@@ -38,20 +38,19 @@ def _truncate_lineage(df: DataFrame, reliable: bool = False) -> DataFrame:
     iterative loop (CC) and multi-consumer fan-in (indexed dedup, SemDeDup's
     capped path) here uses so plans don't grow across rounds.
 
-    Default: LAZY ``localCheckpoint`` (r13 — guide §1.2 step 1, one fewer
-    pass per call site): the eager form ran a dedicated materialization job
-    per call, then every consumer read the blocks; the lazy form fuses
-    materialization into the FIRST consumer's job (every call site here is
-    followed by one — a convergence probe, a count, or the pair join), so
-    the truncation costs zero extra jobs. Every call site was audited for
-    snapshot-before-overwrite reliance (none: no site reads a path that is
-    later overwritten before evaluation). Blocks still live on executors:
+    Default: LAZY ``localCheckpoint``: an eager one would run a dedicated
+    materialization job per call before every consumer read the blocks;
+    the lazy form fuses materialization into the FIRST consumer's job
+    (every call site here is followed by one — a convergence probe, a
+    count, or the pair join), so the truncation costs zero extra jobs. No
+    call site reads a path that is overwritten before evaluation, so none
+    relies on an eager snapshot. Blocks still live on executors:
     on a cluster with decommissioning/spot churn a lost block FAILS the
     query instead of recomputing (truncated lineage cannot rebuild).
     Iterative loops stay bounded: each round's consumer fully materializes
     the previous round's checkpoint, so lazy chains never deepen past one
     round.
-    ``reliable=True`` is the escape hatch (VERDICT r5 item 5): a REAL
+    ``reliable=True`` is the escape hatch: a REAL
     (eager) checkpoint to the SparkContext checkpoint dir (HDFS/S3-backed,
     survives executor loss) — slower per round, the right trade on
     decommissioning-prone clusters. Requires
@@ -94,7 +93,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 #   building n-gram strings, a bucket is xxhash64 of the band's signature
 #   slice, SimHash is 64-bit. Faster map-side. DuckDB has no xxhash64, so
 #   these registry entries are oracle-checked through engine-hash fixtures
-#   (plans/fixtures.py, since r10): the engine persists its hash outputs and
+#   (plans/fixtures.py): the engine persists its hash outputs and
 #   the oracle re-derives everything downstream of them.
 # - "md5": every hash is the 60-bit md5 prefix (_md5_long60) over n-gram
 #   strings, '|'-joined signature slices and tokens — reproducible in
@@ -161,14 +160,13 @@ def minhash_int_signature(hashed_shingle_arr: Column, num_hashes: int = 32) -> C
     hash is an affine transform h_j(x) = a_j*x + b_j over Z/2^64 (long
     overflow wraps = mod-2^64, ANSI off). Pure JVM expression, map-side.
 
-    r13 (guide §1.2 step 2 — per-task work): each min is ONE
-    ``aggregate(..., least)`` fold instead of ``array_min(transform(...))``.
-    Higher-order functions evaluate interpreted, and the transform form
-    materialized num_hashes intermediate arrays of |shingles| longs per row;
-    the fold keeps a single long accumulator per hash. Measured 0.27 s ->
-    0.15 s for the signature pass over sf0.1 documents (scripts note in
-    OPTIMIZATION_r13.md); values are bit-identical (same affine arithmetic,
-    ``b + j`` pre-folded mod 2^64 — addition is associative mod 2^64)."""
+    Each min is ONE ``aggregate(..., least)`` fold, not
+    ``array_min(transform(...))``: higher-order functions evaluate
+    interpreted, and the transform form would materialize num_hashes
+    intermediate arrays of |shingles| longs per row, where the fold keeps
+    a single long accumulator per hash (0.15 s vs 0.27 s for the signature
+    pass over sf0.1 documents, OPTIMIZATION_r13.md). ``b + j`` is
+    pre-folded mod 2^64; addition is associative mod 2^64."""
 
     def coeffs(j: int) -> tuple[int, int]:
         a = _MINHASH_A[j % len(_MINHASH_A)] | 1  # odd -> bijective mod 2^64
@@ -208,7 +206,7 @@ def hashed_shingles(text_col: Column, n: int = 3) -> Column:
     """Distinct word-n-gram shingles as 64-bit hashes: hash each token once,
     combine n consecutive token hashes with xxhash64 — no n-gram string is
     ever materialized (the dominant cost of string shingling). Windows are
-    assembled with the slice/zip form (_sliding_tuples, r13)."""
+    assembled with the slice/zip form (_sliding_tuples)."""
     th = F.transform(tokens(normalized_text(text_col)), lambda t: F.xxhash64(t))
     grams = F.when(
         F.size(th) >= n,
@@ -227,12 +225,12 @@ def _with_shingles_and_sig(
     family: str = "xxhash64",
 ) -> DataFrame:
     # Signature computation is CPU-bound per row; small single-file inputs
-    # arrive as one partition, so spread across cores first. r13: the former
-    # UNCONDITIONAL keyless repartition (a) always shuffled — at 100 TB a
-    # pointless full-corpus pass when the scan is already wide — and
-    # (b) paid round-robin's sort-before-repartition; io.spread is a no-op
-    # when the plan already has >= defaultParallelism partitions and hash-
-    # partitions on the id otherwise (guide §2.4/§2.5).
+    # arrive as one partition, so spread across cores first. io.spread, not
+    # a keyless repartition: that would always shuffle (at 100 TB a
+    # pointless full-corpus pass when the scan is already wide) and pay
+    # round-robin's sort-before-repartition; spread is a no-op when the plan
+    # already has >= defaultParallelism partitions or reads less than its
+    # size floor, and hash-partitions on the id otherwise.
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
 
     return (
@@ -277,62 +275,43 @@ def exact_jaccard(a: Column, b: Column) -> Column:
     return inter / union
 
 
-# Largest cap the in-row pair expansion accepts: a surviving bucket expands
-# to ~cap^2/2 pair structs inside ONE row, so cap=4096 is ~8.4e6 structs
-# (~hundreds of MB peak) — the edge of safe; beyond it the capped paths fall
-# back to the distributed self-join (cross-corpus: new x old join), which
-# spreads the same pairs across tasks (ADVICE r13: a caller-supplied 50k cap
-# would otherwise OOM one executor on ~1.2e9 in-row structs).
-_IN_ROW_CAP_MAX = 4096
-
-
-def _capped_bucket_rows(banded: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Band rows minus every over-cap bucket's rows, removed BEFORE any
-    downstream aggregation (r14 — VERDICT r13 "What's wrong #1", guide §5):
-    a tiny partial-aggregable census lists the (band, bucket) keys whose
-    COUNT(*) exceeds the cap (few by construction — over-cap buckets only
-    arise from identical/boilerplate blocks), and a broadcast ANTI join
-    drops their rows map-side. Any collect_list / self-join downstream is
-    then provably bounded at ``max_bucket_size`` entries per bucket.
-    COUNT(*) — not the collected non-NULL size — judges the cap, matching
-    the pre-r13 census and the DuckDB oracle's HAVING COUNT(*) (ADVICE
-    r13)."""
-    over = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("__bsz"))
-        .filter(F.col("__bsz") > max_bucket_size)
-        .select("band", "bucket")
+def _jaccard_verified(
+    candidates: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verdicts for candidate pairs. ``candidates`` is
+    (key_a, key_b); ``sets_a`` and ``sets_b`` are (id, set) frames, joined
+    on key_a first and then on key_b. Returns (key_a, key_b, jaccard) for
+    the pairs whose Jaccard, rounded to 6 decimals, is at least
+    ``threshold``; the rounding keeps a verdict at the boundary from
+    flipping on last-ulp noise between engines."""
+    key_a, key_b = candidates.columns
+    return (
+        candidates.join(sets_a.toDF(key_a, "__set_a"), key_a)
+        .join(sets_b.toDF(key_b, "__set_b"), key_b)
+        .withColumn(
+            "jaccard", F.round(exact_jaccard(F.col("__set_a"), F.col("__set_b")), 6)
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(key_a, key_b, "jaccard")
     )
-    return banded.join(F.broadcast(over), ["band", "bucket"], "left_anti")
 
 
 def _capped_bucket_rows_shared(banded: DataFrame, max_bucket_size: int) -> DataFrame:
-    """The SHARED-EXCHANGE form of the over-cap guard (r14): a COUNT(*)
-    window over (band, bucket) rides the very exchange the downstream pair
-    aggregation pays anyway — ONE evaluation of the band table and no extra
-    aggregate/broadcast stages. Three guard formulations were interleaved-
-    A/B'd on x2_minhash_lsh/x2_near_dedup_canonical/x2_cross_corpus_* at
-    sf0.1 (OPTIMIZATION_r14.md): this one costs the least on top of the r13
-    unguarded shape (the census + broadcast anti-join re-derives the band
-    rows — at production scale a second corpus-size pass over the
-    persisted/stored signatures — and adds two stages; an explicit
-    repartition + ReusedExchange census measured worst).
+    """Band rows minus the rows of every (band, bucket) whose COUNT(*)
+    exceeds the cap. The count is a window over (band, bucket), so it rides
+    the exchange of the groupBy(band, bucket) that follows: one evaluation
+    of the band table and no extra aggregate or broadcast stage. A census
+    aggregate plus a broadcast anti join would re-derive the band rows (at
+    production scale a second corpus-size pass over the signatures) and add
+    two stages (OPTIMIZATION_r14.md measured the forms).
 
-    Memory contract (the point of the guard — VERDICT r13 "What's wrong"
-    #1): rows of a degenerate bucket DO reach the window's task, but
+    Memory: a degenerate bucket's rows do reach the window's task, but
     WindowExec buffers a partition group in an
-    ExternalAppendOnlyUnsafeRowArray that SPILLS to disk past
-    spark.sql.windowExec.buffer.spill.threshold (4096 rows) — bounded
-    memory, graceful degradation (guide §5) — and every AGGREGATION buffer
-    downstream of the filter is provably <= max_bucket_size entries. The
-    trade vs the census form: the census drops over-cap rows map-side
-    (never shuffles them) but pays its second pass + stages even when no
-    degenerate bucket exists; this form ships the (rare, 24-byte-row)
-    degenerate bucket to one task's disk and pays ~nothing otherwise. The
-    census form stays in use for the large-cap join fallbacks, where a
-    windowed frame on a self-join side defeats exchange reuse (the
-    measured-30x r12 lesson). COUNT(*) judges the cap — NULL-id rows
-    count, the pre-r13 census and DuckDB-oracle semantics (ADVICE r13)."""
+    ExternalAppendOnlyUnsafeRowArray that spills to disk past
+    spark.sql.windowExec.buffer.spill.threshold (4096 rows), and every
+    aggregation buffer after the filter holds at most ``max_bucket_size``
+    entries. COUNT(*) judges the cap, so NULL-id rows count, as in the
+    DuckDB oracle's HAVING COUNT(*) <= cap."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
@@ -340,6 +319,31 @@ def _capped_bucket_rows_shared(banded: DataFrame, max_bucket_size: int) -> DataF
         banded.withColumn("__bsz", F.count(F.lit(1)).over(w))
         .filter(F.col("__bsz") <= max_bucket_size)
         .drop("__bsz")
+    )
+
+
+def _bucket_pairs(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Distinct (doc_a, doc_b) with doc_a < doc_b from the capped buckets of
+    ``banded`` (band, bucket, doc_id). One groupBy collects each surviving
+    bucket's sorted ids; the pairs then come out one member per row:
+    posexplode the list, and explode the members after each one. No
+    generated row holds more ids than the cap, whatever the cap. The strict
+    < drops the (id, id) pairs that duplicate doc_id rows would make."""
+    grouped = (
+        _capped_bucket_rows_shared(banded, max_bucket_size)
+        .groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("__ds"))
+        .filter(F.size("__ds") >= 2)
+    )
+    i = F.col("__i")
+    return (
+        grouped.select("__ds", F.posexplode("__ds").alias("__i", "doc_a"))
+        .select(
+            "doc_a",
+            F.explode(F.slice("__ds", i + 2, F.size("__ds") - i - 1)).alias("doc_b"),
+        )
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .distinct()
     )
 
 
@@ -359,27 +363,28 @@ def minhash_lsh_pairs(
     The two hash ``family`` values differ only in WHICH candidates they
     propose; both verify with exact Jaccard, so neither reports a false pair.
 
-    Shuffle profile: one groupBy on (band, band_hash) whose values are just
-    (band_key, doc_id); the self-join to fetch shingles back is by doc_id.
+    Shuffle profile: one exchange on (band, bucket) whose values are just
+    doc ids; the joins that fetch the shingle sets back are by doc_id.
     Candidate count — not corpus size — drives the pair-verification cost.
 
-    ``max_bucket_size`` guards the degenerate-bucket blowup (VERDICT r2): a
-    corpus with a large set of identical/boilerplate documents puts them all
-    in the SAME band bucket, and the band self-join is quadratic in bucket
-    size BEFORE the distinct — one 10k-doc bucket is 10^8 candidate rows.
-    Band entries in buckets larger than the cap are dropped (the standard
-    LSH guard: such groups are exact/boilerplate duplicates, caught by exact
-    dedup or boilerplate filters, not near-dup pairing).
+    ``max_bucket_size`` guards the degenerate-bucket blowup: a corpus with
+    a large set of identical/boilerplate documents puts them all in the
+    SAME band bucket, and a bucket's candidate pairs are quadratic in its
+    size — one 10k-doc bucket is 10^8 candidate rows. Band entries in
+    buckets larger than the cap are dropped (the standard LSH guard: such
+    groups are exact/boilerplate duplicates, caught by exact dedup or
+    boilerplate filters, not near-dup pairing). A capped query collects
+    each surviving bucket and emits its pairs one member per row
+    (_bucket_pairs); an uncapped one self-joins the band rows. A capped
+    bucket's pairs come from one task, so a cap of thousands that meets a
+    bucket of thousands of members is slow there (SCALING.md, "Degenerate
+    LSH buckets").
 
     The default is None — UNCAPPED — because a cap silently loses recall on
-    genuine >cap near-dup groups with no runtime signal (ADVICE r3): policy
-    belongs to the CALLER. The registered engine queries pass 256; before
-    enabling a cap, measure what it would drop with
-    ``lsh_oversized_buckets`` (same banding, same HAVING aggregate).
-    Memory note (ADVICE r13): caps up to ``_IN_ROW_CAP_MAX`` (4096) expand
-    pairs in-row (~cap^2/2 structs in one row — of order 1e3 is the sweet
-    spot); larger caps automatically fall back to the distributed
-    self-join, which spreads the quadratic bucket fan-out across tasks.
+    genuine >cap near-dup groups with no runtime signal: policy belongs to
+    the CALLER. The registered engine queries pass 256; before enabling a
+    cap, measure what it would drop with ``lsh_oversized_buckets`` (same
+    banding, same HAVING aggregate).
 
     Storage contract: the signature table is persisted because the RETURNED
     lazy plan reads it from multiple branches (banding + both verification
@@ -397,58 +402,11 @@ def minhash_lsh_pairs(
         docs, text_col, id_col, num_hashes, shingle_n, family=family
     ).persist()
     banded = _band_explode(sigs, num_hashes, bands, family=family)
-
-    if max_bucket_size is not None and max_bucket_size <= _IN_ROW_CAP_MAX:
-        # CAPPED: the cap bounds every bucket's membership list, so pairs
-        # expand IN-ROW from one groupBy — no banded self-join, no
-        # join-side distinct. The over-cap guard (the shared-exchange
-        # COUNT(*) window, _capped_bucket_rows_shared) runs ahead of the
-        # collect, so no aggregation buffer can hold a degenerate
-        # boilerplate bucket (10^7+ identical docs at 100 TB) and the
-        # collect_list buffer is provably <= cap entries. COUNT(*) judges
-        # the cap — NULL-id rows count, as in the DuckDB oracle's
-        # HAVING COUNT(*) <= cap (ADVICE r13).
-        grouped = (
-            _capped_bucket_rows_shared(banded, max_bucket_size)
-            .groupBy("band", "bucket")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("__ds"))
-            .filter(F.size("__ds") >= 2)
-        )
-        candidates = (
-            grouped.select(
-                F.explode(
-                    F.flatten(
-                        F.transform(
-                            "__ds",
-                            lambda a, i: F.transform(
-                                F.slice(
-                                    F.col("__ds"), i + 2, F.size("__ds") - i - 1
-                                ),
-                                lambda b: F.struct(
-                                    a.alias("doc_a"), b.alias("doc_b")
-                                ),
-                            ),
-                        )
-                    )
-                ).alias("__p")
-            )
-            .select("__p.doc_a", "__p.doc_b")
-            # duplicate doc_id rows sort adjacent and would pair with
-            # themselves (ADVICE r13): the join form's strict l < r never
-            # emitted (id, id), so the in-row form must not either
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .distinct()
-        )
+    if max_bucket_size is not None:
+        candidates = _bucket_pairs(banded, max_bucket_size)
     else:
-        # UNCAPPED, or a cap too large for safe in-row expansion (ADVICE
-        # r13: a 50k cap would materialize ~1.2e9 structs in one row): the
-        # distributed self-join spreads oversized buckets across tasks. A
-        # cap guards ONE side with the census (a pair needs both endpoints,
-        # so emptying the left side of an over-cap bucket kills every pair
-        # from it — identical candidate set).
-        left = banded if max_bucket_size is None else _capped_bucket_rows(banded, max_bucket_size)
         candidates = (
-            left.alias("l")
+            banded.alias("l")
             .join(
                 banded.alias("r"),
                 (F.col("l.band") == F.col("r.band"))
@@ -458,16 +416,8 @@ def minhash_lsh_pairs(
             .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
             .distinct()
         )
-
     sh = sigs.select("doc_id", "sh")
-    verified = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return verified
+    return _jaccard_verified(candidates, sh, sh, threshold)
 
 
 def lsh_oversized_buckets(
@@ -479,7 +429,7 @@ def lsh_oversized_buckets(
     shingle_n: int = 3,
     max_bucket_size: int = 256,
 ) -> DataFrame:
-    """The observability twin of minhash_lsh_pairs' bucket cap (ADVICE r3):
+    """The observability twin of minhash_lsh_pairs' bucket cap:
     (band, bucket, bucket_size) for every band bucket LARGER than the cap —
     exactly the entries the cap would drop. Run it before (or alongside) a
     capped dedup pass so silent recall loss is a measured number, not a
@@ -520,12 +470,11 @@ def connected_components(
     contracts paths in O(log n) rounds) — same per-round shuffle shape.
     ``reliable=True`` swaps the per-round localCheckpoint for a reliable
     checkpoint (see _truncate_lineage / DEPLOYMENT.md § Checkpointing)."""
-    # r13 (guide §1.2 step 1 — don't compute things twice): symmetrize by
-    # EXPLODING each edge into its two directions instead of a self-union.
-    # The union form scanned the (usually expensive, un-cached) upstream pair
-    # plan once PER BRANCH — for near_dup_clusters that re-ran the entire
-    # LSH candidate+verify pipeline a second time just to flip the columns.
-    # The explode evaluates the upstream exactly once; rows are identical.
+    # Symmetrize by EXPLODING each edge into its two directions, not by a
+    # self-union: a union scans the (usually expensive, un-cached) upstream
+    # pair plan once PER BRANCH — for near_dup_clusters, the whole LSH
+    # candidate+verify pipeline a second time just to flip the columns. The
+    # explode evaluates the upstream exactly once.
     sym = (
         edges.select(
             F.explode(
@@ -539,12 +488,11 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # r13 (guide §2.3 — shuffle fewer bytes): iterate ONLY over vertices
-    # that touch an edge. Singletons are fixpoints by definition
-    # (comp == id), yet they dominated every round's label table — a
-    # near-dup pair graph covers a small fraction of the corpus, so each
-    # round shuffled O(|V|) labels to move O(|touched|) information. They
-    # rejoin via the final left join below, identical result.
+    # Iterate ONLY over vertices that touch an edge. Singletons are
+    # fixpoints by definition (comp == id), and a near-dup pair graph covers
+    # a small fraction of the corpus, so carrying them would shuffle O(|V|)
+    # labels per round to move O(|touched|) information. They rejoin via
+    # the final left join below.
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
         "comp", F.col("id")
     )
@@ -646,7 +594,7 @@ def connected_components_star(
             break
         e = stepped
     if not converged:
-        # ADVICE r4: a non-converged edge set need not be a star forest — a
+        # A non-converged edge set need not be a star forest — a
         # vertex can still hold multiple outgoing edges, and joining on it
         # would emit duplicate (id, comp) rows (silently wrong cardinality).
         # Surface the budget exhaustion loudly; the min-collapse below then
@@ -786,17 +734,7 @@ def ngram_jaccard_pairs(
             .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
             .distinct()
         )
-        return (
-            candidates.join(
-                toks_arr.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta")), "doc_a"
-            )
-            .join(
-                toks_arr.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb")), "doc_b"
-            )
-            .withColumn("jaccard", F.round(exact_jaccard(F.col("ta"), F.col("tb")), 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
+        return _jaccard_verified(candidates, toks_arr, toks_arr, threshold)
 
     sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
     shared = (
@@ -863,13 +801,7 @@ def cross_corpus_jaccard(
         tok_a = tok_a.join(keep, "tok", "left_semi")
         tok_b = tok_b.join(keep, "tok", "left_semi")
     candidates = tok_a.join(tok_b, "tok").select("doc_id", "match_id").distinct()
-    return (
-        candidates.join(ta.withColumnRenamed("toks", "ta"), "doc_id")
-        .join(tb.withColumnRenamed("toks", "tb"), "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("ta"), F.col("tb")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
-    )
+    return _jaccard_verified(candidates, ta, tb, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1079,101 +1011,44 @@ def _check_signature_params(
         )
 
 
-def _cross_band_pairs_capped(
-    both: DataFrame, max_bucket_size: int
-) -> DataFrame:
-    """Cross-side candidate pairs from capped LSH buckets, expanded IN-ROW
-    from one groupBy (the same move as minhash_lsh_pairs' capped path).
-    ``both`` carries one row per (band, bucket) membership:
-    (band, bucket, __side, __id) with __side=1 for the new/query corpus and
-    __side=0 for the existing corpus.
+def _cross_candidates(both: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """(doc_id, match_id) candidates from tagged band rows ``both``: one
+    row per (band, bucket) membership, (band, bucket, __side, __id) with
+    __side 1 for the new corpus and 0 for the existing one. Pairs are kept
+    only ACROSS sides, so the quadratic within-side pair sets never
+    materialize.
 
-    The cap is judged on the COMBINED bucket population, and a surviving
-    bucket holds at most cap members, so the new x old expansion is bounded
-    at (cap/2)^2 structs per row. One shuffle of (band, bucket, side, id)
-    replaces a cross-side join's shuffle of both band tables. The
-    shared-exchange COUNT(*) window (_capped_bucket_rows_shared) filters
-    over-cap rows out ahead of the groupBy, so every aggregation buffer is
-    provably <= cap entries — a degenerate 10^7-doc boilerplate bucket never
-    materializes in one buffer.
-    Safe ONLY capped: an uncapped boilerplate bucket would still collect
-    an unbounded array — uncapped callers keep the join form.
-    collect_list skips the NULLs the other side's ``when`` produces, and
-    the emitted pair SET is order-independent, so list order (which is
-    nondeterministic) cannot affect results."""
+    Uncapped: a new x old join on (band, bucket). Capped: the cap is judged
+    on each bucket's COMBINED population (_capped_bucket_rows_shared), one
+    groupBy collects a surviving bucket's new and old ids (collect_list
+    skips the NULLs each side's ``when`` makes), and the pairs come out one
+    member per row: explode the new ids, then the old ones. No generated
+    row holds more ids than the cap, whatever the cap."""
+    if max_bucket_size is None:
+        def side(tag: int, id_name: str) -> DataFrame:
+            return both.filter(F.col("__side") == tag).select(
+                F.col("__id").alias(id_name), "band", "bucket"
+            )
+
+        return (
+            side(1, "doc_id")
+            .join(side(0, "match_id"), ["band", "bucket"])
+            .select("doc_id", "match_id")
+            .distinct()
+        )
     grouped = (
         _capped_bucket_rows_shared(both, max_bucket_size)
         .groupBy("band", "bucket")
         .agg(
-            F.collect_list(
-                F.when(F.col("__side") == 1, F.col("__id"))
-            ).alias("__new"),
-            F.collect_list(
-                F.when(F.col("__side") == 0, F.col("__id"))
-            ).alias("__old"),
+            F.collect_list(F.when(F.col("__side") == 1, F.col("__id"))).alias("__new"),
+            F.collect_list(F.when(F.col("__side") == 0, F.col("__id"))).alias("__old"),
         )
         .filter((F.size("__new") >= 1) & (F.size("__old") >= 1))
     )
     return (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "__new",
-                        lambda a: F.transform(
-                            "__old",
-                            lambda b: F.struct(
-                                a.alias("doc_id"), b.alias("match_id")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("__p")
-        )
-        .select("__p.doc_id", "__p.match_id")
+        grouped.select(F.explode("__new").alias("doc_id"), "__old")
+        .select("doc_id", F.explode("__old").alias("match_id"))
         .distinct()
-    )
-
-
-def _cross_candidates(both: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """(doc_id, match_id) candidates from tagged band rows ``both`` (see
-    _cross_band_pairs_capped), kept only ACROSS sides so the quadratic
-    within-side pair sets never materialize. Caps up to _IN_ROW_CAP_MAX
-    expand in-row. Larger caps (ADVICE r14: a 50k cap would build ~6e8
-    structs in one row) and no cap take the distributed new x old join; a
-    cap guards the new side with the census over the COMBINED population
-    (a pair needs a new endpoint, so emptying the new side of an over-cap
-    bucket kills every pair from it — the in-row form's candidate set)."""
-    if max_bucket_size is not None and max_bucket_size <= _IN_ROW_CAP_MAX:
-        return _cross_band_pairs_capped(both, max_bucket_size)
-    new = both if max_bucket_size is None else _capped_bucket_rows(both, max_bucket_size)
-
-    def side(rows: DataFrame, tag: int, id_name: str) -> DataFrame:
-        return rows.filter(F.col("__side") == tag).select(
-            F.col("__id").alias(id_name), "band", "bucket"
-        )
-
-    return (
-        side(new, 1, "doc_id")
-        .join(side(both, 0, "match_id"), ["band", "bucket"])
-        .select("doc_id", "match_id")
-        .distinct()
-    )
-
-
-def _cross_verified(
-    candidates: DataFrame, new_sigs: DataFrame, old_sigs: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verdicts for cross-side candidates: (doc_id, match_id,
-    jaccard) at or above ``threshold``; both sig frames carry (doc_id, sh)."""
-    sh_new = new_sigs.select("doc_id", F.col("sh").alias("sh_a"))
-    sh_old = old_sigs.select(F.col("doc_id").alias("match_id"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(sh_new, "doc_id")
-        .join(sh_old, "match_id")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "match_id", "jaccard")
     )
 
 
@@ -1206,10 +1081,11 @@ def cross_corpus_neardup_indexed(
     _check_family(family, shingle_n)
     _check_signature_params(spark, sig_path, num_hashes, shingle_n, family)
     # lazy lineage truncation, not persist (a persisted frame leaks
-    # storage unless every caller unpersists it): materializes the increment's signatures ONCE for the two
-    # consumers below (band join + exact-Jaccard verify), and the blocks
-    # are released by the ContextCleaner when the returned plan is dropped
-    # — no caller-must-unpersist contract
+    # storage unless every caller unpersists it): materializes the
+    # increment's signatures ONCE for the two consumers below (banding +
+    # exact-Jaccard verify), and the blocks are released by the
+    # ContextCleaner when the returned plan is dropped — no
+    # caller-must-unpersist contract
     new_sigs = _truncate_lineage(
         _with_shingles_and_sig(
             new_docs, text_col, id_col, num_hashes, shingle_n, family=family
@@ -1228,7 +1104,12 @@ def cross_corpus_neardup_indexed(
     candidates = _cross_candidates(
         tagged(new_sigs, 1).unionAll(tagged(old_sigs, 0)), max_bucket_size
     )
-    return _cross_verified(candidates, new_sigs, old_sigs, threshold)
+    return _jaccard_verified(
+        candidates,
+        new_sigs.select("doc_id", "sh"),
+        old_sigs.select("doc_id", "sh"),
+        threshold,
+    )
 
 
 def cross_corpus_neardup(
@@ -1284,10 +1165,10 @@ def cross_corpus_neardup(
         banded.select("band", "bucket", "__side", F.col("doc_id").alias("__id")),
         max_bucket_size,
     )
-    return _cross_verified(
+    return _jaccard_verified(
         candidates,
-        sigs.filter(F.col("__side") == 1),
-        sigs.filter(F.col("__side") == 0),
+        sigs.filter(F.col("__side") == 1).select("doc_id", "sh"),
+        sigs.filter(F.col("__side") == 0).select("doc_id", "sh"),
         threshold,
     )
 
@@ -1370,10 +1251,9 @@ def semantic_dedup(
     )
     # slim is read twice by the pair self-join (a and b) and a third time by
     # the capped path's size census; lineage truncation materializes the
-    # scan + assignment + norm ONCE instead of re-running them per consumer
-    # (code review r5; r13 extends it to the uncapped path, which re-ran the
-    # whole assignment per join side — guide §1.2 step 1). Blocks live until
-    # the checkpointed RDD is GC'd (the returned plan holds a reference);
+    # scan + assignment + norm ONCE instead of re-running them per consumer,
+    # capped or not. Blocks live until the checkpointed RDD is GC'd (the
+    # returned plan holds a reference);
     # ``reliable=True`` survives executor decommissioning (_truncate_lineage).
     slim = _truncate_lineage(slim, reliable)
     if max_cluster_size is not None:
@@ -1402,8 +1282,8 @@ def semantic_dedup(
     drops = (
         a.join(b, "cluster")  # pair shuffle keyed on cluster — never global
         .filter(F.col("__a") < F.col("__b"))
-        # NaN guard (code review r5): a zero-norm embedding makes cosine
-        # 0/0 = NaN, and Spark orders NaN ABOVE every number, so a bare
+        # NaN guard: a zero-norm embedding makes cosine 0/0 = NaN, and
+        # Spark orders NaN ABOVE every number, so a bare
         # `>= threshold` would declare a zero vector a near-dup of its whole
         # cluster and silently drop unrelated rows. A degenerate vector is
         # never a duplicate of anything. The DuckDB twin carries its OWN

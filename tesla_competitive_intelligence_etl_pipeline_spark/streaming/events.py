@@ -1595,6 +1595,29 @@ def _emit_changes(
 
 
 _CHANGES_DIR = "changes"
+_CHAIN_MAX = 100_000
+
+
+def _commit_chain(target: str, fs: merge_fs.MergeFS, tip_id: str | None):
+    """Yield the commit records (``changes/<id>/_commit.json``) from
+    ``tip_id`` toward the root, newest first. Stops after the root record
+    (parent None), at the first missing record (vacuumed by changes_keep
+    retention, or never written) and after ``_CHAIN_MAX`` records.
+    Driver-side JSON reads only."""
+    import json
+    import os
+
+    cur = tip_id
+    for _ in range(_CHAIN_MAX):
+        if cur is None:
+            return
+        path = os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
+        try:
+            rec = json.loads(fs.read_bytes(path).decode())
+        except FileNotFoundError:
+            return
+        yield rec
+        cur = rec.get("parent")
 
 
 def _is_ancestor(
@@ -1603,24 +1626,15 @@ def _is_ancestor(
     """Walk the commit chain from ``tip_id`` toward the root: True when
     ``ancestor_id`` is on it, False when the walk completes without
     meeting it, None when the chain cannot be walked that far (records
-    vacuumed by changes_keep retention — unknowable, caller decides).
-    Driver-side JSON reads only; bounded like read_commit_changes' walk."""
-    import json
-    import os
-
+    vacuumed by changes_keep retention — unknowable, caller decides)."""
     cur = tip_id
-    for _ in range(100_000):
+    if cur == ancestor_id:
+        return True
+    for rec in _commit_chain(target, fs, tip_id):
+        cur = rec.get("parent")
         if cur == ancestor_id:
             return True
-        if cur is None:
-            return False
-        path = os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
-        try:
-            rec = json.loads(fs.read_bytes(path).decode())
-        except FileNotFoundError:
-            return None
-        cur = rec.get("parent")
-    return None
+    return False if cur is None else None
 
 
 def _delta_dir(target: str, cid: str, fs: merge_fs.MergeFS) -> str:
@@ -1736,9 +1750,6 @@ def read_commit_changes(
     the schema its commit record carries, so no parquet footer job runs
     per delta in the range (commit records from before schemas were
     recorded keep the inferred read)."""
-    import json
-    import os
-
     from pyspark.sql.types import StructType
 
     old_m = _load_snapshot(target, since, fs)
@@ -1756,23 +1767,23 @@ def read_commit_changes(
         )
     chain: list[dict] = []
     cur = until_id
-    while cur != since_id:
-        path = os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
-        try:
-            rec = json.loads(fs.read_bytes(path).decode())
-        except FileNotFoundError:
+    if cur != since_id:
+        for rec in _commit_chain(target, fs, until_id):
+            chain.append(rec)
+            cur = rec.get("parent")
+            if cur == since_id:
+                break
+        else:
+            if cur is None or len(chain) == _CHAIN_MAX:
+                raise ValueError(
+                    f"{since!r} is not an ancestor of "
+                    f"{until or 'the current state'} at {target} (rollback or "
+                    "divergent lineage); use read_changes"
+                )
             raise ValueError(
                 f"commit chain from {until or 'current'} to {since!r} at "
                 f"{target} is broken at {cur} (delta vacuumed, or a "
                 "rollback rewound the lineage); use read_changes"
-            ) from None
-        chain.append(rec)
-        cur = rec.get("parent")
-        if cur is None or len(chain) > 100_000:
-            raise ValueError(
-                f"{since!r} is not an ancestor of "
-                f"{until or 'the current state'} at {target} (rollback or "
-                "divergent lineage); use read_changes"
             )
     chain.reverse()  # oldest-first: _commit_seq 1 = first commit after since
     parts = []
@@ -1996,18 +2007,11 @@ def _vacuum_locked(
             fs.rmtree(os.path.join(target, rel))
             removed.append(os.path.join(target, rel))
     if changes_keep is not None:
-        keep: set[str] = set()
-        cur = (manifest.get("commit") or {}).get("id")
-        while cur is not None and len(keep) < int(changes_keep):
-            keep.add(cur)
-            try:
-                cur = json.loads(
-                    fs.read_bytes(
-                        os.path.join(target, _CHANGES_DIR, cur, "_commit.json")
-                    ).decode()
-                ).get("parent")
-            except FileNotFoundError:
-                break
+        head = (manifest.get("commit") or {}).get("id")
+        keep = {
+            rec["id"]
+            for _, rec in zip(range(int(changes_keep)), _commit_chain(target, fs, head))
+        }
         # live takedown obligations PIN their delete commit: a crashed
         # takedown's recovery reads EXACTLY its stamped commit's delta for
         # the delete set. Spare every delta a live ``_takedown/`` record
@@ -2073,29 +2077,18 @@ def merge_table_stats(
     cdir = os.path.join(target, _CHANGES_DIR)
     if fs.isdir(cdir):
         stats["commit_deltas"] = len(fs.listdir(cdir))
-    # commit-log health (r9): how far back the CURRENT chain is walkable
+    # commit-log health: how far back the CURRENT chain is walkable
     # (read_commit_changes' reach before its loud read_changes fallback),
     # and whether any walkable commit was merged with
     # capture_changes=False (its presence caps every range crossing it).
     # Driver-side JSON reads only, bounded by the retained log.
     stats["walkable_commits"] = 0
     stats["uncaptured_commits"] = 0
-    cur = (manifest.get("commit") or {}).get("id") if manifest else None
-    import json as _json
-
-    while cur is not None:
-        try:
-            rec = _json.loads(
-                fs.read_bytes(os.path.join(cdir, cur, "_commit.json")).decode()
-            )
-        except FileNotFoundError:
-            break  # aged out under changes_keep — the chain ends here
+    head = (manifest.get("commit") or {}).get("id") if manifest else None
+    for rec in _commit_chain(target, fs, head):
         stats["walkable_commits"] += 1
         if rec.get("captured", True) is False:
             stats["uncaptured_commits"] += 1
-        cur = rec.get("parent")
-        if stats["walkable_commits"] > 100_000:
-            break
     staging = os.path.join(target, ".staging")
     if fs.isdir(staging):
         stats["staging_dirs"] = len(fs.listdir(staging))

@@ -144,10 +144,9 @@ def test_minhash_signature_empty_array_contract(spark):
     assert list(row["s"]) == [None, None, None, None]
 
 
-def test_cross_corpus_capped_inrow_expansion(spark, tmp_path):
-    """r13: the capped cross-corpus paths expand candidates in-row from one
-    groupBy (see dd._cross_band_pairs_capped) instead of the census +
-    broadcast-anti-join + cross-side-join plan. Semantics pinned: a bucket
+def test_cross_corpus_capped_pairs(spark, tmp_path):
+    """The capped cross-corpus paths generate candidates from one groupBy
+    per bucket (see dd._cross_candidates). Semantics pinned: a bucket
     whose COMBINED population exceeds the cap contributes no pairs (the six
     identical docs split 3/3 across sides land in one 6-member bucket per
     band, all over cap=4), while under-cap cross-side near-dups still pair;

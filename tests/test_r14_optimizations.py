@@ -1,12 +1,11 @@
-"""Round-14 optimization regression tests.
+"""Capped-LSH regression tests, plus the IVF-PQ refine pruning and the
+per-word BPE assembly checks.
 
-Covers the capped-LSH bucket-buffer guard (VERDICT r13 "What's wrong #1" +
-the three ADVICE r13 findings): over-cap buckets are dropped BEFORE any
-collect_list can buffer them, the cap is judged on COUNT(*) (NULL-id rows
-count — the pre-r13 census and DuckDB-oracle semantics), duplicate doc_id
-rows can no longer produce (id, id) self-pairs, and caller caps above
-``_IN_ROW_CAP_MAX`` fall back to the distributed self-join (cross-corpus:
-new x old join) with identical results.
+The capped LSH path drops over-cap buckets before any collect_list can
+buffer them, judges the cap on COUNT(*) (NULL-id rows count, as in the
+DuckDB oracle), never emits (id, id) self-pairs on duplicate doc_id rows,
+and takes the same candidate path at every cap: one collect per bucket,
+pairs emitted one member per row.
 """
 
 from __future__ import annotations
@@ -54,8 +53,8 @@ def test_capped_lsh_overcap_bucket_dropped_before_collect(spark):
 
 def test_capped_lsh_cap_counts_null_id_rows(spark):
     # 5 real docs + 1 NULL-id row with the same text: COUNT(*)=6 > cap=5, so
-    # the bucket is dropped — the oracle's HAVING COUNT(*) semantics (ADVICE
-    # r13: the r13 size(collect_list) filter skipped NULLs and kept it)
+    # the bucket is dropped — the oracle's HAVING COUNT(*) semantics (a
+    # size(collect_list) filter would skip the NULL and keep it)
     docs = _docs(spark, [(i, _TXT) for i in range(1, 6)] + [(None, _TXT)])
     assert dd.minhash_lsh_pairs(docs, threshold=0.1, max_bucket_size=5).count() == 0
     # at cap=6 the bucket survives; the NULL row itself cannot pair
@@ -65,14 +64,23 @@ def test_capped_lsh_cap_counts_null_id_rows(spark):
 
 
 def test_capped_lsh_no_self_pairs_on_duplicate_ids(spark):
-    # duplicate doc_id rows sort adjacent in the in-row expansion and used
-    # to emit (id, id) pairs (ADVICE r13); the join form's strict < never did
+    # duplicate doc_id rows sort adjacent in the collected bucket list and
+    # must not emit (id, id) pairs; the join form's strict < never did
     docs = _docs(spark, [(1, _TXT), (1, _TXT), (2, _TXT)])
     rows = dd.minhash_lsh_pairs(docs, threshold=0.1, max_bucket_size=8).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2)}
 
 
-def test_capped_lsh_large_cap_falls_back_to_join_form(spark, tmp_path):
+def _assert_one_candidate_path(df) -> None:
+    # one groupBy collect per bucket behind the COUNT(*) window: no census
+    # anti join, and no in-row pair array
+    plan = _plan(df)
+    assert "collect_list" in plan
+    assert "LeftAnti" not in plan
+    assert "flatten" not in plan
+
+
+def test_capped_lsh_any_cap_takes_the_one_candidate_path(spark, tmp_path):
     # a mixed corpus: one near-dup pair + unrelated docs
     docs = _docs(
         spark,
@@ -83,19 +91,15 @@ def test_capped_lsh_large_cap_falls_back_to_join_form(spark, tmp_path):
             (4, "yet another unrelated text with its own token stream"),
         ],
     )
-    inrow = dd.minhash_lsh_pairs(docs, threshold=0.3, max_bucket_size=256)
-    big = dd.minhash_lsh_pairs(
-        docs, threshold=0.3, max_bucket_size=dd._IN_ROW_CAP_MAX + 1
-    )
-    # the big-cap plan is the distributed self-join (no in-row collect)
-    assert "collect_list" not in _plan(big)
-    assert "LeftAnti" in _plan(big)  # census guard still bounds the buckets
+    small = dd.minhash_lsh_pairs(docs, threshold=0.3, max_bucket_size=256)
+    big = dd.minhash_lsh_pairs(docs, threshold=0.3, max_bucket_size=5000)
+    _assert_one_candidate_path(small)
+    _assert_one_candidate_path(big)
     # no bucket here exceeds either cap, so the pair sets are identical
     key = lambda r: (r["doc_a"], r["doc_b"], r["jaccard"])  # noqa: E731
-    assert sorted(map(key, inrow.collect())) == sorted(map(key, big.collect()))
+    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
 
-    # the cross-corpus operators take the same fallback: a new x old join
-    # behind the census guard, with the in-row form's pair set
+    # the cross-corpus operators take the same path at both caps
     new = _docs(
         spark,
         [
@@ -115,20 +119,31 @@ def test_capped_lsh_large_cap_falls_back_to_join_form(spark, tmp_path):
     ]
     ckey = lambda r: (r["doc_id"], r["match_id"], r["jaccard"])  # noqa: E731
     for op in cross_ops:
-        inrow, big = op(256), op(dd._IN_ROW_CAP_MAX + 1)
-        assert "collect_list" in _plan(inrow)
-        assert "collect_list" not in _plan(big)
-        assert "LeftAnti" in _plan(big)
+        small, big = op(256), op(5000)
+        _assert_one_candidate_path(small)
+        _assert_one_candidate_path(big)
         pairs = sorted(map(ckey, big.collect()))
-        assert pairs == sorted(map(ckey, inrow.collect()))
+        assert pairs == sorted(map(ckey, small.collect()))
         assert {(p[0], p[1]) for p in pairs} >= {(11, 1)}
 
 
+def test_capped_lsh_degenerate_bucket_under_the_cap_pairs_every_member(spark):
+    # N identical docs share one bucket per band; a cap >= N keeps it, so
+    # every pair must come out: C(N, 2) self pairs, |new| * |old| cross pairs
+    n, n_new = 300, 120
+    docs = _docs(spark, [(i, _TXT) for i in range(n)])
+    pairs = dd.minhash_lsh_pairs(docs, threshold=0.1, max_bucket_size=n)
+    assert pairs.count() == n * (n - 1) // 2
+    new, old = docs.filter(F.col("doc_id") < n_new), docs.filter(F.col("doc_id") >= n_new)
+    cross = dd.cross_corpus_neardup(new, old, threshold=0.1, max_bucket_size=n)
+    assert cross.count() == n_new * (n - n_new)
+
+
 def test_ivfpq_batch_refine_vectors_scan_is_cell_pruned(spark, sf_dir, tmp_path):
-    # r14 (VERDICT r13 item 6): the batch refine step joins vectors/ on
-    # (cell, id) so dynamic partition pruning reaches the cell-partitioned
-    # VECTORS scan too — previously only codes/ was pruned and the refine
-    # read every cell's float vectors. Results are pinned against the
+    # the batch refine step joins vectors/ on (cell, id) so dynamic
+    # partition pruning reaches the cell-partitioned VECTORS scan too, not
+    # only codes/, and the refine does not read every cell's float
+    # vectors. Results are pinned against the
     # per-query path by test_ivfpq_batch_plan_prunes_dynamically_and_broadcasts.
     from pyspark.sql import functions as F
 
@@ -157,7 +172,7 @@ def test_ivfpq_batch_refine_vectors_scan_is_cell_pruned(spark, sf_dir, tmp_path)
 
 
 def test_bpe_assemble_per_word_bit_identical(spark, sf_dir):
-    # r14: bpe_encode_ids(assemble_per_word=True) must return byte-identical
+    # bpe_encode_ids(assemble_per_word=True) must return byte-identical
     # token-id sequences on every branch it can take — the expression path,
     # the >BPE_EXPR_MAX_MERGES UDF path, and byte fallback — including
     # guaranteed-OOV words with digit runs (the winnower convention).
@@ -194,7 +209,7 @@ def test_bpe_assemble_per_word_bit_identical(spark, sf_dir):
 
 def test_cross_capped_guard_drops_overcap_combined_bucket(spark):
     # combined population 3 (2 new + 1 old identical docs) > cap=2 -> no
-    # pairs; the guard anti-join sits ahead of the conditional collects
+    # pairs; the COUNT(*) window sits ahead of the conditional collects
     new = _docs(spark, [(1, _TXT), (2, _TXT)])
     old = _docs(spark, [(100, _TXT)])
     capped = dd.cross_corpus_neardup(
