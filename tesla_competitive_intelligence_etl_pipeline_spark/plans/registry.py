@@ -118,13 +118,7 @@ def src_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "src_seed_dim",
-    """
-    SELECT * FROM (VALUES
-      ('TSLA', 'Tesla Inc', 'Electric Vehicles'),
-      ('RIVN', 'Rivian Automotive Inc', 'Electric Vehicles'),
-      ('LCID', 'Lucid Group Inc', 'Electric Vehicles')
-    ) AS t(ticker, name, sector)
-    """,
+    f"SELECT * FROM {seed_mod.companies_values_sql()}",
 )
 def src_seed_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRC-7: literal seed dimension (reference schema.sql:57-61)."""

@@ -714,9 +714,7 @@ def _v_suite_sql() -> str:
       SELECT CAST(revenue AS DOUBLE) AS revenue, CAST(eps AS DOUBLE) AS eps
       FROM deduped WHERE ticker = 'TSLA' AND quarter_label = '2025-Q2'
     ),
-    seed AS (SELECT * FROM (VALUES
-      ('TSLA', 'Tesla Inc'), ('RIVN', 'Rivian Automotive Inc'), ('LCID', 'Lucid Group Inc')
-    ) AS s(ticker, name)),
+    seed AS (SELECT ticker, name FROM {seed_mod.companies_values_sql()}),
     counts AS (SELECT ticker, COUNT(*) AS fr FROM silver GROUP BY ticker)
     SELECT 'pattern_valid_cnt' AS metric,
            CAST(count_if(regexp_matches(quarter_label, '^\\d{{4}}-Q[1-4]$')) AS DOUBLE) AS value

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from tesla_competitive_intelligence_etl_pipeline_spark.functions import scalars, validation
 from tesla_competitive_intelligence_etl_pipeline_spark.operators import aggregates as agg
@@ -468,9 +469,7 @@ def v_golden_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "v_summary_report",
     f"""
     WITH silver AS ({_silver_sql()}),
-    seed AS (SELECT * FROM (VALUES
-      ('TSLA', 'Tesla Inc'), ('RIVN', 'Rivian Automotive Inc'), ('LCID', 'Lucid Group Inc')
-    ) AS s(ticker, name)),
+    seed AS (SELECT ticker, name FROM {seed_mod.companies_values_sql()}),
     counts AS (SELECT ticker, COUNT(*) AS financial_records FROM silver GROUP BY ticker)
     SELECT s.ticker, s.name, COALESCE(c.financial_records, 0) AS financial_records
     FROM seed s LEFT JOIN counts c ON c.ticker = s.ticker
@@ -489,15 +488,17 @@ def v_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_NET_INCOME_ROWS = [
+    ("NIO", -510000000.0), ("NIO", -620000000.0), ("TSLA", 1264000000.0),
+    ("XPEV", 50000.0), ("LCID", 0.0), ("RIVN", -1200000000.0),
+]
+
+
 @register(
     "pipeline_eps_share_lookup",
-    """
-    WITH yf AS (SELECT * FROM (VALUES
-      ('NIO', -510000000.0), ('NIO', -620000000.0), ('TSLA', 1264000000.0), ('XPEV', 50000.0),
-      ('LCID', 0.0), ('RIVN', -1200000000.0)
-    ) AS t(symbol, net_income)),
-    shares AS (SELECT * FROM (VALUES
-      ('TSLA', 3160), ('RIVN', 920), ('LCID', 1600)) AS s(ticker, shares_millions))
+    f"""
+    WITH yf AS (SELECT * FROM {fixtures.values_sql(_NET_INCOME_ROWS, "t(symbol, net_income)")}),
+    shares AS (SELECT * FROM {seed_mod.share_counts_values_sql()})
     SELECT yf.symbol, yf.net_income,
            CASE WHEN yf.net_income IS NULL OR yf.net_income = 0 THEN NULL
                 ELSE ROUND(
@@ -514,11 +515,9 @@ def pipeline_eps_share_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides unscaled; zero net income -> null). Fixture rows exercise all
     branches: big negative (NIO/RIVN), big positive (TSLA), small positive
     (XPEV), zero (LCID)."""
-    yf = spark.createDataFrame(
-        [("NIO", -510000000.0), ("NIO", -620000000.0), ("TSLA", 1264000000.0),
-         ("XPEV", 50000.0), ("LCID", 0.0), ("RIVN", -1200000000.0)],
-        "symbol string, net_income double",
-    )
+    yf = src.local_table(spark, _NET_INCOME_ROWS, StructType(
+        [StructField("symbol", StringType()), StructField("net_income", DoubleType())]
+    ))
     shares = seed_mod.share_counts(spark)
     joined = yf.join(F.broadcast(shares), yf.symbol == shares.ticker, "left").withColumn(
         "shares_millions", F.coalesce(F.col("shares_millions"), F.lit(seed_mod.SHARE_COUNT_DEFAULT))

@@ -9,7 +9,9 @@ Reference semantics preserved (SURVEY.md §4):
 Scale posture (designed for a 1000-executor cluster even though tests run
 local[32]): AQE on (partition coalescing + skew-join splitting), small dims
 auto-broadcast, shuffle partition count taken from the env so the driver can
-size it to the cluster.
+size it to the cluster. Shuffle, broadcast and spill blocks are compressed
+with zstd (Spark's default level and buffer) instead of lz4: a third fewer
+shuffle bytes for a little more task CPU (DEPLOYMENT.md, "Compression").
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ def get_spark(app_name: str = "tesla-ci-etl-spark", shuffle_partitions: int | No
         # surfaces TIMESTAMP_NTZ. sources.io.normalize_event_ts handles all.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _driver_memory()))
         .config("spark.ui.enabled", "false")
     )

@@ -5,6 +5,10 @@ tests/test_integration.py:29-79) including the dirty rows from
 tests/test_edge_cases.py — they are the inputs for the end-to-end pipeline
 test (SURVEY.md §7.2 step 6) and for the fixture-backed queries in
 __spark_entry__.py (oracle side inlines the same rows as VALUES).
+
+Each table is built from the same row tuples its oracle VALUES text is
+generated from, as a local relation (``sources.io.local_table``), so Spark
+plans a ``LocalTableScan`` with a size estimate and broadcasts it.
 """
 
 from __future__ import annotations
@@ -12,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tesla_competitive_intelligence_etl_pipeline_spark import schemas
+from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import local_table
 
 # (date, symbol, revenue, eps, netIncomePerShare, grossProfit) — all strings at
 # the bronze boundary, matching the schema-on-read JSON shape. Rows 1-4 golden
@@ -52,44 +57,43 @@ YFINANCE_ROWS = [
 
 
 def fmp_income_raw(spark: SparkSession) -> DataFrame:
-    rows = [r[:4] + (r[4], r[5]) for r in FMP_INCOME_ROWS]
-    return spark.createDataFrame(rows, schemas.FMP_INCOME_RAW)
+    return local_table(spark, FMP_INCOME_ROWS, schemas.FMP_INCOME_RAW)
 
 
 def fmp_estimates_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ESTIMATES_ROWS, schemas.FMP_ESTIMATES_RAW)
+    return local_table(spark, ESTIMATES_ROWS, schemas.FMP_ESTIMATES_RAW)
 
 
 def yfinance_income_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(YFINANCE_ROWS, schemas.YFINANCE_INCOME_RAW)
+    return local_table(spark, YFINANCE_ROWS, schemas.YFINANCE_INCOME_RAW)
 
 
-def estimates_values_sql() -> str:
-    """The estimates bronze rows as a DuckDB VALUES clause (oracle twin)."""
-    rows = ",\n    ".join(
-        f"('{d}', '{s}', {r}, {e}, {n})" for d, s, r, e, n in ESTIMATES_ROWS
-    )
-    return (
-        "(VALUES\n    "
-        + rows
-        + ') AS est(_date, symbol, "estimatedRevenue", "estimatedEps", "numberAnalysts")'
-    )
-
-
-def fmp_income_values_sql() -> str:
-    """The same bronze rows as a DuckDB VALUES clause (oracle twin)."""
+def values_sql(rows: list[tuple], alias: str) -> str:
+    """``rows`` as a DuckDB VALUES clause named ``alias`` (``t(a, b)``), the
+    oracle twin of a table built from the same tuples."""
 
     def lit(v):
         if v is None:
             return "NULL"
-        return "'" + str(v).replace("'", "''") + "'"
+        if isinstance(v, str):
+            return "'" + v.replace("'", "''") + "'"
+        return repr(v)
 
-    rows = ",\n    ".join(
-        f"({lit(d)}, {lit(s)}, {lit(r)}, {lit(e)}, {lit(n)}, {lit(g)})"
-        for d, s, r, e, n, g in FMP_INCOME_ROWS
+    body = ",\n    ".join("(" + ", ".join(map(lit, r)) + ")" for r in rows)
+    return f"(VALUES\n    {body}\n) AS {alias}"
+
+
+def estimates_values_sql() -> str:
+    """The estimates bronze rows as a DuckDB VALUES clause (oracle twin)."""
+    return values_sql(
+        ESTIMATES_ROWS,
+        'est(_date, symbol, "estimatedRevenue", "estimatedEps", "numberAnalysts")',
     )
-    return (
-        "(VALUES\n    "
-        + rows
-        + ') AS fmp(_date, symbol, revenue, eps, "netIncomePerShare", "grossProfit")'
+
+
+def fmp_income_values_sql() -> str:
+    """The income bronze rows as a DuckDB VALUES clause (oracle twin)."""
+    return values_sql(
+        FMP_INCOME_ROWS,
+        'fmp(_date, symbol, revenue, eps, "netIncomePerShare", "grossProfit")',
     )

@@ -256,6 +256,24 @@ def observed(df: DataFrame, *aggs) -> Row:
     return Row(**obs.get)
 
 
+def local_table(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """``rows`` as a local relation with exactly ``schema`` (types and
+    nullability), built through an Arrow table.
+
+    ``spark.createDataFrame(list_of_tuples, schema)`` parallelizes the rows
+    into an RDD, a ``LogicalRDD`` that Catalyst gives no size estimate, so a
+    join against it shuffles first. A local relation plans a
+    ``LocalTableScan`` with its true size, which the optimizer broadcasts.
+    The Arrow path does this whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def write_json_bronze(df: DataFrame, path: str, partition_col: str = "ticker") -> None:
     """SNK-1: raw payload bronze layer (reference extract.py:104-107 writes
     data/raw/{ticker}_*.json; here partitioned JSON, prunable by ticker)."""

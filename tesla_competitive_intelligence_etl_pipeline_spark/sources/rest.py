@@ -136,11 +136,11 @@ def register(spark) -> None:
 
 
 def fixture_values_sql() -> str:
-    """The same envelope rows as a DuckDB VALUES clause (oracle twin)."""
+    """The same envelope rows as a DuckDB VALUES clause (oracle twin); every
+    payload field is text at the bronze boundary."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.fixtures import values_sql
 
-    def lit(v):
-        return "NULL" if v is None else "'" + str(v).replace("'", "''") + "'"
-
+    fields = ("date", "symbol", "revenue", "eps", "netIncomePerShare", "grossProfit")
     rows = []
     for t in sorted(FIXTURE_PAYLOADS):
         fmp, yf = FIXTURE_PAYLOADS[t]
@@ -151,12 +151,10 @@ def fixture_values_sql() -> str:
         else:
             payload, source, status = [{}], None, "failed"
         for r in payload:
-            rows.append(
-                f"({lit(t)}, {lit(source)}, {lit(status)}, {lit(r.get('date'))}, "
-                f"{lit(r.get('symbol'))}, {lit(r.get('revenue'))}, {lit(r.get('eps'))}, "
-                f"{lit(r.get('netIncomePerShare'))}, {lit(r.get('grossProfit'))})"
-            )
-    return (
-        "(VALUES " + ", ".join(rows) + ') AS t(ticker, source, status, _date, symbol, '
-        'revenue, eps, "netIncomePerShare", "grossProfit")'
+            rows.append((t, source, status) + tuple(
+                None if r.get(f) is None else str(r.get(f)) for f in fields
+            ))
+    return values_sql(
+        rows,
+        't(ticker, source, status, _date, symbol, revenue, eps, "netIncomePerShare", "grossProfit")',
     )

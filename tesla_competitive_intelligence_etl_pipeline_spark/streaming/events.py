@@ -2243,7 +2243,14 @@ def delete_from_merge_table(
       matching key's row is removed. I/O ∝ the KEYS' bucket span, the
       merge discipline: keys route through the same
       pmod(xxhash64(*keys), n_buckets), only those buckets are read back
-      and anti-joined, untouched buckets keep their exact files.
+      and anti-joined, untouched buckets keep their exact files. Pass
+      keys that Catalyst can size: a table scan, a ``spark.range`` or a
+      local relation (``sources.io.local_table``, or ``createDataFrame``
+      over an Arrow table). Those are broadcast into the anti and semi
+      joins (5 jobs on a small table). Keys from
+      ``spark.createDataFrame(list_of_tuples)`` are a ``LogicalRDD``
+      without a size estimate, so both joins plan sort-merge joins whose
+      four shuffle stages each run a job (9 jobs on the same table).
     - ``predicate``: a SQL boolean over the table's columns (GDPR-style
       content predicate that key routing cannot prune). One pruning scan
       observes which buckets hold a match first, so only buckets that

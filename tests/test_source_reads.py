@@ -181,3 +181,37 @@ def test_spread_decides_without_a_job_and_alike_in_shared_scans(spark, tmp_path)
         shared = {n: _spreads(spark, src.load_table(spark, root, n)) for n in ("small", "big")}
     assert shared == bare
     assert bare == {"small": False, "big": spark.sparkContext.defaultParallelism > 1}
+
+
+def test_financial_fixtures_and_seed_tables_are_local_relations(spark, sf_dir):
+    """The fixture and seed tables plan a ``LocalTableScan`` with their
+    declared schemas, so Catalyst sizes and broadcasts them: warm,
+    ``pipeline_actual_vs_estimate`` runs in 3 jobs at sf0.001 (4 when its
+    tables were RDD scans, which a join shuffles first)."""
+    from tesla_competitive_intelligence_etl_pipeline_spark import schemas
+    from tesla_competitive_intelligence_etl_pipeline_spark.plans import load_registry
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources import fixtures, seed
+
+    for df, schema in [
+        (fixtures.fmp_income_raw(spark), schemas.FMP_INCOME_RAW),
+        (fixtures.fmp_estimates_raw(spark), schemas.FMP_ESTIMATES_RAW),
+        (fixtures.yfinance_income_raw(spark), schemas.YFINANCE_INCOME_RAW),
+        (seed.seed_companies(spark), seed.SEED_COMPANIES_SCHEMA),
+        (seed.share_counts(spark), seed.SHARE_COUNTS_SCHEMA),
+    ]:
+        assert df.schema == schema
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    build = load_registry()["pipeline_actual_vs_estimate"][0]
+
+    def run():
+        df = build(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    run()  # warm
+    df, n = _jobs(spark, run)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert n <= 3

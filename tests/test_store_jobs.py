@@ -16,7 +16,9 @@ import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import local_table
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import erasure
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
@@ -104,6 +106,18 @@ def test_keys_delete_counts_rows_from_its_delta_write(spark, table):
     removed, n = _jobs(
         spark, lambda: strm.delete_from_merge_table(spark, table, keys=keys))
     assert removed == 2 and n <= 9
+    assert strm.read_merged(spark, table).count() == 105 - 2
+
+
+def test_keys_delete_with_local_relation_keys_broadcasts_them(spark, table):
+    # keys as a local relation have a size estimate, so the anti and semi
+    # joins broadcast them; the same keys as an RDD (above) plan two
+    # sort-merge joins whose four shuffle stages add a job each
+    keys = local_table(spark, [(3,), (33,), (999,)],
+                       StructType([StructField("user_id", LongType())]))
+    removed, n = _jobs(
+        spark, lambda: strm.delete_from_merge_table(spark, table, keys=keys))
+    assert removed == 2 and n <= 5
     assert strm.read_merged(spark, table).count() == 105 - 2
 
 
