@@ -961,53 +961,48 @@ def _write_sig_params(
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_params")
 
 
+def _sig_params(spark, sig_path: str) -> tuple[int, int, str]:
+    """(num_hashes, shingle_n, family) from the table's ``_params``
+    sidecar, which write_signature_table always writes. A table without
+    the sidecar or its family raises: neither can be checked, and a silent
+    mismatch is silent recall loss."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        stored = spark.read.parquet(sig_path + "/_params").first().asDict()
+    except AnalysisException:  # no sidecar
+        stored = {}
+    if "family" not in stored:
+        raise ValueError(
+            f"signature table at {sig_path} has no _params sidecar with a "
+            "hash family; rebuild it with write_signature_table"
+        )
+    return int(stored["num_hashes"]), int(stored["shingle_n"]), stored["family"]
+
+
 def _check_signature_params(
     spark, sig_path: str, num_hashes: int, shingle_n: int, family: str = "xxhash64"
 ) -> None:
     """Raise loudly when query-time LSH parameters differ from the ones the
-    signature table was built with; warn (legacy table) when the sidecar is
-    absent. Silent mismatch = silent recall loss, never acceptable. The
-    hash ``family`` is the worst case — cross-family banding shares NO
-    buckets, zero recall — so it's asserted too (legacy sidecars without
-    the field warn instead)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        stored = spark.read.parquet(sig_path + "/_params").first()
-    except AnalysisException:
-        # sidecar absent (legacy table) -> warn; any OTHER failure (corrupt
-        # sidecar, permission error) propagates — it must not be mistaken
-        # for "nothing to check"
-        warnings.warn(
-            f"signature table at {sig_path} has no _params sidecar (built by "
-            "an older write_signature_table?); cannot verify num_hashes/"
-            "shingle_n — a mismatch silently degrades recall",
-            stacklevel=3,
-        )
-        return
-    if stored["num_hashes"] != num_hashes or stored["shingle_n"] != shingle_n:
+    signature table was built with. Silent mismatch = silent recall loss,
+    never acceptable. The hash ``family`` is the worst case — cross-family
+    banding shares NO buckets, zero recall — so it's asserted too."""
+    have_hashes, have_n, have_family = _sig_params(spark, sig_path)
+    if have_hashes != num_hashes or have_n != shingle_n:
         raise ValueError(
             f"signature table at {sig_path} was built with "
-            f"num_hashes={stored['num_hashes']}, shingle_n={stored['shingle_n']} "
+            f"num_hashes={have_hashes}, shingle_n={have_n} "
             f"but the query passed num_hashes={num_hashes}, shingle_n={shingle_n}; "
             "mismatched parameters silently degrade recall / compare "
             "wrong-granularity Jaccard — rebuild the table or match the "
             "build parameters"
         )
-    stored_family = stored.asDict().get("family")
-    if stored_family is None:
-        warnings.warn(
-            f"signature table at {sig_path} predates the family field; "
-            "cannot verify the hash family — cross-family banding has zero "
-            "recall",
-            stacklevel=3,
-        )
-    elif stored_family != family:
+    if have_family != family:
         raise ValueError(
             f"signature table at {sig_path} was built with the "
-            f"'{stored_family}' hash family but the query uses '{family}'; "
+            f"'{have_family}' hash family but the query uses '{family}'; "
             "cross-family band buckets never collide (zero recall) — pass "
-            f"family='{stored_family}' or rebuild the table"
+            f"family='{have_family}' or rebuild the table"
         )
 
 
@@ -1345,7 +1340,7 @@ def append_signature_table(
     table's ``_params`` sidecar — an append cannot be mis-parameterized the
     way a query can, it simply computes whatever the table stores. An
     unknown family, or md5 with a shingle_n other than 3, raises
-    ValueError; a table without a sidecar refuses (an append cannot
+    ValueError, as does a table without a sidecar (an append cannot
     guess).
 
     A staged append under the table's lease (operators/index_commit):
@@ -1361,10 +1356,7 @@ def append_signature_table(
     spark = new_docs.sparkSession
     st = ic.store("signature", path)
     with mfs.leased(fs, st.lease, lease_owner):
-        stored = spark.read.parquet(path + "/_params").first()
-        num_hashes = int(stored["num_hashes"])
-        shingle_n = int(stored["shingle_n"])
-        family = stored.asDict().get("family")
+        num_hashes, shingle_n, family = _sig_params(spark, path)
         _check_family(family, shingle_n)
         sigs = _with_shingles_and_sig(
             new_docs, text_col, id_col, num_hashes, shingle_n, family=family

@@ -54,9 +54,7 @@ Spark's listing never reads.
   the purge listed them survives any replay.
 - ``recover`` lands committed appends (data tables and tombstones) before
   it replays swaps, so a swap replay never runs against a committed but
-  unlanded tombstone; it drops marker-less staging. Per-cell ``.swap_``,
-  ``.compact_`` and ``.retired_`` entries left by an older per-directory
-  swap are healed by ``_heal_dir_swaps``.
+  unlanded tombstone; it drops marker-less staging.
 
 Readers concurrent with a compaction swap can see a torn file set (the
 tables have no manifest), so compaction runs where a deployment runs
@@ -257,7 +255,7 @@ def _drop_tombstones(fs, st: Store, files: list[str]) -> None:
 
 
 def _roll_swap_forward(fs, st: Store, table_dir: str, meta: dict) -> None:
-    unit_dir = os.path.join(table_dir, meta.get("unit", ""))
+    unit_dir = os.path.join(table_dir, meta["unit"])
     staging = os.path.join(table_dir, meta["staging"])
     for f in meta["old_files"]:
         fs.rmtree(os.path.join(unit_dir, f))
@@ -271,10 +269,7 @@ def _roll_swap_forward(fs, st: Store, table_dir: str, meta: dict) -> None:
         elif fs.exists(os.path.join(staging, f)):
             fs.rename(os.path.join(staging, f), dst)
     fs.rmtree(staging)
-    if "tomb_files" in meta:
-        _drop_tombstones(fs, st, meta["tomb_files"])
-    elif meta.get("purge"):  # markers written before the consumed list
-        fs.rmtree(st.path(st.tombstones))
+    _drop_tombstones(fs, st, meta["tomb_files"])
     fs.rmtree(os.path.join(table_dir, f"{SWAP_PREFIX}{meta['tag']}.json"))
 
 
@@ -328,58 +323,13 @@ def _replay_swaps(fs, st: Store, table_dir: str, out: dict) -> None:
             out["removed"].append(os.path.join(table_dir, entry))
 
 
-def _heal_dir_swaps(fs, table_dir: str, out: dict) -> None:
-    """Heal the per-cell directory swap of older code. A ``.swap_`` marker
-    records its ``.compact_`` staging dir and file list: complete staging
-    means the swap is redone (staging replaces the cell), partial staging
-    means the copy had finished and staging is a remnant. Unreferenced
-    ``.compact_`` dirs are pre-commit debris. A ``.retired_<tag>__<cell>``
-    dir restores a missing cell and is otherwise a superseded copy."""
-    if not fs.isdir(table_dir):
-        return
-    entries = sorted(fs.listdir(table_dir))
-    referenced = set()
-    for entry in entries:
-        if not (entry.startswith(".swap_") and entry.endswith(".json")):
-            continue
-        marker = os.path.join(table_dir, entry)
-        meta = json.loads(fs.read_bytes(marker).decode())
-        staging = os.path.join(table_dir, meta["staging"])
-        live = os.path.join(table_dir, meta["cell"])
-        referenced.add(meta["staging"])
-        if set(meta["files"]) <= set(fs.listdir(staging) if fs.isdir(staging) else []):
-            fs.rmtree(live)
-            fs.rename(staging, live)
-            fs.rmtree(os.path.join(live, "_SUCCESS"))
-            out["restored"].append(live)
-        else:
-            fs.rmtree(staging)
-            out["removed"].append(staging)
-        fs.rmtree(marker)
-    for entry in entries:
-        full = os.path.join(table_dir, entry)
-        if entry.startswith(".compact_") and entry not in referenced:
-            fs.rmtree(full)
-            out["removed"].append(full)
-        elif entry.startswith(".retired_") and "__" in entry:
-            live = os.path.join(table_dir, entry.split("__", 1)[1])
-            if fs.isdir(live):
-                fs.rmtree(full)
-                out["removed"].append(full)
-            else:
-                fs.rename(full, live)
-                out["restored"].append(live)
-
-
 def _recover(fs, st: Store) -> dict[str, list[str]]:
-    out: dict[str, list[str]] = {"completed": [], "removed": [], "restored": []}
+    out: dict[str, list[str]] = {"completed": [], "removed": []}
     tables = [st.path(rel) for rel in st.tables]
     tombs = [st.path(st.tombstones)] if st.tombstones else []
     _recover_appends(fs, st, tables + tombs, out)
     for table_dir in tables:
         _replay_swaps(fs, st, table_dir, out)
-        if st.cells:
-            _heal_dir_swaps(fs, table_dir, out)
     return out
 
 
@@ -390,8 +340,7 @@ def recover(st: Store, fs=None) -> dict[str, list[str]]:
     so a live writer's staging is never taken for debris: a writer that
     crashed strands its lease, which is broken
     (``streaming.fs.break_writer_lease``) once the writer is known dead.
-    Returns {"completed": [commit tags], "removed": [paths], "restored":
-    [cell dirs]}."""
+    Returns {"completed": [commit tags], "removed": [paths]}."""
     fs = fs or mfs.LOCAL_FS
     with mfs.leased(fs, st.lease):
         return _recover(fs, st)
@@ -515,8 +464,8 @@ def stats(st: Store, fs=None) -> dict:
             "max_files_per_cell": max(counts, default=0),
             "append_staging_dirs": n(entries, STAGING_PREFIX),
             "append_markers": n(entries, MARKER_PREFIX),
-            "compact_staging_dirs": n(entries, COMPACT_PREFIX, ".compact_"),
-            "swap_markers": n(entries, SWAP_PREFIX, ".swap_"),
+            "compact_staging_dirs": n(entries, COMPACT_PREFIX),
+            "swap_markers": n(entries, SWAP_PREFIX),
         }
     return out
 

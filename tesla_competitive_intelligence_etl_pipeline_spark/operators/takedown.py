@@ -1,4 +1,4 @@
-"""End-to-end takedown orchestration (r9; durable-request rework r10).
+"""End-to-end takedown orchestration with durable requests.
 
 One erasure request, every store that could surface the content. The pieces
 exist individually — merge-table DELETE (streaming.events), commit-log
@@ -7,10 +7,9 @@ clustering), signature-table tombstones (dedup) — and their pairwise
 compositions are pinned in tests. This module is the operator a deployment
 actually schedules: it routes ONE request through all of them and reports
 what each store did, so an id can never be erased from the corpus but keep
-matching crawl increments or surfacing from an index (the gap VERDICT r8
-item 1 closed store-by-store).
+matching crawl increments or surfacing from an index.
 
-Durability (ADVICE r9, medium): the request is recorded UNDER THE CORPUS
+Durability: the request is recorded UNDER THE CORPUS
 TABLE (``<corpus>/_takedown/<request_id>.json``) BEFORE anything mutates,
 and removed only after every listed store has its tombstones. A crash at
 any point therefore leaves either nothing (pre-record) or a record that
@@ -23,8 +22,8 @@ since-point lives exactly as long as its record (record put -> pin ->
 delete -> fan-out -> record removed -> pin dropped), so
 ``sweep_takedown_pins`` can tell a LIVE takedown's pin (its record exists —
 spared) from one stranded by a crash AFTER propagation completed (record
-gone — safe to drop), closing ADVICE r9 low's live-pin race without age
-heuristics.
+gone — safe to drop), so no live pin is raced and no age heuristic is
+needed.
 
 Run ``recover_takedowns`` at restart healing, where the stores'
 ``index_commit.recover`` runs, BEFORE resuming other writers to the corpus: a record
@@ -106,7 +105,7 @@ def _mutate_stores(corpus: str, fs, mutate) -> dict:
     new = mutate(_load_stores(corpus, fs))
     data = json.dumps(new).encode()
     fs.put_atomic(path, data)
-    # post-write read-back (ADVICE r12, low): on a plain filesystem this
+    # post-write read-back: on a plain filesystem this
     # is last-writer-wins — two concurrent registrations can silently lose
     # one. The single-registrar discipline is the operational contract;
     # this makes a violation OBSERVABLE instead of silent: if what landed
@@ -127,9 +126,9 @@ def _mutate_stores(corpus: str, fs, mutate) -> dict:
 
 
 def _store_form(corpus: str, path: str) -> str:
-    """Storage form of a store path inside ``_stores.json`` (ADVICE r12,
-    low): stores located UNDER or NEXT TO the corpus (the co-located
-    layouts every test and deployment recipe uses) are recorded
+    """Storage form of a store path inside ``_stores.json``: stores
+    located UNDER or NEXT TO the corpus (the co-located layouts every
+    test and deployment recipe uses) are recorded
     corpus-RELATIVE, so a corpus directory that is later copied or
     relocated (the clone-before-takedown pattern) carries a registry that
     resolves to the CLONE's co-located stores, not the original's.
@@ -150,8 +149,8 @@ def _resolve_store_path(corpus: str, p: str) -> str:
 def register_store(
     corpus: str, path: str, kind: str, fs=None
 ) -> dict[str, tuple[str, ...]]:
-    """Record a derived store under the corpus itself (r12 — VERDICT r11
-    item 1): ``<corpus>/_stores.json`` (the ``_takedown/`` durability
+    """Record a derived store under the corpus itself:
+    ``<corpus>/_stores.json`` (the ``_takedown/`` durability
     precedent) becomes the single source of truth for WHICH stores hold
     content derived from this corpus, so an erasure can never silently miss
     one. ``kind``: ``'ivf'`` / ``'ivfpq'`` (ANN indexes), ``'signature'``
@@ -161,15 +160,15 @@ def register_store(
 
     Once registered, ``takedown`` / ``takedown_verify`` called with NO
     store arguments fan out to / audit exactly the registry, and a
-    caller-supplied list that OMITS a registered store fails loudly — the
-    pre-r12 API let a forgotten index silently escape both the erasure and
-    the zero-residual proof. Idempotent; CAS-safe read-modify-write on
+    caller-supplied list that OMITS a registered store fails loudly, so a
+    forgotten index cannot silently escape either the erasure or the
+    zero-residual proof. Idempotent; CAS-safe read-modify-write on
     stores that support it. Returns the registry after the update.
 
     Stores located under or next to the corpus are recorded
-    corpus-RELATIVE and resolve against the corpus path at read time
-    (r13 — ADVICE r12: a cloned/relocated corpus' registry points at ITS
-    co-located stores, not the original's); remote stores stay absolute.
+    corpus-RELATIVE and resolve against the corpus path at read time (a
+    cloned/relocated corpus' registry points at ITS co-located stores, not
+    the original's); remote stores stay absolute.
     Prefer letting the BUILDERS register for you: build_ivf_index /
     build_ivfpq_index / pq_build_index / write_signature_table* all take
     ``corpus=`` and call this after their write commits."""
@@ -237,12 +236,12 @@ def unregister_store(corpus: str, path: str, fs=None) -> bool:
 def _as_kind_map(corpus: str, doc: dict) -> dict[str, tuple[str, ...]]:
     """Registry document -> {kind: (absolute paths...)}. Relative entries
     (co-located stores) resolve against THIS corpus path, so a relocated
-    corpus' registry points at its own co-located stores (ADVICE r12)."""
+    corpus' registry points at its own co-located stores."""
     out: dict[str, tuple[str, ...]] = {k: () for k in STORE_KINDS}
     for s in doc.get("stores", []):
         if s["kind"] not in out:
             # ValueError with the offending kind and file, not a bare
-            # KeyError crashing every takedown call (ADVICE r12, low) —
+            # KeyError crashing every takedown call —
             # a hand-edited registry or one written by a newer version
             # must be diagnosable.
             raise ValueError(
@@ -323,9 +322,9 @@ def _list_requests(corpus: str, fs) -> list[dict]:
         if f.endswith(".json"):
             out.append(json.loads(fs.read_bytes(os.path.join(d, f)).decode()))
     # oldest first BY THE RECORDED CLOCK — filenames are uuid hex, so a
-    # filename sort is random order (review r11: the recover docstring
-    # promises oldest-first, and the no-stamp CDC path's exactness
-    # argument reasons about what committed since the OLDEST crash)
+    # filename sort is random order (the recover docstring promises
+    # oldest-first, and the no-stamp CDC path's exactness argument
+    # reasons about what committed since the OLDEST crash)
     out.sort(key=lambda rec: rec.get("created_at") or 0.0)
     return out
 
@@ -363,7 +362,7 @@ def sweep_takedown_pins(target: str, fs=None) -> list[str]:
     takedown (the record is written BEFORE the pin and removed BEFORE the
     pin is dropped) and is always spared — so this sweep can run as
     routine maintenance on a host that didn't issue the takedown without
-    racing a live one (ADVICE r9, low). Run ``recover_takedowns`` first:
+    racing a live one. Run ``recover_takedowns`` first:
     it completes crashed requests, removes their records, and drops their
     pins, leaving this sweep only the record-less debris of crashes in
     the final drop itself. Named (non-``takedown-``) snapshots are never
@@ -372,15 +371,15 @@ def sweep_takedown_pins(target: str, fs=None) -> list[str]:
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
     fs = fs or mfs.LOCAL_FS
-    # READ ORDER IS THE SAFETY ARGUMENT (review r11): the writer's order
-    # is record-then-pin, so the sweep must read snapshots FIRST and
-    # records SECOND — any pin in the snapshot listing was written AFTER
-    # its record, so the later record read can only see MORE records,
-    # never miss a live pin's. The previous records-first order raced a
-    # takedown starting between the two reads: its pin was listed, its
-    # record wasn't, and the sweep dropped a LIVE pin mid-takedown —
-    # recover_takedowns then misread the crash as pre-pin and deleted
-    # the record, silently losing propagation.
+    # READ ORDER IS THE SAFETY ARGUMENT: the writer's order is
+    # record-then-pin, so the sweep must read snapshots FIRST and records
+    # SECOND — any pin in the snapshot listing was written AFTER its
+    # record, so the later record read can only see MORE records, never
+    # miss a live pin's. A records-first order would race a takedown
+    # starting between the two reads: its pin listed, its record not, the
+    # sweep would drop a LIVE pin mid-takedown, and recover_takedowns
+    # would misread the crash as pre-pin and delete the record, silently
+    # losing propagation.
     tags = list(strm.list_snapshots(target, fs))
     live = {rec["tag"] for rec in _list_requests(target, fs)}
     dropped = []
@@ -398,10 +397,10 @@ def recover_takedowns(
     lease_owner: str | None = None,
 ) -> list[dict]:
     """Complete every takedown whose process crashed between the durable
-    request record and the final cleanup — the retry path ADVICE r9
-    (medium) found missing: without it, a crash after the corpus DELETE
-    committed but before the tombstone fan-out permanently lost
-    propagation (re-running takedown found nothing left to delete).
+    request record and the final cleanup: without it, a crash after the
+    corpus DELETE committed but before the tombstone fan-out would lose
+    propagation for good (re-running takedown finds nothing left to
+    delete).
 
     Per stranded record, oldest first:
 
@@ -439,7 +438,7 @@ def recover_takedowns(
             continue
         commit_id = rec.get(_DELETE_COMMIT)
         if commit_id:
-            # resolve through the scrub pointer (r11): an erased-and-
+            # resolve through the scrub pointer: an erased-and-
             # scrubbed delta still carries the key-only delete records —
             # exactly the delete set recovery needs
             delta_dir = strm._delta_dir(corpus, commit_id, fs)
@@ -506,8 +505,8 @@ def takedown_verify(
     extra_tables: tuple[str, ...] | None = None,
     fs=None,
 ) -> list[dict]:
-    """ONE audit across the corpus table AND every derived store (r11 —
-    VERDICT r10 item 1, the deadline gap): ``erasure.where_is`` proves the
+    """ONE audit across the corpus table AND every derived store (the
+    erasure deadline's gap): ``erasure.where_is`` proves the
     merge table clean (live state, superseded versions, snapshot pins,
     commit-log deltas), but an erased id's DERIVED footprints — vectors
     and PQ codes in ANN indexes, stored MinHash signatures in LSH
@@ -537,8 +536,8 @@ def takedown_verify(
     anti-join) is in the loop — raw committed bytes are the audit's
     ground truth.
 
-    Store lists default to the corpus' persisted registry (r12 —
-    ``register_store``): pass nothing and the audit covers EVERY
+    Store lists default to the corpus' persisted registry
+    (``register_store``): pass nothing and the audit covers EVERY
     registered store; a supplied list that omits a registered store
     raises instead of producing a proof that quietly covered less."""
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import erasure
@@ -616,7 +615,7 @@ def takedown(
     x2_sig_takedown composition, now one call). An empty delete (nothing
     matched) propagates nothing and reports zeros.
 
-    Crash-durable (ADVICE r9, medium): a request record lands under
+    Crash-durable: a request record lands under
     ``<corpus>/_takedown/`` BEFORE the pin and the delete, is stamped with
     the delete's commit id right after the delete commits (verified
     against the pre-delete head via the commit chain, so a racing writer
@@ -628,8 +627,8 @@ def takedown(
     size), so the tombstone appends don't re-read the log per store.
     Returns ``{"corpus_deleted": n, "stores": {path: tombstoned}}``.
 
-    Store lists default to the corpus' persisted registry (r12 —
-    ``register_store``): a bare ``takedown(spark, corpus, keys=...)``
+    Store lists default to the corpus' persisted registry
+    (``register_store``): a bare ``takedown(spark, corpus, keys=...)``
     fans out to every registered IVF / IVF-PQ index and signature table,
     and a caller-supplied list that omits a registered store raises.
     Registered ``'table'`` stores (arbitrary derivations only the caller
@@ -642,7 +641,7 @@ def takedown(
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
     fs = fs or mfs.LOCAL_FS
-    # validate BEFORE the first durable write (review r11): a plain
+    # validate BEFORE the first durable write: a plain
     # caller error after the record/pin landed would strand debris that
     # blocks vacuum until recovery runs — the same argument check
     # delete_from_merge_table makes, made early
@@ -657,16 +656,15 @@ def takedown(
     man = strm._load_manifest(corpus, fs)
     if man is None:
         raise ValueError(f"no committed corpus table at {corpus}")
-    # the id namespace MUST be a merge key of the corpus (review r11):
+    # the id namespace MUST be a merge key of the corpus:
     # crash recovery may read the delete set back from a delta that
     # erasure has since SCRUBBED — the scrub keeps only the key columns
     # on the erased keys' records, so a non-key id_col would come back
     # NULL and propagation would silently vanish
-    params = man.get("params")
-    if params is not None and id_col not in params["keys"]:
+    if id_col not in man["params"]["keys"]:
         raise ValueError(
             f"takedown: id_col {id_col!r} is not one of the corpus "
-            f"table's merge keys {params['keys']} — commit-log-driven "
+            f"table's merge keys {man['params']['keys']} — commit-log-driven "
             "propagation (and its crash recovery through possibly-"
             "scrubbed deltas) needs the id to be a key column"
         )
@@ -688,7 +686,7 @@ def takedown(
     # record recover_takedowns can complete (or safely drop, pre-pin)
     fs.put_atomic(_request_path(corpus, request_id), json.dumps(rec).encode())
     pinned = strm.snapshot_merge_table(corpus, tag, fs=fs, lease_owner=lease_owner)
-    pre_head = (pinned.get("commit") or {}).get("id")
+    pre_head = pinned["commit"]["id"]
     strm.delete_from_merge_table(
         spark, corpus, keys=keys, predicate=predicate, fs=fs,
         lease_owner=lease_owner,
@@ -699,8 +697,8 @@ def takedown(
     # head we read — with writers lease-serialized that is our delete; if
     # anything interleaved, leave the stamp off (recovery then uses the
     # pinned-state CDC read under its restart-ordering contract).
-    head = ((strm._load_manifest(corpus, fs) or {}).get("commit") or {}).get("id")
-    if head and head != pre_head:
+    head = strm._load_manifest(corpus, fs)["commit"]["id"]
+    if head != pre_head:
         try:
             crec = json.loads(
                 fs.read_bytes(
@@ -715,17 +713,14 @@ def takedown(
                 _request_path(corpus, request_id), json.dumps(rec).encode()
             )
     # read the delete set: EXACTLY the stamped commit's delta when the
-    # stamp landed (the recover_takedowns path — works on ANY table,
-    # including pre-commit-log corpora whose pinned snapshot carries no
-    # commit id, where read_commit_changes(since=tag) always raised
-    # post-delete; review r11), else the pinned-state CDC read with the
-    # always-correct state-diff fallback
+    # stamp landed (the recover_takedowns path), else the pinned-state
+    # CDC read with the always-correct state-diff fallback
     if rec[_DELETE_COMMIT]:
         delta_dir = strm._delta_dir(corpus, rec[_DELETE_COMMIT], fs)
         if not fs.isdir(delta_dir):
             # a racing vacuum(changes_keep=N) reclaimed the just-written
             # delta — same actionable guidance as recover_takedowns, not
-            # a raw Spark path error (review r11)
+            # a raw Spark path error
             raise ValueError(
                 f"takedown {request_id} at {corpus}: its delete commit "
                 f"{rec[_DELETE_COMMIT]}'s delta was vacuumed before "

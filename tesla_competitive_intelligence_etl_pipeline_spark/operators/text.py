@@ -102,7 +102,7 @@ def _sliding_tuples(arr: Column, n: int, combine) -> Column:
     ``combine(c0, ..., cn-1)`` — built from n bulk ``slice``s zipped
     together instead of ``transform(sequence(...), <per-window lookup>)``.
 
-    r13 (guide §1.2 step 2 — per-task work): higher-order functions run
+    Per-task work (guide §1.2 step 2): higher-order functions run
     interpreted, and the per-gram ``F.get``/``F.slice`` form paid n
     bounds-checked lookups (or an n-element copy) plus an index-array
     materialization per row; this form does n bulk array copies and one
@@ -221,7 +221,7 @@ def bpe_pair_frequencies(
     from pyspark.sql import Window
 
     # pair generation is CPU-bound per row; small single-file inputs arrive
-    # as one partition, so spread across cores first (r13: conditional
+    # as one partition, so spread across cores first (a conditional
     # keyed spread — a no-op at scale where inputs are already split, and
     # no round-robin pre-sort; guide §2.4/§2.5)
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
@@ -429,8 +429,8 @@ GPT2_PRETOK_RE = (
 # ``\s`` can match — Java regex ``\s`` is exactly the six ASCII
 # whitespace chars [ \t\n\x0B\f\r] (no UNICODE_CHARACTER_CLASS), so this
 # table covers the whole whitespace alphabet pieces can contain
-# (r12 — VERDICT r11 item 7 closed the \x0B/\f gap: those two matched
-# ``\s``, had no surrogate, and their pieces were silently dropped).
+# (including \x0B and \f: they match ``\s``, and without a surrogate
+# their pieces would be silently dropped).
 # The trainer's symbol strings are space-SEPARATED, so a literal space
 # inside a piece would corrupt them; surrogates keep pieces atomic.
 # Unicode-only whitespace (U+00A0, U+2000-U+200A, U+3000, ...) is NOT
@@ -442,14 +442,14 @@ _WS_CHARS, _WS_SURROGATES = " \n\t\r\x0b\x0c", "ĠĊĉčċČ"
 
 def pretokenize_pieces(col: Column, mode: str = "whitespace") -> Column:
     """Text -> ARRAY of word pieces, the boundary the BPE trainer/encoder
-    merges within (r11 — VERDICT r10 item 4).
+    merges within.
 
-    - ``"whitespace"``: the legacy lowercased ``\\s+`` split — keeps every
+    - ``"whitespace"`` (default): the lowercased ``\\s+`` split — keeps every
       pinned oracle byte-identical.
     - ``"gpt2"``: the GPT-2 regex — contractions split off, letter/number/
       punctuation runs with the leading-space convention, CASE PRESERVED;
       whitespace chars map to GPT-2's printable surrogates (Ġ Ċ ĉ č ċ Č —
-      the full ASCII ``\\s`` alphabet the pattern splits on, r12) so
+      the full ASCII ``\\s`` alphabet the pattern splits on) so
       pieces survive the trainer's space-separated symbol encoding, and
       ``gpt2_detokenize`` maps them back for the exact (case-preserving)
       round trip. Unicode-only spaces (U+00A0, U+3000, ...) are not
@@ -495,7 +495,7 @@ def bpe_apply_merges(
     encoding an in-vocab word reproduces its trained spelling exactly and
     out-of-vocab words (held-out corpora, words past the trainer's
     max_word_len) get the merges the trainer would have applied
-    (VERDICT r7 item 1; the char-count fallback understated compression).
+    (a char-count fallback would understate compression).
     Sequential rank-order application is deliberately the trainer's
     semantics, not reference-BPE's repeatedly-lowest-applicable-rank
     scan: this trainer's vocab was BUILT by sequential rewrites, so the
@@ -561,7 +561,7 @@ def _bpe_train_local(
     rows, rounds: int, min_pair_count: int | None
 ) -> tuple[list, list]:
     """The merge loop of bpe_train run DRIVER-LOCALLY over a collected
-    (word, sym, freq) dictionary (r12 — VERDICT r11 item 2, the one real
+    (word, sym, freq) dictionary (the one real
     scale ceiling): the distributed trainer pays one Spark job PER MERGE
     (an orderBy().first() round trip), which is fine for gate-sized vocabs
     but wall-clock infeasible for a production 32-64k-merge vocabulary —
@@ -676,7 +676,7 @@ def bpe_train(
     variant of greedy BPE that both Spark's and DuckDB's replace()
     implement identically, which is what makes the trainer hash-checkable
     end-to-end against an unrolled SQL oracle (same precedent as the
-    unrolled-Lloyd k-means). ``eow`` (VERDICT r7 item 2) appends an
+    unrolled-Lloyd k-means). ``eow`` appends an
     end-of-word marker SYMBOL (standard Sennrich ``'</w>'``) to every
     word's symbol string before training, so merges that absorb a word's
     final character are distinct from word-internal merges and decoding
@@ -690,7 +690,7 @@ def bpe_train(
     vocabulary for bpe_token_counts. ``reliable`` swaps the per-round lineage truncation to
     real checkpoints (see operators/dedup._truncate_lineage).
 
-    Stop rules (r10 — VERDICT r9 item 7, how real tokenizers train):
+    Stop rules (how real tokenizers train):
     ``target_vocab=N`` trains until the NOMINAL vocabulary (alphabet +
     one entry per merge — the HF vocab_size accounting) reaches N: each
     merge adds exactly one entry, so the round count is N - |alphabet|
@@ -703,15 +703,15 @@ def bpe_train(
     Both are driver-visible scalars, so the unrolled SQL oracle
     reproduces them as round gates (_bpe_oracle_sql).
 
-    ``pretokenize`` (r11 — VERDICT r10 item 4): the word-boundary rule in
-    front of the merges — ``"whitespace"`` (legacy, lowercased) or
+    ``pretokenize``: the word-boundary rule in
+    front of the merges — ``"whitespace"`` (default, lowercased) or
     ``"gpt2"`` (the production regex: contractions, letter/number/punct
     runs, leading-space convention, case preserved; see
     pretokenize_pieces). Train-time choice like eow — encode with the
     SAME mode (bpe_encode_ids ``pretokenize=``), persisted by
     bpe_save.
 
-    ``strategy`` (r12 — VERDICT r11 item 2, the vocab-scale training
+    ``strategy`` (the vocab-scale training
     path): ``'distributed'`` (default — every round is one Spark job over
     the vocab-sized table, the oracle-parity path), ``'local'`` (collect
     the (word, sym, freq) dictionary ONCE after the corpus-scale groupBy
@@ -752,7 +752,7 @@ def bpe_train(
         )
     )
     if strategy != "distributed":
-        # ONE corpus-scale job (review r12: a count() pre-check ran the
+        # ONE corpus-scale job (a count() pre-check would run the
         # word-frequency groupBy twice): collect at most budget+1 rows —
         # the limit bounds the driver transfer, and the extra row is the
         # over-budget signal
@@ -838,7 +838,7 @@ def bpe_symbol_table(vocab, byte_fallback: bool = False) -> "DataFrame":
     n_merges rows — bounded by the tokenizer, not the corpus), so the
     single-partition stage it implies is vocab-sized, never data-sized.
 
-    ``byte_fallback`` (r9 — VERDICT r8 item 6): extend the alphabet with
+    ``byte_fallback``: extend the alphabet with
     the 256 byte symbols ``<0x00>``..``<0xFF>`` (the SentencePiece
     byte-fallback convention), so NOTHING is unrepresentable — symbols
     outside the trained alphabet encode as their UTF-8 bytes instead of
@@ -884,7 +884,7 @@ def _utf8_byte_symbols(col: Column) -> Column:
 def _assemble_token_ids_per_word(
     words, lookup, vocab, byte_fallback: bool, id_col: str
 ):
-    """Per-distinct-word token-id assembly (r14 — bpe_encode_ids'
+    """Per-distinct-word token-id assembly (bpe_encode_ids'
     ``assemble_per_word`` option): symbols explode and resolve ids over the
     Heaps'-bounded (word -> sym) lookup instead of every occurrence; each
     word's ordered id array is built once, the occurrence side joins one
@@ -992,13 +992,13 @@ def bpe_encode_ids(
     Symbols map to ids through bpe_symbol_table (dense, symbol-ASC);
     symbols outside the trained alphabet (e.g. digits in a letters-only
     corpus) encode as -1, the unk convention — or, with
-    ``byte_fallback=True`` (r9 — VERDICT r8 item 6), as their UTF-8 byte
+    ``byte_fallback=True``, as their UTF-8 byte
     tokens ``<0xNN>`` from the extended alphabet, so nothing is
     unrepresentable and decode(encode(x)) stays lossless on ANY input
     (the SentencePiece convention). Default off: the unk pins stay
     byte-identical.
 
-    ``assemble_per_word`` (r14, guide §2.3 — shuffle fewer rows): resolve
+    ``assemble_per_word`` (guide §2.3 — shuffle fewer rows): resolve
     each DISTINCT word's ordered token-id array once and let the final
     per-doc groupBy collect n_words small arrays instead of n_symbols
     structs (bit-identical output, pinned in tests). Worth it when words
@@ -1029,12 +1029,12 @@ def bpe_encode_ids(
             for r in sorted(merges.collect(), key=lambda r: r["merge_rank"])
         ]
     if merges is not None and len(merges) > BPE_EXPR_MAX_MERGES:
-        # UDF regime (VERDICT r8 item 4): apply the Arrow-batched encoder
+        # UDF regime: apply the Arrow-batched encoder
         # ONCE PER DISTINCT OOV WORD and join the encoded spellings back —
         # a held-out corpus repeats its words just like the training
         # corpus (Zipf), so per-occurrence evaluation multiplies the
         # Python-side work by the duplication factor (measured:
-        # SCALING.md r9). The distinct + anti-join shuffles (word)-keyed
+        # SCALING.md). The distinct + anti-join shuffles (word)-keyed
         # slivers; the union makes the lookup TOTAL, so the occurrence
         # join below stays the one word-keyed shuffle the operator
         # already paid.
@@ -1246,15 +1246,15 @@ def bpe_token_counts(
     max_word_len — are encoded by APPLYING THE LEARNED MERGES in rank
     order (``merges`` = the bpe_train result, or a pre-collected
     [(pair, merged), ...] list; ``eow`` must match training): true
-    tokenizer semantics (VERDICT r7 item 1). The merge list is
+    tokenizer semantics. The merge list is
     rank-bounded driver state (the same bounded-collect argument as the
     per-round argmax; a 32k-merge production list is ~1 MB) and is
     applied as a JVM replace chain up to BPE_EXPR_MAX_MERGES — coalesce
     is lazy in codegen, so only the join's OOV misses pay it — beyond
     that through the Arrow-batched bpe_apply_merges_udf twin, evaluated
-    ONCE PER DISTINCT OOV WORD with the counts joined back (r9 — the
+    ONCE PER DISTINCT OOV WORD with the counts joined back (the
     same shape as the vocab join itself; per-occurrence evaluation
-    multiplied the Python-side work by the corpus's duplication factor).
+    would multiply the Python-side work by the corpus's duplication factor).
     With
     ``merges=None`` OOV words keep the legacy byte-level degradation to
     base symbols: character count (+1 for the eow symbol if set)."""
@@ -1277,7 +1277,7 @@ def bpe_token_counts(
             encoded = bpe_apply_merges(F.col("word"), merges, eow)
             fallback = F.size(F.split(encoded, " ")).cast("long")
         else:
-            # UDF regime (VERDICT r8 item 4): encode each DISTINCT OOV
+            # UDF regime: encode each DISTINCT OOV
             # word once and extend the lookup table, instead of running
             # the pandas_udf on every occurrence (see bpe_encode_ids)
             oov_counts = (
@@ -1321,13 +1321,14 @@ def bpe_save(
     """Persist a trained tokenizer: the ranked merge table, the optional
     training-corpus (word, sym) vocabulary cache, and a one-row config
     table pinning the settings encode/decode must replay with (eow
-    marker, byte_fallback, format version). Train ONCE offline, then any
+    marker, byte_fallback, pretokenize mode, format version). Train ONCE offline, then any
     later job — other corpora, other clusters — loads the artifact and
     encodes without retraining (the HF tokenizer.json shape, as parquet
     so it lives on the same storage as the data). Merges are ∝ the merge
     count and vocab ∝ distinct training words: both tiny next to any
     corpus; encode for unseen corpora needs only merges + config (OOV
     words replay the ranked merges — the trainer's own rewrite)."""
+    pretokenize_pieces(F.lit(""), pretokenize)  # raises on an unknown mode
     mode = "overwrite" if overwrite else "error"
     spark = merges.sparkSession
     merges.coalesce(1).write.mode(mode).parquet(f"{path}/merges")
@@ -1348,10 +1349,6 @@ def bpe_load(spark, path: str):
     if len(cfg_rows) != 1:
         raise ValueError(f"corrupt tokenizer config at {path}: {cfg_rows!r}")
     cfg = cfg_rows[0].asDict()
-    # pre-r11 artifacts predate the pretokenize column: whitespace mode
-    cfg.setdefault("pretokenize", "whitespace")
-    if cfg["pretokenize"] is None:
-        cfg["pretokenize"] = "whitespace"
     if int(cfg["format_version"]) > BPE_FORMAT_VERSION:
         raise ValueError(
             f"tokenizer at {path} has format_version "
@@ -1361,7 +1358,7 @@ def bpe_load(spark, path: str):
     # probe the OPTIONAL vocab through Spark itself, not os.path — the
     # artifact lives on the data's storage (s3://, hdfs://), where a local
     # isdir is always False and a present vocab would silently load as
-    # None, degrading every word to the OOV merge-replay path (ADVICE r10)
+    # None, degrading every word to the OOV merge-replay path
     try:
         vocab = spark.read.parquet(f"{path}/vocab")
         vocab.schema  # force analysis so a missing path raises HERE

@@ -214,7 +214,7 @@ def x1_cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus lives in a schema-generic merge gold table keyed by doc_id
     (merge_table); a training run snapshots it; a new crawl batch (50 exact
     copies under fresh ids + 50 revised texts) merges in; the COMMIT LOG
-    (r8: read_commit_changes — O(delta) regardless of how the crawl's keys
+    (read_commit_changes — O(delta) regardless of how the crawl's keys
     scatter across buckets, unlike the state diff which re-reads every
     touched bucket in full) yields ONLY the inserted docs, and exact dedup
     flags each against the PINNED base state by md5 — so steady-state
@@ -281,7 +281,7 @@ def _ensure_docs_gold(spark: SparkSession, sf_dir: str) -> str:
 
 
 # ===========================================================================
-# X-3/X-9 composition (VERDICT r7 item 3): CDC -> ANN-index refresh — the
+# X-3/X-9 composition: CDC -> ANN-index refresh — the
 # steady-state 100 TB serving loop. The embedding corpus lives in a merge
 # gold table; the IVF-PQ index is built from a pinned snapshot; each later
 # corpus increment is discovered via read_changes (O(changed buckets) diff
@@ -346,7 +346,7 @@ def _ensure_cdc_emb_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, 
     ),
 )
 def x3_cdc_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-3/X-9 production loop (VERDICT r7 item 3): search the IVF-PQ
+    """X-3/X-9 production loop: search the IVF-PQ
     index AFTER a CDC-driven incremental refresh — merge-table increment
     -> commit-log read (read_commit_changes, O(delta)) ->
     ivfpq_index_append with frozen quantizers.
@@ -354,7 +354,7 @@ def x3_cdc_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     so its top-1 self-hit proves the refreshed rows are searchable. The
     oracle re-derives the ENTIRE composition in SQL: base-only cell
     centroids and codebooks, appended rows assigned argmax-cosine
-    (round 9, ties to the greatest label — the engine's array_max
+    (ties to the greatest label — the engine's array_max
     tie-break), then the standard probe/ADC/shortlist/refine
     (oracle_vec.ivfpq_topk_sql base_pred variant). Offline ingest
     (_ensure_cdc_emb_index) is warmed by bench.py; the timed path is the
@@ -368,7 +368,7 @@ def x3_cdc_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9h (r8): DELETE from the merge gold table — retention / GDPR erasure /
+# X-9h: DELETE from the merge gold table — retention / GDPR erasure /
 # corpus takedown, the missing third of the DML triangle. CDC composes:
 # the deltas since the pre-delete snapshot are pure delete records.
 # ===========================================================================
@@ -418,7 +418,7 @@ def _ensure_delete_gold(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def x9_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9h (r8): DELETE on the merge gold table, observed through CDC —
+    """X-9h: DELETE on the merge gold table, observed through CDC —
     keys-mode erasure (user_id % 7 == 0; I/O ∝ the keys' bucket span)
     followed by predicate-mode erasure (last_value < 50; a pruning count
     pass rewrites only buckets containing matches), each a two-phase
@@ -436,10 +436,10 @@ def x9_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9i (r8): commit-log CDC — the O(delta) incremental read. The state-diff
+# X-9i: commit-log CDC — the O(delta) incremental read. The state-diff
 # read_changes re-reads every changed bucket's FULL content on both sides,
 # which degrades toward O(table) when an increment's keys hash-scatter
-# across all buckets (measured, SCALING.md r8). Merges/deletes therefore
+# across all buckets (measured, SCALING.md). Merges/deletes therefore
 # capture their change rows AT COMMIT TIME; read_commit_changes unions the
 # per-commit deltas along the manifest chain — I/O is exactly the change
 # rows in the range, independent of table size.
@@ -520,7 +520,7 @@ def _clog_diff(seq: int, old: str, new: str) -> str:
     + _clog_diff(2, "s2", "s3"),
 )
 def x9_commit_log_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9i (r8): read the commit log between the pinned base and the
+    """X-9i: read the commit log between the pinned base and the
     current state — two commits' captured deltas, unioned with
     _commit_seq, NO bucket data read at all (the walk reads two manifest
     chain records plus the delta files themselves). Per-commit
@@ -537,12 +537,12 @@ def x9_commit_log_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9j (r9): commit-log survival across ROLLBACK — rollback_merge_table
+# X-9j: commit-log survival across ROLLBACK — rollback_merge_table
 # captures the state diff between the rolled-back and restored states as a
 # synthetic kind='rollback' commit, so the chain stays walkable and CDC
 # consumers keep the O(delta) read exactly when the table is recovering
-# from a bad write (VERDICT r8 item 3; previously a loud failover to the
-# O(table) state diff).
+# from a bad write (instead of a loud failover to the O(table) state
+# diff).
 # ===========================================================================
 
 @artifact
@@ -589,7 +589,7 @@ def _clog_diff_full(seq: int, old: str, new: str) -> str:
     + _clog_diff_full(2, "s2", "s1"),
 )
 def x9_rollback_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9j (r9): the commit log read ACROSS a rollback — seq 1 is the bad
+    """X-9j: the commit log read ACROSS a rollback — seq 1 is the bad
     write's captured delta, seq 2 is the rollback's synthetic delta (the
     exact inverse: the bad write's inserts come back as deletes, its
     updates revert pre/post) — so a CDC consumer that already applied the
@@ -606,7 +606,7 @@ def x9_rollback_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9k (r9): manifest column stats + driver-side bucket skipping — the
+# X-9k: manifest column stats + driver-side bucket skipping — the
 # Delta data-skipping shape: merges record per-bucket min/max, range reads
 # prune provably-disjoint buckets before Spark ever lists their files.
 # ===========================================================================
@@ -653,13 +653,14 @@ def _ensure_stats_gold(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def x9_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9k (r9): range read over the stats-carrying gold table —
+    """X-9k: range read over the stats-carrying gold table —
     read_merged(range_filters=...) prunes buckets whose manifest min/max
     prove a disjoint last_value range BEFORE Spark lists their files (the
     Delta data-skipping shape; at 100 TB the skip saves per-bucket
     listings and footer reads), and applies the same predicate to the
-    surviving rows so correctness never depends on the stats (legacy /
-    post-rebucket tables read everything and stay right). Hash-checked:
+    surviving rows so correctness never depends on the stats (tables
+    merged without ``stats_cols`` and post-rebucket tables read everything
+    and stay right). Hash-checked:
     the oracle recomputes latest-per-user with the range predicate in
     SQL. Offline ingest with stats_cols in _ensure_stats_gold (warmed by
     bench.py); mechanics + real file-skip pinned in
@@ -692,7 +693,7 @@ def x9_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x9_stats_join_autobroadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9k2 (r12 — VERDICT r11 item 4): the STATS-PLANNED dim join — the
+    """X-9k2: the STATS-PLANNED dim join — the
     events fact enriched through joins.enrich_with_merged_dim against the
     stats-carrying gold table with a narrow last_value range. The dim side
     is read with broadcast_threshold_rows='auto': the manifest's recorded
@@ -724,9 +725,9 @@ def x9_stats_join_autobroadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9l (r10): clustered layout -> per-FILE data skipping on a column that
+# X-9l: clustered layout -> per-FILE data skipping on a column that
 # does NOT correlate with the key hash — the case bucket-level min/max can
-# never prune (VERDICT r9 item 1). merge_table(cluster_by=...) writes each
+# never prune. merge_table(cluster_by=...) writes each
 # bucket version as range-disjoint files and records their spans; the range
 # read then skips files inside every bucket (Delta OPTIMIZE ZORDER shape).
 # ===========================================================================
@@ -778,7 +779,7 @@ def _ensure_clustered_gold(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def x9_clustered_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9l (r10): range read over the CLUSTERED gold table — the filtered
+    """X-9l: range read over the CLUSTERED gold table — the filtered
     column does not correlate with the key hash, so per-bucket min/max
     (x9_stats_skipping's mechanism) provably prunes zero buckets here;
     the cluster_by layout (range-disjoint files per bucket version, spans
@@ -797,7 +798,7 @@ def x9_clustered_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# X-9m (r10): Z-ORDER (multi-column cluster_by) -> file skipping on EITHER
+# X-9m: Z-ORDER (multi-column cluster_by) -> file skipping on EITHER
 # of two independent columns. 1-D clustering (x9_clustered_skipping) buys
 # pruning on exactly one column; the canonical events read filters BOTH a
 # score band and an event-time window, and a 1-D value layout gives the
@@ -844,7 +845,7 @@ def _ensure_zorder_gold(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def x9_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9m (r10): conjunctive 2-D range read (score band x event-time
+    """X-9m: conjunctive 2-D range read (score band x event-time
     window) over the Z-ORDERED events fact — read_merged prunes files
     whose recorded span misses EITHER dimension, the multiplicative skip a
     1-D layout cannot give (its second column's per-file span converges to
@@ -895,7 +896,7 @@ def _ensure_unclustered_gold(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def x9_optimize_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X-9n (r10): standalone OPTIMIZE — Delta's OPTIMIZE ZORDER BY as an
+    """X-9n: standalone OPTIMIZE — Delta's OPTIMIZE ZORDER BY as an
     operation. A table ingested WITHOUT cluster_by (no file stats, range
     reads scan every file) is cloned and re-laid-out by
     optimize_merge_table(cluster_by=['value','ts']): content no-op, ONE

@@ -1,5 +1,5 @@
 """Erasure audit + snapshot-aware physical erasure for merge gold tables
-(r10 — VERDICT r9 item 2, the deadline half of the GDPR story).
+(the deadline half of the GDPR story).
 
 DELETE + purge erase the LIVE state, but erased rows keep existing on disk
 in three other places a legal erasure deadline cares about:
@@ -49,16 +49,6 @@ from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events a
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as merge_fs
 
 
-def _key_info(manifest: dict, target: str):
-    params = manifest.get("params")
-    if params is None:
-        raise ValueError(
-            f"table at {target} predates pinned params; run "
-            "adopt_table_params before auditing/erasing"
-        )
-    return params["keys"], int(params["n_buckets"])
-
-
 def _key_buckets(kdf: DataFrame, key_cols: list[str], n_buckets: int) -> set[str]:
     return {
         str(r["__b"])
@@ -103,14 +93,15 @@ def where_is(
     an erasure deadline needs. I/O is pruned to the keys' hash buckets for
     versions; the changes walk reads every retained delta once (bounded by
     ``changes_keep`` retention). Driver loops are bookkeeping-bounded.
-    ``kinds`` restricts the audit (review r11): erase_everywhere's
+    ``kinds`` restricts the audit: erase_everywhere's
     BLOCKING check only consumes live/version/snapshot, so it skips the
     full-changelog pass its scrub loop is about to pay anyway — the
     deadline-proof call keeps the default all-kinds audit."""
     manifest = strm._load_manifest(target, fs)
     if manifest is None:
         return []
-    key_cols, n_buckets = _key_info(manifest, target)
+    params = manifest["params"]
+    key_cols, n_buckets = params["keys"], int(params["n_buckets"])
     kdf = keys.select(*key_cols).distinct()
     kbuckets = _key_buckets(kdf, key_cols, n_buckets)
     out: list[dict] = []
@@ -151,7 +142,7 @@ def where_is(
             if not fs.isdir(commit_dir):
                 continue  # stray file in changes/ — not a commit
             # audit EVERY delta dir in the commit, not just the active
-            # pointer target (review r11): a scrub crash — or a silently
+            # pointer target: a scrub crash — or a silently
             # failed best-effort removal — leaves the STALE pre-scrub
             # delta on disk, reader-invisible but physically retained;
             # an audit that resolved only the pointer would report a
@@ -175,9 +166,8 @@ def _delta_content_rows(spark, delta: str, kdf: DataFrame, key_cols) -> int:
     a key-only delete/preimage record with every other column NULL is
     erasure EVIDENCE (what _scrub_delta keeps so CDC consumers still
     learn the key was removed), never a residual location. Shared by the
-    where_is audit and _scrub_delta's needs-scrub test (review r11: the
-    scrub previously re-triggered on its OWN tombstones, so re-runs
-    rewrote every already-scrubbed delta instead of no-opping)."""
+    where_is audit and _scrub_delta's needs-scrub test, so the scrub does
+    not re-trigger on its OWN tombstones and a re-run no-ops."""
     df = spark.read.parquet(delta)
     hit = df.join(F.broadcast(kdf), key_cols, "left_semi")
     noncore = [
@@ -219,12 +209,12 @@ def _scrub_delta(
     their insert/postimage rows drop entirely; all other rows are
     byte-identical.
 
-    Publication is an ATOMIC-PUT POINTER SWAP (review r11; previously
-    rmtree + rename through the reader-visible ``delta`` path, which on a
-    store with non-atomic rename — the documented S3 copy+delete
-    semantics — could expose a PARTIALLY-copied delta that reads as
-    silently truncated rows, and a crash between the rmtree and the
-    rename lost the delta while the complete scrub sat unnamed on disk):
+    Publication is an ATOMIC-PUT POINTER SWAP (an rmtree + rename through
+    the reader-visible ``delta`` path could, on a store with non-atomic
+    rename — the documented S3 copy+delete semantics — expose a
+    PARTIALLY-copied delta that reads as silently truncated rows, and a
+    crash between the rmtree and the rename would lose the delta while
+    the complete scrub sat unnamed on disk):
     the scrubbed rows land in a fresh ``delta_scrub_<uuid>`` dir (unnamed
     => reader-invisible), ONE put of ``_scrub.json`` re-points every
     reader (events._delta_dir), and the superseded dir is then removed
@@ -232,8 +222,7 @@ def _scrub_delta(
     it, stale-dir debris — the entry cleanup below reclaims both on the
     next run, so a re-run truly converges (and the needs-scrub test
     counts CONTENT rows, not the scrub's own key-only tombstones, so an
-    already-scrubbed delta is a genuine no-op — review r11: the old
-    any-hit test re-rewrote every previously scrubbed delta per run)."""
+    already-scrubbed delta is a genuine no-op)."""
     cdir = os.path.join(target, strm._CHANGES_DIR, cid)
     active = active or strm._delta_dir(target, cid, fs)
     # converge crashed swaps: every delta dir that is NOT the active one
@@ -320,7 +309,7 @@ def erase_everywhere(
             "scrubbed_commits": [],
             "residual": [],
         }
-    key_cols, _ = _key_info(manifest, target)
+    key_cols = manifest["params"]["keys"]
     kdf = keys.select(*key_cols).distinct()
 
     with merge_fs.leased(fs, target, owner):

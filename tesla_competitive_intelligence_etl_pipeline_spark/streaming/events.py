@@ -34,9 +34,8 @@ goes through a pluggable MergeFS (streaming/fs.py); row data is written
 and read by Spark through its own Hadoop FS.
 
 Commit protocol. Every manifest writer — merge_table,
-delete_from_merge_table, optimize_merge_table, rebucket_merge_table,
-rollback_merge_table and adopt_table_params — reads state, stages
-buckets and calls ``_commit``:
+delete_from_merge_table, optimize_merge_table, rebucket_merge_table and
+rollback_merge_table — reads state, stages buckets and calls ``_commit``:
 
 1. Lease. The writer runs in ``streaming.fs.leased`` on the table dir, so
    a second writer gets ConcurrentWriterError; a heartbeat keeps the
@@ -94,16 +93,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     schema = src_io.read_parquet(spark, path).schema
-    # layout probe through Spark's own Hadoop FS, not os.path (r11 — the
-    # bpe_load lesson from ADVICE r10: on s3://|hdfs:// a local isdir is
-    # always False, and the else-branch's pathGlobFilter would silently
-    # stream NOTHING from a directory layout — the exact r10 sf1 bug, but
-    # remote)
+    # layout probe through Spark's own Hadoop FS, not os.path: on
+    # s3://|hdfs:// a local isdir is always False, and the else-branch's
+    # pathGlobFilter would silently stream NOTHING from a directory layout
     if src_io.file_status(spark, path).isDirectory():
         # the production layout: events.parquet IS a directory of part
         # files — stream it directly. (The pathGlobFilter trick below
         # would match only leaf files literally NAMED events.parquet and
-        # silently stream nothing — observed r10 on the sf1 scale point.)
+        # silently stream nothing.)
         raw = spark.readStream.schema(schema).format("parquet").load(path)
     else:
         # driver testdata layout: events.parquet is a single FILE; the
@@ -242,20 +239,31 @@ def _manifest_path(target: str) -> str:
     return os.path.join(target, _MANIFEST)
 
 
+def _parse_manifest(raw: bytes, path: str) -> dict:
+    """The one check of a stored manifest's shape, shared by the manifest
+    and snapshot loaders. Every writer commits ``buckets``, ``params``,
+    ``schema`` and ``commit``, so a manifest lacking one is damage, and
+    readers index those fields directly."""
+    import json
+
+    m = json.loads(raw.decode())
+    if not (
+        isinstance(m, dict) and isinstance(m.get("buckets"), dict)
+        and all(f in m for f in ("params", "schema", "commit"))
+    ):
+        raise ValueError(f"corrupt merge manifest at {path}: {m!r}")
+    return m
+
+
 def _load_manifest(target: str, fs: merge_fs.MergeFS = merge_fs.LOCAL_FS) -> dict | None:
     """None => table does not exist yet (first batch). A PRESENT but
     unreadable/corrupt manifest raises — the micro-batch must abort (and be
     retried by foreachBatch), never be mistaken for an empty table: that
     mistake would commit batch-only rows over the touched buckets."""
-    import json
-
     path = _manifest_path(target)
     if not fs.exists(path):
         return None
-    m = json.loads(fs.read_bytes(path).decode())
-    if "buckets" not in m or not isinstance(m["buckets"], dict):
-        raise ValueError(f"corrupt merge manifest at {path}: {m!r}")
-    return m
+    return _parse_manifest(fs.read_bytes(path), path)
 
 
 def _load_manifest_cas(
@@ -266,19 +274,12 @@ def _load_manifest_cas(
     commit can be conditional on that generation; elsewhere (or when the
     table does not exist yet) the etag is None. Step 2 of the commit
     protocol (module docstring)."""
-    import json
-
     if getattr(fs, "supports_cas", False):
         try:
             raw, etag = fs.read_with_etag(_manifest_path(target))
         except FileNotFoundError:
             return None, None
-        m = json.loads(raw.decode())
-        if "buckets" not in m or not isinstance(m["buckets"], dict):
-            raise ValueError(
-                f"corrupt merge manifest at {_manifest_path(target)}: {m!r}"
-            )
-        return m, etag
+        return _parse_manifest(raw, _manifest_path(target)), etag
     return _load_manifest(target, fs), None
 
 
@@ -348,7 +349,7 @@ def _commit(
     touched = list(dict.fromkeys([*dropped, *staged]))
     cid = uuid.uuid4().hex[:12]
     rec = _write_commit_delta(
-        target, cid, (read.get("commit") or {}).get("id"), changes, fs,
+        target, cid, read["commit"]["id"], changes, fs,
         kind=op, captured=captured,
     ) if record else None
 
@@ -376,7 +377,7 @@ def _commit(
         m.update(fields or {})
         return m
 
-    manifest = _apply(base, (read.get("commit") or {}).get("id"))
+    manifest = _apply(base, read["commit"]["id"])
     committed = _put_manifest_conditional(target, fs, manifest, etag)
     # Disjoint-bucket rebase, merge only: if the writer that won touched
     # none of our buckets and kept params and schema, our staged versions
@@ -388,8 +389,8 @@ def _commit(
         rebases -= 1
         theirs, etag = _load_manifest_cas(target, fs)
         if theirs is None or (
-            theirs.get("params") != base.get("params")
-            or theirs.get("schema") != base.get("schema")
+            theirs["params"] != base["params"]
+            or theirs["schema"] != base["schema"]
             or any(theirs["buckets"].get(b) != base["buckets"].get(b) for b in staged)
         ):
             break
@@ -405,8 +406,8 @@ def _commit(
                 "The merge committed NOTHING; re-run it against the new "
                 "state."
             )
-        # manifests from before gc_epoch: a committed manifest must never
-        # name deleted files, so check the staged versions still exist
+        # a committed manifest must never name deleted files, so check
+        # the staged versions still exist whatever the epoch says
         missing = [
             rel for rel in staged.values()
             if not fs.isdir(os.path.join(target, rel))
@@ -419,7 +420,7 @@ def _commit(
                 "vacuum a nonzero staged_grace_sec when writers may be in "
                 "flight"
             )
-        parent = (theirs.get("commit") or {}).get("id")
+        parent = theirs["commit"]["id"]
         rec = {**rec, "parent": parent, "ts": _commit_now()}
         fs.put_atomic(
             os.path.join(target, _CHANGES_DIR, cid, "_commit.json"),
@@ -465,21 +466,16 @@ def _snapshot_path(target: str, tag: str) -> str:
 def _load_snapshot(
     target: str, tag: str, fs: merge_fs.MergeFS = merge_fs.LOCAL_FS
 ) -> dict:
-    import json
-
     path = _snapshot_path(target, tag)
     if not fs.exists(path):
         raise ValueError(f"no snapshot {tag!r} at {target}")
-    m = json.loads(fs.read_bytes(path).decode())
-    if "buckets" not in m or not isinstance(m["buckets"], dict):
-        raise ValueError(f"corrupt snapshot at {path}: {m!r}")
-    return m
+    return _parse_manifest(fs.read_bytes(path), path)
 
 
 def _same_state_modulo_versions(a: dict, b: dict) -> bool:
     """Whether two manifests describe the same table state up to bucket
     VERSION paths: identical bucket keysets, params, and schema. This is
-    the replay-re-pin test (ADVICE r7): a replayed merge re-stages the
+    the replay-re-pin test: a replayed merge re-stages the
     identical rows under fresh version uuids, so pointer equality is too
     strict — but a replay can never change WHICH buckets are committed,
     the pinned params, or the schema, so structural equality is the
@@ -489,15 +485,15 @@ def _same_state_modulo_versions(a: dict, b: dict) -> bool:
     documented trust boundary.)"""
     return (
         set(a["buckets"]) == set(b["buckets"])
-        and a.get("params") == b.get("params")
-        and a.get("schema") == b.get("schema")
+        and a["params"] == b["params"]
+        and a["schema"] == b["schema"]
     )
 
 
 def _load_snapshot_if_exists(
     target: str, tag: str, fs: merge_fs.MergeFS = merge_fs.LOCAL_FS
 ) -> dict | None:
-    """Tolerant twin of _load_snapshot for enumeration loops (ADVICE r7):
+    """Tolerant twin of _load_snapshot for enumeration loops:
     drop_snapshot is deliberately lease-free, so a tag listed a moment ago
     may be gone by the time it is read — vacuum/stats/GC pin collection must
     SKIP a vanished tag (its pins are released; sparing nothing for it is
@@ -588,19 +584,17 @@ def snapshot_merge_table(
         # to) the current head — true for every genuine merge-then-pin
         # replay (the replay's re-merge chains ON TOP of the original
         # pin), false for accidental tag reuse against an unrelated
-        # lineage. Unknowable (states from before the commit log, or the
-        # chain records aged out under changes_keep) falls back to the
-        # structural verdict alone.
-        stored_cid = (stored.get("commit") or {}).get("id")
-        cur_cid = (manifest.get("commit") or {}).get("id")
-        if stored_cid and cur_cid:
-            if _is_ancestor(target, fs, stored_cid, cur_cid) is False:
-                raise ValueError(
-                    f"snapshot {tag!r} at {target} pins commit "
-                    f"{stored_cid} which is NOT an ancestor of the "
-                    f"current head {cur_cid} — tag reuse against a "
-                    "divergent lineage, not a replay re-pin"
-                )
+        # lineage. Unknowable (chain records aged out under changes_keep)
+        # falls back to the structural verdict alone.
+        stored_cid = stored["commit"]["id"]
+        cur_cid = manifest["commit"]["id"]
+        if _is_ancestor(target, fs, stored_cid, cur_cid) is False:
+            raise ValueError(
+                f"snapshot {tag!r} at {target} pins commit "
+                f"{stored_cid} which is NOT an ancestor of the "
+                f"current head {cur_cid} — tag reuse against a "
+                "divergent lineage, not a replay re-pin"
+            )
         return stored  # merge-then-pin replay: first pin is authoritative
 
 
@@ -661,17 +655,10 @@ def rollback_merge_table(
     with merge_fs.leased(fs, target, lease_owner):
         snap = _load_snapshot(target, tag, fs)
         current, etag = _load_manifest_cas(target, fs)
-        record = (
-            spark is not None and current is not None
-            and bool((current.get("commit") or {}).get("id"))
-        )
+        record = spark is not None and current is not None
         changes = None
         if record:
-            params = snap.get("params") or current.get("params")
-            keys = params["keys"] if params else ["user_id"]
-            changes = _manifest_diff(
-                spark, target, current, snap, keys, fs, since=None
-            )
+            changes = _manifest_diff(spark, target, current, snap, None, fs)
         return _commit(
             target, fs, "rollback", snap, etag, read=current,
             record=record, changes=changes,
@@ -756,7 +743,7 @@ def _bucket_skippable(
 ) -> bool:
     """Whether bucket ``b``'s recorded stats PROVE it matches nothing —
     shared by read_merged's driver-side pruning and
-    estimate_merged_rows' cardinality model (r11)."""
+    estimate_merged_rows' cardinality model."""
     st = stats.get(b)
     if range_filters and st is not None and any(
         c in st and _range_disjoint(st[c], lo, hi)
@@ -796,10 +783,10 @@ def _dec_bounds(ent: list) -> tuple:
     """Decode a recorded [min, max(, tag)] stats entry to comparable
     Python values — ISO-tagged timestamps/dates parse back to their
     datetime types (the _enc_bounds inverse, same decode _range_disjoint
-    applies). Review r11: without this, estimate_merged_rows saw ts/date
-    bounds as plain ISO STRINGS, `_num` returned None, and event-time
-    ranges — the primary skipping use case — always estimated
-    selectivity 1.0, so the broadcast hint never fired for them."""
+    applies). Without it, estimate_merged_rows would see ts/date bounds
+    as plain ISO STRINGS, `_num` would return None, and event-time ranges
+    — the primary skipping use case — would always estimate selectivity
+    1.0, so the broadcast hint would never fire for them."""
     import datetime as _dt
 
     mn, mx = ent[0], ent[1]
@@ -827,12 +814,12 @@ def estimate_merged_rows(
 ) -> int | None:
     """Estimate the row count a read_merged call with these filters would
     return, from the manifest's recorded per-bucket stats ALONE — pure
-    driver-side JSON, no data I/O (r11 — VERDICT r10 item 3: the ndv/row
-    stats merge_table records now feed a consumer).
+    driver-side JSON, no data I/O: the consumer of the ndv/row stats
+    merge_table records.
 
     Per surviving (un-pruned) bucket: its recorded row count scaled by
     the MINIMUM of the per-filter selectivities — never their product
-    (r12 — VERDICT r11 nit 3: the independence product under-estimates
+    (the independence product under-estimates
     under correlated filters, the one direction that mis-hints a
     broadcast; a conjunction can keep at most what its single most
     selective conjunct keeps, so the min is the distribution-free safe
@@ -849,7 +836,7 @@ def estimate_merged_rows(
     - null filter: the recorded null fraction, exact.
 
     Returns None when any surviving bucket lacks recorded row counts
-    (legacy table or stats_cols never passed) — an estimate that silently
+    (a bucket merged without ``stats_cols``) — an estimate that silently
     ignored unknown buckets could UNDER-estimate and mis-hint a broadcast,
     the one direction that breaks a join at scale (driver OOM), so no
     answer beats a wrong one. DELETEs make recorded counts upper bounds —
@@ -858,7 +845,7 @@ def estimate_merged_rows(
 
     ``_manifest``: internal — read_merged passes the manifest it already
     loaded, so the hint decision is computed against the SAME committed
-    state the read returns (review r11: a fresh load here could race a
+    state the read returns (a fresh load here could race a
     concurrent commit and hint against different buckets than the scan),
     and the JSON isn't re-read."""
     if _manifest is not None:
@@ -882,8 +869,8 @@ def estimate_merged_rows(
         if ns is None or "rows" not in ns:
             return None  # un-modelable bucket: no estimate, never a guess
         rows = float(ns["rows"])
-        # per-filter selectivities — COMPOSED AS A MIN, not a product
-        # (r12 — VERDICT r11 nit 3): the independence product can
+        # per-filter selectivities — COMPOSED AS A MIN, not a product:
+        # the independence product can
         # UNDER-estimate under correlated filters (two correlated
         # 0.1-selectivity ranges -> 0.01 estimated vs 0.1 true), which is
         # the one direction the model promises never to err. A
@@ -931,7 +918,7 @@ def _side_stats(
     range_filters: dict[str, tuple] | None,
     null_filters: dict[str, str] | None,
 ) -> dict | None:
-    """One join side's statistics from its manifest alone (r13 — the
+    """One join side's statistics from its manifest alone (the
     estimate_join building block): filtered row estimate, ndv of the join
     key summed over surviving buckets, committed bytes-per-row, and the
     bucket-rows skew ratio. None when any surviving bucket lacks the
@@ -992,9 +979,7 @@ def _side_stats(
     if not bucket_rows or rows <= 0:
         return {"rows": 0, "ndv": 0, "bytes": 0, "bytes_per_row": None,
                 "ndv_exact": True, "bucket_skew_ratio": 1.0}
-    params = manifest.get("params") or {}
-    keys = params.get("keys") or []
-    exact = keys == [key]
+    exact = manifest["params"]["keys"] == [key]
     mean = rows / len(bucket_rows)
     return {
         # the filter-scaled estimate, but ndv/bytes from the full
@@ -1026,9 +1011,8 @@ def estimate_join(
 ) -> dict | None:
     """Join OUTPUT cardinality + physical-strategy estimate for two merge
     tables equi-joined on ``key``, from their manifests' recorded
-    rows/ndv/bytes ALONE — pure driver-side JSON, no data I/O (r13 —
-    VERDICT r12 item 7: the stats model extended from broadcast-or-not to
-    join planning). Surfaced to users as
+    rows/ndv/bytes ALONE — pure driver-side JSON, no data I/O: the
+    stats model applied to join planning. Surfaced to users as
     operators.joins.explain_join_estimate.
 
     Model (the textbook equi-join estimate under containment-of-values):
@@ -1061,7 +1045,8 @@ def estimate_join(
     that residual case is what AQE's runtime skew-join handles; this model
     covers the plan-time decisions stats can actually support.
     Returns None when either side lacks recorded rows or key ndv
-    (legacy table, key not in stats_cols) — no answer beats a wrong one,
+    (a table merged without ``stats_cols``, or key not in them) — no
+    answer beats a wrong one,
     exactly the estimate_merged_rows rule."""
     fact = _side_stats(
         fact_target, key, fs, fact_snapshot, None,
@@ -1163,7 +1148,7 @@ def _auto_broadcast_threshold_rows(
     surviving: list[tuple],
 ) -> int | None:
     """Derive the row-count threshold behind ``broadcast_threshold_rows=
-    'auto'`` (r12 — VERDICT r11 item 4): Spark's own broadcast decision is
+    'auto'``: Spark's own broadcast decision is
     ``spark.sql.autoBroadcastJoinThreshold`` against the scan's FILE
     bytes; the manifest model estimates post-filter ROWS — so convert the
     byte budget to rows with the table's own recorded width,
@@ -1221,7 +1206,7 @@ def read_merged(
     Returns None when the table (or every requested bucket) has no committed
     state yet.
 
-    ``range_filters`` (r9 — Delta-style data skipping): ``{col: (lo, hi)}``
+    ``range_filters`` (Delta-style data skipping): ``{col: (lo, hi)}``
     closed-range predicates, None end = unbounded. The filter is ALWAYS
     applied to the returned rows (correctness never depends on stats); in
     addition, buckets whose manifest column stats (merge_table
@@ -1229,13 +1214,14 @@ def read_merged(
     100 TB the skip saves file listings and footer reads Spark would
     otherwise pay per bucket dir, the manifest-level analog of parquet
     row-group skipping. Buckets without stats for a filtered column are
-    always read (legacy tables, post-delete rewrites prune conservatively
+    always read (tables merged without ``stats_cols``; post-delete
+    rewrites prune conservatively
     since deletes only narrow a bucket's true range). Null semantics are
     safe by construction: a closed-range predicate never keeps NULLs, and
     stats min/max ignore them, so a pruned bucket cannot hide a kept
     row.
 
-    ``null_filters`` (r10 — VERDICT r9 item 6): ``{col: 'not_null'|'null'}``
+    ``null_filters``: ``{col: 'not_null'|'null'}``
     predicates. The filter always applies row-level; in addition buckets
     whose recorded null counts (merge_table ``stats_cols``) prove emptiness
     are pruned — ``'not_null'`` skips all-null buckets (nulls == rows),
@@ -1244,7 +1230,7 @@ def read_merged(
     value), so deletes keep the counts like the min/max bounds.
 
     Within every surviving bucket, versions written with merge_table
-    ``cluster_by=col`` additionally prune at FILE granularity (r10):
+    ``cluster_by=col`` additionally prune at FILE granularity:
     the manifest records each file's span of the cluster column (files
     are range-disjoint by layout), and only overlapping files are handed
     to Spark — so a range read on a column UNcorrelated with the key
@@ -1252,22 +1238,24 @@ def read_merged(
     ~(1 - selectivity) of the data. Files whose recorded bounds are null
     (all-null span / unrecordable type) are always read.
 
-    ``broadcast_threshold_rows`` (r11 — VERDICT r10 item 3, the stats
-    consumer): when set, the read consults ``estimate_merged_rows`` over
+    ``broadcast_threshold_rows`` (the stats consumer): when set, the read consults ``estimate_merged_rows`` over
     the same filters and attaches Spark's broadcast hint iff the estimate
     is at or under the threshold. Spark's own static size estimate for a
     parquet scan is the FILE bytes of the surviving paths — it cannot see
     the row-level filter's selectivity, so a narrow range read of a big
     table plans as a sort-merge join even when the filtered result is
     tiny; the manifest's recorded rows/ndv/null-fraction model can. No
-    estimate (legacy buckets without stats) or an over-threshold estimate
+    estimate (buckets merged without ``stats_cols``) or an over-threshold
+    estimate
     leaves the plan untouched — the model only ever errs toward NOT
-    broadcasting (see estimate_merged_rows). Pass ``'auto'`` (r12 —
-    VERDICT r11 item 4) to derive the threshold from the session's
+    broadcasting (see estimate_merged_rows). Pass ``'auto'`` to
+    derive the threshold from the session's
     ``spark.sql.autoBroadcastJoinThreshold`` and the table's recorded
     bytes-per-row instead of hand-picking a row count — the default the
     join helpers (operators/joins.enrich_with_merged_dim) use."""
     import os
+
+    from pyspark.sql.types import StructType
 
     if snapshot is not None:
         manifest = _load_snapshot(target, snapshot, fs)
@@ -1285,7 +1273,7 @@ def read_merged(
             raise ValueError(
                 f"null_filters values must be 'not_null' or 'null', got {bad}"
             )
-    # validate at entry (review r12): any string other than 'auto' — e.g.
+    # validate at entry: any string other than 'auto' — e.g.
     # a byte string like '10MB' that belongs in the session conf — would
     # otherwise survive to a TypeError deep inside the hint comparison
     if broadcast_threshold_rows is not None and not (
@@ -1305,7 +1293,7 @@ def read_merged(
         """broadcast_threshold_rows: attach the broadcast hint iff the
         manifest-stats cardinality model proves the filtered result small
         (never on a missing estimate — see estimate_merged_rows).
-        ``'auto'`` (r12 — VERDICT r11 item 4) derives the row threshold
+        ``'auto'`` derives the row threshold
         from spark.sql.autoBroadcastJoinThreshold and the table's own
         recorded bytes-per-row, so callers need no magic number — see
         _auto_broadcast_threshold_rows."""
@@ -1330,7 +1318,7 @@ def read_merged(
         """The bucket's read paths: its version dir, or — when the version
         carries per-FILE cluster stats (merge_table ``cluster_by``) and a
         range filter covers the cluster column — exactly the files whose
-        recorded span overlaps the range (r10: file-level skipping, the
+        recorded span overlaps the range (file-level skipping, the
         layout-aware half Delta gets from OPTIMIZE ZORDER). The sidecar
         entry names the version rel it describes; a mismatch (a writer
         that updated the bucket without refreshing filestats — none ship,
@@ -1386,32 +1374,19 @@ def read_merged(
             )
         return df.filter(cond)
 
+    # schema evolution: the manifest records the table schema AS OF its
+    # commit (snapshots pin it too — a time-travel read gets the as-of
+    # schema). Reading with the EXPLICIT schema makes buckets whose files
+    # were written before a later-added column null-fill it by name,
+    # without the per-file footer merge of mergeSchema.
+    schema = StructType.fromJson(manifest["schema"])
     if not paths:
-        if (range_filters or null_filters) and "schema" in manifest and manifest["buckets"]:
+        if (range_filters or null_filters) and manifest["buckets"]:
             # every bucket skipped: a well-typed EMPTY result, not None
             # (the table exists; the predicate just matches nothing)
-            from pyspark.sql.types import StructType
-
-            return _hint(_ranged(
-                spark.createDataFrame(
-                    [], StructType.fromJson(manifest["schema"])
-                )
-            ))
+            return _hint(_ranged(spark.createDataFrame([], schema)))
         return None
-    if "schema" in manifest:
-        # schema evolution: the manifest records the table schema AS OF its
-        # commit (snapshots pin it too — a time-travel read gets the as-of
-        # schema). Reading with the EXPLICIT schema makes buckets whose
-        # files predate a later-added column null-fill it by name, without
-        # the per-file footer merge of mergeSchema.
-        from pyspark.sql.types import StructType
-
-        return _hint(_ranged(
-            spark.read.schema(
-                StructType.fromJson(manifest["schema"])
-            ).parquet(*paths)
-        ))
-    return _hint(_ranged(spark.read.parquet(*paths)))
+    return _hint(_ranged(spark.read.schema(schema).parquet(*paths)))
 
 
 def read_changes(
@@ -1445,8 +1420,6 @@ def read_changes(
     diff. Delete records arise from delete_from_merge_table, from
     rollbacks diffed against a later snapshot, and from inverse-direction
     reads."""
-    import os
-
     old_m = _load_snapshot(target, since, fs)
     if until is not None:
         new_m = _load_snapshot(target, until, fs)
@@ -1454,7 +1427,7 @@ def read_changes(
         new_m = _load_manifest(target, fs)
         if new_m is None:
             raise ValueError(f"no committed state at {target}")
-    return _manifest_diff(spark, target, old_m, new_m, keys, fs, since)
+    return _manifest_diff(spark, target, old_m, new_m, keys, fs)
 
 
 def _manifest_diff(
@@ -1464,7 +1437,6 @@ def _manifest_diff(
     new_m: dict,
     keys: list[str] | None,
     fs: merge_fs.MergeFS,
-    since: str | None = None,
 ) -> DataFrame:
     """State-diff core of read_changes over two already-loaded manifests,
     so rollback_merge_table can capture the synthetic
@@ -1473,45 +1445,30 @@ def _manifest_diff(
     snapshot tags."""
     import os
 
+    from pyspark.sql.types import StructType
+
     if keys is None:
-        # the until side's recorded params (pre-params manifests are the
-        # events gold schema)
-        params = new_m.get("params")
-        keys = params["keys"] if params else ["user_id"]
+        keys = new_m["params"]["keys"]  # the until side's merge keys
 
     old_b, new_b = old_m["buckets"], new_m["buckets"]
     changed = sorted(
         b for b in set(old_b) | set(new_b) if old_b.get(b) != new_b.get(b)
     )
 
-    def _side(man: dict) -> DataFrame | None:
+    def _side(man: dict) -> DataFrame:
+        # each side reads with ITS as-of schema; a side holding none of
+        # the changed buckets is empty
+        schema = StructType.fromJson(man["schema"])
         paths = [
             os.path.join(target, man["buckets"][b])
             for b in changed
             if b in man["buckets"]
         ]
         if not paths:
-            return None
-        if "schema" in man:  # each side reads with ITS as-of schema
-            from pyspark.sql.types import StructType
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
 
-            return spark.read.schema(
-                StructType.fromJson(man["schema"])
-            ).parquet(*paths)
-        return spark.read.parquet(*paths)
-
-    old_df, new_df = _side(old_m), _side(new_m)
-    if old_df is None and new_df is None:
-        # identical manifests — empty diff with the current-state schema
-        ref = read_merged(spark, target, fs=fs, snapshot=since)
-        base = spark.createDataFrame([], ref.schema)
-        old_df = new_df = base
-    elif old_df is None:
-        old_df = spark.createDataFrame([], new_df.schema)
-    elif new_df is None:
-        new_df = spark.createDataFrame([], old_df.schema)
-
-    return _change_rows(old_df, new_df, keys)
+    return _change_rows(_side(old_m), _side(new_m), keys)
 
 
 def _change_rows(old_df: DataFrame, new_df: DataFrame, keys: list[str]) -> DataFrame:
@@ -1602,7 +1559,7 @@ def _commit_chain(target: str, fs: merge_fs.MergeFS, tip_id: str | None):
     """Yield the commit records (``changes/<id>/_commit.json``) from
     ``tip_id`` toward the root, newest first. Stops after the root record
     (parent None), at the first missing record (vacuumed by changes_keep
-    retention, or never written) and after ``_CHAIN_MAX`` records.
+    retention) and after ``_CHAIN_MAX`` records.
     Driver-side JSON reads only."""
     import json
     import os
@@ -1617,7 +1574,7 @@ def _commit_chain(target: str, fs: merge_fs.MergeFS, tip_id: str | None):
         except FileNotFoundError:
             return
         yield rec
-        cur = rec.get("parent")
+        cur = rec["parent"]
 
 
 def _is_ancestor(
@@ -1631,7 +1588,7 @@ def _is_ancestor(
     if cur == ancestor_id:
         return True
     for rec in _commit_chain(target, fs, tip_id):
-        cur = rec.get("parent")
+        cur = rec["parent"]
         if cur == ancestor_id:
             return True
     return False if cur is None else None
@@ -1640,11 +1597,11 @@ def _is_ancestor(
 def _delta_dir(target: str, cid: str, fs: merge_fs.MergeFS) -> str:
     """The commit's ACTIVE delta directory. Normally ``delta``; after an
     erasure scrub the commit dir carries ``_scrub.json`` naming the
-    scrubbed replacement (erasure._scrub_delta's atomic-put pointer swap
-    — review r11: the old rmtree+rename republish through the fixed
-    ``delta`` path could expose a partially-copied dir on stores with
-    non-atomic rename, and a crash between the rmtree and the rename
-    lost the delta with the complete scrub sitting unnamed on disk)."""
+    scrubbed replacement (erasure._scrub_delta's atomic-put pointer swap:
+    an rmtree+rename republish through the fixed ``delta`` path could
+    expose a partially-copied dir on stores with non-atomic rename, and a
+    crash between the rmtree and the rename would lose the delta with the
+    complete scrub sitting unnamed on disk)."""
     import json
     import os
 
@@ -1726,11 +1683,11 @@ def read_commit_changes(
     until: str | None = None,
     fs: merge_fs.MergeFS = merge_fs.LOCAL_FS,
 ) -> DataFrame:
-    """COMMIT-LOG CDC (r8) — the O(delta) incremental read. read_changes
+    """COMMIT-LOG CDC — the O(delta) incremental read. read_changes
     diffs two STATES, which reads every changed bucket's full content on
     both sides; an increment whose keys hash-scatter across all buckets
     therefore degrades the state diff toward O(table) (measured:
-    SCALING.md r8 — refresh-read cost grew 2.2x across a 16x base-size
+    SCALING.md — refresh-read cost grew 2.2x across a 16x base-size
     sweep). This reader instead walks the COMMIT CHAIN between the two
     pinned states and unions the per-commit delta files that every
     merge/delete captured at commit time — I/O is exactly the change rows
@@ -1742,14 +1699,13 @@ def read_commit_changes(
     ``since``) — a key updated in two commits appears twice, letting a
     consumer replay history or take the latest per key; compacting to a
     net state diff is one groupBy away. Raises ValueError when the chain
-    cannot be walked (pre-commit-log states, or a rollback rewound the
-    lineage between the two states) — fall back to read_changes, which is
-    always correct.
+    cannot be walked (a rollback rewound the lineage between the two
+    states, or retention vacuumed a delta) — fall back to read_changes,
+    which is always correct.
 
     Building the DataFrame launches no Spark job: each delta is read with
     the schema its commit record carries, so no parquet footer job runs
-    per delta in the range (commit records from before schemas were
-    recorded keep the inferred read)."""
+    per delta in the range."""
     from pyspark.sql.types import StructType
 
     old_m = _load_snapshot(target, since, fs)
@@ -1759,18 +1715,13 @@ def read_commit_changes(
         new_m = _load_manifest(target, fs)
         if new_m is None:
             raise ValueError(f"no committed state at {target}")
-    since_id = (old_m.get("commit") or {}).get("id")
-    until_id = (new_m.get("commit") or {}).get("id")
-    if since_id is None or until_id is None:
-        raise ValueError(
-            f"state(s) at {target} predate the commit log; use read_changes"
-        )
+    since_id, until_id = old_m["commit"]["id"], new_m["commit"]["id"]
     chain: list[dict] = []
     cur = until_id
     if cur != since_id:
         for rec in _commit_chain(target, fs, until_id):
             chain.append(rec)
-            cur = rec.get("parent")
+            cur = rec["parent"]
             if cur == since_id:
                 break
         else:
@@ -1788,16 +1739,16 @@ def read_commit_changes(
     chain.reverse()  # oldest-first: _commit_seq 1 = first commit after since
     parts = []
     for seq, rec in enumerate(chain, start=1):
-        if rec.get("empty"):
+        if rec["empty"]:
             continue
-        if rec.get("captured", True) is False:
+        if not rec["captured"]:
             raise ValueError(
                 f"commit {rec['id']} at {target} was merged with "
                 "capture_changes=False — its delta was never captured; "
                 "use read_changes for ranges covering it"
             )
         delta_dir = _delta_dir(target, rec["id"], fs)
-        # ADVICE r8: a concurrent vacuum(changes_keep=N) can remove a delta
+        # a concurrent vacuum(changes_keep=N) can remove a delta
         # dir BETWEEN the chain walk above and the read here — surface the
         # same broken-chain ValueError (with its documented read_changes
         # fallback) instead of a raw Spark path-not-found
@@ -1808,20 +1759,14 @@ def read_commit_changes(
                 "the chain walk and the read); use read_changes"
             )
         # the schema recorded at write time: no footer job per delta (an
-        # erasure scrub keeps every column and type, so it still applies);
-        # records written before schemas were recorded infer it
-        reader = spark.read
-        if "schema" in rec:
-            reader = reader.schema(StructType.fromJson(rec["schema"]))
+        # erasure scrub keeps every column and type, so it still applies)
         parts.append(
-            reader.parquet(delta_dir)
+            spark.read.schema(StructType.fromJson(rec["schema"]))
+            .parquet(delta_dir)
             .withColumn("_commit_seq", F.lit(seq).cast("int"))
-            # wall-clock commit instant (r11): null for pre-r11 commits —
-            # consumers needing a time axis (scd2_from_commit_changes
-            # timeline="ts") fail loudly on nulls rather than guess
             .withColumn(
                 "_commit_ts",
-                F.timestamp_seconds(F.lit(rec.get("ts")).cast("double")),
+                F.timestamp_seconds(F.lit(rec["ts"]).cast("double")),
             )
         )
     if not parts:
@@ -1849,8 +1794,8 @@ def _referenced_rels(manifest: dict) -> set[str]:
 def _store_versions(target: str, fs: merge_fs.MergeFS, referenced: set[str]):
     """Yield (rel_path, is_referenced) for every ``store/<bucket>/<version>``
     dir — the ONE definition of what counts as committed vs debris, shared
-    by vacuum_merge_table and merge_table_stats (code review r5: the two
-    previously duplicated this walk and could silently diverge)."""
+    by vacuum_merge_table and merge_table_stats, so the two cannot
+    diverge."""
     import os
 
     store = os.path.join(target, "store")
@@ -2007,7 +1952,7 @@ def _vacuum_locked(
             fs.rmtree(os.path.join(target, rel))
             removed.append(os.path.join(target, rel))
     if changes_keep is not None:
-        head = (manifest.get("commit") or {}).get("id")
+        head = manifest["commit"]["id"]
         keep = {
             rec["id"]
             for _, rec in zip(range(int(changes_keep)), _commit_chain(target, fs, head))
@@ -2055,7 +2000,7 @@ def merge_table_stats(
     signal to schedule a vacuum; ``live_files`` growing much faster than
     ``committed_buckets`` signals bucket-version churn. A target with NO
     committed manifest still gets its staging/store contents reported as
-    debris (code review r5: a first commit that crashed pre-manifest left
+    debris (a first commit that crashed before its manifest put leaves
     real disk that an all-zero report would hide — vacuum deliberately
     won't touch that state, but the operator must be able to SEE it). Pure
     bookkeeping I/O through the pluggable MergeFS — no data files are
@@ -2084,10 +2029,10 @@ def merge_table_stats(
     # Driver-side JSON reads only, bounded by the retained log.
     stats["walkable_commits"] = 0
     stats["uncaptured_commits"] = 0
-    head = (manifest.get("commit") or {}).get("id") if manifest else None
+    head = manifest["commit"]["id"] if manifest else None
     for rec in _commit_chain(target, fs, head):
         stats["walkable_commits"] += 1
-        if rec.get("captured", True) is False:
+        if not rec["captured"]:
             stats["uncaptured_commits"] += 1
     staging = os.path.join(target, ".staging")
     if fs.isdir(staging):
@@ -2107,122 +2052,30 @@ def merge_table_stats(
     return stats
 
 
-def _table_params(
-    target: str, fs: merge_fs.MergeFS = merge_fs.LOCAL_FS
-) -> dict | None:
-    """The table's merge parameters (keys, order_cols, n_buckets), recorded
-    IN the manifest at every commit — versioned state, not a sidecar, so a
-    rollback to a snapshot restores the bucketing that was in force when it
-    was pinned (a rebucket_merge_table between pin and rollback would
-    otherwise leave stale routing parameters behind). None => no table yet
-    (or a pre-params manifest)."""
-    m = _load_manifest(target, fs)
-    return None if m is None else m.get("params")
-
-
 def _check_params(
-    manifest: dict, target: str, keys: list[str], order_cols: list, n_buckets: int
-) -> None:
+    manifest: dict | None, target: str, keys: list[str], order_cols: list,
+    n_buckets: int,
+) -> dict:
     """Guard against a merge that silently shreds the table: bucket routing
     is pmod(xxhash64(*keys), n_buckets), so merging with DIFFERENT keys or
     n_buckets than the table's current manifest records would route the
     same logical key to a different bucket and duplicate it. The first
-    merge pins the parameters into the manifest; every later merge
-    validates and raises on mismatch (same pattern as the LSH signature
-    table's hash-family guard). Runs under the writer lease, before any
-    staging I/O.
-
-    A NON-EMPTY manifest that predates pinned params (built by an older
-    merge_micro_batch) is refused outright (ADVICE r7): adopting the
-    caller's params unvalidated would pin whatever (keys, n_buckets) the
-    first post-upgrade merge happened to pass — if that n_buckets differs
-    from the legacy layout, the same logical key routes to a different
-    bucket and silently duplicates, exactly the mis-route this guard
-    exists to prevent. Legacy tables migrate via adopt_table_params,
-    which READS the table back and proves every row hashes into its
-    recorded bucket before pinning."""
+    merge pins the parameters into the manifest (versioned with the state,
+    so a rollback to a snapshot restores the bucketing in force when it was
+    pinned); every later merge validates and raises on mismatch (same
+    pattern as the LSH signature table's hash-family guard). Runs under
+    the writer lease, before any staging I/O. Returns the parameters."""
     want = {"keys": list(keys), "order_cols": [str(c) for c in order_cols],
             "n_buckets": int(n_buckets)}
-    have = manifest.get("params")
-    if have is not None and have != want:
+    if manifest is not None and manifest["params"] != want:
         raise ValueError(
             f"merge parameters {want} do not match the table's pinned "
-            f"parameters {have} at {target} — merging with different keys "
-            "or n_buckets would mis-route rows; rebucket_merge_table "
-            "changes n_buckets atomically, or create a new table"
+            f"parameters {manifest['params']} at {target} — merging with "
+            "different keys or n_buckets would mis-route rows; "
+            "rebucket_merge_table changes n_buckets atomically, or create a "
+            "new table"
         )
-    if have is None and manifest.get("buckets"):
-        raise ValueError(
-            f"table at {target} has committed state but no pinned merge "
-            "parameters (pre-params layout); merging would adopt "
-            f"{want} unvalidated and could mis-route keys across the "
-            "existing buckets. Run adopt_table_params once to verify the "
-            "layout and pin the parameters."
-        )
-    manifest["params"] = want  # written by the commit's manifest put
-
-
-def adopt_table_params(
-    spark: SparkSession,
-    target: str,
-    keys: list[str],
-    order_cols: list,
-    n_buckets: int,
-    fs: merge_fs.MergeFS = merge_fs.LOCAL_FS,
-    lease_owner: str | None = None,
-) -> dict:
-    """One-time migration for a merge table whose manifest predates pinned
-    params: VERIFY the claimed (keys, n_buckets) against the committed
-    data, then pin them into the manifest so future merges pass
-    _check_params. Verification is one pruned read of the committed
-    buckets asserting that EVERY row's pmod(xxhash64(*keys), n_buckets)
-    equals its recorded __bucket — the property merge routing depends on;
-    a single mismatching row means the claimed layout is wrong and
-    adoption raises without writing anything. Also refuses committed
-    bucket ids outside [0, n_buckets) (cheap driver-side pre-check, no
-    scan needed to reject an obviously-wrong n_buckets). A manifest writer
-    (commit protocol: module docstring) that stages nothing and records no
-    commit. Returns the updated manifest."""
-    if int(n_buckets) < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    want = {"keys": list(keys), "order_cols": [str(c) for c in order_cols],
-            "n_buckets": int(n_buckets)}
-    with merge_fs.leased(fs, target, lease_owner):
-        manifest, etag = _load_manifest_cas(target, fs)
-        if manifest is None:
-            raise ValueError(f"no committed state at {target}")
-        have = manifest.get("params")
-        if have == want:
-            return manifest  # idempotent re-run
-        if have is not None:
-            raise ValueError(
-                f"table at {target} already pins params {have}; "
-                "rebucket_merge_table changes n_buckets atomically"
-            )
-        bad_ids = [b for b in manifest["buckets"] if not 0 <= int(b) < int(n_buckets)]
-        if bad_ids:
-            raise ValueError(
-                f"committed bucket ids {sorted(bad_ids)} fall outside "
-                f"[0, {n_buckets}) — claimed n_buckets does not match the "
-                f"table layout at {target}"
-            )
-        cur = read_merged(spark, target, fs=fs)
-        mismatched = cur.filter(
-            ~F.col("__bucket").eqNullSafe(
-                F.pmod(F.xxhash64(*keys), F.lit(int(n_buckets)))
-            )
-        ).count()
-        if mismatched:
-            raise ValueError(
-                f"{mismatched} committed rows do not hash into their "
-                f"recorded bucket under keys={list(keys)}, "
-                f"n_buckets={n_buckets} — wrong keys or wrong n_buckets "
-                f"for the table at {target}"
-            )
-        return _commit(
-            target, fs, "params adoption", manifest, etag,
-            fields={"params": want}, record=False,
-        )
+    return want
 
 
 def delete_from_merge_table(
@@ -2272,12 +2125,7 @@ def delete_from_merge_table(
         manifest, etag = _load_manifest_cas(target, fs)
         if manifest is None:
             return 0
-        params = manifest.get("params")
-        if params is None:
-            raise ValueError(
-                f"table at {target} predates pinned params; run "
-                "adopt_table_params before deleting"
-            )
+        params = manifest["params"]
         key_cols, n_buckets = params["keys"], int(params["n_buckets"])
         if keys is not None:
             # duplicate keys change no semi or anti join: no distinct
@@ -2373,8 +2221,8 @@ def merge_table(
     buckets do not overlap the winner's rebases onto it.
 
     The first merge pins (keys, order_cols, n_buckets) INSIDE the manifest
-    (versioned with the state — see _table_params); later merges with
-    different parameters raise instead of mis-routing rows (_check_params).
+    (versioned with the state); later merges with different parameters
+    raise instead of mis-routing rows (_check_params).
 
     ``capture_changes`` (default True) writes the commit's change rows,
     which buy read_commit_changes its O(delta) contract. They come from
@@ -2482,10 +2330,10 @@ def merge_micro_batch(
 
 
 def _as_nullable(dt):
-    """Normalize nullability RECURSIVELY (code review r7: top-level-only
-    normalization let ArrayType.containsNull / nested StructField.nullable
-    leak into the stored schema and the retype guard, spuriously rejecting
-    equal-typed batches that differ only in inferred nullability)."""
+    """Normalize nullability RECURSIVELY: top-level-only normalization
+    would let ArrayType.containsNull / nested StructField.nullable leak
+    into the stored schema and the retype guard, spuriously rejecting
+    equal-typed batches that differ only in inferred nullability."""
     from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
     if isinstance(dt, StructType):
@@ -2640,12 +2488,7 @@ def rebucket_merge_table(
         manifest, etag = _load_manifest_cas(target, fs)
         if manifest is None:
             raise ValueError(f"no committed state to rebucket at {target}")
-        params = manifest.get("params")
-        if params is None:
-            raise ValueError(
-                f"table at {target} predates pinned params; merge once "
-                "to record them before rebucketing"
-            )
+        params = manifest["params"]
         if int(n_buckets) == int(params["n_buckets"]):
             return manifest
         keys = params["keys"]
@@ -2883,10 +2726,11 @@ def _merge_locked(
     cluster_files: int = 4,
 ) -> None:
     """merge_table's read-merge-commit body, run in the leased section."""
+    from pyspark.sql.types import StructType
+
     sess = batch.sparkSession
     manifest, etag = _load_manifest_cas(target, fs)
-    manifest = manifest or {"buckets": {}}
-    _check_params(manifest, target, keys, order_cols, n_buckets)
+    params = _check_params(manifest, target, keys, order_cols, n_buckets)
     current = read_merged(sess, target, buckets=touched, fs=fs)
     if current is None:  # none of the touched buckets committed yet
         # the empty current MUST carry the table's committed schema, not
@@ -2894,14 +2738,9 @@ def _merge_locked(
         # otherwise re-commit manifest['schema'] as the batch-only schema
         # — silently hiding evolved columns table-wide and letting a
         # retyped column slip past the guard below
-        if "schema" in manifest:
-            from pyspark.sql.types import StructType
-
-            current = sess.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
-            )
-        else:
-            current = sess.createDataFrame([], batch.schema)
+        schema = (batch.schema if manifest is None
+                  else StructType.fromJson(manifest["schema"]))
+        current = sess.createDataFrame([], schema)
     else:
         current = current.filter(F.col("__bucket").isin(touched))
     # schema evolution guard: a batch may ADD columns (old rows null-fill)
@@ -2970,8 +2809,11 @@ def _merge_locked(
             changes = _emit_changes(
                 incoming, F.col("__pre"), F.struct(*data_cols), data_cols, keys
             )
+        # a first merge commits onto the empty state: no buckets, no commit
         _commit(
-            target, fs, "merge", manifest, etag, staged=new_rels,
+            target, fs, "merge",
+            manifest or {"buckets": {}, "params": params, "commit": {"id": None}},
+            etag, staged=new_rels,
             staging=staging, entries=entries,
             fields={"schema": _nullable_schema_json(merged.schema)},
             changes=changes, captured=capture_changes,

@@ -517,12 +517,11 @@ def test_cross_corpus_indexed_matches_unindexed(spark, tmp_path):
 
 
 def test_signature_table_parameter_mismatch_raises(spark, tmp_path):
-    """VERDICT r4: querying a materialized signature table with different
-    num_hashes/shingle_n than it was built with must be a LOUD error (the
-    _params sidecar), never silent recall loss; a legacy table without the
-    sidecar degrades to a warning."""
+    """Querying a materialized signature table with different
+    num_hashes/shingle_n or hash family than it was built with must be a
+    LOUD error (the _params sidecar), never silent recall loss; so must a
+    table without the sidecar or without its family field."""
     import shutil
-    import warnings as w
 
     import pytest as pt
 
@@ -550,12 +549,14 @@ def test_signature_table_parameter_mismatch_raises(spark, tmp_path):
         dd.cross_corpus_neardup_indexed(docs, spark, portable_path)
     dd.cross_corpus_neardup_indexed(docs, spark, portable_path, family="md5")  # ok
 
-    # legacy table (no sidecar): warn, don't raise
-    shutil.rmtree(str(tmp_path / "sigs" / "_params"))
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
+    # a sidecar without the family field, and no sidecar at all: raise
+    spark.createDataFrame([(32, 3)], "num_hashes int, shingle_n int").coalesce(
+        1).write.mode("overwrite").parquet(sig_path + "/_params")
+    with pt.raises(ValueError, match="_params sidecar"):
         dd.cross_corpus_neardup_indexed(docs, spark, sig_path)
-    assert any("_params sidecar" in str(c.message) for c in caught)
+    shutil.rmtree(str(tmp_path / "sigs" / "_params"))
+    with pt.raises(ValueError, match="_params sidecar"):
+        dd.cross_corpus_neardup_indexed(docs, spark, sig_path)
 
 
 def test_portable_indexed_crawl_dedup_finds_planted_dups(spark, tmp_path):
@@ -1223,14 +1224,14 @@ def test_semantic_dedup_zero_vector_is_never_a_duplicate(spark):
 
 
 def test_recover_ivf_index_heals_crashed_swap_states(spark, sf_dir, tmp_path):
-    """The compaction swap commits through an atomic .swap marker whose
-    file list decides recovery (live-dir existence proves nothing under
-    copy+delete renames — code review r5). Three crash states:
-    (a) marker + COMPLETE staging (crash after the commit point, live
-        possibly partial/gone) -> redo: staging moves in, rows intact;
-    (b) marker + PARTIAL staging (crash while the finished swap deleted
-        staging, live whole) -> staging remnant dropped, live untouched;
-    (c) pre-commit .compact_* with no marker -> debris, dropped."""
+    """The compaction swap commits through an atomic ``.sigswap_`` marker
+    whose file lists decide recovery (live-dir existence proves nothing
+    under copy+delete renames). Three crash states:
+    (a) marker committed, replaced files removed, nothing landed yet ->
+        roll forward: the staged files land, rows intact;
+    (b) marker committed, one staged file already landed -> the rest
+        land, nothing is duplicated;
+    (c) a ``.sigcompact_`` staging dir with no marker -> debris, dropped."""
     import json
     import os
     import shutil
@@ -1246,45 +1247,43 @@ def test_recover_ivf_index_heals_crashed_swap_states(spark, sf_dir, tmp_path):
     cell_dir = os.path.join(vectors, cell)
     fs = mfs.LOCAL_FS
 
-    # (a) commit point passed: staging holds the full (here: identical)
-    # cell content; live dir is GONE (crash between rmtree and rename)
-    staging = os.path.join(vectors, ".compact_deadA")
-    shutil.copytree(cell_dir, staging)
-    files = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
-    fs.put_atomic(
-        os.path.join(vectors, ".swap_deadA.json"),
-        json.dumps({"cell": cell, "staging": ".compact_deadA", "files": files}).encode(),
-    )
-    shutil.rmtree(cell_dir)
-    # (c) an unreferenced pre-commit staging dir
-    fs.makedirs(os.path.join(vectors, ".compact_orphan"))
+    def crash_mid_swap(tag):
+        """Stage a copy of the cell, commit its marker, then remove the
+        replaced files: the state a crash inside the roll-forward leaves."""
+        olds = ic._data_files(fs, cell_dir)
+        staging = os.path.join(vectors, ic.COMPACT_PREFIX + tag)
+        os.makedirs(staging)
+        for f in olds:
+            shutil.copy(os.path.join(cell_dir, f), os.path.join(staging, f))
+        meta = {"tag": tag, "unit": cell, "staging": ic.COMPACT_PREFIX + tag,
+                "files": olds, "old_files": olds, "tomb_files": []}
+        fs.put_atomic(os.path.join(vectors, f"{ic.SWAP_PREFIX}{tag}.json"),
+                      json.dumps(meta).encode())
+        for f in olds:
+            fs.rmtree(os.path.join(cell_dir, f))
+        return olds, staging
 
+    # (a) + (c)
+    crash_mid_swap("deadA")
+    orphan = os.path.join(vectors, ic.COMPACT_PREFIX + "orphan")
+    fs.makedirs(orphan)
     out = ic.recover(ic.store("ivf", path))
-    assert out["restored"] == [cell_dir]
-    assert os.path.join(vectors, ".compact_orphan") in out["removed"]
-    assert not fs.exists(os.path.join(vectors, ".swap_deadA.json"))
-    after = sorted(tuple(r) for r in spark.read.parquet(vectors).collect())
-    assert after == before  # nothing lost
+    assert out["completed"] == ["deadA"]
+    assert orphan in out["removed"]
+    assert not fs.exists(os.path.join(vectors, f"{ic.SWAP_PREFIX}deadA.json"))
+    assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
-    # (b) marker + partial staging (one listed file missing): live is
-    # authoritative and must NOT be touched
-    staging_b = os.path.join(vectors, ".compact_deadB")
-    shutil.copytree(cell_dir, staging_b)
-    fs.put_atomic(
-        os.path.join(vectors, ".swap_deadB.json"),
-        json.dumps(
-            {"cell": cell, "staging": ".compact_deadB",
-             "files": files + ["part-MISSING.parquet"]}
-        ).encode(),
-    )
+    # (b) one staged file landed before the crash
+    olds, staging = crash_mid_swap("deadB")
+    os.rename(os.path.join(staging, olds[0]), os.path.join(cell_dir, f"deadB-{olds[0]}"))
     out2 = ic.recover(ic.store("ivf", path))
-    assert out2["restored"] == []
-    assert staging_b in out2["removed"]
+    assert out2["completed"] == ["deadB"]
+    assert not fs.exists(staging)
     assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
     # idempotent: a second recovery is a no-op
     out3 = ic.recover(ic.store("ivf", path))
-    assert out3 == {"completed": [], "removed": [], "restored": []}
+    assert out3 == {"completed": [], "removed": []}
 
 
 def test_semantic_dedup_cluster_cap_excludes_degenerate_mass(spark):
@@ -1351,34 +1350,6 @@ def test_leakage_safe_split_keeps_dup_groups_together(spark):
     assert all(grp_split[i] == grp_split[1000 + i] for i in range(100))
     # and all three splits are actually populated at these rates
     assert {"train", "val", "test"} <= set(grp_split.values())
-
-
-def test_recover_ivf_index_heals_legacy_retired_dirs(spark, sf_dir, tmp_path):
-    """Indexes crashed under the short-lived pre-marker rename-aside scheme
-    left data in .retired_<tag>__<cell>; recovery must still restore a
-    missing cell from them (and drop superseded copies) instead of leaving
-    the index silently incomplete."""
-    import os
-    import shutil
-
-    emb = src.load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, path)
-    vectors = path + "/vectors"
-    before = sorted(tuple(r) for r in spark.read.parquet(vectors).collect())
-    cell = sorted(c for c in os.listdir(vectors) if c.startswith("label="))[0]
-    cell_dir = os.path.join(vectors, cell)
-
-    shutil.move(cell_dir, os.path.join(vectors, f".retired_old__{cell}"))
-    out = ic.recover(ic.store("ivf", path))
-    assert out["restored"] == [cell_dir]
-    assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
-
-    # superseded legacy copy (live cell present) is debris
-    shutil.copytree(cell_dir, os.path.join(vectors, f".retired_dup__{cell}"))
-    out2 = ic.recover(ic.store("ivf", path))
-    assert os.path.join(vectors, f".retired_dup__{cell}") in out2["removed"]
-    assert sorted(tuple(r) for r in spark.read.parquet(vectors).collect()) == before
 
 
 def test_minhash_lsh_portable_finds_planted_near_dups(near_dup_docs):
@@ -1492,7 +1463,6 @@ def test_append_signature_table_closes_the_crawl_loop(spark, tmp_path):
     come from the _params sidecar; a paramless table refuses; a held
     sibling lease refuses."""
     import pytest
-    from pyspark.errors import AnalysisException
 
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as mfs
 
@@ -1542,7 +1512,7 @@ def test_append_signature_table_closes_the_crawl_loop(spark, tmp_path):
     import shutil
 
     shutil.rmtree(sig_path + "/_params")
-    with pytest.raises(AnalysisException):
+    with pytest.raises(ValueError, match="_params sidecar"):
         dd.append_signature_table(inc_b, sig_path)
 
 
@@ -2888,39 +2858,6 @@ def test_takedown_validates_before_durable_writes(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="no committed corpus"):
         td.takedown(spark, str(tmp_path / "nope"), predicate="doc_id = 1")
     assert not os.path.isdir(os.path.join(corpus, "_takedown"))
-    assert strm.list_snapshots(corpus) == []
-
-
-def test_takedown_works_on_pre_commit_log_corpus(spark, tmp_path):
-    """r11 (review): a corpus whose manifest predates the commit log (no
-    'commit' id — read_commit_changes(since=tag) always raises on it)
-    still takes down cleanly: the stamped delete commit's delta is read
-    DIRECTLY, the recover_takedowns path."""
-    import json
-    import os
-    import shutil
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.operators import takedown as td
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
-
-    corpus = str(tmp_path / "gold")
-    docs = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(20)], "doc_id long, text string")
-    strm.merge_table(docs, corpus, keys=["doc_id"], order_cols=["doc_id"])
-    # doctor the table into its pre-commit-log shape
-    mpath = os.path.join(corpus, "_MANIFEST.json")
-    man = json.loads(open(mpath).read())
-    man.pop("commit", None)
-    open(mpath, "w").write(json.dumps(man))
-    shutil.rmtree(os.path.join(corpus, "changes"), ignore_errors=True)
-
-    out = td.takedown(spark, corpus, predicate="doc_id % 4 = 1",
-                      id_col="doc_id")
-    assert out["corpus_deleted"] == 5
-    left = {r.doc_id for r in strm.read_merged(spark, corpus).collect()}
-    assert left == {i for i in range(20) if i % 4 != 1}
-    # obligation met: record removed, pin dropped
-    assert td._list_requests(corpus, strm.merge_fs.LOCAL_FS) == []
     assert strm.list_snapshots(corpus) == []
 
 

@@ -690,7 +690,7 @@ def test_read_merged_stats_broadcast_hint_flips_join_strategy(spark, tmp_path):
     bytes of the surviving paths) cannot see row-level selectivity, so
     with auto-broadcast disabled the join strategy flips purely on the
     manifest estimate: narrow range -> BroadcastHashJoin, wide range ->
-    SortMergeJoin, and a stats-less legacy table never hints."""
+    SortMergeJoin, and a table merged without stats_cols never hints."""
     from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
 
     rows = [(i, i % 1000, float(i)) for i in range(5000)]
@@ -728,15 +728,15 @@ def test_read_merged_stats_broadcast_hint_flips_join_strategy(spark, tmp_path):
         assert "BroadcastHashJoin" not in plan_w
         assert "SortMergeJoin" in plan_w
 
-        # legacy table without stats: estimate is None -> never a hint,
-        # even under a narrow filter
-        legacy = str(tmp_path / "legacy")
-        strm.merge_table(df, legacy, keys=["k"], order_cols=["score"],
+        # a table merged without stats_cols: estimate is None -> never a
+        # hint, even under a narrow filter
+        no_stats = str(tmp_path / "no_stats")
+        strm.merge_table(df, no_stats, keys=["k"], order_cols=["score"],
                          n_buckets=4)
         assert strm.estimate_merged_rows(
-            legacy, range_filters={"score": (0.0, 49.0)}) is None
+            no_stats, range_filters={"score": (0.0, 49.0)}) is None
         lread = strm.read_merged(
-            spark, legacy, range_filters={"score": (0.0, 49.0)},
+            spark, no_stats, range_filters={"score": (0.0, 49.0)},
             broadcast_threshold_rows=10**9)
         assert "BroadcastHashJoin" not in _plan(lread.join(facts, "score"))
     finally:
@@ -821,10 +821,10 @@ def test_join_estimate_vs_actual_events_gold(spark, tmp_path, sf_dir):
     assert left["est_rows"] >= n_fact  # floored at the fact side
 
     # no-guess rule: a side without the key in stats_cols -> None
-    legacy = str(tmp_path / "legacy_dim")
-    strm.merge_table(gold, legacy, keys=["user_id"], order_cols=["total"],
+    no_stats = str(tmp_path / "no_stats_dim")
+    strm.merge_table(gold, no_stats, keys=["user_id"], order_cols=["total"],
                      n_buckets=4)
-    assert joins.explain_join_estimate(spark, fact_t, legacy, "user_id") is None
+    assert joins.explain_join_estimate(spark, fact_t, no_stats, "user_id") is None
 
     # strategy recommendation keys off the session broadcast budget
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -863,7 +863,7 @@ def test_join_estimate_vs_actual_events_gold(spark, tmp_path, sf_dir):
     assert skew.suggest_salts(
         spark, fact_t, dim_t, "user_id",
         target_rows_per_group=10**9) == 1  # roomy target: don't salt
-    assert skew.suggest_salts(spark, fact_t, legacy, "user_id",
+    assert skew.suggest_salts(spark, fact_t, no_stats, "user_id",
                               target_rows_per_group=10) is None
     salted = skew.salted_join(
         strm.read_merged(spark, fact_t), strm.read_merged(spark, dim_t),

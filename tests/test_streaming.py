@@ -834,7 +834,7 @@ def test_generic_merge_table_params_guard_and_cdc(spark, tmp_path):
     )
     strm.merge_table(docs, target, keys=["doc_id"], order_cols=["doc_id"],
                      n_buckets=4)
-    assert strm._table_params(target) == {
+    assert strm._load_manifest(target)["params"] == {
         "keys": ["doc_id"], "order_cols": ["doc_id"], "n_buckets": 4,
     }
     strm.snapshot_merge_table(target, "base")
@@ -977,7 +977,7 @@ def test_rebucket_merge_table(spark, tmp_path):
 
     # rollback restores the old bucketing wholesale: n_buckets=2 merges again
     strm.rollback_merge_table(target, "pre")
-    assert strm._table_params(target)["n_buckets"] == 2
+    assert strm._load_manifest(target)["params"]["n_buckets"] == 2
     strm.merge_table(more, target, keys=["doc_id"], order_cols=["doc_id"],
                      n_buckets=2)
     assert strm.read_merged(spark, target).count() == 17
@@ -1172,7 +1172,7 @@ def test_rebucket_crash_at_every_op_never_tears(spark, tmp_path):
     total_ops = probe_fs.ops - ops_build
     assert total_ops >= 3
     want = rows(probe)
-    assert strm._table_params(probe)["n_buckets"] == 8
+    assert strm._load_manifest(probe)["params"]["n_buckets"] == 8
 
     for crash_at in range(total_ops):
         target = str(tmp_path / f"run{crash_at}")
@@ -1184,7 +1184,7 @@ def test_rebucket_crash_at_every_op_never_tears(spark, tmp_path):
             mfs.break_writer_lease(mfs.LOCAL_FS, target)
         # rows identical under EITHER bucketing at every crash point
         assert rows(target) == want, crash_at
-        n_now = strm._table_params(target)["n_buckets"]
+        n_now = strm._load_manifest(target)["params"]["n_buckets"]
         assert n_now in (2, 8), crash_at
         if n_now == 2:
             # rolled back: debris (staged dirs / moved-but-unreferenced
@@ -1192,7 +1192,7 @@ def test_rebucket_crash_at_every_op_never_tears(spark, tmp_path):
             strm.vacuum_merge_table(target, staged_grace_sec=0.0)
             assert rows(target) == want
             strm.rebucket_merge_table(spark, target, 8)
-            assert strm._table_params(target)["n_buckets"] == 8
+            assert strm._load_manifest(target)["params"]["n_buckets"] == 8
             assert rows(target) == want
 
 
@@ -1306,70 +1306,6 @@ def test_snapshot_repin_replay_safe_mode(spark, tmp_path):
     if set(strm._load_manifest(target)["buckets"]) != set(pinned["buckets"]):
         with pytest.raises(ValueError, match="different table generation"):
             strm.snapshot_merge_table(target, "b000", if_exists="return_existing")
-
-
-def test_adopt_table_params_migrates_legacy_manifest(spark, tmp_path):
-    """ADVICE r7: a pre-params manifest (legacy layout) must not silently
-    adopt whatever params the first post-upgrade merge passes. The merge
-    refuses; adopt_table_params verifies the claimed layout against the
-    committed rows (and rejects wrong n_buckets/keys) before pinning."""
-    import json
-    import os
-
-    import pytest
-
-    from tesla_competitive_intelligence_etl_pipeline_spark.streaming import events as strm
-
-    target = str(tmp_path / "gold")
-    # event_id deliberately != user_id so the wrong-keys probe below hashes
-    # rows into DIFFERENT buckets than the recorded user_id routing
-    strm.merge_micro_batch(
-        _ev(spark, [(1000 + i, 2000 + i, i, "a", float(i)) for i in range(8)]),
-        target, n_buckets=4,
-    )
-    # simulate the legacy layout: strip params from the committed manifest
-    mpath = strm._manifest_path(target)
-    m = json.loads(open(mpath).read())
-    del m["params"]
-    with open(mpath, "w") as fh:
-        json.dump(m, fh)
-
-    # merging into the legacy table refuses to adopt params unvalidated
-    with pytest.raises(ValueError, match="adopt_table_params"):
-        strm.merge_micro_batch(
-            _ev(spark, [(100, 5000, 1, "b", 1.0)]), target, n_buckets=8
-        )
-
-    # wrong n_buckets: committed bucket ids don't fit -> cheap refusal
-    with pytest.raises(ValueError, match="outside"):
-        strm.adopt_table_params(
-            spark, target, keys=["user_id"],
-            order_cols=["ts", "event_id"], n_buckets=2,
-        )
-    # wrong keys: rows don't hash into their recorded buckets -> refusal
-    with pytest.raises(ValueError, match="do not hash"):
-        strm.adopt_table_params(
-            spark, target, keys=["event_id"],
-            order_cols=["ts", "event_id"], n_buckets=4,
-        )
-    assert strm._table_params(target) is None  # nothing pinned by failures
-
-    # correct layout: verified adoption pins params; merges work again
-    strm.adopt_table_params(
-        spark, target, keys=["user_id"], order_cols=["ts", "event_id"],
-        n_buckets=4,
-    )
-    assert strm._table_params(target)["n_buckets"] == 4
-    strm.merge_micro_batch(
-        _ev(spark, [(100, 5000, 1, "b", 1.0)]), target, n_buckets=4
-    )
-    row = strm.read_merged(spark, target).filter("user_id = 1").first()
-    assert row.event_id == 100
-    # idempotent re-run returns the manifest unchanged
-    strm.adopt_table_params(
-        spark, target, keys=["user_id"], order_cols=["ts", "event_id"],
-        n_buckets=4,
-    )
 
 
 def test_vacuum_and_stats_tolerate_concurrent_snapshot_drop(spark, tmp_path, monkeypatch):
@@ -1602,21 +1538,6 @@ def test_delete_from_merge_table_modes_pins_and_crash(spark, tmp_path):
         (r.user_id, r.event_id) for r in strm.read_merged(spark, target).collect()
     ) == state
 
-    # pre-params table refuses
-    legacy = str(tmp_path / "legacy")
-    strm.merge_micro_batch(_ev(spark, [(1, 100, 1, "a", 1.0)]), legacy, n_buckets=2)
-    import json
-
-    mp = strm._manifest_path(legacy)
-    m = json.loads(open(mp).read())
-    del m["params"]
-    with open(mp, "w") as fh:
-        json.dump(m, fh)
-    with pytest.raises(ValueError, match="adopt_table_params"):
-        strm.delete_from_merge_table(
-            spark, legacy, keys=spark.createDataFrame([(1,)], "user_id long")
-        )
-
 
 def test_commit_log_cdc_o_delta_reads(spark, tmp_path):
     """r8 commit-log CDC: every merge/delete captures its change rows at
@@ -1715,17 +1636,6 @@ def test_commit_log_cdc_o_delta_reads(spark, tmp_path):
         strm.read_commit_changes(spark, target, since="s1")
     # the state diff is unaffected by log retention
     assert strm.read_changes(spark, target, since="s1").count() > 0
-
-    # states predating the commit log refuse loudly
-    import json
-
-    sp = strm._snapshot_path(target, "s1")
-    legacy = json.loads(open(sp).read())
-    legacy.pop("commit", None)
-    with open(sp, "w") as fh:
-        json.dump(legacy, fh)
-    with pytest.raises(ValueError, match="predate the commit log"):
-        strm.read_commit_changes(spark, target, since="s1")
 
 
 def test_rollback_captures_synthetic_delta(spark, tmp_path):

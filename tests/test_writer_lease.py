@@ -990,12 +990,12 @@ def test_rebucket_conditional_commit_loses_to_racing_merge(spark, tmp_path):
     fs.gate.set()
     tr.join(timeout=120.0)
     assert isinstance(result["r"], mfs.ConcurrentWriterError), result
-    assert strm._table_params(target, fs=fs)["n_buckets"] == 2
+    assert strm._load_manifest(target, fs=fs)["params"]["n_buckets"] == 2
     got = {r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()}
     assert got == {1, 2, 3, 7}  # NO lost update
     # clean retry re-spreads everything
     strm.rebucket_merge_table(spark, target, 8, fs=fs, lease_owner="job")
-    assert strm._table_params(target, fs=fs)["n_buckets"] == 8
+    assert strm._load_manifest(target, fs=fs)["params"]["n_buckets"] == 8
     assert {
         r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()
     } == got
@@ -1075,60 +1075,6 @@ def test_optimize_conditional_commit_loses_to_racing_merge(spark, tmp_path):
     assert {
         r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()
     } == rows
-
-
-def test_adopt_conditional_commit_loses_to_racing_merge(spark, tmp_path):
-    """adopt_table_params's put is conditional and never rebases. Two
-    races, each won by the writer that commits in the adoption's
-    read-to-put window: a rollback that leaves params, schema and buckets
-    as they were (a merge would rebase onto it), then a writer that adopts
-    the same params and merges. Both times the adoption raises
-    ConcurrentWriterError having committed nothing, and the winner's
-    manifest stays in place."""
-    fs = _ManifestGateCASFS()
-    target = str(tmp_path / "gold")
-    fs.armed = False
-    strm.merge_micro_batch(
-        _evdf(spark, [(i, 100 + i, i, "a", 1.0) for i in range(1, 6)]),
-        target, n_buckets=4, fs=fs, lease_owner="job",
-    )
-    legacy = strm._load_manifest(target, fs)
-    params = legacy.pop("params")
-    fs.put_atomic(strm._manifest_path(target), json.dumps(legacy).encode())
-    strm.snapshot_merge_table(target, "legacy", fs=fs, lease_owner="job")
-    raced: dict = {}
-
-    def adopt():
-        return strm.adopt_table_params(
-            spark, target, params["keys"], params["order_cols"],
-            params["n_buckets"], fs=fs, lease_owner="job",
-        )
-
-    def rollback():
-        strm.rollback_merge_table(target, "legacy", fs=fs, lease_owner="job")
-        raced["manifest"] = strm._load_manifest(target, fs)
-
-    def adopt_and_merge():
-        adopt()
-        strm.merge_micro_batch(
-            _evdf(spark, [(9, 900, 9, "b", 2.0)]),
-            target, n_buckets=4, fs=fs, lease_owner="job",
-        )
-        raced["manifest"] = strm._load_manifest(target, fs)
-
-    for racer in (rollback, adopt_and_merge):
-        fs.entered.clear()
-        fs.gate.clear()
-        fs.armed = True
-        got = _race_at_commit(adopt, racer, fs)
-        assert isinstance(got, mfs.ConcurrentWriterError), (racer, got)
-        assert strm._load_manifest(target, fs) == raced["manifest"]
-    assert raced["manifest"]["params"] == params
-    assert {
-        r.user_id for r in strm.read_merged(spark, target, fs=fs).collect()
-    } == {1, 2, 3, 4, 5, 9}
-    # the re-run finds the params pinned and is an idempotent no-op
-    assert adopt() == raced["manifest"]
 
 
 def test_vacuum_grace_spares_young_debris(spark, tmp_path):
