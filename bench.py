@@ -120,6 +120,7 @@ def main() -> None:
     load_before = round(os.getloadavg()[0], 2)
 
     from tesla_competitive_intelligence_etl_pipeline_spark.session import get_spark
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import release
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -151,13 +152,18 @@ def main() -> None:
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        df = queries[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
         dt = round(time.perf_counter() - t0, 3)
-        # Queries are independent: drop their persisted intermediates
-        # (minhash signatures, IVF index, ...) so storage memory doesn't
-        # accumulate across the 150+-query sweep — by the tail it otherwise
-        # causes multi-second GC stalls misattributed to innocent queries.
+        # Queries are independent: free what each one stored so storage
+        # memory doesn't accumulate across the 200-query sweep, which by
+        # the tail causes multi-second GC stalls billed to innocent
+        # queries. clearCache() drops persisted frames (embedding scans,
+        # packed streams); release() drops the lazy checkpoints the plan
+        # reads (LSH and SimHash signature tables, shared_scans scans),
+        # which clearCache() leaves to the JVM's garbage collector.
         spark.catalog.clearCache()
+        release(df)
         return dt
 
     # A busy box inflates every number — stamp the artifact LOUDLY instead of

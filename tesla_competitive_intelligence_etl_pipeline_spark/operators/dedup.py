@@ -34,28 +34,46 @@ from tesla_competitive_intelligence_etl_pipeline_spark.operators.text import (
 )
 
 def _truncate_lineage(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Materialize ``df`` and TRUNCATE its lineage — the guard every
-    iterative loop (CC) and multi-consumer fan-in (indexed dedup, SemDeDup's
-    capped path) here uses so plans don't grow across rounds.
+    """Materialize ``df`` once and TRUNCATE its lineage: the package's one
+    way to share a frame between several consumers of a plan.
 
-    Default: LAZY ``localCheckpoint``: an eager one would run a dedicated
-    materialization job per call before every consumer read the blocks;
-    the lazy form fuses materialization into the FIRST consumer's job
-    (every call site here is followed by one — a convergence probe, a
-    count, or the pair join), so the truncation costs zero extra jobs. No
-    call site reads a path that is overwritten before evaluation, so none
-    relies on an eager snapshot. Blocks still live on executors:
-    on a cluster with decommissioning/spot churn a lost block FAILS the
-    query instead of recomputing (truncated lineage cannot rebuild).
+    Which frames use it, and which keep ``persist``:
+    - a fan-out point inside a returned lazy plan uses a lazy checkpoint:
+      the LSH and SimHash signature tables, SemDeDup's pair side, the
+      indexed LSH path's new signatures, ``sources.io.shared_scans``.
+      Under AQE every in-memory scan of a persisted frame becomes its own
+      table-cache stage with a job of its own; a checkpointed RDD is
+      filled by the first stage that reads it and the others read its
+      blocks;
+    - a frame that an operator loops over and unpersists itself
+      (``connected_components``' edge table, ``clustering._lloyd``,
+      ``kmeans_df``), or one with an exchange below it
+      (``packing.global_cumsum``, the encode of the registry's
+      ``x5_pack_chunk_streams``), keeps ``persist``/``unpersist``: building
+      a lazy checkpoint runs the plan below it up to its last exchange,
+      so an exchange there would run when the plan is built. The CC loops
+      checkpoint each round's labels, since the next round's consumer
+      fills them.
+
+    Default: a LAZY ``localCheckpoint``. An eager one would run a dedicated
+    job per call; the lazy form fills the blocks in the first consumer's
+    job, so the truncation costs no job. No call site reads a path that is
+    overwritten before evaluation, so none relies on an eager snapshot.
     Iterative loops stay bounded: each round's consumer fully materializes
     the previous round's checkpoint, so lazy chains never deepen past one
     round.
-    ``reliable=True`` is the escape hatch: a REAL
-    (eager) checkpoint to the SparkContext checkpoint dir (HDFS/S3-backed,
-    survives executor loss) — slower per round, the right trade on
-    decommissioning-prone clusters. Requires
-    ``spark.sparkContext.setCheckpointDir(...)``; raises a clear error
-    otherwise. See DEPLOYMENT.md § Checkpointing."""
+
+    The blocks live as long as the returned plan: ``sources.io.release``
+    frees them after the caller's last action, or the ContextCleaner does
+    once the JVM's GC reaches the RDD. ``spark.catalog.clearCache()``
+    does not. They live only on executors: on a cluster with
+    decommissioning or spot churn a lost block FAILS the query instead of
+    recomputing it (truncated lineage cannot rebuild it).
+    ``reliable=True`` is the escape hatch: a REAL (eager) checkpoint to the
+    SparkContext checkpoint dir (HDFS/S3-backed, survives executor loss),
+    slower per call and the right trade on decommissioning-prone clusters.
+    Requires ``spark.sparkContext.setCheckpointDir(...)``; raises a clear
+    error otherwise. See DEPLOYMENT.md § Checkpointing."""
     if not reliable:
         return df.localCheckpoint(eager=False)
     sc = df.sparkSession.sparkContext
@@ -386,21 +404,23 @@ def minhash_lsh_pairs(
     cap, measure what it would drop with ``lsh_oversized_buckets`` (same
     banding, same HAVING aggregate).
 
-    Storage contract: the signature table is persisted because the RETURNED
-    lazy plan reads it from multiple branches (banding + both verification
-    sides) — it cannot be released here without forfeiting the sharing.
-    The caller owns the cleanup once done with the result
-    (``spark.catalog.clearCache()`` or unpersisting, as bench.py does after
-    every query); long-lived sessions that skip it accumulate storage.
+    Storage contract: the RETURNED lazy plan reads the signature table
+    from three branches (banding and both verification sides), so the
+    table is a lazy checkpoint (_truncate_lineage) that the first branch
+    to run fills and the others read. Its blocks live as long as the
+    returned plan: ``sources.io.release(result)`` frees them after the
+    caller's last action (bench.py does after every query), or the
+    ContextCleaner does once the plan is garbage.
+    ``spark.catalog.clearCache()`` does not free them.
     """
     _check_family(family, shingle_n)
-    # Persist the signature table: it feeds the band explode AND the
-    # verification join, and Spark would otherwise recompute the (expensive)
-    # shingling twice. In a production pipeline this is the materialized
-    # signatures table written next to the corpus.
-    sigs = _with_shingles_and_sig(
-        docs, text_col, id_col, num_hashes, shingle_n, family=family
-    ).persist()
+    # shared, not recomputed: shingling and signatures are the expensive
+    # part, and the band explode and both verify sides read them. In a
+    # production pipeline this is the signature table written next to the
+    # corpus (write_signature_table).
+    sigs = _truncate_lineage(
+        _with_shingles_and_sig(docs, text_col, id_col, num_hashes, shingle_n, family=family)
+    )
     banded = _band_explode(sigs, num_hashes, bands, family=family)
     if max_bucket_size is not None:
         candidates = _bucket_pairs(banded, max_bucket_size)
@@ -630,6 +650,8 @@ def near_dup_clusters(
     smallest doc id in the cluster (singletons map to themselves). This is
     the policy real pretraining dedup needs — A~B and B~C put A and C in one
     cluster even when A~C is below threshold."""
+    from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import release
+
     pairs = minhash_lsh_pairs(
         docs, text_col=text_col, id_col=id_col, threshold=threshold,
         max_bucket_size=max_bucket_size, family=family,
@@ -641,6 +663,10 @@ def near_dup_clusters(
         max_iters,
         reliable=reliable,
     )
+    # every round ran before connected_components returned, and the result
+    # reads the last round's labels, not the pairs: the signature table's
+    # blocks can go now
+    release(pairs)
     return comp.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_id"))
 
 
@@ -861,10 +887,12 @@ def simhash_pairs(
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
 
     _check_family(family)
-    sigs = (
+    # both sides of the band self-join read one lazy checkpoint, so the
+    # signatures are computed once; its blocks live as long as the
+    # returned plan (storage contract as minhash_lsh_pairs)
+    sigs = _truncate_lineage(
         spread(docs, id_col)
         .select(F.col(id_col).alias("doc_id"), simhash(F.col(text_col), family).alias("sig"))
-        .persist()  # feeds both sides of the band self-join
     )
     chunk_bits = _SIMHASH_BITS[family] // bands
     mask = (1 << chunk_bits) - 1
@@ -1132,8 +1160,9 @@ def cross_corpus_neardup(
 
     ids must be unique WITHIN each side; across sides they may collide (the
     side tag disambiguates). Storage contract as minhash_lsh_pairs: the
-    signature table is persisted for the returned plan; the caller clears
-    it.
+    signature table is a lazy checkpoint that the band scan and both
+    verify sides read, and its blocks live as long as the returned plan;
+    ``sources.io.release(result)`` frees them after the last action.
     """
     from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import spread
 
@@ -1145,7 +1174,7 @@ def cross_corpus_neardup(
             F.lit(0).alias("__side"), F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
     )
-    sigs = (
+    sigs = _truncate_lineage(
         spread(tagged, "doc_id")
         .select(
             "__side",
@@ -1153,7 +1182,6 @@ def cross_corpus_neardup(
             _shingle_hashes(F.col("text"), shingle_n, family).alias("sh"),
         )
         .withColumn("sig", minhash_int_signature(F.col("sh"), num_hashes))
-        .persist()
     )
     banded = _band_explode(sigs, num_hashes, bands, "__side", family=family)
     candidates = _cross_candidates(

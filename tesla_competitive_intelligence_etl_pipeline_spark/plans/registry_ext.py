@@ -156,6 +156,7 @@ def x2_cluster_dedup_star_portable(spark: SparkSession, sf_dir: str) -> DataFram
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         docs.select(F.col("doc_id").alias("id")),
     )
+    src.release(pairs)  # the rounds have run; comp reads their last edge set
     return comp.select("id", F.col("comp").alias("cluster_id")).withColumnRenamed(
         "id", "doc_id"
     )

@@ -43,7 +43,7 @@ _INFERENCE_CONFS = (
 # one slot per path, so a rewritten file replaces its stale entry
 _SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
 
-# shared_scans: (normalized sf_dir, table name) -> persisted scan served by
+# shared_scans: (normalized sf_dir, table name) -> checkpointed scan served by
 # load_table for the duration of a composite-builder block
 _SCAN_CACHE: dict[tuple[str, str], DataFrame] = {}
 
@@ -89,7 +89,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table. Parquet is self-describing; explicit
     select/filter by callers still prunes columns and pushes predicates.
     Inside a ``shared_scans`` block the named tables come back as ONE
-    persisted scan instead of a fresh read per caller.
+    checkpointed scan instead of a fresh read per caller.
 
     Reads go through ``read_parquet``: one footer job per file identity per
     session, none on later reads; a directory-layout table re-infers."""
@@ -101,7 +101,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 @contextmanager
 def shared_scans(spark: SparkSession, sf_dir: str, *names: str):
-    """Serve the named tables from ONE persisted scan for the duration of the
+    """Serve the named tables from ONE checkpointed scan for the duration of the
     block — for window-composite builders whose branches each call
     ``load_table`` on the same table and would otherwise re-read (and
     re-normalize/re-tokenize downstream of) it once per branch (without
@@ -118,14 +118,16 @@ def shared_scans(spark: SparkSession, sf_dir: str, *names: str):
       optimizer input shrinks and branch execution reads plain RDD blocks
       instead of going through the in-memory-relation columnar layer.
       Interleaved A/B at sf0.1: tpch_suite 4.43 -> 3.51 s (0.79x),
-      xtra_suite 4.72 -> 4.50 s (0.95x), oracle green. Blocks are
-      released by the ContextCleaner when the composite's plan is dropped
-      (the same lifecycle as the dedup operators' _truncate_lineage) —
-      note this is NOT covered by ``spark.catalog.clearCache()``, and
-      truncated lineage cannot recompute a lost block on
-      decommissioning-prone clusters (the documented _truncate_lineage
-      trade). The checkpoint keeps the scan's size estimate, so ``spread``
-      decides inside the block as on the bare scan.
+      xtra_suite 4.72 -> 4.50 s (0.95x), oracle green. The blocks live
+      as long as the composite's plan, which the builder returns after
+      the block exits, so the block cannot free them: the caller calls
+      ``release`` on the composite after its last action (bench.py does),
+      or the ContextCleaner frees them once the plan is garbage.
+      ``spark.catalog.clearCache()`` does not. Truncated lineage cannot
+      recompute a lost block on decommissioning-prone clusters (the
+      trade documented at ``operators.dedup._truncate_lineage``). The
+      checkpoint keeps the scan's size estimate, so ``spread`` decides
+      inside the block as on the bare scan.
     - The plan carries a ``WHERE true`` marker so that AFTER the block
       exits, unrelated plain ``load_table`` reads do not silently alias the
       composite's scan (plan shape tests must keep seeing the raw parquet
@@ -254,6 +256,27 @@ def observed(df: DataFrame, *aggs) -> Row:
     obs = Observation()
     df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
     return Row(**obs.get)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of every ``LogicalRDD`` leaf of ``df``'s plan: the
+    lazy checkpoints (``localCheckpoint``) it reads, such as an LSH
+    operator's signature table or a ``shared_scans`` scan.
+
+    Call it after the last action on ``df``: a checkpoint's truncated
+    lineage cannot rebuild a freed block, so a later action on ``df`` (or
+    on another plan reading the same checkpoint) fails.
+    ``spark.catalog.clearCache()`` frees persisted frames but not
+    checkpoint blocks; without ``release`` they go only when the JVM's
+    GC reaches their RDD and the ContextCleaner removes them. Other
+    ``LogicalRDD`` leaves are unpersisted too: a parallelized local list
+    holds no blocks, and an RDD the caller persisted and built ``df`` from
+    loses its cache."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def local_table(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:

@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tesla_competitive_intelligence_etl_pipeline_spark.sources import merge as merge_mod
-from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import observed
+from tesla_competitive_intelligence_etl_pipeline_spark.sources.io import observed, release
 from tesla_competitive_intelligence_etl_pipeline_spark.streaming import fs as merge_fs
 
 
@@ -2822,7 +2822,7 @@ def _merge_locked(
         if capture_changes:
             # the checkpoint's blocks go now, not when the driver's GC
             # reaches the RDD: committed, lost race or failed alike
-            winners._jdf.queryExecution().logical().rdd().unpersist(False)
+            release(winners)
 
 
 def start_merge_latest(
